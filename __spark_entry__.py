@@ -11,26 +11,19 @@ loudly here rather than silently shrink the query surface (a
 swallowed ImportError would make coverage regressions invisible to
 the driver's correctness gate).
 
-``queries()`` is ordered so the driver's per-round correctness gate
-(which checks entries in dict order, exactly 50 per round) certifies
-the queries that don't yet have a driver-side CORRECTNESS row, then
-re-certifies the stalest standing rows.  Round 14 continues the
-standing rotation cadence: the head is the flagship + the _R14_QUEUE
-eighteen (the round-13 additions, all locally oracle-verified on
-entry) + _R14_CODE_CHANGED (queries whose plan or oracle text
-changed in round 14 — the pair-mass-capped detectors — re-certified
-in-window) + the stalest standing rows from _R14_RECERT_CANDIDATES
-(the r6-era block first, then the r7-era head; the window-fill
-truncates from the least-stale tail).  A green round-14 gate returns
-the never-driver-certified count to 0 again.  Round-14 additions
-(_R15_QUEUE, locally oracle-verified on entry) sit immediately after
-the window so they head round 15's rotation; _R15_RECERT_CANDIDATES
-pre-plans that flip at round close.
+The driver hash-checks a fixed-size head of ``queries()`` each round,
+so the dict order is derived from the ``CORRECTNESS_r*.json`` ledgers
+beside this file (a row counts only if ``hash_match`` is true): the
+flagship, then every oracle-backed query never certified, then the
+rest stalest first (last certified round ascending, ties in
+registration order).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -130,1662 +123,36 @@ _MODULES = [
     linkage,
 ]
 
-#: Queries hash-certified by the driver in round 1 (CORRECTNESS_r01.json):
-#: its gate stopped at the 50th entry, so everything after needs a row.
-_R01_DRIVER_GREEN = {
-    "q3_shipping_priority", "q5_region_revenue", "semi_customers_with_urgent",
-    "anti_customers_no_orders", "setop_active_nations", "rollup_returns",
-    "cube_order_status", "topk_orders_per_customer", "ranking_variants",
-    "running_customer_spend", "lag_lead_order_gaps", "events_json_extract",
-    "exact_distinct_and_quantiles", "approx_sketches", "pivot_status_by_priority",
-    "q6_selective_agg", "scalar_subquery_above_avg", "exists_suppliers_shipping",
-    "grouping_sets_status", "rolling_week_spend", "embedding_norm_stats",
-    "hourly_event_load", "q4_priority_late_ship", "q7_nation_volume",
-    "q10_returned_items", "q14_promo_revenue", "q18_large_volume_orders",
-    "q19_disjunctive_predicates", "q15_top_supplier", "q21_sole_late_supplier",
-    "q22_dormant_rich_customers", "q8_market_share", "llm_corpus_prep",
-    "t1_numeric_coercion", "t2_timestamp_iso", "t3_custom_ts_roundtrip",
-    "t4_percent_parse", "t5_sentinel_null", "t6_string_extract",
-    "t7_hash_dedup", "p1_p4_rename_project", "p3_null_defaults",
-    "f2_f3_record_filters", "csv_normalize_pipeline", "merge_k1_preserve",
-    "merge_k2_clobber", "merge_k3_metadata", "d3_last_write_wins",
-}
+
+_HERE = Path(__file__).resolve().parent
+_FLAGSHIP = "flagship_account_pnl"
 
 
-#: ROUND-5 GATE HEAD (after the flagship): the 49 never-driver-checked
-#: round-4 queries certified this round, in the round-4 verdict's
-#: priority order — first the queries consumed by other certified rows
-#: (pq_encode, embedding_moment_stats, the portable-sketch trio, the
-#: incremental-maintenance pair, streaming_cdc_scd2, the retrieval
-#: block), then the three whose code changed this round (bitmap
-#: bucket grouping / byte-based AES oracle / big-int Gini — all
-#: round-4 advice), then the 7 frozen-bench representatives, then
-#: _R4_NEW order.
-_R5_CERT: list[str] = [
-    "pq_encode",
-    "embedding_moment_stats",
-    "portable_bloom_contract",
-    "portable_hll_registers",
-    "portable_countmin_topk",
-    "incremental_agg_maintenance",
-    "incremental_join_maintenance",
-    "streaming_cdc_scd2",
-    "bm25_rational_topk",
-    "rrf_hybrid_fusion",
-    "boolean_retrieval_census",
-    "bitmap_distinct_contract",
-    "aes_column_roundtrip",
-    "pandas_grouped_agg_gini",
-    "perplexity_bucket_cutoffs",
-    "pq_adc_topk",
-    "quality_feature_matrix",
-    "streaming_lsh_dedup",
-    "triplet_margin_mining",
-    "fx_ingest_end_to_end",
-    "join_skew_report",
-    "pyds_manifest_reader_roundtrip",
-    "token_frequency_spectrum",
-    "gdpr_delete_propagation",
-    "schema_evolution_roundtrip",
-    "streaming_dlq_split",
-    "streaming_static_enrich",
-    "hll_accuracy_check",
-    "benford_first_digit",
-    "approx_quantile_contract",
-    "pareto_frontier_parts",
-    "embedding_gram_matrix",
-    "tokenizer_fertility",
-    "weighted_priority_sample",
-    "streaming_windowed_topk",
-    "lateral_topk_per_nation",
-    "recursive_dup_reachability",
-    "asof_tolerance_view",
-    "corpus_snapshot_diff",
-    "bpe_merge_topk",
-    "freq_items_contract",
-    "setop_multiset_priorities",
-    "attribution_first_last",
-    "arrow_grouped_value_stats",
-    "langid_confusion",
-    "quality_lm_calibration",
-    "hll_per_group_contract",
-    "cross_split_lm_eval",
-    "media_frame_schedule",
-]
-
-#: CERTIFICATION DEBT LEDGER — queries still lacking any driver
-#: CORRECTNESS row after round 5's window (kept in sync with the
-#: CORRECTNESS_r0N files; all pass the identical oracle in
-#: tools/verify_local.py).  Round 6's head = flagship +
-#: rfm_segmentation + dedup_pagerank_exact + this list (48 entries).
-_R6_PENDING: list[str] = [
-    "rfm_segmentation",  # standing r4 row; re-cert after round-5 rewrite
-    "dedup_pagerank_exact",  # added round 5 (verdict item 7)
-    "media_dedup_exact",
-    "temperature_sweep",
-    "pyds_stream_sink_roundtrip",
-    "corrupt_file_tolerant_read",
-    "pandas_api_lang_stats",
-    "corpus_release_manifest",
-    "session_window_native",
-    "shuffle_hash_segment_revenue",
-    "knn_label_eval",
-    "udtf_null_profile",
-    "streaming_interval_join_outer",
-    "ann_recall_report",
-    "jl_sign_projection",
-    "token_pmi_topk",
-    "decimal_money_totals",
-    "parquet_agg_pushdown_stats",
-    "tz_local_day_rollup",
-    "csv_multiline_roundtrip",
-    "sql_udf_percent_parse",
-    "collated_group_counts",
-    "parameterized_sql_orders",
-    "file_metadata_lineage",
-    "argmax_order_per_customer",
-    "map_column_stats",
-    "map_in_arrow_char_profile",
-    "capped_waterfill_allocation",
-    "ngram_novelty_scores",
-    "token_weighted_median_quality",
-    "formatted_number_parse",
-    "xml_roundtrip_extract",
-    "semantic_topic_slice",
-    "seasonal_naive_backtest",
-    "functional_dependency_audit",
-    "not_in_null_semantics",
-    "integer_division_semantics",
-    "ndv_catalog_sweep",
-    "try_function_semantics",
-    "chi2_contingency_cells",
-    "observed_ingest_metrics",
-    "listagg_top_customers",
-    "order_status_transpose",
-    "split_centroid_drift",
-    "knn_graph_build",
-    "catalog_snapshot_manifest",
-    "join_cardinality_estimate",
-]
-
-#: Round-6 re-certs filling the 50-window: queries whose LINEAGE
-#: changed this round (standing green rows from r5/r2, oracles
-#: unchanged).  quality_feature_matrix now genuinely feeds
-#: rare_token_quality from its one persisted base scan (round-5
-#: advice, medium); rare_token_quality gained the honored ``docs``
-#: parameter.
-_R6_RECERT: list[str] = [
-    "quality_feature_matrix",
-    "rare_token_quality",
-]
-
-#: Queries ADDED in round 6 (exact siblings of rows-only entries,
-#: round-5 verdict item 3) — placed immediately after the 50-window
-#: so they head round 7's rotation without displacing round 6's.
-#:
-#: ROUND-7 PLAN: once CORRECTNESS_r06 lands green, the only
-#: never-driver-checked oracle-backed queries are these three.  Round
-#: 7's head should be: flagship + _R7_QUEUE + any query whose code
-#: changes in round 7, then fill the 50-window with re-certs of the
-#: STALEST standing rows (the r1 head — q1_pricing_summary and the
-#: T1-T8/P/F/D/K families — will be 6 rounds old; oldest first).
-_R7_QUEUE: list[str] = [
-    "kmeans_iterate_exact",  # integer-µ Lloyd, 3 rounds unrolled in SQL
-    "minhash_lsh_containment",  # certified pairs ⊆ MinHashLSH candidates
-    "brp_lsh_containment",  # certified pairs ⊆ BRP-LSH candidates
-]
-
-#: Queries whose CODE/LINEAGE changed in round 7 — must be re-certified
-#: inside the 50-window (displacing the least-stale tail of
-#: _R7_RECERT_CANDIDATES, never the r1-era head).  Append here whenever
-#: a round-7 change alters a certified query's plan.
-_R7_CODE_CHANGED: list[str] = [
-    # depth work (round-6 verdict item 2): pre-gate stages fused into
-    # one corpus scan (quality/lang/md5 via shared textops builders)
-    "llm_corpus_prep",
-    # static corpus band index memoized per (session, fixture) —
-    # corpus_band_index replaces the per-invocation rebuild
-    "streaming_lsh_dedup",
-    # Arrow signature stage (dedup.USE_ARROW_SIGNATURES): every query
-    # whose lineage includes minhash_band_rows — outputs bit-identical
-    # (tests/test_arrow_signatures.py), plans changed, so re-certify
-    "minhash_lsh_pairs",
-    "containment_pairs",
-    "source_overlap_matrix",
-    "corpus_release_manifest",
-    "split_decontaminate",
-    "canonical_doc_selection",
-    "recursive_dup_reachability",
-]
-
-#: Queries ADDED in round 7 — heading round 8's window (rotation
-#: flipped in round 8, pinned by tests/test_cert_ledger.py).
-#: Verified against the DuckDB oracle locally on addition (sf0.001 +
-#: sf0.01), and split-invariance vs the batch gate is pinned in
-#: tests/test_streaming_state_bounds.py.
-_R8_QUEUE: list[str] = [
-    # self-maintaining streaming near-dup gate: empty index,
-    # probe-then-upsert per micro-batch (upsert_band_index)
-    "streaming_lsh_dedup_incremental",
-    # upsert(index(corpus), delta) ≡ rebuild contract for the
-    # term-doc index (upsert_term_doc_index), oracle-pinned counts
-    "postings_upsert_equivalence",
-    # upsert(cc(E1), E2) ≡ cc(E1 ∪ E2) contract for the dedup spine
-    # (upsert_components: contracted-delta CC, O(|ΔE|) per batch)
-    "components_upsert_equivalence",
-    # embedding mirror of the incremental LSH gate: empty sign-LSH
-    # index, probe-then-upsert per micro-batch (upsert_sign_index);
-    # oracle = later side of a NEAR_DUP_ORACLE pair
-    "streaming_embed_dedup_incremental",
-    # SemDeDup-style semantic prune: exact-Lloyd cluster blocking +
-    # within-cluster round(cos,6) pairs, keep the cluster-edge member
-    # (operators/ml.semdedup_prune); oracle shares the Lloyd CTEs
-    "semdedup_prune",
-    # substring-level dedup rewrite ledger (Lee et al. 2021): remove
-    # every position covered by a cross-doc repeated SPAN_K-token
-    # span (operators/quality.span_dedup_rewrite)
-    "span_dedup_rewrite",
-    # prototypicality pruning (Sorscher et al. 2022): drop the most
-    # central quarter of each exact-Lloyd cluster — ranking-based,
-    # no pair graph (operators/ml.prototype_prune)
-    "prototype_prune",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 8 — re-certified
-#: inside the 50-window (displacing the least-stale tail of
-#: _R8_RECERT_CANDIDATES, never the r1-era head).  Append here
-#: whenever a round-8 change alters a certified query's plan.
-_R8_CODE_CHANGED: list[str] = [
-    # Arrow signature worker hardened (null-doc_id parity, round-7
-    # advice): every certified query whose lineage includes
-    # minhash_band_rows re-runs through the changed mapInPandas fn —
-    # outputs unchanged on the fixture (no null doc_ids), plans
-    # changed, so re-certify
-    "minhash_lsh_pairs",
-    "containment_pairs",
-    "source_overlap_matrix",
-    "corpus_release_manifest",
-    "split_decontaminate",
-    "canonical_doc_selection",
-    "recursive_dup_reachability",
-    "llm_corpus_prep",
-    "streaming_lsh_dedup",
-    # span oracles regenerated from SPAN_K (round-7 advice): the
-    # DuckDB SQL text changed, so the oracle side must re-prove
-    # (span_dedup_rewrite rides _R8_QUEUE already)
-    "span_dedup_stats",
-    # round-8 depth work (round-7 verdict item 5): the two
-    # corpus-statistics signals now fork from ONE persisted
-    # (doc_id, tok, nxt) stream (tfidf.token_pair_stream) instead of
-    # four tokenize+explode corpus passes — measured ~7% at sf0.1,
-    # scan-count 4 → 1 at scale; standalone signal lineages unchanged
-    "quality_feature_matrix",
-    # round-8 gated-regression fix (round-7 verdict item 3): the
-    # aggregate split-join — percentile_disc's TypedImperativeAggregate
-    # was forcing the whole combined agg (countDistinct included)
-    # through ObjectHashAggregate; split + 5-row join is −38% on an
-    # idle host, results bit-identical, oracle unchanged
-    "exact_distinct_and_quantiles",
-]
-
-#: Queries ADDED in round 8 — placed after the 50-window (the round-8
-#: rotation below must not be displaced); they head round 9's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R9_QUEUE: list[str] = [
-    # upsert(index(C), Δ) ≡ rebuild contract for the IVF assignment
-    # index (round-7 verdict item 4 — the one incremental-index
-    # family member whose contract was pytest-only), anti-joins keyed
-    # on (vec_id, cluster, payload)
-    "ivf_upsert_equivalence",
-    # Matryoshka-style embedding-truncation deploy table (Kusupati et
-    # al. 2022): overlap@5 of prefix-dim cosine top-k vs the full-dim
-    # exact top-k, per truncation dim, in exact ppm — one declarative
-    # plan (broadcast dims table × vectors), no driver loop
-    "truncation_recall_report",
-    # margin-based parallel-pair mining (Artetxe & Schwenk 2019, the
-    # CCMatrix scoring rule): ratio margin over both endpoints' k-NN
-    # neighborhoods, integer-exact on the 1e-6 cosine grid
-    "margin_bitext_mine",
-    # its scale path: sign-LSH bucket-join candidates instead of the
-    # bipartite product — the blocking is deterministic, so unlike a
-    # FAISS-backed miner the blocked variant stays hash-certifiable
-    "margin_bitext_mine_blocked",
-    # NULLS FIRST/LAST placement probe completing the cross-engine
-    # semantics family (Spark ASC defaults NULLS FIRST, DuckDB NULLS
-    # LAST — explicit forms pinned bit-portable with full-ordering
-    # checksums)
-    "null_ordering_semantics",
-    # stateless streaming ingest quality gate: the batch gate's
-    # row-local signal expressions on a document stream, append mode,
-    # zero state operators (pinned in
-    # tests/test_streaming_state_bounds.py); oracle = the batch
-    # QUALITY_ORACLE verbatim
-    "streaming_quality_gate",
-    # boolean-vocabulary + NULL-concat coercion probe (T-family):
-    # Spark's wide non-ANSI boolean cast vocabulary restated
-    # explicitly in the oracle (DuckDB accepts only true/false/t/f/
-    # 1/0); concat NULL-propagation vs concat_ws skip pinned as the
-    # two portable spellings
-    "bool_concat_coercion",
-    # calendar-arithmetic probe: end-of-month clamping in both
-    # directions (add_months ≡ ± INTERVAL MONTH), last_day, quarter
-    # trunc, day diffs — pinned as epoch-day checksums per month
-    "calendar_arithmetic_semantics",
-]
-
-#: ROUND-9 RE-CERT CANDIDATES (pre-planned; NOT wired into the head
-#: until round 9 flips the window logic — the driver's round-8 gate
-#: must certify the round-8 rotation).  Computed from the CORRECTNESS
-#: files assuming the round-8 window lands green: the 20 r2-era rows
-#: (the stalest standing after the r8 window re-freshens its fill),
-#: then the oldest 30 of the r3-era block (alphabetical within a
-#: round).  Round 9's head = flagship + _R9_QUEUE + round-9
-#: code-changed + this list up to the 50-window, truncated from the
-#: tail.
-_R9_RECERT_CANDIDATES: list[str] = [
-    "q20_part_supp_chain",
-    "quality_score",
-    "quantized_topk",
-    "range_join_price_bands",
-    "regression_analytics",
-    "s4_xlsx_registry",
-    "salted_count_events",
-    "salted_join_supplier_revenue",
-    "scd2_customer_dim",
-    "simhash_docs",
-    "temperature_resample",
-    "text_stats",
-    "time_bucket_rollup",
-    "training_shard_roundtrip",
-    "unpivot_lineitem_metrics",
-    "variant_json_shred",
-    "w1_locf_snapshots",
-    "w2_keep_one_per_key",
-    "winsorized_totalprice",
-    "zorder_clustering_stats",
-    "arrow_udf_order_tier",
-    "corpus_split",
-    "dedup_components",
-    "df_prune",
-    "domain_quality_gate",
-    "gapfill_daily_locf",
-    "gopher_repetition",
-    "grouped_map_share",
-    "hourly_event_load",
-    "kmeans_assign_stats",
-    "kmeans_update_centroids",
-    "mixture_allocation",
-    "pandas_udf_log_return",
-    "partitioned_sink_roundtrip",
-    "pii_scrub",
-    "q11_value_concentration",
-    "q13_order_count_distribution",
-    "q16_supplier_part_variety",
-    "q2_min_cost_supplier",
-    "q9_profit_by_nation_year",
-    "quantized_ivf_topk",
-    "retention_cohorts",
-    "rss_datasource_scan",
-    "rss_datasource_stream",
-    "s2_csv_ingest",
-    "s4_account_metadata",
-    "s5_rss_trades_pipeline",
-    "sequence_pack",
-    "stratified_sample",
-    "streaming_csv_merge",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 9 — re-certified
-#: inside the 50-window (displacing the least-stale tail of
-#: _R9_RECERT_CANDIDATES).  Append here whenever a round-9 change
-#: alters a certified query's plan or its oracle SQL text.
-_R9_CODE_CHANGED: list[str] = [
-    # round-8 advice (medium): the split-aggregation join now uses a
-    # null-safe equality on event_type so a NULL group would survive
-    # the join exactly as the oracle's GROUP BY keeps it — plan
-    # changed (EqualNullSafe join key), results identical on the
-    # fixture (no NULL event_types exist)
-    "exact_distinct_and_quantiles",
-]
-
-#: Queries ADDED in round 9 — placed after the 50-window (the
-#: round-9 rotation must not be displaced); they head round 10's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R10_QUEUE: list[str] = [
-    # KMV / bottom-k (theta-style) distinct sketch with exact set
-    # algebra: union / intersection / Jaccard estimates per event-
-    # type pair from k-smallest-hash sketches alone — the mergeable
-    # set-operation companion to portable_hll_registers (HLL unions
-    # but cannot intersect), built as a salted two-stage tournament
-    "portable_kmv_setops",
-    # q-digest: the deterministic mergeable quantile sketch
-    # completing the portable family (Shrivastava et al. 2004),
-    # level-synchronous compression replayed as 16 generated
-    # MATERIALIZED CTE levels in the oracle; rank-error bound pinned
-    # in pytest
-    "portable_qdigest_quantiles",
-    # exact Spearman: tie-correct Pearson-on-ranks with 2x-scaled
-    # integer average ranks computed off the value GRID (no row-level
-    # rank join); Mersenne-mod integer witnesses + floor-ppm rho off
-    # the correctly-rounded double path
-    "spearman_rank_corr",
-    # streaming KMV cardinality monitor: bounded-state (groups x k
-    # rows) incremental sketch merge, incremental == batch rebuild
-    # exactly (KMV truncation is confluent); oracle = the batch
-    # sketch SQL on the full table
-    "streaming_kmv_distinct",
-    # T-family regex probe: the portable Java-regex/RE2 subset pinned
-    # (explicit classes, anchors, \b, bounded greedy quantifiers,
-    # perl-preference alternation), group-0 empty-string-on-no-match,
-    # and the global-replace spelling divergence carried in the oracle
-    "regex_portability_semantics",
-    # Q12 shape completing the 22-shape TPC-H sweep (surrogate mode
-    # key + shipdate-vs-orderdate lateness; fixture lacks shipmode /
-    # commit / receipt dates -- deviation documented)
-    "q12_shipmode_priority",
-    # perceptual near-dup for media payloads: 32-segment average-hash
-    # (Arrow-batched byte kernel, integer cross-multiply bits), 4x8
-    # banding with pigeonhole-LOSSLESS recall at Hamming radius 3,
-    # exact verify on candidates -- the similarity companion to
-    # media_dedup_exact
-    "media_ahash_neardup",
-    # window FRAME probe: ANSI default RANGE-with-peers over tied
-    # keys certified shared, ROWS-requires-total-order pinned, and
-    # the last_value default-frame trap quantified
-    "window_frame_semantics",
-    # 2-core of the near-dup graph: bounded-superstep peel (degree
-    # aggregate + two semi-joins per round, checkpoint every other
-    # round), oracle replays the identical rounds as generated
-    # MATERIALIZED CTEs; fixpoint-inside-budget pinned by pytest
-    "kcore_decomposition",
-    # percentile_cont made portable: x4-scaled exact integer
-    # interpolation over grid order statistics — the spelling that
-    # sidesteps the decimal-half-boundary divergence the repo's
-    # float-quantile queries deliberately avoid
-    "percentile_cont_exact",
-    # FAISS-IVFPQ serving stack: IVF cluster pruning + 4-bit PQ
-    # codes + integer ADC tables — composition of the two certified
-    # halves (quantized_ivf / pq_adc), the configuration a 100 TB
-    # index deploys
-    "ivf_pq_adc_topk",
-    # unicode semantics probe: codepoint length/bytes/substr/ascii
-    # certified portable; FULL-vs-SIMPLE case mapping (ss/SS,
-    # ligatures) and codepoint-vs-grapheme reversal pinned as the
-    # two documented non-portable surfaces (oracle restates Spark's
-    # outputs, the restatement a cross-engine consumer needs)
-    "unicode_case_semantics",
-    # storage-encoding advisor: exact run counts / adjacent-delta bit
-    # widths / NDV per column via a block-decomposed adjacency (runs
-    # = block-local starts - boundary continuations, exactly the
-    # global answer) -- the ENCODE companion to zorder's SORT advisor
-    "encoding_advisor_stats",
-    # its incremental-maintenance contract: report(state(A) u
-    # state(B)) == report(state(A u B)) for a block-aligned key
-    # partition (even/odd block ids -- every interleaved boundary
-    # re-pairs at report time); the newest upsert == rebuild family
-    # member
-    "encoding_upsert_equivalence",
-    # embedding-level split-leakage audit: eval vectors with a
-    # train-side near-dup in the certified sign-LSH pair set -- the
-    # semantic companion to the n-gram contamination_check (catches
-    # the paraphrase-level overlap n-gram scans cannot see)
-    "semantic_contamination_report",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 10 — re-certified
-#: inside the 50-window.  Append here whenever a round-10 change
-#: alters a certified query's plan or its oracle SQL text.  (The
-#: three round-9 ADVICE fixes — media_ahash oracle byte-basis,
-#: KCORE_ROUNDS headroom, qdigest negative clamp — touch queries
-#: already inside the window via _R10_QUEUE, so they need no slot
-#: here.)
-_R10_CODE_CHANGED: list[str] = [
-    # round-10 session 2: the Gram kernel was factored to
-    # ``ml.gram_cells`` so the upsert contract and streaming gate
-    # reuse it — the built plan is bit-identical (pure extraction,
-    # re-verified sf0.001+sf0.01 on change), but the certified row's
-    # code text changed, so it re-certifies in-window
-    "embedding_gram_matrix",
-]
-
-#: Queries ADDED in round 10 — placed after the 50-window (the
-#: round-10 rotation must not be displaced); they head round 11's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R11_QUEUE: list[str] = [
-    # the scale sibling of spearman_rank_corr (round-9 verdict item
-    # 2): the price-grid cumulative rank as a two-level distributed
-    # prefix sum (bucket-local window + broadcast bucket offsets) —
-    # bit-identical output, same oracle, bounded task size where the
-    # simple plan sorts each group's whole value grid in one task
-    "spearman_rank_corr_bucketed",
-    # streaming perceptual near-dup gate: empty ahash band index,
-    # probe-then-append per micro-batch, exact Hamming verify on
-    # candidates (pigeonhole-lossless banding) — the media-payload
-    # member of the incremental-gate family (round-9 verdict item 7)
-    "streaming_ahash_dedup_incremental",
-    # chunk-level MinHash/LSH near-dup: dedup BELOW doc granularity
-    # (embedded/paraphrased passages doc-level Jaccard cannot see) —
-    # overlapping 64-token chunks as pseudo-docs through the
-    # certified band lineage, exact cross-doc Jaccard >= 0.6 in ppm
-    "chunk_lsh_neardup",
-    # k-anonymity / l-diversity release gate: quasi-identifier group
-    # sizes + sensitive-attribute diversity with risk flags — the
-    # indirect-re-identification companion to pii_scrub
-    "k_anonymity_audit",
-    # zone-map pruning economics: synthetic arrival vs range-clustered
-    # file layouts, min/max maps replayed against a quarterly probe
-    # grid — files skipped / rows scanned / matched / efficiency ppm,
-    # all from O(files) metadata aggregates
-    "zonemap_file_skipping",
-    # multi-pass sorted-neighborhood near-dup: the fourth blocking
-    # family (sort adjacency vs LSH band / simhash prefix / first
-    # token) — bucketed two-level global rank (no single-task sort),
-    # O(docs x window) equi-join candidates, exact bigram-Jaccard
-    # verify; pinned equal to the textbook sort-and-slide by pytest
-    "snm_sorted_neighborhood_pairs",
-    # DP release histogram: truncated two-sided geometric mechanism
-    # (alpha = 1/2) as an exact integer inverse-CDF ladder over a
-    # keyed md5 draw — the noising member of the privacy family
-    # (pii_scrub redacts, k_anonymity measures, this releases);
-    # deterministic draw certified cross-engine, clamp + sensitivity
-    # contract pinned by pytest
-    "dp_noisy_release",
-    # Fellegi-Sunter probabilistic record linkage: blocked candidate
-    # join over a deterministically-derived dirty feed, per-pattern
-    # m/u probabilities and match odds in exact integer ppm — the
-    # keyless entity-resolution layer the reference's exact-key
-    # upserts cannot express
-    "record_linkage_fs",
-    # top principal direction by LOG-DEPTH power iteration: repeated
-    # integer squaring of the certified Gram (G^64 in 6 BSP rounds —
-    # the near-isotropic spectrum defeats linear-rate iteration),
-    # portable positive-mod floor division, eigenvector within half
-    # a degree of numpy eigh and lambda within grid quantization
-    # (pytest-pinned)
-    "pca_power_iteration",
-    # the spectral member of the upsert==rebuild family: the Gram is
-    # a sum of outer products, so interleaved-split maintenance is
-    # EXACTLY the rebuild on the e3 integer grid (float would be
-    # order-dependent — counterexample pinned in pytest); what keeps
-    # pca_power_iteration maintainable at 100 TB
-    "gram_upsert_equivalence",
-    # bitemporal correctness audit: SCD2-style interval reconstruction
-    # from the order history must reproduce raw point-in-time facts
-    # at every probe date — the invariant AS OF / time-travel
-    # consumers rely on; interval route vs fact route compared to the
-    # cent, 4-probe broadcast grid
-    "scd2_asof_consistency",
-    # greedy k-center coreset (Gonzalez 2-approximation): diverse
-    # exemplar selection over embeddings — the coverage complement to
-    # prototype/semdedup pruning; exact integer distances, packed
-    # argmax with min-id tie-break, K broadcast-one-center passes;
-    # pinned equal to the numpy greedy replay by pytest
-    "kcenter_coreset",
-    # exact two-segment change-point over the daily spend series:
-    # variance-decomposition argmax (S_l^2/n_l + S_r^2/n_r) as a
-    # floor-scaled integer off calendar prefix sums, packed argmax
-    # with min-day tie-break; brute-force replay pinned by pytest
-    "changepoint_detection",
-    # streaming Gram maintenance: per-batch d x d integer partials
-    # added into 2080-row bounded state (the sketch-shaped end of
-    # the incremental-gate family); oracle IS the batch GRAM_ORACLE
-    # — the strongest incremental==rebuild statement the family
-    # makes; split invariance pinned by pytest
-    "streaming_gram_maintenance",
-    # group-aware CV folds: fold membership keyed by near-dup
-    # COMPONENT so paraphrase twins never straddle a train/eval
-    # boundary — contamination_check detects leakage, this prevents
-    # it; the naive doc-hash counterfactual straddle count is the
-    # quantified win, group straddle computed (0 by construction)
-    "group_aware_folds",
-    # training-batch padding economics: arrival-order vs
-    # length-sorted dynamic-padding batches priced exactly (padded
-    # slots, waste ppm) — the batching sibling of sequence_pack;
-    # both global orders via the bucketed two-level rank; the
-    # sorted-wins claim pinned by pytest
-    "padding_waste_report",
-    # Theil-Sen robust trend over monthly revenue: median pair slope
-    # in floor-divided cents/month (portable pmod division) vs the
-    # exact-integer OLS normal equation — breakdown-point-29% trend
-    # next to the outlier-fragile baseline; brute-force pinned
-    "theilsen_trend",
-    # offline retrieval evaluation: Precision@5 / MRR / NDCG for the
-    # certified cosine ranking vs label ground truth, per query
-    # label — all-integer (reciprocal rank = 1e6 DIV rank; NDCG log2
-    # discounts precomputed as integer literals, constant ideal);
-    # python replay pinned by pytest
-    "ranking_metrics_report",
-    # Merkle-tree snapshot diff: order-canonical leaf/level/root md5
-    # digests over key-aligned blocks; emits exactly the differing
-    # blocks + tree summary — the O(log n) sync primitive
-    # corpus_snapshot_diff scales on; exactness (no false
-    # positives/misses vs the row-level delta) pinned by pytest
-    "merkle_table_digest",
-    # hybrid hot/cold skew join: keys above a frequency threshold
-    # route through a broadcast join against the hot dim slice, the
-    # rest shuffle-hash — the third skew technique beside salting
-    # and AQE, for power-law keys too hot to salt; answer ==
-    # plain join + routing accounting certified, pytest-pinned
-    "hybrid_skew_join_revenue",
-    # content-defined chunking dedup (rsync/LBFS family): polynomial
-    # rolling-hash boundaries align shared substrings to identical
-    # chunks regardless of offset — the storage-level dedup member;
-    # 16 lag terms x Python-precomputed B^j mod M literals, no UDF;
-    # python replay + real savings pinned by pytest
-    "cdc_chunk_dedup",
-    # Poisson bootstrap CI (Chamandy et al. 2012) for mean order
-    # value: per-(row, replica) Poisson(1) weights off a keyed md5
-    # draw through a tabulated integer inverse-CDF ladder, all B=40
-    # replica means in ONE aggregate pass, CI = 2nd/39th order
-    # statistic — the bootstrap that scales on a shuffle engine;
-    # ladder calibration + bracket + determinism pinned by pytest
-    "poisson_bootstrap_ci",
-    # hashing-trick text KNN (Weinberger 2009): md5 feature hashing
-    # to 256 dims, sparse dim-equi-join dot products, all-integer
-    # cos^2 ppm ranking (monotone for non-negative TF vectors) —
-    # the embedding-free similarity path a pipeline runs before any
-    # model exists; python replay pinned by pytest
-    "feature_hashing_knn",
-    # hard-negative mining for contrastive training: top hashed-TF
-    # cos^2 neighbors with the certified LSH near-dup pairs
-    # anti-joined away (false-negative poisoning guard) — the
-    # lexical, label-free sibling of triplet_margin_mining;
-    # drop-dups-then-rerank contract pinned by pytest
-    "lexical_hard_negatives",
-    # rank-based quantile normalization onto the corpus reference
-    # distribution (the microarray classic): per-source ranks map to
-    # corpus order statistics via exact floor positions; corpus rank
-    # runs as the bucketed two-level (no global window on the Spark
-    # side); per-source shift magnitudes reported; replay pinned
-    "quantile_normalization",
-]
-
-#: ROUND-11 RE-CERT CANDIDATES (pre-planned at round-10 close, the
-#: a17aa4-style ledger): once CORRECTNESS_r10 lands green, the r3-era
-#: streaming/source block inside the round-10 window becomes
-#: r10-certified and the stalest standing block is the r4-era 42
-#: (alphabetical within the round, per the house staleness order).
-#: Round 11's head = flagship + _R11_QUEUE + _R11_CODE_CHANGED +
-#: this list up to the 50-window, truncated from the tail.
-_R11_RECERT_CANDIDATES: list[str] = [
-    # the remaining r4-era block: round 10's window fill consumed the
-    # first 12 alphabetical r4 entries (basket_part_pairs ..
-    # equidepth_histogram — all green in CORRECTNESS_r10), so the
-    # stalest standing rows are these 30, alphabetical within the
-    # round per the house staleness order
-    "event_cooccurrence",
-    "event_transition_matrix",
-    "hierarchical_mixture",
-    "interarrival_gaps",
-    "inverted_index_postings",
-    "ivf_multiprobe_topk",
-    "jsonl_tolerant_roundtrip",
-    "label_cohesion_stats",
-    "lm_doc_perplexity",
-    "mcv_stats",
-    "ohlc_bars_hourly",
-    "order_totals_reconciliation",
-    "per_group_sample",
-    "pyds_jsonl_sink_roundtrip",
-    "rag_corpus_prep",
-    "revenue_wow_delta",
-    "rolling_active_users",
-    "sampled_histogram",
-    "session_paths",
-    "sessionize_events",
-    "source_length_drift",
-    "streaming_ohlc_stateful",
-    "supplier_concentration",
-    "term_salience_topk",
-    "text_normalize",
-    "token_bigram_lm",
-    "traffic_seasonality",
-    "training_order_shuffle",
-    "type_correlation_stats",
-    "vocab_coverage",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 11 — re-certified
-#: inside the 50-window.  Append here whenever a round-11 change
-#: alters a certified query's plan or its oracle SQL text.  (The
-#: round-10 ADVICE fixes and the PCA squaring-loop replacement touch
-#: queries already inside the window via _R11_QUEUE, so they need no
-#: slot here.)
-_R11_CODE_CHANGED: list[str] = [
-    # round-10 verdict item 4: spearman_rank_corr now size-gates its
-    # dispatch — the per-group value-grid row count (one cheap
-    # aggregate) routes large grids through the certified bucketed
-    # two-level-rank sibling; both plans are bit-identical and share
-    # the oracle, but the dispatch changed the certified row's code
-    # text, so it re-certifies in-window
-    "spearman_rank_corr",
-]
-
-#: Queries ADDED in round 11 — placed after the 50-window (the
-#: round-11 rotation must not be displaced); they head round 12's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R12_QUEUE: list[str] = [
-    # near-dup-aware chunk rewriting (round-10 verdict item 7): the
-    # SlimPajama production step — chunk near-dup pairs closed
-    # transitively, one canonical chunk per component by the
-    # (parent-doc q10, min key) canonical_doc_selection rule, per-doc
-    # rewrite economics; composes the certified band + component +
-    # quality lineages
-    "chunk_dedup_rewrite",
-    # streaming-side observability (round-10 verdict item 8):
-    # per-micro-batch input rows, ms-exact watermark, and state-store
-    # total/evictions off StreamingQueryProgress for a watermarked
-    # tumbling aggregation — hash-certified because the oracle
-    # independently REPLAYS the watermark/state algebra from the raw
-    # table (ntile staging makes batch contents deterministic)
-    "streaming_observed_metrics",
-    # exact two-sample drift tests over the return-flag price
-    # populations, sharing one persisted merged-grid spine with the
-    # bucketed two-level prefix sum (scale-correct from day one):
-    # Mann-Whitney U (2x-scaled integer U, exact tie term, floor-e6
-    # tie-corrected z off one shared expression text) and
-    # Kolmogorov-Smirnov (integer cross-multiplied D numerator,
-    # floor-ppm D, DECIMAL(38,0) 5%-significance compare — no float
-    # ever decides the flag); both brute-force-replay pinned
-    "mann_whitney_u",
-    "ks_two_sample",
-    # t-closeness (Li et al., ICDE 2007): the third rung of the
-    # release-privacy ladder — integer-exact ordered EMD between each
-    # QI group's sensitive-attribute distribution and the corpus's,
-    # DECIMAL(38,0) ppm, risk flag; completes pii_scrub → k_anonymity
-    # → distribution leakage
-    "t_closeness_audit",
-    # Page's CUSUM as a window plan: the sequential drift monitor
-    # companion to changepoint_detection — the classic max(0, ...)
-    # recursion collapsed to the prefix-sum identities S+ = P − min
-    # prefix / S− = max prefix − P on the n-scaled integer series (no
-    # iteration, no float mean); per-direction peak, alarm days
-    "cusum_drift_monitor",
-    # the planning half of table maintenance: offset-bin
-    # (Iceberg-binpack-style) assignment of date-ordered monthly
-    # partitions to COMPACT_TASKS compaction tasks off the manifest,
-    # with per-task fill/skew ppm — compact_small_files executes,
-    # this decides
-    "compaction_tier_plan",
-    # pseudo-relevance-feedback expansion (Rocchio/RM shape): seed
-    # BM25 pass → top-3 feedback docs → 5 mined expansion terms
-    # (fb-tf ranked, df-capped stopword guard) → second certified
-    # rational-BM25 pass over the expanded termset; deterministic end
-    # to end, full python replay pinned
-    "query_expansion_prf",
-    # Hilbert-curve clustering stats over the z-order plane: the
-    # textbook xy2d recurrence as 8 unrolled integer rounds (one
-    # projection per round, arithmetic xor spelling — no engine
-    # bitwise-xor needed); pytest pins the index against the
-    # textbook replay and quantifies the equal-count-split locality
-    # win over Morton order
-    "hilbert_clustering_stats",
-    # greedy maximum-coverage selection (the submodular (1-1/e)
-    # approximation) over the 3-shingle universe: the lexical
-    # diversity counterpart to kcenter_coreset — 8 argmax rounds,
-    # struct-max picks, covered set bounded by the chosen docs'
-    # vocabulary; oracle replays every round as generated CTEs;
-    # python greedy replay pinned
-    "greedy_max_cover_selection",
-    # interpolated Kneser-Ney bigram smoothing next to the MLE table:
-    # with D = 3/4 the whole probability clears to ONE integer
-    # quotient floored to ppm in DECIMAL(38,0) — continuation-count
-    # redistribution with zero float surface
-    "kneser_ney_bigram_lm",
-    # fixed-width text source (S-family widening): render orders into
-    # a byte-offset layout, read back with substring/try_cast
-    # projections (JVM-side, no UDF), per-status rollup certified
-    # against the source table; line-width gate rides the result
-    "fwf_ingest",
-    # the assignment step Fellegi-Sunter evidence feeds: reciprocal
-    # best match (mutual-nearest, the deterministic window form of
-    # greedy one-to-one ER assignment) scored by the certified odds
-    # table, infinite-evidence patterns ranked via an explicit
-    # max-int sentinel; precision/recall vs derived ground truth
-    "linkage_greedy_assignment",
-    # apply the certified top principal direction: exact integer
-    # projection (e3-quantized embedding x 2^10-grid eigenvector as
-    # 64 expression literals — the direction is a constant-size
-    # statistic), equal-width integer bins, eigenvalue metadata
-    # riding the rows — the consumption step of the Gram -> PCA
-    # lineage
-    "embedding_pca_project",
-    # streaming CUSUM maintenance: per-batch partial daily spend
-    # merges into calendar-bounded (day, cents) state by keyed SUM
-    # (confluent — boundary-straddling days re-assemble exactly), the
-    # certified CUSUM tail runs over final state, and the oracle IS
-    # the batch CUSUM_ORACLE — the drift-monitor member of the
-    # incremental == rebuild family
-    "streaming_cusum_monitor",
-]
-
-#: ROUND-12 RE-CERT CANDIDATES (pre-planned at round-11 close, the
-#: standing ledger pattern): once CORRECTNESS_r11 lands green, the
-#: r4-era block inside the round-11 window becomes r11-certified and
-#: the stalest standing rows are the REMAINING r4-era entries (the
-#: _R11_RECERT_CANDIDATES tail the 24-slot fill truncated) followed
-#: by the next r4-era block, alphabetical within the round per the
-#: house staleness order.  Filled at round close once the window
-#: composition is final.
-_R12_RECERT_CANDIDATES: list[str] = [
-    # the 7 remaining r4-era rows (stalest standing after the
-    # round-11 window re-certifies the other 23), then the r5-era
-    # block, alphabetical within the round per the house staleness
-    # order — computed from CORRECTNESS_r01..r10 (latest check wins)
-    "term_salience_topk",
-    "text_normalize",
-    "token_bigram_lm",
-    "traffic_seasonality",
-    "training_order_shuffle",
-    "type_correlation_stats",
-    "vocab_coverage",
-    "aes_column_roundtrip",
-    "approx_quantile_contract",
-    "arrow_grouped_value_stats",
-    "asof_tolerance_view",
-    "attribution_first_last",
-    "benford_first_digit",
-    "bitmap_distinct_contract",
-    "bm25_rational_topk",
-    "boolean_retrieval_census",
-    "bpe_merge_topk",
-    "corpus_snapshot_diff",
-    "cross_split_lm_eval",
-    "embedding_moment_stats",
-    "freq_items_contract",
-    "fx_ingest_end_to_end",
-    "gdpr_delete_propagation",
-    "hll_accuracy_check",
-    "hll_per_group_contract",
-    "incremental_agg_maintenance",
-    "incremental_join_maintenance",
-    "join_skew_report",
-    "langid_confusion",
-    "lateral_topk_per_nation",
-    "media_frame_schedule",
-    "pandas_grouped_agg_gini",
-    "pareto_frontier_parts",
-    "perplexity_bucket_cutoffs",
-    "portable_bloom_contract",
-    "portable_countmin_topk",
-    "portable_hll_registers",
-    "pq_adc_topk",
-    "pq_encode",
-    "pyds_manifest_reader_roundtrip",
-    "quality_lm_calibration",
-    "rrf_hybrid_fusion",
-    "schema_evolution_roundtrip",
-    "setop_multiset_priorities",
-    "streaming_cdc_scd2",
-    "streaming_dlq_split",
-    "streaming_static_enrich",
-    "streaming_windowed_topk",
-    "token_frequency_spectrum",
-    "tokenizer_fertility",
-    "triplet_margin_mining",
-    "weighted_priority_sample",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 12 — re-certified
-#: inside the 50-window.  Append here whenever a round-12 change
-#: alters a certified query's plan or its oracle SQL text.
-_R12_CODE_CHANGED: list[str] = [
-    # round-11 verdict item 6: the doc-level keep-set was extracted
-    # as llm_survivor_docs so the composed release pipeline can
-    # consume it; llm_corpus_prep is now its per-language rollup —
-    # same plan, oracle text verified byte-identical, but the code
-    # text changed, so it re-certifies in-window
-    "llm_corpus_prep",
-    # round 12: _bloom_positions/_bloom_words extracted so
-    # bloom_upsert_equivalence and streaming_bloom_maintenance share
-    # the portable hash family byte-for-byte — plan/oracle unchanged,
-    # code text changed, so it re-certifies
-    "portable_bloom_contract",
-    # round 12: _rrf_rank_legs extracted for ranking_rbo_report's
-    # original draft; RRF's oracle text verified byte-identical, code
-    # text changed, so it re-certifies
-    "rrf_hybrid_fusion",
-    # round 12: the md5 bucket array moved to module level
-    # (_cms_md5_buckets) so countmin_upsert_equivalence shares the
-    # engine-neutral hash family — plan/oracle unchanged, code text
-    # changed, so it re-certifies
-    "portable_countmin_topk",
-]
-
-#: Queries ADDED in round 12 — placed after the 50-window (the
-#: round-12 rotation must not be displaced); they head round 13's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R13_QUEUE: list[str] = [
-    # the chained corpus-release pipeline (round-11 verdict item 6):
-    # llm_survivor_docs ⨝ group-aware split ⟕ chunk-rewrite
-    # economics → per-(split, lang) release accounting with the
-    # n_missing_split hand-off certificate; composes three certified
-    # stage lineages and their oracles verbatim
-    "corpus_release_end_to_end",
-    # the execute≡plan contract (round-11 verdict item 7): the tier
-    # plan is EXECUTED (task-partitioned rewrite of the monthly
-    # layout) and every planned economic — row mass, month coverage,
-    # fill ppm — is re-measured from the written files next to the
-    # planned number; one_file_per_task certifies the physical goal
-    # from the listing.  compaction_tier_plan itself re-certifies
-    # in-window via _R12_QUEUE after the _compaction_assignment
-    # extraction.
-    "compaction_plan_execute",
-    # PPJoin prefix filtering (Xiao et al., WWW 2008): the LOSSLESS
-    # third blocking strategy next to banded LSH and SNM — the
-    # oracle is the UNBLOCKED all-pairs truth, so the hash match
-    # certifies the filter lost nothing; integer-exact rational
-    # threshold, anti-skewed prefix-token equi-join
-    "prefix_filter_jaccard_pairs",
-    # DBSCAN* (deterministic core-points variant) over the certified
-    # 1-d PCA projection: density-separated mode count + explicit
-    # noise mass, no k chosen; eps-bucket equi-join neighborhoods
-    # (never all-pairs — the oracle does the all-pairs truth),
-    # bucketed two-level run detection and cluster ids
-    "dbscan_projection_clusters",
-    # the set-membership member of the upsert ≡ rebuild family: a
-    # Bloom filter is a bitwise OR, so merge(build(A), build(B)) ==
-    # build(A ∪ B) word-for-word on any split — certified on the
-    # interleaved even-key split with checksums the oracle replays
-    "bloom_upsert_equivalence",
-    # association rules with confidence/lift over the basket pairs:
-    # both directed rules per surviving pair, ppm-integer measures in
-    # DECIMAL(38,0), 10%-confidence deploy gate; reuses the row-local
-    # pair-explosion plan (no |lineitem|^2 self-join)
-    "association_rules_topk",
-    # Neyman optimal stratified-sampling design: budget apportioned
-    # by N_h x MAD_h (the square-root-free dispersion form — D_h an
-    # exact integer, weight e6-floored in DECIMAL(38,0)) through the
-    # certified Hamilton rule, with an oversubscription cap
-    "neyman_allocation",
-    # rank-biased overlap between the lexical and dense legs: the
-    # top-weighted retriever-agreement metric, exact-rational over
-    # the fixed 10^K·2520 denominator (prefix-sum literals — no
-    # window, no float); reuses the certified RRF tournament legs
-    "ranking_rbo_report",
-    # 64-bit SimHash Hamming near-dup with 4x16 pigeonhole banding —
-    # lossless at radius 3, the weighted-profile drift detector next
-    # to the set-overlap family (the certified 32-bit demo signature
-    # saturates on this corpus: 15% of ALL pairs at radius 3)
-    "simhash_hamming_neardup",
-    # streaming maintenance of the portable Bloom filter: per-batch
-    # partial word tables bit_or-merge into 512-word bounded state;
-    # the oracle IS the batch words build (incremental == rebuild,
-    # word-for-word; OR idempotence makes replays harmless)
-    "streaming_bloom_maintenance",
-    # the cardinality and frequency members of the upsert ≡ rebuild
-    # family: HLL register tables MAX-merge, portable CMS counter
-    # tables SUM-merge — per-vintage sketches roll up to any range
-    # with zero drift; both contracts compare every cell against the
-    # one-shot rebuild with oracle-replayed checksums
-    "hll_upsert_equivalence",
-    "countmin_upsert_equivalence",
-    # TANE level-1 FD discovery with the valid sample-prune theorem
-    # (an FD refuted on any subset is refuted on the superset): all
-    # counts on a deterministic 10% bucket sample first, exact
-    # full-table distincts only for the survivors
-    "fd_discovery_sweep",
-    # inactivity-threshold sensitivity sweep: k session knobs priced
-    # in ONE pass over one shared per-user lag/lead window (session
-    # count = sum of start indicators; single-event sessions derived
-    # without sessionizing)
-    "session_gap_sensitivity",
-    # DELETE-side IVM: invertible aggregates retract by subtraction,
-    # min/max re-derive only for groups whose deleted batch touched
-    # the standing extreme (the bounded repair path retract-stream
-    # engines run) — the oracle recomputes retained rows AND replays
-    # which groups needed repair
-    "ivm_delete_maintenance",
-    # dedup-threshold sensitivity: one banded-LSH verified-pair pass
-    # feeds k per-threshold component runs (graph-sized, never k
-    # corpus scans); per threshold: edges, clustered docs,
-    # components, keep-one drop count, largest cluster
-    "dedup_threshold_sensitivity",
-    # the mergeable-sketch use case end to end: per-day HLL register
-    # vintages MAX-merge into every 7-day rolling window (days x 256
-    # rows answer any window, no re-scan), with the exact rolling
-    # distinct and signed err_ppm alongside
-    "hll_rolling_distinct",
-    # MOSS winnowing (Schleimer et al. 2003): window-local k-gram
-    # fingerprints with the rightmost-min tie rule, boilerplate df
-    # cap, and the >= w+k-1-char lossless-detection guarantee; pair
-    # join is posting-shaped on fingerprint hash, never all-pairs
-    "winnowing_fingerprint_pairs",
-    # MMR diversity re-ranking (Carbonell & Goldstein 1998): the
-    # serving step between plain top-k (redundant) and k-center
-    # (query-blind) — rel/max-sim recursion on the e3 integer grid,
-    # λ=1/2 cleared to 2·score = rel − maxsim, K packed-argmax rounds
-    # over a bounded relevance pool (the corpus-scaled work is one
-    # relevance pass + a tournament)
-    "mmr_diverse_topk",
-    # split-conformal prediction gate: the distribution-free
-    # per-type upper bound (calibration k = ceil((n+1)(1-alpha))-th
-    # order statistic via the bucketed two-level cum — no per-type
-    # sort) with the test-split coverage audit in floor ppm
-    "conformal_quantile_gate",
-]
-
-#: ROUND-13 RE-CERT CANDIDATES (pre-planned at round-12 close, the
-#: standing ledger pattern): once CORRECTNESS_r12 lands green, the
-#: stalest standing rows are the 19 r5-era entries the 30-slot fill
-#: truncated (minus the three that re-enter through
-#: _R12_CODE_CHANGED), then the r6-era block — oldest latest-check
-#: first, alphabetical within the round, computed from
-#: CORRECTNESS_r01..r11 with the round-12 window exempted.
-_R13_RECERT_CANDIDATES: list[str] = [
-    "media_frame_schedule",
-    "pandas_grouped_agg_gini",
-    "pareto_frontier_parts",
-    "perplexity_bucket_cutoffs",
-    "portable_hll_registers",
-    "pq_adc_topk",
-    "pq_encode",
-    "pyds_manifest_reader_roundtrip",
-    "quality_lm_calibration",
-    "schema_evolution_roundtrip",
-    "setop_multiset_priorities",
-    "streaming_cdc_scd2",
-    "streaming_dlq_split",
-    "streaming_static_enrich",
-    "streaming_windowed_topk",
-    "token_frequency_spectrum",
-    "tokenizer_fertility",
-    "triplet_margin_mining",
-    "weighted_priority_sample",
-    "ann_recall_report",
-    "argmax_order_per_customer",
-    "capped_waterfill_allocation",
-    "catalog_snapshot_manifest",
-    "chi2_contingency_cells",
-    "collated_group_counts",
-    "corrupt_file_tolerant_read",
-    "csv_multiline_roundtrip",
-    "decimal_money_totals",
-    "dedup_pagerank_exact",
-    "file_metadata_lineage",
-    "formatted_number_parse",
-    "functional_dependency_audit",
-    "integer_division_semantics",
-    "jl_sign_projection",
-    "join_cardinality_estimate",
-    "knn_graph_build",
-    "knn_label_eval",
-    "listagg_top_customers",
-    "map_column_stats",
-    "map_in_arrow_char_profile",
-    "media_dedup_exact",
-    "ndv_catalog_sweep",
-    "ngram_novelty_scores",
-    "not_in_null_semantics",
-    "observed_ingest_metrics",
-    "order_status_transpose",
-    "pandas_api_lang_stats",
-    "parameterized_sql_orders",
-    "parquet_agg_pushdown_stats",
-    "pyds_stream_sink_roundtrip",
-    "rare_token_quality",
-    "rfm_segmentation",
-    "seasonal_naive_backtest",
-    "semantic_topic_slice",
-]
-
-#: Queries whose CODE/LINEAGE changed in round 13 — re-certified
-#: inside the 50-window.  Append here whenever a round-13 change
-#: alters a certified query's plan or its oracle SQL text.
-_R13_CODE_CHANGED: list[str] = [
-    # round 13 (verdict item 6): chunk_dedup_rewrite gained an
-    # output-level swap_cache so co-scheduled consumers
-    # (corpus_release_end_to_end) reuse the whole lineage — plan
-    # semantics unchanged, code text changed, so it re-certifies
-    # in-window
-    "chunk_dedup_rewrite",
-]
-
-#: Queries ADDED in round 13 — placed after the 50-window (the
-#: round-13 rotation must not be displaced); they head round 14's
-#: rotation.  Verified against the DuckDB oracle locally on addition.
-_R14_QUEUE: list[str] = [
-    # streaming maintenance of the portable HyperLogLog (round-12
-    # verdict item 5): per-batch partial register tables MAX-merge
-    # into 256-row bounded state; the oracle IS the batch register
-    # build (incremental == rebuild, register-for-register; MAX
-    # idempotence makes replays harmless) — the cardinality sketch a
-    # 100 TB ingest maintains live, certified live
-    "streaming_hll_maintenance",
-    # the frequency member completing the live sketch trio: CMS
-    # counter tables SUM-merge per batch into d·w bounded state; the
-    # oracle IS the batch counter table, and because SUM is not
-    # idempotent the gate also certifies exactly-once batch delivery
-    "streaming_cms_maintenance",
-    # EWMA control chart (Roberts 1959): the third classical drift
-    # monitor next to CUSUM and the retrospective changepoint — with
-    # α = 1/4 the recursion is an integer shift ((x + 3s) >> 2), the
-    # ±50% alarm band is plain integer compare, and the oracle
-    # replays the recursion as a weekly-grain recursive CTE
-    "ewma_control_chart",
-    # FastSS deletion-neighborhood blocking (Bocek et al. 2007): the
-    # LOSSLESS edit-distance-1 similarity join — variants equi-join,
-    # never all-pairs; the oracle is the all-pairs levenshtein truth
-    # so the hash match certifies the blocking lost nothing
-    "fastss_editdist1_pairs",
-    # Mann-Kendall monotonic-trend test (Kendall 1975): the
-    # significance companion to theilsen_trend — S and the
-    # tie-corrected 18·Var(S) exact integers, the 95% test cleared
-    # to (|S|−1)²·18·2500 > 9604·var18 (z² as a rational), per
-    # priority segment over the calendar-bounded weekly pair grid
-    "mann_kendall_trend",
-    # Cohen's kappa between the marker language classifier and the
-    # stored label: chance-corrected agreement as exact floor-ppm
-    # rationals (κ can be negative — portable positive-mod floor
-    # division keeps Spark DIV and DuckDB // identical)
-    "classifier_agreement_kappa",
-    # append-side IVM for sessionization — the non-algebraic member
-    # of the incremental family: only the boundary (last standing
-    # session vs first delta session) can merge, so the repair is
-    # one users-sized join; the oracle recomputes AND replays which
-    # users took the merge path
-    "incremental_session_maintenance",
-    # temperature-based data mixing at τ = 1/2 (the multilingual
-    # LLM sampling rule): per-language token mass → exact integer
-    # sqrt (float sqrt + ±1 integer correction — exact for n < 2^52)
-    # → certified Hamilton apportionment → epoch factor in ppm
-    "mixture_temperature_weights",
-    # streaming maintenance of the EWMA chart: per-batch partial
-    # weekly spend SUM-merges into calendar-bounded state, the
-    # certified ewma_from_weekly fold runs over final state, and the
-    # oracle IS the batch EWMA_ORACLE — the level-shift monitor
-    # joins CUSUM in the live drift family
-    "streaming_ewma_monitor",
-    # leave-one-source-out ablation: k sources priced from ONE
-    # (lang, source) token aggregate — share of corpus and the
-    # max per-language composition shift (floor-ppm) if the source
-    # were dropped, shifted language named
-    "source_ablation_report",
-    # time-weighted average (TimescaleDB time_weight / kdb twap):
-    # LOCF holding-duration weights on the irregular event series,
-    # one partitioned lead window + one floor division, with the
-    # unweighted mean alongside so the sampling bias is visible
-    "twap_by_event_type",
-    # greedy debounce dedup (keep iff > T after the last KEPT event):
-    # the sequential rule windowed dedup cannot express — per-user
-    # integer-state fold, recursive-CTE oracle
-    "jitter_dedup_events",
-    # the LSH planning table: 1 − (1 − j^r)^b per candidate (b, r)
-    # geometry in stepwise-floor ppm, with each geometry's
-    # corpus-MEASURED candidate count alongside (Σ C(bucket,2) over
-    # the 24-perm signature stream — pairs never materialize)
-    "lsh_s_curve_planner",
-    # Fellegi-Sunter threshold sensitivity: k declare-match odds
-    # cutoffs priced from the ONE 8-row evidence table — declared /
-    # correct / precision / blocked recall per cutoff in floor-ppm
-    "linkage_threshold_sensitivity",
-    # gap-fill by linear interpolation (TimescaleDB interpolate next
-    # to the existing locf): portable positive-mod floor division on
-    # the possibly-negative slope numerator; same grid plan as the
-    # LOCF sibling plus two bounded per-user windows
-    "gapfill_linear_interp",
-    # the debounce rule as a custom stateful streaming operator
-    # (applyInPandasWithState, one integer of state per key,
-    # time-ordered micro-batches): streaming state ≡ batch fold for
-    # a NON-algebraic sequential rule — the oracle IS the batch
-    # recursion
-    "streaming_jitter_dedup",
-    # MDM field survivorship: two independently-lossy source feeds
-    # merged per entity — per field, who rescued it, who agreed, who
-    # conflicted, who missed it (the table that decides which source
-    # to trust per field)
-    "golden_record_survivorship",
-    # Kaplan-Meier survival over customer order lifetimes: the
-    # censoring-aware retention curve (right-censored inside the
-    # 26-week window) with the survival product in stepwise-floor
-    # ppm — one data-scaled (first, last) aggregate, then a
-    # calendar-bounded fold; oracle replays as a recursive CTE
-    "kaplan_meier_retention",
-]
-
-#: Queries whose LINEAGE CHANGED in round 14 (so their standing
-#: driver rows no longer certify the current code) — re-certify
-#: in-window.  Round-14 advice/verdict fixes that touched queries
-#: already heading the window via _R14_QUEUE (lsh_s_curve_planner's
-#: <3-token signature filter, twap_by_event_type's pmod-floor +
-#: zero-span guard, classifier_agreement_kappa's degenerate guard,
-#: source_ablation_report's single-source guard) need no extra slot.
-_R14_CODE_CHANGED: list[str] = [
-    # round-14 verdict item 4: per-component pair-mass emission cap
-    # with an overflow marker (exact up to the cap, explicit beyond)
-    # on the two super-linear detectors
-    "winnowing_fingerprint_pairs",
-    "dedup_threshold_sensitivity",
-    # refactored (spine extracted for the capped sibling) — plan
-    # unchanged, code text changed, so it re-certifies in-window
-    "ngram_jaccard_pairs",
-]
-
-#: Queries ADDED in round 14 — placed after the 50-window (the
-#: round-14 rotation must not be displaced); they head round 15's
-#: rotation.  Verified against the DuckDB oracle locally on
-#: addition.
-_R15_QUEUE: list[str] = [
-    # SUBSTRING-granular dedup (round-13 verdict item 5, "What's
-    # missing #3"): the k-token duplicated-span rewrite — rolling
-    # 8-token gram postings → canonical-first-occurrence keying (one
-    # BIGINT min per gram) → coverage explode → token anti-join →
-    # byte-certified surviving text md5.  Never forms document
-    # pairs; every stage linear in corpus tokens.
-    "duplicated_span_rewrite",
-    # maximum drawdown per user over the event value series — the
-    # FX path statistic (running peak − value, maximized), one
-    # partitioned window + argmin-join trough tie-break
-    "max_drawdown_by_user",
-    # Holt's linear (double exponential) smoothing, α = β = 1/2 as
-    # portable floor-halvings, with one-step MAE vs the naive
-    # carry-forward — the trend-aware member next to EWMA
-    "holt_linear_forecast",
-    # Nelson-Aalen cumulative hazard over the censored KM tenure
-    # frame — additive (no stepwise-floor caveat), the rates
-    # companion to the survival curve
-    "nelson_aalen_hazard",
-    # exact Kruskal-Wallis H (k-sample omnibus rank test) off the
-    # shared two-sample flag grid: 2x-trick ranks, DECIMAL(38)
-    # R2² terms, tie-corrected, fixed chi²(df=2) rational decision
-    "kruskal_wallis_test",
-    # Benford first-digit forensic audit of order totals: fixed
-    # literal log-curve expectations in ppm, observed floor-ppm
-    # shares, MAD-style max deviation scalar
-    "benford_digit_audit",
-    # exact total-variation distance per source vs the pooled token
-    # distribution (the one classical divergence that stays rational
-    # — no logs), most-shifted token named
-    "vocab_divergence_report",
-    # EXACT Shapley values of the vocabulary-coverage game via the
-    # closed form φ = Σ 1/df(token) — data valuation without 2^k
-    # coalitions; efficiency-axiom conservation pinned
-    "shapley_vocab_coverage",
-    # 5/95 winsorized vs raw mean per priority: exact rank-based
-    # clamp thresholds, the robust-monitoring readout
-    "winsorized_stats",
-    # the drawdown monitor LIVE: per-user (peak, max_dd, trough, n)
-    # integer state in applyInPandasWithState over time-ordered
-    # micro-batches; the oracle IS the batch window+argmin operator
-    "streaming_drawdown_monitor",
-    # isotonic (PAVA) regression through the exact minimax
-    # characterization — three data-parallel passes over a bounded
-    # interval grid instead of the sequential pool loop; monotone +
-    # pooling behavior property-pinned
-    "isotonic_weekly_fit",
-    # stationary distribution of the event-type Markov chain: power
-    # method in integer ppm over the catalog-bounded (<= 25-cell)
-    # floor-ppm transition matrix; oracle replays the recursion as a
-    # one-row recursive CTE over the pivoted matrix
-    "markov_stationary_distribution",
-    # DELETION contract for the counting Bloom filter: retraction by
-    # counter subtraction, delete(build(A∪D), D) == build(A)
-    # counter-for-counter — the sketch-family member with retraction
-    "counting_bloom_delete_equivalence",
-]
-
-#: ROUND-14 RE-CERT CANDIDATES (pre-planned at round-13 close, the
-#: standing ledger pattern): once CORRECTNESS_r13 lands green, the
-#: stalest standing rows are the r6-era entries (latest check r6,
-#: alphabetical — the round-13 29-slot fill re-certified everything
-#: staler), then the r7-era block head.  Computed from
-#: CORRECTNESS_r01..r12 (latest check wins) with the round-13
-#: window exempted; round 14's head = flagship + _R14_QUEUE +
-#: _R14_CODE_CHANGED + this list truncated from the tail at 50.
-_R14_RECERT_CANDIDATES: list[str] = [
-    "dedup_pagerank_exact",
-    "file_metadata_lineage",
-    "formatted_number_parse",
-    "functional_dependency_audit",
-    "integer_division_semantics",
-    "jl_sign_projection",
-    "join_cardinality_estimate",
-    "knn_graph_build",
-    "knn_label_eval",
-    "listagg_top_customers",
-    "map_column_stats",
-    "map_in_arrow_char_profile",
-    "media_dedup_exact",
-    "ndv_catalog_sweep",
-    "ngram_novelty_scores",
-    "not_in_null_semantics",
-    "observed_ingest_metrics",
-    "order_status_transpose",
-    "pandas_api_lang_stats",
-    "parameterized_sql_orders",
-    "parquet_agg_pushdown_stats",
-    "pyds_stream_sink_roundtrip",
-    "rare_token_quality",
-    "rfm_segmentation",
-    "seasonal_naive_backtest",
-    "semantic_topic_slice",
-    "session_window_native",
-    "shuffle_hash_segment_revenue",
-    "split_centroid_drift",
-    "sql_udf_percent_parse",
-    "streaming_interval_join_outer",
-    "temperature_sweep",
-    "token_pmi_topk",
-    "token_weighted_median_quality",
-    "try_function_semantics",
-    "tz_local_day_rollup",
-    "udtf_null_profile",
-    "xml_roundtrip_extract",
-    "anti_customers_no_orders",
-    "brp_lsh_containment",
-    "csv_normalize_pipeline",
-    "cube_order_status",
-    "d3_last_write_wins",
-    "embedding_norm_stats",
-    "events_json_extract",
-    "exists_suppliers_shipping",
-    "f2_f3_record_filters",
-    "grouping_sets_status",
-    "kmeans_iterate_exact",
-    "lag_lead_order_gaps",
-]
-
-#: ROUND-10 RE-CERT CANDIDATES (wired into the head by the round-10
-#: window flip below).  Computed from the CORRECTNESS files after
-#: the round-9 window landed green (CORRECTNESS_r09: 50/50): the
-#: r3-era streaming/source block is the stalest standing (the r2-era
-#: rows all sit inside the round-9 window), then the oldest of the
-#: r4-era block (alphabetical within a round).  Round 10's head =
-#: flagship + _R10_QUEUE + _R10_CODE_CHANGED + this list up to
-#: the 50-window, truncated from the tail.
-_R10_RECERT_CANDIDATES: list[str] = [
-    "quantized_ivf_topk",
-    "retention_cohorts",
-    "rss_datasource_scan",
-    "rss_datasource_stream",
-    "s2_csv_ingest",
-    "s4_account_metadata",
-    "s5_rss_trades_pipeline",
-    "sequence_pack",
-    "stratified_sample",
-    "streaming_csv_merge",
-    "streaming_dedup_watermark",
-    "streaming_interval_join",
-    "streaming_locf_stateful",
-    "streaming_session_append",
-    "streaming_session_windows",
-    "streaming_sliding_append",
-    "streaming_sliding_windows",
-    "streaming_tumbling_append",
-    "streaming_tumbling_windows",
-    "udtf_token_explode",
-    "value_percentile_bands",
-    "basket_part_pairs",
-    "chunk_boilerplate",
-    "compact_small_files",
-    "daily_anomaly_days",
-    "dedup_component_size_hist",
-    "dedup_degree_hist",
-    "dedup_triangles",
-    "doc_chunking",
-    "dsir_importance_stats",
-    "dynamic_partition_backfill",
-    "embedding_quantize",
-    "equidepth_histogram",
-    "event_cooccurrence",
-    "event_transition_matrix",
-    "hierarchical_mixture",
-    "interarrival_gaps",
-    "inverted_index_postings",
-    "ivf_multiprobe_topk",
-    "jsonl_tolerant_roundtrip",
-    "label_cohesion_stats",
-    "lm_doc_perplexity",
-    "mcv_stats",
-    "ohlc_bars_hourly",
-    "order_totals_reconciliation",
-    "per_group_sample",
-    "pyds_jsonl_sink_roundtrip",
-    "rag_corpus_prep",
-    "revenue_wow_delta",
-    "rolling_active_users",
-]
-
-#: ROUND-8 RE-CERT CANDIDATES: computed from the CORRECTNESS files
-#: after the round-7 window landed green (CORRECTNESS_r07: 50/50) —
-#: the 7 r1-era rows the Arrow-flip re-certs displaced from round
-#: 7's fill (6 rounds stale — oldest first), then the r2-era block.
-#: Round 8's head = flagship + _R8_QUEUE + _R8_CODE_CHANGED + this
-#: list up to the 50-window, truncated from the tail.
-_R8_RECERT_CANDIDATES: list[str] = [
-    "t2_timestamp_iso",
-    "t3_custom_ts_roundtrip",
-    "t4_percent_parse",
-    "t5_sentinel_null",
-    "t6_string_extract",
-    "t7_hash_dedup",
-    "topk_orders_per_customer",
-    "ann_ivf_topk",
-    "asof_purchase_view",
-    "bloom_filter_join",
-    "bucketed_colocated_join",
-    "contamination_check",
-    "cosine_topk_bruteforce",
-    "csv_sink_roundtrip",
-    "dedup_exact",
-    "doc_fingerprint",
-    "dpp_monthly_join",
-    "dq_audit",
-    "edit_distance_pairs",
-    "embedding_near_dup",
-    "funnel_conversion",
-    "heavy_hitters_exact",
-    "lang_id",
-    "mad_outliers",
-    "media_metadata",
-    "multimodal_features",
-    "ngram_jaccard_pairs",
-    "orc_sink_roundtrip",
-    "q17_small_qty_revenue",
-    "q1_pricing_summary",
-    "q20_part_supp_chain",
-    "quality_score",
-    "quantized_topk",
-    "range_join_price_bands",
-    "regression_analytics",
-    "s4_xlsx_registry",
-    "salted_count_events",
-    "salted_join_supplier_revenue",
-    "scd2_customer_dim",
-    "simhash_docs",
-    "temperature_resample",
-    "text_stats",
-    "time_bucket_rollup",
-    "training_shard_roundtrip",
-    "unpivot_lineitem_metrics",
-    "variant_json_shred",
-    "w1_locf_snapshots",
-    "w2_keep_one_per_key",
-    "winsorized_totalprice",
-    "zorder_clustering_stats",
-]
-
-#: ROUND-7 RE-CERT CANDIDATES — the 46 oldest-standing oracle-backed
-#: driver rows (latest check wins; r1-era rows are 6 rounds stale by
-#: round 7), computed from the CORRECTNESS_r0N files.  Round 7's head
-#: = flagship + _R7_QUEUE + any code-changed queries + this list up
-#: to the 50-window.  Rows-only queries are excluded (a re-cert row
-#: adds nothing without a hash compare).
-_R7_RECERT_CANDIDATES: list[str] = [
-    "anti_customers_no_orders",
-    "csv_normalize_pipeline",
-    "cube_order_status",
-    "d3_last_write_wins",
-    "embedding_norm_stats",
-    "events_json_extract",
-    "exists_suppliers_shipping",
-    "f2_f3_record_filters",
-    "grouping_sets_status",
-    "lag_lead_order_gaps",
-    "merge_k1_preserve",
-    "merge_k2_clobber",
-    "merge_k3_metadata",
-    "p1_p4_rename_project",
-    "p3_null_defaults",
-    "pivot_status_by_priority",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_volume_orders",
-    "q19_disjunctive_predicates",
-    "q21_sole_late_supplier",
-    "q22_dormant_rich_customers",
-    "q3_shipping_priority",
-    "q4_priority_late_ship",
-    "q5_region_revenue",
-    "q6_selective_agg",
-    "q7_nation_volume",
-    "q8_market_share",
-    "ranking_variants",
-    "rolling_week_spend",
-    "rollup_returns",
-    "running_customer_spend",
-    "scalar_subquery_above_avg",
-    "semi_customers_with_urgent",
-    "setop_active_nations",
-    "t1_numeric_coercion",
-    "t2_timestamp_iso",
-    "t3_custom_ts_roundtrip",
-    "t4_percent_parse",
-    "t5_sentinel_null",
-    "t6_string_extract",
-    "t7_hash_dedup",
-    "topk_orders_per_customer",
-    "ann_ivf_topk",
-    "asof_purchase_view",
-]
-
-
-#: queries added in round 4, appended to the gate head as they land
-_R4_NEW: list[str] = [
-    "dsir_importance_stats",
-    "lm_doc_perplexity",
-    "split_decontaminate",
-    "canonical_doc_selection",
-    "ivf_multiprobe_topk",
-    "embedding_moment_stats",
-    "pyds_manifest_reader_roundtrip",
-    "token_frequency_spectrum",
-    "gdpr_delete_propagation",
-    "schema_evolution_roundtrip",
-    "streaming_dlq_split",
-    "streaming_static_enrich",
-    "hll_accuracy_check",
-    "dedup_pagerank",
-    "benford_first_digit",
-    "approx_quantile_contract",
-    "pareto_frontier_parts",
-    "embedding_gram_matrix",
-    "perplexity_bucket_cutoffs",
-    "tokenizer_fertility",
-    "weighted_priority_sample",
-    "streaming_cdc_scd2",
-    "streaming_windowed_topk",
-    "pq_encode",
-    "pq_adc_topk",
-    "lateral_topk_per_nation",
-    "recursive_dup_reachability",
-    "asof_tolerance_view",
-    "corpus_snapshot_diff",
-    "bpe_merge_topk",
-    "freq_items_contract",
-    "setop_multiset_priorities",
-    "attribution_first_last",
-    "arrow_grouped_value_stats",
-    "langid_confusion",
-    "quality_lm_calibration",
-    "hll_per_group_contract",
-    "cross_split_lm_eval",
-    "media_frame_schedule",
-    "media_dedup_exact",
-    "temperature_sweep",
-    "pyds_stream_sink_roundtrip",
-    "corrupt_file_tolerant_read",
-    "pandas_api_lang_stats",
-    "corpus_release_manifest",
-    "session_window_native",
-    "shuffle_hash_segment_revenue",
-    "knn_label_eval",
-    "udtf_null_profile",
-    "streaming_interval_join_outer",
-    "ann_recall_report",
-    "jl_sign_projection",
-    "token_pmi_topk",
-    "decimal_money_totals",
-    "parquet_agg_pushdown_stats",
-    "tz_local_day_rollup",
-    "quality_feature_matrix",
-    "csv_multiline_roundtrip",
-    "streaming_lsh_dedup",
-    "sql_udf_percent_parse",
-    "collated_group_counts",
-    "parameterized_sql_orders",
-    "file_metadata_lineage",
-    "argmax_order_per_customer",
-    "incremental_agg_maintenance",
-    "triplet_margin_mining",
-    "map_column_stats",
-    "map_in_arrow_char_profile",
-    "pandas_grouped_agg_gini",
-    "capped_waterfill_allocation",
-    "ngram_novelty_scores",
-    "token_weighted_median_quality",
-    "aes_column_roundtrip",
-    "formatted_number_parse",
-    "xml_roundtrip_extract",
-    "semantic_topic_slice",
-    "seasonal_naive_backtest",
-    "functional_dependency_audit",
-    "not_in_null_semantics",
-    "integer_division_semantics",
-    "fx_ingest_end_to_end",
-    "ndv_catalog_sweep",
-    "try_function_semantics",
-    "portable_bloom_contract",
-    "portable_hll_registers",
-    "portable_countmin_topk",
-    "bm25_rational_topk",
-    "rrf_hybrid_fusion",
-    "chi2_contingency_cells",
-    "observed_ingest_metrics",
-    "listagg_top_customers",
-    "order_status_transpose",
-    "boolean_retrieval_census",
-    "split_centroid_drift",
-    "join_skew_report",
-    "incremental_join_maintenance",
-    "knn_graph_build",
-    "catalog_snapshot_manifest",
-    "join_cardinality_estimate",
-    "bitmap_distinct_contract",
-]
+def certification_order(ledger_dir: Path = _HERE) -> list[str]:
+    """Registered query keys in driver certification order (see the
+    module docstring); the sort is stable, so ties keep registration
+    order."""
+    last: dict[str, int] = {}
+    for path in ledger_dir.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for key, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True:
+                last[key] = max(last.get(key, 0), rnd)
+    oracles = oracle_sql()
+    keys = [k for mod in _MODULES for k in mod.QUERIES if k != _FLAGSHIP]
+    # False sorts first: oracle-backed keys with no certified row lead
+    keys = sorted(
+        dict.fromkeys(keys),
+        key=lambda k: (k in last or k not in oracles, last.get(k, 0)),
+    )
+    return [_FLAGSHIP, *keys]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracles: dict[str, str] = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-        oracles.update(getattr(mod, "ORACLES", {}))
-    # Round-14 gate window (50 entries = the driver's exact window
-    # size, observed rounds 1-13):
-    # 1. the flagship (always certified),
-    # 2. the _R14_QUEUE eighteen (round-13 additions, the only
-    #    never-driver-checked oracle-backed queries) — debt drops
-    #    18 → 0,
-    # 3. queries whose lineage changed in round 14
-    #    (_R14_CODE_CHANGED: the pair-mass-capped detectors),
-    # 4. the stalest standing rows (_R14_RECERT_CANDIDATES — the
-    #    r6-era block first, then the r7-era head) truncated from
-    #    the TAIL to fill the window at exactly 50.
-    # Beyond the window: _R15_QUEUE (round-14 additions head round
-    # 15), then the round-13 window order, then standing rows.
-    head = ["flagship_account_pnl"]
-    head += _R14_QUEUE
-    head += [q for q in _R14_CODE_CHANGED if q not in head]
-    fill = 50 - len(head)
-    head += [q for q in _R14_RECERT_CANDIDATES if q not in head][:fill]
-    head += _R15_QUEUE
-    head += [q for q in _R13_QUEUE if q not in head]
-    head += [q for q in _R13_CODE_CHANGED if q not in head]
-    head += [q for q in _R13_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R12_QUEUE if q not in head]
-    head += [q for q in _R12_CODE_CHANGED if q not in head]
-    head += [q for q in _R12_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R11_QUEUE if q not in head]
-    head += [q for q in _R11_CODE_CHANGED if q not in head]
-    head += [q for q in _R11_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R10_QUEUE if q not in head]
-    head += [q for q in _R10_CODE_CHANGED if q not in head]
-    head += [q for q in _R10_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R9_QUEUE if q not in head]
-    head += [q for q in _R9_CODE_CHANGED if q not in head]
-    head += [q for q in _R9_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R8_QUEUE if q not in head]
-    head += [q for q in _R8_CODE_CHANGED if q not in head]
-    head += [q for q in _R8_RECERT_CANDIDATES if q not in head]
-    head += [q for q in _R7_QUEUE if q not in head]
-    head += [q for q in _R7_CODE_CHANGED if q not in head]
-    head += [q for q in _R7_RECERT_CANDIDATES if q not in head]
-    head += _R6_PENDING
-    head += _R6_RECERT
-    head += _R5_CERT
-    out = {k: merged[k] for k in head if k in merged}
-    out.update(
-        {
-            k: v
-            for k, v in merged.items()
-            if k not in _R01_DRIVER_GREEN and k in oracles
-        }
-    )
-    out.update({k: v for k, v in merged.items() if k not in _R01_DRIVER_GREEN})
-    out.update(merged)
-    return out
+    return {k: merged[k] for k in certification_order()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -6,7 +6,7 @@ Prints ONE JSON line (COMPACT — guaranteed to fit the driver's
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "frozen15_total": ..., "frozen27_total": ..., "load_tainted_n": N}
 The full per-query detail (loads, redraws, prev_draws, lineage A/B)
-is written to $SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL_r{N}.json).
+is written to $SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL_r{NN}_c{cpus}.json).
 """
 
 from __future__ import annotations
@@ -350,7 +350,7 @@ def compact_stdout_record(record: dict) -> dict:
         # round-13: at the 71-entry HEADLINE even 0.1s precision
         # overflows — degrade to integer-decisecond-free seconds
         # before sacrificing coverage (full coverage still beats
-        # resolution; BENCH_LOCAL_r{N}.json keeps the millisecond
+        # resolution; BENCH_LOCAL_r{NN}_c{cpus}.json keeps the millisecond
         # detail and is committed every round).
         # round-15 (r14 verdict What's-wrong #1): integer rounding
         # printed measured sub-second entries as 0 and the driver's

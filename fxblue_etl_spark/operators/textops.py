@@ -94,102 +94,6 @@ FROM toks
 """
 
 
-#: Arrow pre-gate stage (see ``corpus_pre_gate_rows``): OFF — a
-#: measured LOSS, kept as recorded evidence with its bit-identity
-#: contract tests.  Same-session interleaved A/B at sf0.1 (5 draws
-#: each, load-cancelled): llm_corpus_prep 4.37s arrow vs 3.84s HOF
-#: (+14%).  Unlike the signature stage (small output), the pre-gate
-#: must carry the FULL text column out of Python for the downstream
-#: LSH stage, so the Arrow round-trip serializes the corpus twice —
-#: more than the interpreted-expression savings.  The pre-gate's cost
-#: is the scan + exact-dedup window + persist, not expression work.
-USE_ARROW_PREGATE = False
-
-_PRE_GATE_SCHEMA = (
-    "doc_id bigint, text string, n_tokens int, len_band boolean, "
-    "has_stop boolean, low_punct boolean, pred_lang string, "
-    "content_md5 string"
-)
-
-
-def _pre_gate_arrow_fn(batches):
-    """``mapInPandas`` worker for the corpus pre-gate: per doc the
-    whitespace token count, the three quality-score BOOLEANS (the
-    float score is rebuilt JVM-side from them, so no Python float
-    surface exists), the marker-argmax language, and the normalized
-    content md5 — one pass over the text.  Tokenization matches
-    Java-regex ``\\s`` (ASCII class) and Spark's space-only ``trim``
-    exactly; bit-identity vs the HOF lineage is pinned in
-    ``tests/test_arrow_signatures.py``.  Rows with non-string text
-    are skipped — they can never pass the score gate."""
-    import hashlib
-    import re as _re
-
-    import pandas as _pd
-
-    ws = _re.compile("[ \t\n\x0b\x0c\r]+")
-    nonword = _re.compile(r"[^A-Za-z0-9_ \t\n\x0b\x0c\r]")
-    marker_sets = {lang: set(m) for lang, m in LANG_MARKERS.items()}
-    langs = list(LANG_MARKERS)
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "text", "n_tokens", "len_band", "has_stop",
-            "low_punct", "pred_lang", "content_md5",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue
-            # the certified operators differ here: the quality score
-            # intersects RAW-case tokens with the (lowercase) marker
-            # list, language-ID intersects LOWERCASED tokens
-            raw_toks = [t for t in ws.split(text) if t]
-            tokset = {t.lower() for t in raw_toks}
-            n_tok = len(raw_toks)
-            # Spark's division yields NULL for len 0 → when() falls
-            # through to 0.0, same as low_punct=False here
-            low_punct = (
-                len(text) > 0
-                and len(nonword.findall(text)) / len(text) < 0.1
-            )
-            hits = {
-                lang: len(tokset & marker_sets[lang]) for lang in langs
-            }
-            best = max(hits.values())
-            pred = "unk"
-            if best > 0:
-                for lang in langs:  # earlier langs win ties
-                    if hits[lang] == best:
-                        pred = lang
-                        break
-            norm = ws.sub(" ", text.strip(" ")).lower()
-            out["doc_id"].append(doc_id)
-            out["text"].append(text)
-            out["n_tokens"].append(n_tok)
-            out["len_band"].append(20 <= n_tok <= 1000)
-            out["has_stop"].append(
-                bool(set(raw_toks) & marker_sets["en"])
-            )
-            out["low_punct"].append(low_punct)
-            out["pred_lang"].append(pred)
-            out["content_md5"].append(
-                hashlib.md5(norm.encode()).hexdigest()
-            )
-        if out["doc_id"]:
-            yield _pd.DataFrame(out)
-
-
-def corpus_pre_gate_rows(docs: DataFrame) -> DataFrame:
-    """The Arrow-batched corpus pre-gate (needs ``doc_id``, ``text``):
-    quality booleans + language + content md5 in ONE Python pass.
-    The caller rebuilds the certified score expression from the
-    booleans in the JVM (`plans/corpus.llm_corpus_prep`), so the
-    float-addition chain, rounding, and the ≥ 0.7 gate are the exact
-    expressions the standalone certified operators run."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _pre_gate_arrow_fn, _PRE_GATE_SCHEMA
-    )
-
-
 def quality_signal_cols(
     text: Column | str = "text",
 ) -> tuple[Column, Column, Column]:

@@ -54,8 +54,6 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import lsh_jaccard_pairs
     from ..operators.graph import connected_components
     from ..operators.textops import (
-        USE_ARROW_PREGATE,
-        corpus_pre_gate_rows,
         marker_hits,
         pred_lang_from_hits,
         quality_signal_cols,
@@ -72,50 +70,23 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would pay for co-location the scan already has.  The gate
     # filters fuse into the scan; the first shuffle of the whole
     # pipeline is the exact-dedup window on content_md5.
-    if USE_ARROW_PREGATE:
-        # Arrow pre-gate (round-7 continuation): the booleans come
-        # from ONE Python pass; the float score is rebuilt HERE with
-        # the exact addition chain quality_signal_cols emits, so the
-        # rounding/gate arithmetic never leaves the JVM
-        g = corpus_pre_gate_rows(fan_out(table(spark, sf_dir, "documents")))
-        score = (
-            F.when(F.col("len_band"), F.lit(0.5)).otherwise(F.lit(0.0))
-            + F.when(F.col("has_stop"), F.lit(0.3)).otherwise(F.lit(0.0))
-            + F.when(F.col("low_punct"), F.lit(0.2)).otherwise(F.lit(0.0))
+    n_tok, _n_stop, score = quality_signal_cols()
+    pred = pred_lang_from_hits(marker_hits(ws_tokens(F.lower(F.col("text")))))
+    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    survivors = (
+        fan_out(table(spark, sf_dir, "documents"))
+        .select(
+            "doc_id",
+            "text",
+            n_tok.alias("n_tokens"),
+            F.round(score, 2).alias("quality_score"),
+            (score >= 0.7).alias("__keep"),
+            pred.alias("pred_lang"),
+            F.md5(norm).alias("content_md5"),
         )
-        survivors = (
-            g.select(
-                "doc_id",
-                "text",
-                "n_tokens",
-                F.round(score, 2).alias("quality_score"),
-                (score >= 0.7).alias("__keep"),
-                "pred_lang",
-                "content_md5",
-            )
-            .filter(F.col("__keep") & (F.col("pred_lang") != "unk"))
-            .drop("__keep")
-        )
-    else:
-        n_tok, _n_stop, score = quality_signal_cols()
-        pred = pred_lang_from_hits(
-            marker_hits(ws_tokens(F.lower(F.col("text"))))
-        )
-        norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-        survivors = (
-            fan_out(table(spark, sf_dir, "documents"))
-            .select(
-                "doc_id",
-                "text",
-                n_tok.alias("n_tokens"),
-                F.round(score, 2).alias("quality_score"),
-                (score >= 0.7).alias("__keep"),
-                pred.alias("pred_lang"),
-                F.md5(norm).alias("content_md5"),
-            )
-            .filter(F.col("__keep") & (F.col("pred_lang") != "unk"))
-            .drop("__keep")
-        )
+        .filter(F.col("__keep") & (F.col("pred_lang") != "unk"))
+        .drop("__keep")
+    )
     exact_kept = (
         survivors.withColumn(
             "__m", F.min("doc_id").over(Window.partitionBy("content_md5"))

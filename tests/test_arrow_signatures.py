@@ -118,91 +118,6 @@ def test_arrow_path_survives_all_null_batch(spark):
     assert minhash_band_rows_hof(docs).count() == 0
 
 
-def _survivors_hof(docs):
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window  # noqa: F401
-
-    from fxblue_etl_spark.operators.textops import (
-        marker_hits,
-        pred_lang_from_hits,
-        quality_signal_cols,
-        ws_tokens,
-    )
-
-    n_tok, _n_stop, score = quality_signal_cols()
-    pred = pred_lang_from_hits(marker_hits(ws_tokens(F.lower(F.col("text")))))
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-    return (
-        docs.select(
-            "doc_id",
-            n_tok.alias("n_tokens"),
-            F.round(score, 2).alias("quality_score"),
-            (score >= 0.7).alias("__keep"),
-            pred.alias("pred_lang"),
-            F.md5(norm).alias("content_md5"),
-        )
-        .filter("__keep")
-        .drop("__keep")
-    )
-
-
-def _survivors_arrow(docs):
-    from pyspark.sql import functions as F
-
-    from fxblue_etl_spark.operators.textops import corpus_pre_gate_rows
-
-    g = corpus_pre_gate_rows(docs)
-    score = (
-        F.when(F.col("len_band"), F.lit(0.5)).otherwise(F.lit(0.0))
-        + F.when(F.col("has_stop"), F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.when(F.col("low_punct"), F.lit(0.2)).otherwise(F.lit(0.0))
-    )
-    return (
-        g.select(
-            "doc_id",
-            "n_tokens",
-            F.round(score, 2).alias("quality_score"),
-            (score >= 0.7).alias("__keep"),
-            "pred_lang",
-            "content_md5",
-        )
-        .filter("__keep")
-        .drop("__keep")
-    )
-
-
-def _pg_canon(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_pre_gate_arrow_equals_hof_on_fixture(spark, sf_dir):
-    docs = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    got = _pg_canon(_survivors_arrow(docs))
-    assert got, "fixture must produce survivors"
-    assert got == _pg_canon(_survivors_hof(docs))
-
-
-def test_pre_gate_arrow_equals_hof_adversarial(spark):
-    filler = " ".join(f"w{i}" for i in range(30))
-    rows = [
-        (1, f"The quick brown fox and the lazy dog {filler}"),  # en, keeps
-        (2, f"der die und das ist ein test {filler}"),  # de markers
-        (3, f"le la et les des bonjour {filler}"),  # fr markers
-        (4, f"el la que de los hola {filler}"),  # es + fr tie on 'la'
-        (5, "short text only"),  # fails len band
-        (6, f"{'x ' * 1500}end"),  # over the 1000-token band
-        (7, f"!!! ### $$$ %%% ^^^ &&& {filler} the"),  # high punct
-        (8, f"THE AND OF TO A uppercase markers {filler}"),  # raw-case stop miss
-        (9, None),  # null text
-        (10, f"\tthe tab-padded text and more {filler}\t"),  # trim vs strip
-        (11, f"  space-padded the text and stuff {filler}  "),
-        (12, ""),  # empty
-        (13, f"de de de le le the {filler}"),  # cross-lang tie-break
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    assert _pg_canon(_survivors_arrow(docs)) == _pg_canon(_survivors_hof(docs))
-
-
 def _canon24(df):
     return sorted(
         ((r["doc_id"], tuple(r["sig"])) for r in df.collect()),

@@ -1,99 +1,116 @@
-"""Certification-debt ledger consistency (round-4 verdict item 4):
-every oracle-backed queries() entry must either hold a driver
-CORRECTNESS row from some past round or be queued in the documented
-rotation lists (_R5_CERT / _R6_PENDING / _R6_RECERT / _R7_QUEUE)
-— so the ledger in
-__spark_entry__.py can never silently drift from the actual debt."""
+"""The driver hash-checks the first 50 ``queries()`` entries each round,
+so the order ``__spark_entry__.certification_order`` derives from the
+``CORRECTNESS_r*.json`` ledgers decides what gets certified next."""
 
 from __future__ import annotations
 
-import glob
 import json
+import subprocess
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
+#: the driver's per-round correctness window
+WINDOW = 50
 
-def _driver_checked() -> set[str]:
-    out: set[str] = set()
-    for f in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
-        out |= set(json.load(open(f)).keys())
-    return out
+
+def _last_certified(ledger_dir: Path) -> dict[str, int]:
+    last: dict[str, int] = {}
+    for f in ledger_dir.glob("CORRECTNESS_r*.json"):
+        rnd = int(f.stem.removeprefix("CORRECTNESS_r"))
+        for k, row in json.loads(f.read_text()).items():
+            if row["hash_match"] is True:
+                last[k] = max(last.get(k, 0), rnd)
+    return last
 
 
 def test_every_oracle_query_is_certified_or_queued():
     import __spark_entry__ as e
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    checked = _driver_checked()
-    queued = (
-        set(e._R5_CERT) | set(e._R6_PENDING) | set(e._R6_RECERT)
-        | set(e._R7_QUEUE) | set(e._R8_QUEUE) | set(e._R9_QUEUE)
-        | set(e._R10_QUEUE) | set(e._R11_QUEUE) | set(e._R12_QUEUE)
-        | set(e._R13_QUEUE) | set(e._R14_QUEUE) | set(e._R15_QUEUE)
-    )
-    orphans = [
-        k for k in qs if k in oracles and k not in checked and k not in queued
-    ]
-    assert orphans == [], f"oracle-backed queries with no row and no queue slot: {orphans}"
+    qs, oracles = list(e.queries()), e.oracle_sql()
+    last = _last_certified(REPO)
+    never = {k for k in qs if k in oracles and k not in last}
+    assert qs[0] == "flagship_account_pnl"
+    assert never <= set(qs[:WINDOW]), sorted(never - set(qs[:WINDOW]))
+    # the 13 never certified as of the round-15 ledger: each must be
+    # certified by now or still inside the window
+    for k in (
+        "benford_digit_audit",
+        "counting_bloom_delete_equivalence",
+        "duplicated_span_rewrite",
+        "holt_linear_forecast",
+        "isotonic_weekly_fit",
+        "kruskal_wallis_test",
+        "markov_stationary_distribution",
+        "max_drawdown_by_user",
+        "nelson_aalen_hazard",
+        "shapley_vocab_coverage",
+        "streaming_drawdown_monitor",
+        "vocab_divergence_report",
+        "winsorized_stats",
+    ):
+        assert k in oracles and (k in last or k in qs[:WINDOW]), k
 
 
-def test_rotation_lists_are_disjoint_and_registered():
+def test_order_derived_from_synthetic_ledgers(tmp_path, monkeypatch):
     import __spark_entry__ as e
 
-    qs = e.queries()
-    assert not set(e._R5_CERT) & set(e._R6_PENDING)
-    assert not set(e._R6_PENDING) & set(e._R7_QUEUE)
-    missing = [
-        k
-        for k in e._R5_CERT + e._R6_PENDING + e._R6_RECERT + e._R7_QUEUE
-        + e._R7_CODE_CHANGED + e._R7_RECERT_CANDIDATES + e._R8_QUEUE
-        + e._R8_CODE_CHANGED + e._R8_RECERT_CANDIDATES + e._R9_QUEUE
-        + e._R9_CODE_CHANGED + e._R9_RECERT_CANDIDATES + e._R10_QUEUE
-        + e._R10_CODE_CHANGED + e._R10_RECERT_CANDIDATES + e._R11_QUEUE
-        + e._R11_CODE_CHANGED + e._R11_RECERT_CANDIDATES + e._R12_QUEUE
-        + e._R12_CODE_CHANGED + e._R12_RECERT_CANDIDATES + e._R13_QUEUE
-        + e._R13_CODE_CHANGED + e._R13_RECERT_CANDIDATES + e._R14_QUEUE
-        + e._R14_CODE_CHANGED + e._R14_RECERT_CANDIDATES + e._R15_QUEUE
-        if k not in qs
+    flagship = "flagship_account_pnl"
+    registered = [
+        k for k in dict.fromkeys(k for m in e._MODULES for k in m.QUERIES)
+        if k != flagship
     ]
-    assert missing == []
-    # ROUND-14 WINDOW PIN (standing rotation cadence): the driver's
-    # window is exactly 50 = flagship + the _R14_QUEUE eighteen
-    # (the never-driver-checked round-13 additions) + round-14
-    # lineage-changed re-certs + the stalest standing rows, truncated
-    # from the candidates' least-stale TAIL.  A re-shuffle that
-    # displaces stale rows with fresh ones fails here.
-    expected_head = ["flagship_account_pnl"] + e._R14_QUEUE
-    expected_head += [
-        q for q in e._R14_CODE_CHANGED if q not in expected_head
+    a, b, c, d, rows_only = registered[:5]
+    oracles = e.oracle_sql()
+    del oracles[rows_only]
+    monkeypatch.setattr(e, "oracle_sql", lambda: oracles)
+
+    def ledger(rnd: int, rows: dict[str, bool]) -> None:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({k: {"hash_match": ok} for k, ok in rows.items()})
+        )
+
+    # a: only a failed row; b: r1; c: r1 then r3; d: r2; rows_only: no
+    # oracle, so it is no certification debt; approx_sketches is a
+    # ledger key that is no longer registered
+    ledger(1, {flagship: False, "approx_sketches": True,
+               a: False, b: True, c: True})
+    ledger(2, {d: True, a: False})
+    ledger(3, {c: True})
+    order = e.certification_order(tmp_path)
+
+    assert order[0] == flagship
+    assert sorted(order[1:]) == sorted(registered)
+    assert "approx_sketches" not in order
+    last = _last_certified(tmp_path)
+    assert a not in last and order.index(a) < order.index(b)
+    uncertified = [k for k in order[1:] if k not in last]
+    n = len(uncertified)
+    assert order[1 : 1 + n] == uncertified and uncertified[-1] == rows_only
+    staleness = [last[k] for k in order[1 + n :]]
+    assert staleness == sorted(staleness)
+    assert order[-3:] == [b, d, c]
+
+    # with no ledgers every oracle-backed query is uncertified and
+    # keeps registration order
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert e.certification_order(empty) == [
+        flagship, *(k for k in registered if k != rows_only), rows_only
     ]
-    fill = 50 - len(expected_head)
-    expected_head += [
-        q for q in e._R14_RECERT_CANDIDATES if q not in expected_head
-    ][:fill]
-    assert list(qs)[:50] == expected_head
-    # round-14 additions must head round 15's rotation, right after
-    # the window, so the never-driver-checked debt clears next round
-    assert (
-        list(qs)[50 : 50 + len(e._R15_QUEUE)] == e._R15_QUEUE
+
+
+def test_order_independent_of_cwd(tmp_path):
+    import __spark_entry__ as e
+
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, __spark_entry__ as e; print(json.dumps(list(e.queries())))"],
+        cwd=tmp_path, env={"PYTHONPATH": str(REPO)},
+        capture_output=True, text=True, check=True,
     )
-    # the truncation must drop only from the tail: every candidate
-    # excluded from the window is no staler than every included one.
-    # Code-changed entries enter through their own door, not the
-    # fill — exclude them from the tail-drop analysis (a candidate
-    # pulled in by a code change is not a fill decision).
-    cand = [
-        q for q in e._R14_RECERT_CANDIDATES
-        if q not in e._R14_CODE_CHANGED
-    ]
-    included = set(expected_head) & set(cand)
-    dropped = [q for q in cand if q not in included]
-    if dropped:
-        order = {q: i for i, q in enumerate(cand)}
-        assert min(order[q] for q in dropped) > max(
-            order[q] for q in included
-        ), "window fill must drop the least-stale tail, not the stale head"
+    assert json.loads(out.stdout) == list(e.queries())
 
 
 def test_rows_only_queries_are_the_documented_set():
@@ -123,395 +140,3 @@ def test_rows_only_queries_are_the_documented_set():
     from fxblue_etl_spark.plans.relational import (  # noqa: F401
         approx_sketches,
     )
-
-
-def test_r7_recert_candidates_consistent():
-    """The round-7 re-cert ledger must stay derivable from the
-    CORRECTNESS files: every entry oracle-backed, registered, holding
-    a driver row, ordered oldest-latest-check-first, and excluding
-    rows-only queries and the flagship."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R7_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 46
-    # the ledger was computed from the round-1..6 CORRECTNESS files;
-    # validate against exactly that snapshot so the round-7 gate
-    # landing its own file does not retroactively invalidate it
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 6:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    for k in cand:
-        assert k in oracles, f"{k} is rows-only — re-cert adds nothing"
-        assert k in latest, f"{k} has no driver row to re-certify"
-    assert "flagship_account_pnl" not in cand
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    # the ledger holds the globally stalest rows: no excluded query
-    # may be staler than the newest included one
-    newest_included = max(rounds)
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand
-        and k in oracles
-        and k != "flagship_account_pnl"
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r8_recert_candidates_consistent():
-    """The round-8 re-cert ledger must stay derivable from the
-    CORRECTNESS files through round 7: every entry oracle-backed +
-    registered + holding a driver row, ordered oldest-latest-check
-    first, no overlap with the _R8_QUEUE/_R9_QUEUE additions, with
-    the 7 displaced r1-era rows at the head."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R8_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 50
-    # the ledger was computed from the round-1..7 CORRECTNESS files;
-    # validate against exactly that snapshot so the round-8 gate
-    # landing its own file does not retroactively invalidate it
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 7:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in e._R8_QUEUE and k not in e._R9_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    assert cand[:7] == [
-        "t2_timestamp_iso", "t3_custom_ts_roundtrip", "t4_percent_parse",
-        "t5_sentinel_null", "t6_string_extract", "t7_hash_dedup",
-        "topk_orders_per_customer",
-    ]
-    # the ledger holds the globally stalest rows: no excluded query
-    # may be staler than the newest included one (code-changed
-    # re-certs are exempt — they re-enter through _R8_CODE_CHANGED)
-    newest_included = max(rounds)
-    exempt = (
-        {"flagship_account_pnl"} | set(e._R8_CODE_CHANGED)
-        | set(e._R8_QUEUE) | set(e._R9_QUEUE)
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r9_recert_candidates_consistent():
-    """The pre-planned round-9 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-7; the round-8 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-8 window head or the
-    _R9_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R9_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 50
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 7:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-8 window (the round-9 flip changed
-    # list(qs)[:50], but this ledger was derived from what round 8's
-    # gate would re-certify — pin against that construction)
-    r8_head = ["flagship_account_pnl"] + e._R8_QUEUE
-    r8_head += [q for q in e._R8_CODE_CHANGED if q not in r8_head]
-    r8_fill = 50 - len(r8_head)
-    r8_head += [q for q in e._R8_RECERT_CANDIDATES if q not in r8_head][
-        :r8_fill
-    ]
-    head50 = set(r8_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 8 already"
-        assert k not in e._R9_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    # globally stalest: no excluded standing row may be staler than
-    # the newest included one (window/queue/flagship exempt)
-    newest_included = max(rounds)
-    exempt = head50 | set(e._R9_QUEUE) | {"flagship_account_pnl"}
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r10_recert_candidates_consistent():
-    """The pre-planned round-10 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-8; the round-9 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-9 window head or the
-    _R10_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R10_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 50
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 8:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-9 window explicitly (as the r9 test does
-    # for round 8) so later window flips cannot invalidate this pin
-    r9_head = ["flagship_account_pnl"] + e._R9_QUEUE
-    r9_head += [q for q in e._R9_CODE_CHANGED if q not in r9_head]
-    r9_fill = 50 - len(r9_head)
-    r9_head += [q for q in e._R9_RECERT_CANDIDATES if q not in r9_head][
-        :r9_fill
-    ]
-    head50 = set(r9_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 9 already"
-        assert k not in e._R10_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    newest_included = max(rounds)
-    exempt = (
-        head50 | set(e._R10_QUEUE) | set(e._R10_CODE_CHANGED)
-        | {"flagship_account_pnl"}
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r11_recert_candidates_consistent():
-    """The pre-planned round-11 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-9; the round-10 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-10 window head or the
-    _R11_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R11_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 30
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 9:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-10 window explicitly (the round-11 flip
-    # changed list(qs)[:50]) so later window flips cannot invalidate
-    # this pin
-    r10_head = ["flagship_account_pnl"] + e._R10_QUEUE
-    r10_head += [q for q in e._R10_CODE_CHANGED if q not in r10_head]
-    r10_fill = 50 - len(r10_head)
-    r10_head += [q for q in e._R10_RECERT_CANDIDATES if q not in r10_head][
-        :r10_fill
-    ]
-    head50 = set(r10_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 10 already"
-        assert k not in e._R11_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    newest_included = max(rounds)
-    exempt = (
-        head50 | set(e._R11_QUEUE) | set(e._R11_CODE_CHANGED)
-        | {"flagship_account_pnl"}
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r12_recert_candidates_consistent():
-    """The pre-planned round-12 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-10; the round-11 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-11 window head or the
-    _R12_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R12_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 52
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 10:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-11 window explicitly so later window
-    # flips cannot invalidate this pin
-    r11_head = ["flagship_account_pnl"] + e._R11_QUEUE
-    r11_head += [q for q in e._R11_CODE_CHANGED if q not in r11_head]
-    r11_fill = 50 - len(r11_head)
-    r11_head += [q for q in e._R11_RECERT_CANDIDATES if q not in r11_head][
-        :r11_fill
-    ]
-    head50 = set(r11_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 11 already"
-        assert k not in e._R12_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    newest_included = max(rounds)
-    exempt = (
-        head50 | set(e._R12_QUEUE) | set(e._R11_CODE_CHANGED)
-        | {"flagship_account_pnl"}
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r13_recert_candidates_consistent():
-    """The pre-planned round-13 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-11; the round-12 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-12 window head or the
-    _R13_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R13_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 54
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 11:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-12 window explicitly so later window
-    # flips cannot invalidate this pin
-    r12_head = ["flagship_account_pnl"] + e._R12_QUEUE
-    r12_head += [q for q in e._R12_CODE_CHANGED if q not in r12_head]
-    r12_fill = 50 - len(r12_head)
-    r12_head += [q for q in e._R12_RECERT_CANDIDATES if q not in r12_head][
-        :r12_fill
-    ]
-    head50 = set(r12_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 12 already"
-        assert k not in e._R13_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    newest_included = max(rounds)
-    exempt = (
-        head50 | set(e._R13_QUEUE) | set(e._R12_CODE_CHANGED)
-        | {"flagship_account_pnl"}
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"
-
-
-def test_r14_recert_candidates_consistent():
-    """The pre-planned round-14 ledger must stay derivable: every
-    entry oracle-backed + registered + already driver-certified
-    (rounds 1-12; the round-13 window re-certs are excluded — they'll
-    be fresh), no overlap with the round-13 window head or the
-    _R14_QUEUE additions, ordered oldest-latest-check-first, holding
-    the globally stalest rows."""
-    import __spark_entry__ as e
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    cand = e._R14_RECERT_CANDIDATES
-    assert len(cand) == len(set(cand)) == 50
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 12:
-            continue
-        for k in json.load(open(f)):
-            if k in qs:
-                latest[k] = rnd
-    # reconstruct the ROUND-13 window explicitly so later window
-    # flips cannot invalidate this pin
-    r13_head = ["flagship_account_pnl"] + e._R13_QUEUE
-    r13_head += [q for q in e._R13_CODE_CHANGED if q not in r13_head]
-    r13_fill = 50 - len(r13_head)
-    r13_head += [q for q in e._R13_RECERT_CANDIDATES if q not in r13_head][
-        :r13_fill
-    ]
-    head50 = set(r13_head)
-    for k in cand:
-        assert k in oracles and k in qs, k
-        assert k in latest, f"{k} holds no driver row"
-        assert k not in head50, f"{k} is re-certified by round 13 already"
-        assert k not in e._R14_QUEUE
-    rounds = [latest[k] for k in cand]
-    assert rounds == sorted(rounds), "ledger must be oldest-first"
-    newest_included = max(rounds)
-    exempt = (
-        head50 | set(e._R14_QUEUE) | set(e._R13_CODE_CHANGED)
-        | {"flagship_account_pnl"}
-    )
-    excluded = [
-        k
-        for k, r in latest.items()
-        if k not in cand and k in oracles and k not in exempt
-        and r < newest_included
-    ]
-    assert excluded == [], f"staler rows missing from the ledger: {excluded}"

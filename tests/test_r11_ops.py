@@ -1,5 +1,5 @@
 """Round-11 additions: mechanism-contract pins (brute-force /
-replay) for the operators queued in ``_R12_QUEUE``.  The DuckDB
+replay) for the operators registered in round 11.  The DuckDB
 oracle certifies cross-engine values; these tests certify the
 SEMANTICS against independent python replays."""
 

@@ -70,7 +70,7 @@ def test_release_end_to_end_chunk_economics_consistent(spark, release):
 
 def test_survivor_extraction_preserves_prep_plan(spark):
     """llm_corpus_prep ≡ groupBy(llm_survivor_docs): the refactor is
-    a pure extraction (round-12 _R12_CODE_CHANGED entry)."""
+    a pure extraction (round-12 refactor)."""
     from pyspark.sql import functions as F
 
     from fxblue_etl_spark.plans.corpus import (

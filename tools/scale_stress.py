@@ -78,10 +78,13 @@ Streaming family (round-5 verdict item 5), measured 2026-08-14 at
 
 Usage:
     python tools/scale_stress.py            # builds /tmp/sf10x, runs all
+    python tools/scale_stress.py growth <query ...>   # see ``growth``
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import sys
 import time
@@ -91,6 +94,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 BASE = "/root/testdata/sf0.1"
 TENX = "/tmp/sf10x"
+GROWTH_OUT = Path("/tmp/scale_growth.json")
 
 
 def build_10x() -> None:
@@ -673,5 +677,57 @@ def dedup_rewrite_stress(spark) -> bool:
     return sd_ok and sr_ok
 
 
+def growth(names: list[str]) -> int:
+    """Time each named ``queries()`` entry at 1× and 10× and record the
+    growth exponent e = log10(t10/t1), so an honest exact join (e ≈ 1
+    or below) is told from a latent quadratic by a number.  Dimension
+    tables the 10× fixture lacks are linked from 1× (10× facts over 1×
+    dims is the realistic shape).  Detail goes to ``GROWTH_OUT``."""
+    if not names:
+        print("usage: scale_stress.py growth <query ...>", file=sys.stderr)
+        return 2
+    build_10x()
+    for t in ("region", "nation", "customer", "supplier", "part"):
+        dst = f"{TENX}/{t}.parquet"
+        if not os.path.exists(dst):
+            os.symlink(f"{BASE}/{t}.parquet", dst)
+
+    import __spark_entry__ as entry
+    from fxblue_etl_spark.io import drain_all
+    from fxblue_etl_spark.session import get_spark
+
+    spark = get_spark("scale-growth")
+    qs = entry.queries()
+    out: dict[str, dict] = {}
+    print(f"# load_avg at start: {os.getloadavg()[0]:.2f}")
+    for name in names:
+        rec: dict = {}
+        for sf, tag in ((BASE, "1x"), (TENX, "10x")):
+            drain_all(spark)
+            t0 = time.time()
+            try:
+                n = qs[name](spark, sf).count()
+                rec[tag] = {"sec": round(time.time() - t0, 1), "rows": n}
+            except Exception as exc:  # noqa: BLE001 — record and move on
+                rec[tag] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+                break
+        if "10x" in rec and "error" not in rec["10x"]:
+            s1, s10 = rec["1x"]["sec"], rec["10x"]["sec"]
+            # sub-second 1x times are floored to 0.5s so cold-start
+            # noise can't fabricate a big exponent
+            rec["exponent"] = round(math.log10(max(s10, 0.1) / max(s1, 0.5)), 2)
+            rec["rows_growth"] = (
+                round(rec["10x"]["rows"] / rec["1x"]["rows"], 1)
+                if rec["1x"]["rows"]
+                else None
+            )
+        print(f"{name}: {json.dumps(rec)}", flush=True)
+        out[name] = rec
+    GROWTH_OUT.write_text(json.dumps(out, indent=1))
+    return 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["growth"]:
+        sys.exit(growth(sys.argv[2:]))
     sys.exit(main())
