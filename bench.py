@@ -500,32 +500,16 @@ def main() -> None:
 
     query_steal: dict[str, float] = {}
 
-    from fxblue_etl_spark.operators.dedup import clear_band_memo
-    from fxblue_etl_spark.operators.graph import clear_spine_memo
-
     def _measure(name: str) -> tuple[float, float]:
         """One median-of-N_RUNS measurement of a query, with the
-        1-minute load at measurement end.  Drains the swap-cache
-        store first so each timed run pays its own cache build
-        exactly like a cold driver call, and blocks from other
-        queries' slots don't pressure the store mid-measurement.
-
-        Round-15 (r14 verdict What's-wrong #3): the fixture-
-        fingerprint index memos (_BAND_IDX_MEMO, _GRP_MEMO) are now
-        drained too — previously runs 2..N of an index-backed entry
-        timed index SERVING, not building, so the recorded median for
-        minhash_lsh_pairs / containment_pairs / the graph spine
-        understated the per-call cost.  Expect those entries to rise
-        vs r14; that honesty is the point (each timed run now pays
-        the full build, like a cold driver call)."""
-        drain_all(spark)
+        1-minute load at measurement end.  Every run starts from a
+        drained pin registry (swap_cache slots and fixture memos
+        alike), so each timed run pays its own cache and index build
+        exactly like a cold driver call."""
         s0, j0 = _steal_total()
         runs = []
         for _ in range(N_RUNS):
-            # per-RUN, not per-median: with the clears outside the
-            # loop, runs 2..N would still probe run 1's memoized index
-            clear_band_memo()
-            clear_spine_memo()
+            drain_all(spark)
             t0 = time.time()
             df = qs[name](spark, SF_DIR)
             # full execution; limit only caps driver-side transfer

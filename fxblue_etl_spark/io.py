@@ -13,6 +13,7 @@ import os
 import threading
 import weakref
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -108,9 +109,9 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 def fixture_fingerprint(sf_dir: str, name: str = "documents") -> tuple:
     """(mtime_ns, size) of a fixture table file — the invalidation key
-    for per-(session, sf_dir) memoized index artifacts.  A driver-
-    regenerated fixture at the same path must never serve a stale
-    memo entry."""
+    for fixture-derived artifacts pinned through :func:`checkpoint`.
+    A driver-regenerated fixture at the same path must never serve a
+    stale artifact."""
     try:
         st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
         return (st.st_mtime_ns, st.st_size)
@@ -118,68 +119,60 @@ def fixture_fingerprint(sf_dir: str, name: str = "documents") -> tuple:
         return (0, 0)
 
 
-#: shared cap for checkpoint memos (matches graph._GRP_MEMO_CAP)
-MEMO_CAP = 8
-
-
-def memo_local_checkpoint(memo: dict, key: str, spark, fp, build) -> DataFrame:
-    """Fingerprint-keyed ``localCheckpoint`` memo (the ``_GRP_MEMO``
-    pattern, generalized): return the memoized frame when (session,
-    fingerprint) match, else build + checkpoint, RELEASING the
-    superseded entry's pinned blocks on overwrite and evicting
-    oldest-first past :data:`MEMO_CAP`.
-
-    Use for index-like artifacts a real deployment would persist once
-    and probe many times (a corpus band index, a dedup spine) — not
-    for per-invocation intermediates (those are :func:`swap_cache`'s
-    job)."""
-    hit = memo.get(key)
-    if hit is not None and hit[0] is spark and hit[1] == fp:
-        return hit[2]
-    out = build().localCheckpoint()
-    if hit is not None:
-        release_local_checkpoint(hit[2])
-    while len(memo) >= MEMO_CAP and key not in memo:
-        *_, old = memo.pop(next(iter(memo)))  # oldest first
-        release_local_checkpoint(old)
-    memo[key] = (spark, fp, out)
-    return out
-
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort unpersist of the RDD behind a ``localCheckpoint``'d
-    DataFrame. Superseded checkpoint blocks otherwise sit in executor
-    storage until JVM GC + ContextCleaner reclaim them — measurable
-    memory pressure in a shared-session bench or long driver run."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass  # cleanup must never fail the query
-
-
-#: Central swap_cache registry: SparkSession → {slot name → live JVM
-#: Dataset handles}.  The values are py4j ``_jdf`` handles, NOT
-#: DataFrames: a DataFrame holds a strong reference back to its
-#: session, which would pin the weak key forever and the documented
-#: weak-key cleanup could never fire.  A ``JavaObject`` references
-#: only the gateway, so a dropped session genuinely releases its
-#: Python-side bookkeeping (the JVM blocks die with the session's
-#: SharedState).
-_SWAP_SLOTS: "weakref.WeakKeyDictionary[SparkSession, dict[str, list]]" = (
+#: The one registry of pinned state: SparkSession → {slot name →
+#: (key, [(kind, handle), ...])}.  Every frame the engine keeps past
+#: one statement is pinned here by one of two verbs — :func:`swap_cache`
+#: (``persist``) or :func:`checkpoint` (``localCheckpoint``) — and
+#: lives until its slot's next pin or :func:`drain_all`, whichever
+#: comes first.  ``kind`` records how a handle was pinned, so the one
+#: :func:`_release` frees both.
+#:
+#: The handles are py4j ``_jdf`` handles, NOT DataFrames: a DataFrame
+#: holds a strong reference back to its session, which would pin the
+#: weak key forever and the documented weak-key cleanup could never
+#: fire.  A ``JavaObject`` references only the gateway, so a dropped
+#: session genuinely releases its Python-side bookkeeping (the JVM
+#: blocks die with the session's SharedState).
+_SWAP_SLOTS: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
     weakref.WeakKeyDictionary()
 )
 _SWAP_LOCK = threading.Lock()
+_PERSISTED, _CHECKPOINTED = "persisted", "checkpointed"
 
 
 def _release(handles: list) -> None:
-    """Unpersist JVM Dataset handles (``df._jdf``); no-fail."""
-    for jdf in handles:
+    """Unpin ``(kind, handle)`` pairs; no-fail.  A persisted handle
+    unpersists; a checkpoint's blocks belong to the ``LogicalRDD``
+    its plan reads, so that RDD is unpersisted — superseded
+    checkpoint blocks otherwise sit in executor storage until JVM GC
+    and the ContextCleaner reclaim them."""
+    for kind, h in handles:
         try:
-            jdf.unpersist(False)
+            if kind == _PERSISTED:
+                h.unpersist(False)
+            else:
+                plan = h.queryExecution().analyzed()
+                if plan.getClass().getSimpleName() == "LogicalRDD":
+                    plan.rdd().unpersist(False)
         except Exception:
             pass  # cleanup must never fail the query
+
+
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Release a loop-local ``localCheckpoint`` that never entered the
+    registry (an iterative fold superseding its own previous step)."""
+    _release([(_CHECKPOINTED, getattr(df, "_jdf", df))])
+
+
+def _pin(sess, slot: str, key, kind: str, dfs) -> list:
+    """Store ``dfs`` under ``slot`` (caller holds the lock); return
+    the handles the slot held before."""
+    slots = _SWAP_SLOTS.setdefault(sess, {})
+    old = slots.pop(slot, (None, []))[1]
+    # the JVM handle when the frame has one (classic mode); the frame
+    # itself otherwise (fakes / Connect)
+    slots[slot] = (key, [(kind, getattr(df, "_jdf", df)) for df in dfs])
+    return old
 
 
 def swap_cache(
@@ -191,7 +184,7 @@ def swap_cache(
     session must never accumulate more than one invocation's worth of
     cached blocks per query.
 
-    Slots are keyed by (session, name) in a central registry, so two
+    Slots are keyed by (session, name) in the registry, so two
     sessions running the same query concurrently cannot release each
     other's blocks, and a harness can drop every live slot between
     query sections with :func:`drain_all`.  The session is taken from
@@ -216,9 +209,11 @@ def swap_cache(
     and ``persist()`` registration are cheap, no-fail driver-side
     calls), so the slot always holds exactly the last writer's
     frames and the earlier writer's blocks are released before the
-    swap, never leaked.  The earlier writer's in-flight action still
-    completes correctly (Spark recomputes evicted blocks from
-    lineage); only its cache benefit is lost.
+    swap, never leaked.  The earlier writer's in-flight action on a
+    persisted frame still completes correctly (Spark recomputes
+    unpersisted blocks from lineage); only its cache benefit is lost.
+    A checkpoint-backed frame has no lineage to fall back on: it is
+    valid until its slot's next pin or :func:`drain_all`.
 
     A bare ``swap_cache(name)`` (no frames) drains that slot and
     returns ``None`` — callers use the drain arm for teardown only.
@@ -226,41 +221,68 @@ def swap_cache(
     if not dfs:
         with _SWAP_LOCK:
             drained = [
-                slots.pop(slot) for slots in _SWAP_SLOTS.values() if slot in slots
+                slots.pop(slot)[1] for slots in _SWAP_SLOTS.values() if slot in slots
             ]
         for handles in drained:
             _release(handles)
         return None
     sess = dfs[0].sparkSession
     with _SWAP_LOCK:
-        _release(_SWAP_SLOTS.setdefault(sess, {}).pop(slot, []))
+        _release(_SWAP_SLOTS.setdefault(sess, {}).pop(slot, (None, []))[1])
         out = [df.persist() for df in dfs]
-        # store the JVM handle when the frame has one (classic mode);
-        # fall back to the frame itself (fakes / Connect) — both
-        # expose unpersist(bool)
-        _SWAP_SLOTS[sess][slot] = [getattr(df, "_jdf", df) for df in out]
+        _pin(sess, slot, None, _PERSISTED, out)
     return out[0] if len(out) == 1 else tuple(out)
 
 
+def checkpoint(spark: SparkSession, slot: str, build, key=None) -> DataFrame:
+    """``build().localCheckpoint()`` pinned under ``slot`` in
+    ``spark``'s registry, releasing what the slot held before.
+
+    With a non-``None`` ``key`` the slot is a memo: when it already
+    holds a frame built under an equal key, that frame is returned
+    and ``build`` never runs — a fixture artifact passes
+    ``(sf_dir, fixture_fingerprint(sf_dir))``, so a regenerated
+    fixture or another ``sf_dir`` rebuilds.  ``key=None`` always
+    builds (a fold's per-batch state).
+
+    Build FIRST, release SECOND — the reverse of :func:`swap_cache`:
+    a fold's new state is computed from the old state's blocks, and a
+    checkpoint has no lineage to recompute them from once released.
+    The eager checkpoint job runs outside the registry lock.  The
+    returned frame is valid until the slot's next pin or
+    :func:`drain_all`."""
+    with _SWAP_LOCK:
+        held = _SWAP_SLOTS.get(spark, {}).get(slot)
+    if key is not None and held is not None and held[0] == key:
+        h = held[1][0][1]
+        return DataFrame(h, spark) if isinstance(h, JavaObject) else h
+    out = build().localCheckpoint()
+    with _SWAP_LOCK:
+        old = _pin(spark, slot, key, _CHECKPOINTED, [out])
+    _release(old)
+    return out
+
+
 def drain_all(spark: SparkSession | None = None) -> int:
-    """Release every live swap_cache slot (of ``spark``, or of all
-    sessions).  For a driver/bench harness to call between query
-    sections so a full-surface run never holds more than the current
-    query's blocks.  Returns the number of slots drained."""
+    """Release every live slot — persisted and checkpointed alike —
+    of ``spark``, or of all sessions.  For a driver/bench harness to
+    call between query sections so a full-surface run never holds
+    more than the current query's blocks.  Returns the number of
+    slots drained."""
     with _SWAP_LOCK:
         sessions = (
             [spark]
             if spark is not None
             else list(_SWAP_SLOTS.keys())
         )
-        drained: list[list[DataFrame]] = []
+        drained: list[list] = []
         for sess in sessions:
             slots = _SWAP_SLOTS.get(sess)
             if slots:
-                drained.extend(slots.values())
+                drained.extend(handles for _, handles in slots.values())
                 slots.clear()
-    for frames in drained:
-        _release(frames)
+    for handles in drained:
+        _release(handles)
     return len(drained)
 
 

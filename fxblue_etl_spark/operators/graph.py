@@ -156,7 +156,7 @@ def upsert_components(
     from the labeling (decremental connectivity needs the full edge
     set to re-split a component); near-dup spines only ever gain
     documents and pairs, and a GDPR-style delete is a full rebuild
-    (``clear_spine_memo`` + recompute) by policy.  Contract (tested +
+    (``io.drain_all`` + recompute) by policy.  Contract (tested +
     oracle-certified via ``components_upsert_equivalence``):
     ``upsert(cc(E1), E2) ≡ cc(E1 ∪ E2)`` row-set exact."""
     e = new_edges.select(
@@ -518,89 +518,51 @@ _TRAIN_PCT = 80
 _VAL_PCT = 90
 
 
-#: per-process memo for `_doc_dup_groups`: sf_dir → (session, frame).
-#: The LSH + connected-components spine is the single most expensive
-#: sub-plan on the surface and is consumed by several registered
-#: queries (split_decontaminate, canonical_doc_selection) — without
-#: the memo every consumer re-derives the whole pipeline (round-4
-#: verdict item 6).  Entries are localCheckpoint'ed (truncated
-#: lineage, blocks pinned for the process) and keyed by session too,
-#: since checkpoint blocks die with their SparkContext.  The key also
-#: carries a fixture fingerprint (documents.parquet mtime+size), so a
-#: fixture regenerated at the same path mid-process invalidates the
-#: entry instead of silently serving stale groups.  Bounded: oldest
-#: entries released past _GRP_MEMO_CAP.
-_GRP_MEMO: dict[str, tuple[SparkSession, tuple, DataFrame]] = {}
-_GRP_MEMO_CAP = 8
-
-
-def _fixture_fingerprint(sf_dir: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
 def clear_spine_memo() -> None:
-    """Release every memoized spine frame (tests use this so
-    re-execution properties — partition invariance — exercise the
-    real pipeline, not the checkpoint)."""
-    from ..io import release_local_checkpoint
+    """Drain the dedup spine's registry slot in every session — a bare
+    drain kept because perfbench's corpus workload imports it; every
+    other caller uses ``io.drain_all``."""
+    from ..io import swap_cache
 
-    while _GRP_MEMO:
-        *_, df = _GRP_MEMO.pop(next(iter(_GRP_MEMO)))
-        release_local_checkpoint(df)
+    swap_cache("doc_dup_groups")
 
 
 def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, grp) for every document: near-dup component id when
     the doc is in a Jaccard ≥ DECON_J MinHash/LSH cluster, else the
     doc's own id.  The shared spine of ``split_decontaminate`` and
-    ``canonical_doc_selection``; memoized per (session, sf_dir) — see
-    ``_GRP_MEMO``. The frame is 3 narrow columns — spill-safe even at
-    corpus scale, and a fraction of the shuffle the LSH re-run would
-    cost."""
-    from ..io import fan_out, release_local_checkpoint, table
+    ``canonical_doc_selection`` — the single most expensive sub-plan
+    on the surface, so it is checkpointed once per (session, sf_dir,
+    fixture fingerprint) in the ``io`` registry and served to every
+    consumer until ``io.drain_all``.  The frame is 3 narrow columns —
+    spill-safe even at corpus scale, and a fraction of the shuffle
+    the LSH re-run would cost."""
+    from ..io import checkpoint, fan_out, fixture_fingerprint, table
     from .dedup import lsh_jaccard_pairs
 
-    fp = _fixture_fingerprint(sf_dir)
-    hit = _GRP_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark and hit[1] == fp:
-        return hit[2]
-    docs = fan_out(table(tune(spark), sf_dir, "documents"))
-    pairs = (
-        lsh_jaccard_pairs(docs)
-        .filter(F.round("jaccard", 6) >= DECON_J)
-        .select("doc_a", "doc_b")
-    )
-    comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
-        F.col("id").alias("doc_id"), "component"
-    )
-    out = (
-        docs.select("doc_id", "n_chars")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_chars",
-            F.coalesce("component", F.col("doc_id").cast("long")).alias("grp"),
+    def build() -> DataFrame:
+        docs = fan_out(table(tune(spark), sf_dir, "documents"))
+        pairs = (
+            lsh_jaccard_pairs(docs)
+            .filter(F.round("jaccard", 6) >= DECON_J)
+            .select("doc_a", "doc_b")
         )
-        .localCheckpoint()
+        comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
+            F.col("id").alias("doc_id"), "component"
+        )
+        return (
+            docs.select("doc_id", "n_chars")
+            .join(comp, "doc_id", "left")
+            .select(
+                "doc_id",
+                "n_chars",
+                F.coalesce("component", F.col("doc_id").cast("long")).alias("grp"),
+            )
+        )
+
+    return checkpoint(
+        spark, "doc_dup_groups", build, key=(sf_dir, fixture_fingerprint(sf_dir))
     )
-    if hit is not None:
-        # superseded entry for the same sf_dir (fingerprint changed or
-        # session mismatch): release its pinned checkpoint blocks —
-        # overwriting without release would leak one corpus-sized RDD
-        # per invalidation, invisibly to the cap-eviction loop below
-        # (the dict size doesn't grow on overwrite)
-        release_local_checkpoint(hit[2])
-    while len(_GRP_MEMO) >= _GRP_MEMO_CAP and sf_dir not in _GRP_MEMO:
-        *_, old = _GRP_MEMO.pop(next(iter(_GRP_MEMO)))  # oldest first
-        release_local_checkpoint(old)
-    _GRP_MEMO[sf_dir] = (spark, fp, out)
-    return out
 
 
 def split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,17 +41,18 @@ from pyspark.sql.window import Window
 
 from ..session import tune
 
-def _stage_dir(sf_dir: str) -> str:
-    """The file-stream source tracks *directories*; stage the events
-    parquet into one (testdata itself is read-only). The staged copy
-    is refreshed whenever the fixture's size or mtime changes, so a
-    driver-regenerated testdata set never streams stale bytes."""
+def _stage_table_dir(sf_dir: str, table: str) -> str:
+    """The file-stream source tracks *directories*; stage
+    ``{table}.parquet`` into one (testdata itself is read-only). The
+    staged copy is refreshed whenever the fixture's size or mtime
+    changes, so a driver-regenerated testdata set never streams stale
+    bytes."""
     import shutil
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/stream_events_{tag}"
-    src = os.path.join(sf_dir, "events.parquet")
-    dst = os.path.join(d, "events.parquet")
+    d = f"/tmp/stream_{table}_{tag}"
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    dst = os.path.join(d, f"{table}.parquet")
     s = os.stat(src)
     if (
         not os.path.exists(dst)
@@ -83,7 +84,7 @@ def events_stream(
     the default single-staged-file path (what the driver certifies)
     is unchanged."""
     tune(spark)
-    d = stage_dir if stage_dir is not None else _stage_dir(sf_dir)
+    d = stage_dir if stage_dir is not None else _stage_table_dir(sf_dir, "events")
     schema = spark.read.parquet(d).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -122,6 +123,50 @@ def run_to_table(
         progress_out.extend(q.recentProgress)
     spark = stream_df.sparkSession
     return spark.table(name)
+
+
+def _fold_stream(
+    stream: DataFrame,
+    slot: str,
+    part,
+    merge,
+    progress_out: list | None = None,
+) -> DataFrame:
+    """Drive ``stream`` to completion (AvailableNow) through
+    ``foreachBatch``, folding each micro-batch into one carried state
+    frame: ``part(batch)`` for the first batch, ``merge(prev,
+    part(batch))`` after.  No state store — the merge keeps the state
+    bounded.
+
+    Each batch's state is ``io.checkpoint``-ed (``coalesce(1)``) into
+    ``slot`` of the stream's session, which releases the previous
+    batch's state only after the new one is built from it.  The final
+    state stays pinned until the next invocation of the same query or
+    ``io.drain_all``."""
+    from ..io import checkpoint
+
+    spark = stream.sparkSession
+    prev: DataFrame | None = None
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal prev
+        new = part(batch_df)
+        if prev is not None:
+            new = merge(prev, new)
+        # the stream's session, not batch_df's: foreachBatch wraps
+        # every batch in a fresh Python session object
+        prev = checkpoint(spark, slot, lambda: new.coalesce(1))
+
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
+        .start()
+    )
+    q.awaitTermination()
+    if progress_out is not None:
+        progress_out.extend(q.recentProgress)
+    return prev
 
 
 def _value_sum_e4() -> F.Column:
@@ -1121,26 +1166,6 @@ WHERE rank <= {STREAM_TOPK}
 """
 
 
-def _stage_docs_dir(sf_dir: str) -> str:
-    """Stage documents.parquet into a stream-source directory (same
-    freshness contract as :func:`_stage_dir` for events)."""
-    import shutil
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/stream_docs_{tag}"
-    src = os.path.join(sf_dir, "documents.parquet")
-    dst = os.path.join(d, "documents.parquet")
-    s = os.stat(src)
-    if (
-        not os.path.exists(dst)
-        or os.stat(dst).st_size != s.st_size
-        or os.stat(dst).st_mtime < s.st_mtime
-    ):
-        os.makedirs(d, exist_ok=True)
-        shutil.copyfile(src, dst)
-    return d
-
-
 def streaming_lsh_dedup(
     spark: SparkSession,
     sf_dir: str,
@@ -1183,7 +1208,7 @@ def streaming_lsh_dedup(
         F.col("doc_id").alias("prior_id"), "band_idx", "band_sig"
     )
 
-    d = stage_dir if stage_dir is not None else _stage_docs_dir(sf_dir)
+    d = stage_dir if stage_dir is not None else _stage_table_dir(sf_dir, "documents")
     schema = spark.read.parquet(d).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -1215,7 +1240,7 @@ def _stage_table_splits(
     ``order_col``-range files with ascending mtimes, so the file
     stream ingests them as ordered micro-batches (FileStreamSource
     picks files oldest mtime first; names ``part_00N`` tie-break).
-    Same freshness contract as :func:`_stage_docs_dir`."""
+    Same freshness contract as :func:`_stage_table_dir`."""
     import duckdb
 
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -1630,7 +1655,7 @@ def streaming_quality_gate(
     from ..operators.textops import quality_signal_cols
 
     tune(spark)
-    d = _stage_docs_dir(sf_dir)
+    d = _stage_table_dir(sf_dir, "documents")
     schema = spark.read.parquet(d).schema
     stream_docs = (
         spark.readStream.schema(schema)
@@ -1680,7 +1705,6 @@ def streaming_kmv_distinct(
     Reference parity: the streaming analogue of the reference's
     per-run row-count logging (`CSV PARSER/gcp_csv.py:159-164`),
     upgraded to mergeable distinct cardinality."""
-    from ..io import release_local_checkpoint
     from ..plans.stats import KMV_DOM, KMV_K, kmv_sketch_table
 
     tune(spark)
@@ -1693,41 +1717,24 @@ def streaming_kmv_distinct(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    state: dict[str, DataFrame] = {}
+    def merge(prev: DataFrame, sk: DataFrame) -> DataFrame:
+        # union of two ≤k sketches per group → ≤2k hashes: bounded by
+        # construction, so the explode/collect_set re-truncate is
+        # sketch-local work
+        return (
+            prev.unionByName(sk)
+            .select("grp", F.explode("ks").alias("h"))
+            .groupBy("grp")
+            .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("ks"))
+        )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        sk = kmv_sketch_table(batch_df, "event_type", "user_id")
-        if "sk" in state:
-            # union of two ≤k sketches per group → ≤2k hashes:
-            # bounded by construction, so the explode/collect_set
-            # re-truncate is sketch-local work
-            merged = (
-                state["sk"]
-                .unionByName(sk)
-                .select("grp", F.explode("ks").alias("h"))
-                .groupBy("grp")
-                .agg(
-                    F.slice(
-                        F.array_sort(F.collect_set("h")), 1, KMV_K
-                    ).alias("ks")
-                )
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["sk"])
-        else:
-            new = sk.coalesce(1).localCheckpoint()
-        state["sk"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+    final = _fold_stream(
+        stream,
+        "streaming_kmv_distinct",
+        lambda batch: kmv_sketch_table(batch, "event_type", "user_id"),
+        merge,
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    final = state.pop("sk")
     return final.select(
         F.col("grp").alias("event_type"),
         F.size("ks").cast("long").alias("n_sketch"),
@@ -1797,7 +1804,6 @@ def streaming_gram_maintenance(
     PCA/whitening statistics at ingest cost, and
     `pca_power_iteration` reads the standing state instead of
     re-scanning the corpus."""
-    from ..io import release_local_checkpoint
     from ..operators.ml import gram_cells
 
     tune(spark)
@@ -1809,33 +1815,16 @@ def streaming_gram_maintenance(
         .parquet(d)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = gram_cells(batch_df)
-        if "g" in state:
-            merged = (
-                state["g"]
-                .unionByName(cells)
-                .groupBy("i", "j")
-                .agg(F.sum("cross_sum").cast("long").alias("cross_sum"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["g"])
-        else:
-            new = cells.coalesce(1).localCheckpoint()
-        state["g"] = new
-
-    q = (
-        stream_vecs.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+    final = _fold_stream(
+        stream_vecs,
+        "streaming_gram_maintenance",
+        gram_cells,
+        lambda prev, cells: prev.unionByName(cells)
+        .groupBy("i", "j")
+        .agg(F.sum("cross_sum").cast("long").alias("cross_sum")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return state.pop("g").select("i", "j", "cross_sum")
+    return final.select("i", "j", "cross_sum")
 
 
 def _gram_oracle_ref() -> str:
@@ -1872,7 +1861,6 @@ def streaming_bloom_maintenance(
     the previous (released eagerly).  At 100 TB this plan maintains
     the serving-side membership filter at ingest cost; the join
     pruning in `bloom_filter_join` reads the standing state."""
-    from ..io import release_local_checkpoint
     from ..plans.runtime_filters import _bloom_words
 
     tune(spark)
@@ -1884,38 +1872,20 @@ def streaming_bloom_maintenance(
         .parquet(d)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        members = (
-            batch_df.select("o_orderkey")
+    final = _fold_stream(
+        stream,
+        "streaming_bloom_maintenance",
+        lambda batch: _bloom_words(
+            batch.select("o_orderkey")
             .distinct()
             .filter(F.col("o_orderkey") % 2 == 0)
-        )
-        words = _bloom_words(members)
-        if "w" in state:
-            merged = (
-                state["w"]
-                .unionByName(words)
-                .groupBy("word_idx")
-                .agg(F.expr("bit_or(word)").alias("word"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["w"])
-        else:
-            new = words.coalesce(1).localCheckpoint()
-        state["w"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+        ),
+        lambda prev, words: prev.unionByName(words)
+        .groupBy("word_idx")
+        .agg(F.expr("bit_or(word)").alias("word")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return state.pop("w").select("word_idx", "word")
+    return final.select("word_idx", "word")
 
 
 def streaming_hll_maintenance(
@@ -1945,7 +1915,6 @@ def streaming_hll_maintenance(
     State is BOUNDED at 256 rows regardless of stream length —
     foreachBatch, no state store; per batch one coalesce(1)
     checkpoint supersedes the previous (released eagerly)."""
-    from ..io import release_local_checkpoint
     from ..plans.stats import hll_register_table
 
     tune(spark)
@@ -1957,36 +1926,16 @@ def streaming_hll_maintenance(
         .parquet(d)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        regs = hll_register_table(batch_df.select("event_id"), "event_id")
-        if "r" in state:
-            merged = (
-                state["r"]
-                .unionByName(regs)
-                .groupBy("bucket")
-                .agg(F.max("rho").alias("rho"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["r"])
-        else:
-            new = regs.coalesce(1).localCheckpoint()
-        state["r"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+    final = _fold_stream(
+        stream,
+        "streaming_hll_maintenance",
+        lambda batch: hll_register_table(batch.select("event_id"), "event_id"),
+        lambda prev, regs: prev.unionByName(regs)
+        .groupBy("bucket")
+        .agg(F.max("rho").alias("rho")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return (
-        state.pop("r")
-        .select("bucket", F.col("rho").cast("long").alias("rho"))
-    )
+    return final.select("bucket", F.col("rho").cast("long").alias("rho"))
 
 
 def _hll_regs_oracle() -> str:
@@ -2039,7 +1988,6 @@ def streaming_cms_maintenance(
     State is BOUNDED at d·w cells regardless of stream length —
     foreachBatch, no state store; per batch one coalesce(1)
     checkpoint supersedes the previous (released eagerly)."""
-    from ..io import release_local_checkpoint
     from ..operators.temporal import _cms_md5_buckets
 
     tune(spark)
@@ -2051,39 +1999,20 @@ def streaming_cms_maintenance(
         .parquet(d)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        part = (
-            batch_df.select(
-                F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db")
-            )
-            .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-            .agg(F.count("*").cast("long").alias("cnt"))
+    final = _fold_stream(
+        stream,
+        "streaming_cms_maintenance",
+        lambda batch: batch.select(
+            F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db")
         )
-        if "c" in state:
-            merged = (
-                state["c"]
-                .unionByName(part)
-                .groupBy("d", "b")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["c"])
-        else:
-            new = part.coalesce(1).localCheckpoint()
-        state["c"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+        .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+        .agg(F.count("*").cast("long").alias("cnt")),
+        lambda prev, part: prev.unionByName(part)
+        .groupBy("d", "b")
+        .agg(F.sum("cnt").cast("long").alias("cnt")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return state.pop("c").select(
+    return final.select(
         F.col("d").cast("long").alias("d"),
         F.col("b").cast("long").alias("b"),
         "cnt",
@@ -2487,7 +2416,6 @@ def streaming_ewma_monitor(
     length — no state store, no watermark; per batch the
     corpus-sized work is the batch's own map-side-combined weekly
     aggregate."""
-    from ..io import release_local_checkpoint
     from ..operators.temporal import ewma_from_weekly
 
     tune(spark)
@@ -2500,10 +2428,10 @@ def streaming_ewma_monitor(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        part = batch_df.groupBy(
+    final = _fold_stream(
+        stream,
+        "streaming_ewma_monitor",
+        lambda batch: batch.groupBy(
             "o_orderpriority",
             F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
             .cast("long")
@@ -2512,30 +2440,13 @@ def streaming_ewma_monitor(
             F.sum(F.floor(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("cents")
-        )
-        if "weekly" in state:
-            merged = (
-                state["weekly"]
-                .unionByName(part)
-                .groupBy("o_orderpriority", "wk")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["weekly"])
-        else:
-            new = part.coalesce(1).localCheckpoint()
-        state["weekly"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+        ),
+        lambda prev, part: prev.unionByName(part)
+        .groupBy("o_orderpriority", "wk")
+        .agg(F.sum("cents").cast("long").alias("cents")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return ewma_from_weekly(state.pop("weekly"))
+    return ewma_from_weekly(final)
 
 
 def streaming_cusum_monitor(
@@ -2563,7 +2474,6 @@ def streaming_cusum_monitor(
     front-door keeps per table to answer "did today's arrivals shift
     the distribution" without re-scanning history."""
     from ..operators.temporal import cusum_from_daily
-    from ..io import release_local_checkpoint
 
     tune(spark)
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
@@ -2575,39 +2485,22 @@ def streaming_cusum_monitor(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    state: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        part = batch_df.groupBy(
+    final = _fold_stream(
+        stream,
+        "streaming_cusum_monitor",
+        lambda batch: batch.groupBy(
             F.col("o_orderdate").cast("string").alias("d")
         ).agg(
             F.sum(F.floor(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("cents")
-        )
-        if "daily" in state:
-            merged = (
-                state["daily"]
-                .unionByName(part)
-                .groupBy("d")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-            new = merged.coalesce(1).localCheckpoint()
-            release_local_checkpoint(state["daily"])
-        else:
-            new = part.coalesce(1).localCheckpoint()
-        state["daily"] = new
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+        ),
+        lambda prev, part: prev.unionByName(part)
+        .groupBy("d")
+        .agg(F.sum("cents").cast("long").alias("cents")),
+        progress_out,
     )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    return cusum_from_daily(state.pop("daily"))
+    return cusum_from_daily(final)
 
 
 def _stream_cusum_oracle() -> str:

@@ -1,10 +1,10 @@
 """corpus_band_index memo contract (round 7): the static banded-LSH
 index is a maintained artifact — built once per (session, fixture),
 probed by every streaming micro-batch — so the memo must (a) serve
-the identical frame for an unchanged fixture, (b) rebuild when the
+the same checkpoint for an unchanged fixture, (b) rebuild when the
 fixture regenerates in place, and (c) RELEASE the superseded
-checkpoint's pinned blocks on invalidation (the graph._GRP_MEMO
-overwrite-leak class)."""
+checkpoint's pinned blocks on invalidation (the overwrite-leak
+class)."""
 
 from __future__ import annotations
 
@@ -13,10 +13,8 @@ import shutil
 
 import duckdb
 
-from fxblue_etl_spark.operators.dedup import (
-    clear_band_memo,
-    corpus_band_index,
-)
+from fxblue_etl_spark.io import drain_all
+from fxblue_etl_spark.operators.dedup import corpus_band_index
 
 SRC = "/root/testdata/sf0.001/documents.parquet"
 
@@ -91,15 +89,17 @@ def test_upsert_band_index_equals_full_rebuild(spark, tmp_path):
 def test_band_index_memo_hit_and_invalidate(spark, tmp_path):
     d = str(tmp_path / "bx")
     os.makedirs(d)
-    clear_band_memo()
+    drain_all(spark)
     try:
         _write_fixture(d, 0)
         a1 = corpus_band_index(spark, d)
         a2 = corpus_band_index(spark, d)
-        assert a1 is a2, "unchanged fixture must hit the memo"
+        rdd_a = a1._jdf.queryExecution().analyzed().rdd().id()
+        assert a2._jdf.queryExecution().analyzed().rdd().id() == rdd_a, (
+            "unchanged fixture must hit the memo"
+        )
         assert set(a1.columns) == {"doc_id", "band_idx", "band_sig"}
         ids_a = {r.doc_id for r in a1.select("doc_id").distinct().collect()}
-        rdd_a = a1._jdf.queryExecution().analyzed().rdd().id()
 
         _write_fixture(d, 1000)
         st = os.stat(f"{d}/documents.parquet")
@@ -115,5 +115,5 @@ def test_band_index_memo_hit_and_invalidate(spark, tmp_path):
             "superseded band-index checkpoint still pinned after rebuild"
         )
     finally:
-        clear_band_memo()
+        drain_all(spark)
         shutil.rmtree(d, ignore_errors=True)

@@ -264,14 +264,14 @@ from fxblue_etl_spark.plans.stats import (
     ids=lambda q: q.__name__,
 )
 def test_result_independent_of_shuffle_partitions(spark, sf_dir, query):
-    from fxblue_etl_spark.operators.graph import clear_spine_memo
+    from fxblue_etl_spark.io import drain_all
 
-    clear_spine_memo()  # memoized spine would short-circuit the re-run
+    drain_all(spark)  # a memoized spine would short-circuit the re-run
     base = sorted(map(tuple, query(spark, sf_dir).collect()))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        clear_spine_memo()
+        drain_all(spark)
         odd = sorted(map(tuple, query(spark, sf_dir).collect()))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

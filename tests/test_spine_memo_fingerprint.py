@@ -1,4 +1,4 @@
-"""_GRP_MEMO fixture fingerprint (round-5 advice): the memoized
+"""Spine memo fixture fingerprint (round-5 advice): the checkpointed
 LSH+CC dedup spine is keyed by (session, sf_dir, documents.parquet
 mtime+size).  A fixture REGENERATED at the same path must invalidate
 the entry — before the fix, split_decontaminate/canonical_doc_selection
@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from fxblue_etl_spark.operators.graph import _doc_dup_groups, clear_spine_memo
+from fxblue_etl_spark.io import drain_all
+from fxblue_etl_spark.operators.graph import _doc_dup_groups
 
 SRC = "/root/testdata/sf0.001/documents.parquet"
 
@@ -30,7 +31,7 @@ def _write_fixture(tmpdir: str, doc_id_offset: int) -> None:
 def test_regenerated_fixture_invalidates_memo(spark, tmp_path):
     d = str(tmp_path / "fx")
     os.makedirs(d)
-    clear_spine_memo()
+    drain_all(spark)
     try:
         _write_fixture(d, 0)
         ids_a = {r.doc_id for r in _doc_dup_groups(spark, d).collect()}
@@ -47,19 +48,17 @@ def test_regenerated_fixture_invalidates_memo(spark, tmp_path):
             "memo served the stale pre-regeneration spine"
         )
     finally:
-        clear_spine_memo()
+        drain_all(spark)
         shutil.rmtree(d, ignore_errors=True)
 
 
 def test_superseded_memo_entry_is_released(spark, tmp_path):
     """Round-6 advice: the invalidation path must RELEASE the
     superseded localCheckpoint's blocks when overwriting the memo
-    entry — otherwise one corpus-sized RDD leaks per regeneration,
-    invisible to the cap-eviction loop (dict size doesn't grow on
-    overwrite)."""
+    entry — otherwise one corpus-sized RDD leaks per regeneration."""
     d = str(tmp_path / "fx3")
     os.makedirs(d)
-    clear_spine_memo()
+    drain_all(spark)
 
     def _rdd_ids() -> set[int]:
         jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
@@ -81,19 +80,22 @@ def test_superseded_memo_entry_is_released(spark, tmp_path):
             "superseded spine checkpoint still pinned after regeneration"
         )
     finally:
-        clear_spine_memo()
+        drain_all(spark)
         shutil.rmtree(d, ignore_errors=True)
 
 
 def test_unchanged_fixture_hits_memo(spark, tmp_path):
     d = str(tmp_path / "fx2")
     os.makedirs(d)
-    clear_spine_memo()
+    drain_all(spark)
     try:
         _write_fixture(d, 0)
         df_a = _doc_dup_groups(spark, d)
         df_b = _doc_dup_groups(spark, d)
-        assert df_a is df_b, "same fixture must return the memoized frame"
+        assert (
+            df_a._jdf.queryExecution().analyzed().rdd().id()
+            == df_b._jdf.queryExecution().analyzed().rdd().id()
+        ), "same fixture must return the memoized checkpoint"
     finally:
-        clear_spine_memo()
+        drain_all(spark)
         shutil.rmtree(d, ignore_errors=True)

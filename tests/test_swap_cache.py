@@ -117,3 +117,35 @@ def test_drain_all_scopes_to_session(spark):
     assert fb.storageLevel.useMemory  # other session untouched
     assert drain_all() >= 1  # no arg: every session
     assert not fb.storageLevel.useMemory
+
+
+def test_drain_all_releases_every_pin(spark):
+    """Everything the engine pins — swap_cache persists, the fixture
+    memos (dedup spine, corpus band index) and the streaming folds'
+    carried state — lives in the one registry, so drain_all alone,
+    with no GC, leaves no block pinned by these queries."""
+    from fxblue_etl_spark.operators.dedup import simhash_hamming_neardup
+    from fxblue_etl_spark.operators.graph import split_decontaminate
+    from fxblue_etl_spark.streaming.pipelines import (
+        streaming_cms_maintenance,
+        streaming_kmv_distinct,
+        streaming_lsh_dedup,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    jsc = spark.sparkContext._jsc.sc()
+    start = spark.sparkContext.emptyRDD().id()
+    for fn in (
+        split_decontaminate,
+        streaming_lsh_dedup,
+        streaming_kmv_distinct,
+        streaming_cms_maintenance,
+        simhash_hamming_neardup,
+    ):
+        fn(spark, sf).collect()
+    drain_all(spark)
+    it = jsc.getPersistentRDDs().iterator()
+    live = []
+    while it.hasNext():
+        live.append(it.next()._1())
+    assert [i for i in live if i > start] == []
