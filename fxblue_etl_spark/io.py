@@ -158,12 +158,6 @@ def _release(handles: list) -> None:
             pass  # cleanup must never fail the query
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Release a loop-local ``localCheckpoint`` that never entered the
-    registry (an iterative fold superseding its own previous step)."""
-    _release([(_CHECKPOINTED, getattr(df, "_jdf", df))])
-
-
 def _pin(sess, slot: str, key, kind: str, dfs) -> list:
     """Store ``dfs`` under ``slot`` (caller holds the lock); return
     the handles the slot held before."""

@@ -1730,7 +1730,7 @@ def greedy_max_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: rank, chosen doc, marginal gain, cumulative coverage and
     its ppm of the corpus vocabulary."""
-    from ..io import release_local_checkpoint, swap_cache
+    from ..io import checkpoint, swap_cache
     from .dedup import _norm_text, word_shingles
 
     d = fan_out(table(tune(spark), sf_dir, "documents"))
@@ -1770,14 +1770,13 @@ def greedy_max_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         doc_id, gain = -pick["nd"], pick["gain"]
         new_cov = pairs.filter(F.col("doc_id") == doc_id).select("tok")
-        merged = (
-            new_cov
+        covered = checkpoint(
+            spark,
+            "corpusops.maxcov_covered",
+            lambda: new_cov
             if covered is None
-            else covered.unionByName(new_cov).distinct()
-        ).localCheckpoint()
-        if covered is not None:
-            release_local_checkpoint(covered)
-        covered = merged
+            else covered.unionByName(new_cov).distinct(),
+        )
         # greedy gain IS the coverage increment: cum = running sum,
         # no per-round count action needed
         prev = rows[-1][3] if rows else 0

@@ -18,9 +18,9 @@ Scale notes: every pairwise step is *blocked* (LSH band, simhash
 prefix, first-token block) so candidate generation is an equi-join on
 the block key — a hash-partitioned shuffle that AQE can skew-split —
 followed by per-pair verification. Nothing materializes the full
-cross product. The `ml.feature.MinHashLSH` variant (JVM sketches,
-`approxSimilarityJoin`) is provided as the rows-only
-`minhash_lsh_ml` for comparison with Spark's built-in implementation.
+cross product. Spark's built-in `ml.feature.MinHashLSH` (JVM sketches,
+`approxSimilarityJoin`) is checked for recall by
+`minhash_lsh_containment`.
 """
 
 from __future__ import annotations
@@ -594,7 +594,9 @@ def chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("kb"),
     )
-    comp = connected_components(pairs, src="ka", dst="kb")
+    comp = connected_components(
+        pairs, src="ka", dst="kb", slot="dedup.chunk_components"
+    )
     q = quality_score(spark, sf_dir).select(
         "doc_id",
         F.round(F.col("quality_score") * 10).cast("int").alias("q10"),
@@ -1094,48 +1096,15 @@ WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
 """
 
 
-def minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark ML MinHashLSH approxSimilarityJoin (rows-only check:
-    JVM-internal seeded hash families aren't oracle-reproducible).
-    This is the built-in scale path for near-dup joins.
-
-    Run on a deterministic 1/3 slice with a 0.2 distance cutoff
-    (Jaccard >= 0.8 — the near-dup regime; the fixture docs share so
-    much vocabulary that sim >= 0.5 admits ~75% of ALL pairs): the
-    self-join's candidate set grows quadratically with bucket density,
-    and this query exists as a JVM comparison point, not the engine's
-    near-dup path (that's `minhash_lsh_pairs`) — unsliced at sf0.1 it
-    alone costs 10+ minutes while proving nothing extra."""
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    d = fan_out(
-        table(tune(spark), sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    )
-    toks = d.select("doc_id", ws_tokens(_norm_text("text")).alias("toks"))
-    cv = CountVectorizer(inputCol="toks", outputCol="features", binary=True, minDF=1.0)
-    model = cv.fit(toks)
-    feats = model.transform(toks)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=4, seed=42)
-    lsh_model = lsh.fit(feats)
-    joined = lsh_model.approxSimilarityJoin(feats, feats, 0.2, distCol="jaccard_dist")
-    return (
-        joined.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(F.col("jaccard_dist"), 6).alias("jaccard_dist"),
-        )
-    )
-
-
 #: exact-Jaccard threshold of the ML containment contract (4/5,
 #: compared as integers: inter·5 ≥ union·4)
 _MH_CONTAIN_J_NUM, _MH_CONTAIN_J_DEN = 4, 5
 
 
 def minhash_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-certifiable contract over ``minhash_lsh_ml`` (round-5
-    verdict item 3): every exact token-set-Jaccard ≥ 0.8 pair (the
+    """Recall contract for Spark ML's MinHashLSH (seeded JVM hash
+    families, not oracle-reproducible themselves): every exact
+    token-set-Jaccard ≥ 0.8 pair (the
     hand-rolled, oracle-certified ground truth, blocked on
     (lang, first token) like the n-gram family) must appear in the
     Spark ML MinHashLSH candidate set.  The output is one summary row
@@ -1143,12 +1112,13 @@ def minhash_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_missing = 0, so a recall regression in the built-in scale path
     fails the hash compare instead of hiding behind a rows-only check.
 
-    The ML side is run deliberately stronger than ``minhash_lsh_ml``
-    (8 hash tables vs 4, distance cutoff 0.21 vs 0.2): containment
-    only needs the candidate set to be a superset, the extra tables
-    push the per-pair miss probability below 1e-5, and the loosened
-    cutoff keeps exact-0.8 pairs from falling to a double-rounding
-    boundary.  Same 1/3 slice as minhash_lsh_ml."""
+    The ML side runs 8 hash tables at distance cutoff 0.21:
+    containment only needs the candidate set to be a superset, the
+    8 tables push the per-pair miss probability below 1e-5, and the
+    cutoff's margin over 0.2 keeps exact-0.8 pairs from falling to a
+    double-rounding boundary.  Runs on a deterministic 1/3 slice
+    (``doc_id % 3 == 0``): the self-join's candidate set grows
+    quadratically with bucket density."""
     from pyspark.ml.feature import CountVectorizer, MinHashLSH
 
     from ..io import swap_cache
@@ -2721,10 +2691,6 @@ QUERIES = {
     "simhash_hamming_neardup": simhash_hamming_neardup,
     "ngram_jaccard_pairs": ngram_jaccard_pairs,
     "duplicated_span_rewrite": duplicated_span_rewrite,
-    # minhash_lsh_ml: REMOVED from the driver surface (round-11,
-    # verdict item 5) — Spark ML's seeded JVM hash families are not
-    # oracle-reproducible; its recall is driver-checked through the
-    # hash-certified minhash_lsh_containment contract (function kept).
     "minhash_lsh_containment": minhash_lsh_containment,
     "containment_pairs": containment_pairs,
     "source_overlap_matrix": source_overlap_matrix,
@@ -2745,8 +2711,6 @@ ORACLES = {
     "simhash_hamming_neardup": _simham_oracle(),
     "ngram_jaccard_pairs": NGRAM_ORACLE,
     "duplicated_span_rewrite": DUP_SPAN_ORACLE,
-    # minhash_lsh_ml: rows-only (seeded JVM hash family); its
-    # hash-certified sibling is minhash_lsh_containment
     "minhash_lsh_containment": MINHASH_CONTAINMENT_ORACLE,
     "containment_pairs": CONTAINMENT_ORACLE,
     "source_overlap_matrix": SOURCE_OVERLAP_ORACLE,

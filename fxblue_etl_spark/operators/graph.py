@@ -17,10 +17,11 @@ propagation:
 
 The driver-side loop is the idiomatic Spark shape for iterative graph
 algorithms (GraphX/Pregel does the same superstep loop under the
-hood); ``localCheckpoint`` cuts lineage each round so plans don't
-grow with iteration count. At 100 TB the same code runs with the
-edge list hash-partitioned on ``id`` — each superstep is shuffle-
-aligned on the same key, so AQE reuses the partitioning.
+hood); each round's state is pinned through ``io.checkpoint``, which
+cuts lineage so plans don't grow with iteration count. At 100 TB the
+same code runs with the edge list hash-partitioned on ``id`` — each
+superstep is shuffle-aligned on the same key, so AQE reuses the
+partitioning.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import release_local_checkpoint
+from ..io import checkpoint
 from ..session import tune
 
 
@@ -69,6 +70,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
+    slot: str = "graph.connected_components",
 ) -> DataFrame:
     """Return ``(id, component)`` for every vertex in ``edges``, where
     ``component`` is the minimum vertex id reachable over the
@@ -82,48 +84,43 @@ def connected_components(
       driver — the closure of a bounded pair graph is not worth k
       supersteps × 2 shuffles of scheduler latency;
     * **large graphs**: the iterative min-label propagation loop.
-      Each superstep checkpoint supersedes the previous round's; the
-      superseded blocks (and the edge list, on return) are released
-      eagerly — an unreleased checkpoint per round is a storage leak
-      in any shared, long-lived session."""
+      The edge list and each superstep's labels are pinned through
+      ``io.checkpoint`` under ``slot`` (``{slot}.edges`` and
+      ``slot``), each step built from the previous one before that
+      one is released; every label row carries its previous label,
+      so the change count reads only the new step.  The result is
+      valid until the slot's next pin or ``io.drain_all``: a caller
+      holding two results at once passes distinct slots."""
     slim = edges.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
     # limit()+collect bounds driver transfer even before the count:
     # fetch at most MAX+1 edges to learn which side of the bound we're on
     probe = slim.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    spark = edges.sparkSession
     if len(probe) <= DRIVER_CC_MAX_EDGES:
-        return _driver_union_find(edges.sparkSession, [(r.s, r.d) for r in probe])
-    sym = (
-        edges.select(F.col(src).alias("id"), F.col(dst).alias("nbr"))
+        return _driver_union_find(spark, [(r.s, r.d) for r in probe])
+    sym = checkpoint(
+        spark,
+        f"{slot}.edges",
+        lambda: edges.select(F.col(src).alias("id"), F.col(dst).alias("nbr"))
         .unionByName(edges.select(F.col(dst).alias("id"), F.col(src).alias("nbr")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
     )
     labels = sym.select("id").distinct().withColumn("label", F.col("id"))
-    prev_ckpt: DataFrame | None = None
     for _ in range(max_iter):
         nbr_labels = sym.join(
             labels.withColumnRenamed("id", "nbr"), "nbr"
-        ).select("id", "label")
-        new_labels = (
-            labels.unionByName(nbr_labels)
+        ).select("id", "label", F.lit(None).alias("own"))
+        labels = checkpoint(
+            spark,
+            slot,
+            lambda: labels.select("id", "label", F.col("label").alias("own"))
+            .unionByName(nbr_labels)
             .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
+            .agg(F.min("label").alias("label"), F.min("own").alias("prev")),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        # `changed` was the last reader of the previous round's blocks
-        if prev_ckpt is not None:
-            release_local_checkpoint(prev_ckpt)
-        prev_ckpt = labels = new_labels
-        if changed == 0:
-            release_local_checkpoint(sym)
+        if labels.filter(F.col("label") != F.col("prev")).count() == 0:
             return labels.select("id", F.col("label").alias("component"))
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
@@ -133,6 +130,7 @@ def upsert_components(
     new_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
+    slot: str = "graph.upsert_components",
 ) -> DataFrame:
     """Incrementally maintain a min-label components labeling under
     EDGE ARRIVALS: given ``labels`` = ``connected_components(E)`` and
@@ -158,7 +156,10 @@ def upsert_components(
     documents and pairs, and a GDPR-style delete is a full rebuild
     (``io.drain_all`` + recompute) by policy.  Contract (tested +
     oracle-certified via ``components_upsert_equivalence``):
-    ``upsert(cc(E1), E2) ≡ cc(E1 ∪ E2)`` row-set exact."""
+    ``upsert(cc(E1), E2) ≡ cc(E1 ∪ E2)`` row-set exact.  The delta's
+    fixpoint runs in :func:`connected_components` under ``slot``, so
+    a chain of upserts whose earlier results stay in use passes a
+    distinct slot per link."""
     e = new_edges.select(
         F.col(src).cast("long").alias("s"),
         F.col(dst).cast("long").alias("d"),
@@ -173,7 +174,9 @@ def upsert_components(
             F.coalesce("cd", F.col("d")).alias("cn_dst"),
         )
     )
-    sub = connected_components(contracted, src="cn_src", dst="cn_dst").select(
+    sub = connected_components(
+        contracted, src="cn_src", dst="cn_dst", slot=slot
+    ).select(
         F.col("id").alias("touched"), F.col("component").alias("new_component")
     )
     existing = labels.join(
@@ -203,9 +206,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune(spark)
     pairs = embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b")
-    return connected_components(pairs, src="vec_a", dst="vec_b").select(
-        F.col("id").alias("vec_id"), "component"
-    )
+    return connected_components(
+        pairs, src="vec_a", dst="vec_b", slot="graph.dedup_components"
+    ).select(F.col("id").alias("vec_id"), "component")
 
 
 # Transitive closure via recursive SQL over the SAME pair predicate
@@ -268,9 +271,9 @@ def group_aware_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "graph.cvfold.pairs",
         embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b"),
     )
-    comp = connected_components(pairs, src="vec_a", dst="vec_b").select(
-        F.col("id").alias("vec_id"), "component"
-    )
+    comp = connected_components(
+        pairs, src="vec_a", dst="vec_b", slot="graph.cvfold.cc"
+    ).select(F.col("id").alias("vec_id"), "component")
     vecs = table(spark, sf_dir, "embeddings").select("vec_id")
     labeled = swap_cache(
         "graph.cvfold.labeled",
@@ -537,7 +540,7 @@ def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer until ``io.drain_all``.  The frame is 3 narrow columns —
     spill-safe even at corpus scale, and a fraction of the shuffle
     the LSH re-run would cost."""
-    from ..io import checkpoint, fan_out, fixture_fingerprint, table
+    from ..io import fan_out, fixture_fingerprint, table
     from .dedup import lsh_jaccard_pairs
 
     def build() -> DataFrame:
@@ -547,9 +550,9 @@ def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.round("jaccard", 6) >= DECON_J)
             .select("doc_a", "doc_b")
         )
-        comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
-            F.col("id").alias("doc_id"), "component"
-        )
+        comp = connected_components(
+            pairs, src="doc_a", dst="doc_b", slot="graph.doc_dup_groups_cc"
+        ).select(F.col("id").alias("doc_id"), "component")
         return (
             docs.select("doc_id", "n_chars")
             .join(comp, "doc_id", "left")
@@ -679,7 +682,9 @@ def dedup_threshold_sensitivity(
     out = None
     for t in DEDUP_T_PPM:
         edges = pairs.filter(F.col("j_ppm") >= t).select("doc_a", "doc_b")
-        comp = connected_components(edges, src="doc_a", dst="doc_b")
+        comp = connected_components(
+            edges, src="doc_a", dst="doc_b", slot=f"graph.threshold_cc.{t}"
+        )
         sizes = comp.groupBy("component").agg(
             F.count("*").cast("long").alias("sz")
         )
@@ -834,71 +839,6 @@ def canonical_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: PageRank damping factor and fixed iteration count
-PR_DAMPING = 0.85
-PR_ITERS = 10
-
-
-def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the near-dup pair graph: which documents sit at
-    the CENTER of duplication neighborhoods (template sources, widely
-    copied boilerplate) vs the periphery.  Complements connected
-    components — CC says *which* cluster, PageRank says *who anchors
-    it*.  Fixed-iteration power method (the GraphX/Pregel superstep
-    shape): per round one equi-join (contributions along edges) and
-    one groupBy(dst) — both shuffle on the node key, AQE reuses the
-    partitioning; ``localCheckpoint`` truncates per-round lineage.
-
-    Engine-iterative with a float fixpoint → rows-only by design
-    (like ``kmeans_iterate``); `tests/test_r4_ops.py` certifies rank
-    conservation (Σrank = n within float tolerance) and that ranks
-    stabilize monotonically.  Emitted as floor(rank·1e9) ints."""
-    from .similarity import embedding_near_dup
-
-    tune(spark)
-    pairs = embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b")
-    sym = (
-        pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = sym.select(F.col("src").alias("id")).distinct()
-    n_nodes = nodes.count()
-    deg = sym.groupBy("src").agg(F.count("*").alias("out_deg"))
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    prev: DataFrame | None = None
-    for _ in range(PR_ITERS):
-        contribs = (
-            sym.join(ranks.withColumnRenamed("id", "src"), "src")
-            .join(deg, "src")
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        new_ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - PR_DAMPING)
-                    + F.lit(PR_DAMPING) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = ranks = new_ranks
-    release_local_checkpoint(sym)
-    return ranks.select(
-        F.col("id").alias("vec_id"),
-        F.floor(F.col("rank") * 1e9).cast("long").alias("rank_e9"),
-    )
-
-
 #: canned 10-node graph for the exact-PageRank certification: a
 #: 6-node "template cluster" (hub node 1) plus a 4-node chain, chosen
 #: so out-degrees ∈ {1,2,3} (LCM 6 keeps the exact denominators small)
@@ -942,36 +882,33 @@ def _pr_exact_reference() -> tuple[dict[int, int], int]:
 
 
 def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-certifiable sibling of ``dedup_pagerank`` (round-4
-    verdict item 7): the SAME distributed superstep — per iteration
-    one contribution equi-join and one groupBy(dst), localCheckpoint
-    lineage truncation — but in exact scaled-integer arithmetic
-    (damping 17/20, common degree multiple L) over the canned
-    PR_EXACT_EDGES graph, so the fixpoint is a bit-stable integer on
-    any engine.  The DuckDB oracle carries the independently
-    computed big-int reference as literals.
+    """PageRank as a distributed superstep (the GraphX/Pregel power
+    method): per iteration one contribution equi-join and one
+    groupBy(dst), both shuffling on the node key, with the edge list
+    and each round's ranks pinned through ``io.checkpoint`` so the
+    lineage never grows with the round count.  The arithmetic is
+    exact scaled integers (damping 17/20, common degree multiple L)
+    over the canned PR_EXACT_EDGES graph, so the fixpoint is a
+    bit-stable integer on any engine and the DuckDB oracle carries
+    the independently computed big-int reference as literals.
 
-    This certifies the superstep MACHINERY (contribution routing,
-    degree normalization, teleport term, iteration count) that the
-    float production path shares; ``sf_dir`` is deliberately unused —
-    the graph must be canned for the ranks to be closed-form.
-
-    Scale posture is inherited from the production path: per round
-    both wide ops shuffle on the node key; nothing here is
-    corpus-sized."""
+    This certifies the superstep machinery (contribution routing,
+    degree normalization, teleport term, iteration count);
+    ``sf_dir`` is deliberately unused — the graph must be canned for
+    the ranks to be closed-form."""
     tune(spark)
     edges = spark.createDataFrame(PR_EXACT_EDGES, "a int, b int")
-    sym = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    sym = checkpoint(
+        spark,
+        "graph.pagerank_exact.edges",
+        lambda: edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
     )
     nodes = sym.select(F.col("src").alias("id")).distinct()
     deg = sym.groupBy("src").agg(F.count("*").cast("long").alias("out_deg"))
     ranks = nodes.withColumn("rank_scaled", F.lit(1).cast("long"))
     scale = 1
-    prev: DataFrame | None = None
     for _ in range(PR_EXACT_ITERS):
         contribs = (
             sym.join(ranks.withColumnRenamed("id", "src"), "src")
@@ -988,22 +925,19 @@ def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("in_sum"))
         )
-        new_ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
+        ranks = checkpoint(
+            spark,
+            "graph.pagerank_exact.ranks",
+            lambda: nodes.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
             .select(
                 "id",
                 (
                     F.lit(3 * _PR_EXACT_L * scale).cast("long")
                     + F.lit(17).cast("long") * F.coalesce("in_sum", F.lit(0))
                 ).alias("rank_scaled"),
-            )
-            .localCheckpoint()
+            ),
         )
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = ranks = new_ranks
         scale *= 20 * _PR_EXACT_L
-    release_local_checkpoint(sym)
     return ranks.select(
         F.col("id").cast("int").alias("node_id"),
         F.col("rank_scaled").cast("long"),
@@ -1141,12 +1075,17 @@ def components_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = swap_cache("graph.cc_upsert_pairs", pairs)
     is_delta = (F.col("doc_a") + F.col("doc_b")) % 5 == 0
     base = connected_components(
-        pairs.filter(~is_delta), src="doc_a", dst="doc_b"
+        pairs.filter(~is_delta),
+        src="doc_a",
+        dst="doc_b",
+        slot="graph.cc_upsert_base",
     )
     upserted = upsert_components(
         base, pairs.filter(is_delta), src="doc_a", dst="doc_b"
     )
-    full = connected_components(pairs, src="doc_a", dst="doc_b")
+    full = connected_components(
+        pairs, src="doc_a", dst="doc_b", slot="graph.cc_upsert_full"
+    )
     upserted, full = swap_cache("graph.cc_upsert_cmp", upserted, full)
     stats = upserted.agg(
         F.count("*").cast("long").alias("n_vertices"),
@@ -1227,12 +1166,11 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined degree aggregate and two semi-joins keep only
     edges whose BOTH endpoints still qualify — the same bounded-
     superstep shape as :func:`connected_components`, with the
-    lineage checkpointed every other round so the plan never deepens
-    past the round budget.  The DuckDB oracle replays the identical
+    edge list pinned through ``io.checkpoint`` every other round so
+    the plan never deepens past the round budget.  The DuckDB oracle replays the identical
     rounds as generated MATERIALIZED CTE levels; a pytest pins that
     the fixture peel reaches fixpoint inside the budget, so the
     truncation is not observable."""
-    from ..io import release_local_checkpoint
     from .similarity import embedding_near_dup
 
     tune(spark)
@@ -1245,7 +1183,6 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.a", "e.b")
-    prev = None
     for r in range(KCORE_ROUNDS):
         deg = edges.groupBy("a").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= KCORE_K).select("a")
@@ -1255,10 +1192,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("a", "b")
         )
         if r % 2 == 1:
-            nxt = edges.localCheckpoint()
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = edges = nxt
+            edges = checkpoint(spark, "graph.kcore.edges", lambda: edges)
     return edges.groupBy(F.col("a").alias("vec_id")).agg(
         F.count("*").cast("long").alias("core_degree")
     )
@@ -1303,10 +1237,6 @@ QUERIES = {
     "split_decontaminate": split_decontaminate,
     "dedup_threshold_sensitivity": dedup_threshold_sensitivity,
     "canonical_doc_selection": canonical_doc_selection,
-    # dedup_pagerank: REMOVED from the driver surface (round-11,
-    # verdict item 5) — float power iteration drifts ulps per round
-    # across engines; dedup_pagerank_exact (integer rational) is the
-    # driver-checked form (function kept, pytest-covered).
     "dedup_pagerank_exact": dedup_pagerank_exact,
 }
 

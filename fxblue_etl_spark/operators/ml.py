@@ -7,8 +7,9 @@ is one groupBy(cluster) shuffle whose map-side partial aggregation
 reduces each partition to at most K partial sums before anything
 crosses the network. Nothing iterates over collect()ed data except
 the K-row centroid table itself, which is the broadcast value by
-construction. Per-round ``localCheckpoint`` truncates the lineage the
-same way ``operators/graph.connected_components`` does.
+construction. Each round's centroids are pinned through
+``io.checkpoint``, which truncates the lineage the same way
+``operators/graph.connected_components`` does.
 
 Determinism: init centroids are the K lowest vec_ids; argmin
 tie-breaks on the lower centroid id (min over (dist, id) structs);
@@ -158,58 +159,7 @@ GROUP BY 1, 2
 """
 
 
-def kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N_ITER full Lloyd rounds (assignment ⇄ update), returning final
-    per-cluster sizes and inertia. Engine-iterative by construction —
-    checked rows-only by the driver; the per-step operators above are
-    the hash-certified parts, and tests assert inertia monotonicity."""
-    emb = table(tune(spark), sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    cent = _init_centroids(emb.select("vec_id", F.col("emb").alias("embedding")))
-    for _ in range(N_ITER):
-        cand = emb.join(F.broadcast(cent)).select(
-            "vec_id",
-            "emb",
-            F.struct(_sq_dist("emb", "centroid").alias("dist"), F.col("cluster")).alias(
-                "dc"
-            ),
-        )
-        a = cand.groupBy("vec_id").agg(
-            F.min("dc").getField("cluster").alias("cluster"),
-            F.first("emb").alias("emb"),
-        )
-        cent = (
-            a.select("cluster", F.posexplode("emb").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("c"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                    lambda s: s.getField("c"),
-                ).alias("centroid")
-            )
-            .localCheckpoint()
-        )
-    final = emb.join(F.broadcast(cent)).select(
-        "vec_id",
-        F.struct(_sq_dist("emb", "centroid").alias("dist"), F.col("cluster")).alias(
-            "dc"
-        ),
-    )
-    a = final.groupBy("vec_id").agg(F.min("dc").alias("dc"))
-    return (
-        a.select("vec_id", F.col("dc.cluster").alias("cluster"), F.col("dc.dist").alias("d"))
-        .groupBy("cluster")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.floor(F.sum("d") * 1e3).cast("long").alias("inertia_e3"),
-        )
-    )
-
-
-#: fixed-point scale for the exact Lloyd sibling (µ-units)
+#: fixed-point scale for the exact Lloyd iteration (µ-units)
 _KM_SCALE = 1_000_000
 
 #: exact floor division a/b for b > 0 in pure integer arithmetic.
@@ -231,9 +181,11 @@ def _exact_lloyd(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     assignments as the cluster blocking for semantic dedup).  Returns
     ``(final, cent)``: the final assignment frame (``vec_id``, ``qv``,
     ``dc`` struct of (dist, cluster)) and the converged centroid
-    frame.  Pure code motion out of ``kmeans_iterate_exact`` —
-    the optimized plan is unchanged (normalized-plan diff verified on
-    extraction), so the standing certification holds."""
+    frame.  Each round's centroids are pinned in the
+    ``ml.exact_lloyd.centroids`` slot, so both frames are valid until
+    that slot's next pin or ``io.drain_all``."""
+    from ..io import checkpoint
+
     emb = table(tune(spark), sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -268,8 +220,10 @@ def _exact_lloyd(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 
     for _ in range(N_ITER):
         a = assign(cent)
-        cent = (
-            a.select(
+        cent = checkpoint(
+            spark,
+            "ml.exact_lloyd.centroids",
+            lambda: a.select(
                 F.col("dc.cluster").alias("cluster"),
                 F.posexplode("qv").alias("dim", "x"),
             )
@@ -285,27 +239,23 @@ def _exact_lloyd(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
                     F.array_sort(F.collect_list(F.struct("dim", "c"))),
                     lambda s: s.getField("c"),
                 ).alias("centroid")
-            )
-            .localCheckpoint()
+            ),
         )
     return assign(cent), cent
 
 
 def kmeans_iterate_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-certifiable sibling of ``kmeans_iterate`` (round-5 verdict
-    item 3): the same N_ITER Lloyd rounds over embeddings quantized to
-    integer µ-units (``floor(x·1e6)`` per component), with centroid
-    updates as exact integer floor division — every intermediate is a
-    BIGINT, so the final memberships, inertia, and centroid checksums
-    are bit-identical cross-engine and the DuckDB oracle (the same
-    three rounds unrolled as CTEs) hash-certifies the whole iteration,
-    not just one step.
+    """N_ITER full Lloyd rounds (assignment ⇄ update) over embeddings
+    quantized to integer µ-units (``floor(x·1e6)`` per component),
+    with centroid updates as exact integer floor division — every
+    intermediate is a BIGINT, so the final memberships, inertia, and
+    centroid checksums are bit-identical cross-engine and the DuckDB
+    oracle (the same three rounds unrolled as CTEs) hash-certifies
+    the whole iteration, not just one step.  Quantization changes the
+    geometry by < 1µ per component.
 
-    Quantization changes the geometry by < 1µ per component, so this
-    is a *sibling* (same algorithm, certifiable arithmetic), not a
-    replacement: the float production path stays ``kmeans_iterate``.
-    Scale shape is identical — broadcast K centroids, one map-side-
-    combined groupBy per round, K×dim-bounded state."""
+    Scale shape: broadcast K centroids, one map-side-combined groupBy
+    per round, K×dim-bounded state."""
     final, cent = _exact_lloyd(spark, sf_dir)
     chk = cent.select(
         "cluster",
@@ -1966,8 +1916,10 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded retrieval pool, not the corpus); the K rounds then run
     on the ≤ MMR_POOL-row pool — each a broadcast of ONE new
     selection and a row-local greatest() fold, `kcenter_coreset`'s
-    plan with max-similarity in place of min-distance."""
-    from ..io import release_local_checkpoint
+    plan with max-similarity in place of min-distance.  The pool and
+    the carried max-similarity state are pinned through
+    ``io.checkpoint``."""
+    from ..io import checkpoint
 
     emb = fan_out(table(tune(spark), sf_dir, "embeddings")).select(
         "vec_id",
@@ -1996,13 +1948,14 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("vec_id"), F.lit(8))
     ).orderBy(F.desc("rel"), F.asc("vec_id"))
     w2 = Window.orderBy(F.desc("rel"), F.asc("vec_id"))
-    pool = (
-        scored.withColumn("rn", F.row_number().over(w1))
+    pool = checkpoint(
+        spark,
+        "ml.mmr.pool",
+        lambda: scored.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") <= MMR_POOL)
         .withColumn("rk", F.row_number().over(w2))
         .filter(F.col("rk") <= MMR_POOL)
-        .select("vec_id", "qv", "rel")
-        .localCheckpoint()
+        .select("vec_id", "qv", "rel"),
     )
     state = pool.withColumn("msim", F.lit(None).cast("long"))
     rows: list[tuple[int, int, int, int]] = []
@@ -2032,9 +1985,10 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv = pool.filter(F.col("vec_id") == vid).select(
             F.col("qv").alias("cv")
         )
-        new_state = (
-            state.crossJoin(F.broadcast(cv))
-            .select(
+        state = checkpoint(
+            spark,
+            "ml.mmr.state",
+            lambda: state.crossJoin(F.broadcast(cv)).select(
                 "vec_id",
                 "qv",
                 "rel",
@@ -2042,13 +1996,8 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce(F.col("msim"), F.lit(-(1 << 62))),
                     dot(F.col("qv"), F.col("cv")),
                 ).alias("msim"),
-            )
-            .localCheckpoint()
+            ),
         )
-        release_local_checkpoint(state)
-        state = new_state
-    release_local_checkpoint(state)
-    release_local_checkpoint(pool)
     out = spark.createDataFrame(
         rows, "rank int, vec_id long, rel long, msim_at_pick long"
     )
@@ -2150,12 +2099,13 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: K passes over the corpus, each a broadcast of ONE
     new center + a row-local least() — the canonical k-center plan
-    (the distance state is corpus-sized but columnar and checkpointed,
-    never shuffled; the only aggregates are global max/min scalars).
+    (the distance state is corpus-sized but columnar, pinned through
+    ``io.checkpoint`` and never shuffled; the only aggregates are
+    global max/min scalars, each round's pick read on the driver).
     Output: the K selected exemplars with the radius each closed
     (round r's radius = max-min-distance before its pick — a
     non-increasing sequence) and the final coverage radius."""
-    from ..io import release_local_checkpoint, swap_cache
+    from ..io import checkpoint, swap_cache
 
     def dist(a, b):
         return F.aggregate(
@@ -2174,69 +2124,32 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qv"),
         ),
     )
-    seed = pts.agg(F.min("vec_id").alias("sel_id"))
-    sels = [
-        seed.select(
-            F.lit(1).alias("sel_round"),
-            F.col("sel_id").alias("vec_id"),
-            F.lit(None).cast("long").alias("radius"),
-        )
-    ]
-    cvec = pts.join(F.broadcast(seed), pts.vec_id == F.col("sel_id")).select(
-        F.col("qv").alias("cv")
-    )
-    dmin = (
-        pts.crossJoin(F.broadcast(cvec))
-        .select("vec_id", "qv", dist(F.col("qv"), F.col("cv")).alias("dm"))
-        .localCheckpoint()
-    )
-    prev = dmin
-    for r in range(2, KC_K + 1):
-        pick = (
-            dmin.agg(
-                F.max(
-                    F.col("dm") * KC_SHIFT
-                    + (F.lit(KC_SHIFT - 1) - F.col("vec_id"))
-                ).alias("pk")
-            )
-            .select(
-                F.expr(f"pk DIV {KC_SHIFT}").cast("long").alias("radius"),
-                (F.lit(KC_SHIFT - 1) - F.col("pk") % KC_SHIFT)
-                .cast("long")
-                .alias("sel_id"),
-            )
-            .localCheckpoint()  # 1 row; its dmin is released below
-        )
-        sels.append(
-            pick.select(
-                F.lit(r).alias("sel_round"),
-                F.col("sel_id").alias("vec_id"),
-                "radius",
-            )
-        )
-        cvec = pts.join(F.broadcast(pick), pts.vec_id == F.col("sel_id")).select(
-            F.col("qv").alias("cv")
-        )
-        dmin = (
-            dmin.crossJoin(F.broadcast(cvec))
-            .select(
+    # dm NULL until the first center folds in (least() skips NULLs)
+    dmin = pts.withColumn("dm", F.lit(None).cast("long"))
+    sel_id = pts.agg(F.min("vec_id")).first()[0]
+    rows: list[tuple[int, int, int | None]] = []
+    radius = None
+    for r in range(1, KC_K + 1):
+        if r > 1:
+            pk = dmin.agg(
+                F.max(F.col("dm") * KC_SHIFT + (F.lit(KC_SHIFT - 1) - F.col("vec_id")))
+            ).first()[0]
+            sel_id, radius = KC_SHIFT - 1 - pk % KC_SHIFT, pk // KC_SHIFT
+        rows.append((r, sel_id, radius))
+        cvec = pts.filter(F.col("vec_id") == sel_id).select(F.col("qv").alias("cv"))
+        dmin = checkpoint(
+            spark,
+            "ml.kcenter.dmin",
+            lambda: dmin.crossJoin(F.broadcast(cvec)).select(
                 "vec_id",
                 "qv",
                 F.least(F.col("dm"), dist(F.col("qv"), F.col("cv"))).alias("dm"),
-            )
-            .localCheckpoint()
+            ),
         )
-        release_local_checkpoint(prev)
-        prev = dmin
     cover = dmin.agg(F.max("dm").cast("long").alias("coverage_radius"))
-    out = sels[0]
-    for s in sels[1:]:
-        out = out.unionByName(s)
+    out = spark.createDataFrame(rows, "sel_round int, vec_id long, radius long")
     return out.crossJoin(F.broadcast(cover)).select(
-        F.col("sel_round").cast("int").alias("sel_round"),
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "radius",
-        "coverage_radius",
+        "sel_round", "vec_id", "radius", "coverage_radius"
     )
 
 
@@ -3196,10 +3109,6 @@ QUERIES = {
     "knn_graph_build": knn_graph_build,
     "kmeans_assign_stats": kmeans_assign_stats,
     "kmeans_update_centroids": kmeans_update_centroids,
-    # kmeans_iterate: REMOVED from the driver surface (round-11,
-    # verdict item 5) — float Lloyd iteration is order-dependent and
-    # engine-specific; the hash-certified sibling kmeans_iterate_exact
-    # is the driver-checked form (function kept, pytest-covered).
     "kmeans_iterate_exact": kmeans_iterate_exact,
     "semdedup_prune": semdedup_prune,
     "prototype_prune": prototype_prune,
@@ -3231,9 +3140,6 @@ ORACLES = {
     "knn_graph_build": KNN_GRAPH_ORACLE,
     "kmeans_assign_stats": KMEANS_ASSIGN_ORACLE,
     "kmeans_update_centroids": KMEANS_UPDATE_ORACLE,
-    # kmeans_iterate: float fixpoint, rows-only by design; its
-    # hash-certified sibling is kmeans_iterate_exact (same Lloyd
-    # rounds in integer µ-units)
     "kmeans_iterate_exact": KMEANS_ITERATE_EXACT_ORACLE,
     "semdedup_prune": SEMDEDUP_ORACLE,
     "prototype_prune": PROTOTYPE_PRUNE_ORACLE,

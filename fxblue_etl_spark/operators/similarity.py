@@ -957,41 +957,6 @@ FROM c
 SEM_CONTAMINATION_ORACLE = _sem_contamination_oracle()
 
 
-def brp_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark ML BucketedRandomProjectionLSH approxSimilarityJoin over
-    the embeddings (rows-only: the random projection family is JVM-
-    seeded, not oracle-reproducible). The built-in scale path for
-    euclidean near-neighbor joins — hashes once, joins on buckets,
-    never materializes the cross product."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    e = table(tune(spark), sf_dir, "embeddings")
-    feats = e.select(
-        "vec_id", array_to_vector(_dvec("embedding")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=2.0,
-        numHashTables=3,
-        seed=42,
-    )
-    model = lsh.fit(feats)
-    # unit-ish vectors put every pairwise euclidean distance in [0, 2],
-    # so cutoffs ≥2 admit the full cross product; 1.0 (≈ cosine ≥ 0.5)
-    # keeps the join output near-linear in input
-    joined = model.approxSimilarityJoin(feats, feats, 1.0, distCol="dist")
-    return (
-        joined.filter(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
-        .select(
-            F.col("datasetA.vec_id").alias("vec_a"),
-            F.col("datasetB.vec_id").alias("vec_b"),
-            F.round(F.col("dist"), 6).alias("dist"),
-        )
-    )
-
-
 #: squared-euclidean cutoff of the BRP containment contract — kept a
 #: safe margin below the ML join's distance cutoff (1.2² = 1.44 vs
 #: 1.35) so no certified pair sits on a double-rounding boundary of
@@ -1003,8 +968,9 @@ _BRP_ML_CUTOFF = 1.35
 
 
 def brp_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-certifiable contract over ``brp_lsh_ml`` (round-5 verdict
-    item 3): every certified near pair — same 8-bit sign bucket (the
+    """Recall contract for Spark ML's BucketedRandomProjectionLSH
+    (JVM-seeded projections, not oracle-reproducible themselves):
+    every certified near pair — same 8-bit sign bucket (the
     ``embedding_near_dup`` blocking) with exact squared euclidean
     distance ≤ 1.44 (``_BRP_CONTAIN_SQ``, i.e. distance ≤ 1.2,
     safely inside the ML join's 1.35 cutoff) — must appear in the
@@ -1017,9 +983,8 @@ def brp_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact side folds (a_i−b_i)² left-to-right in float64 —
     bit-identical between Spark's ``aggregate`` and DuckDB's
     ``list_reduce`` (the NEAR_DUP_ORACLE precedent) — so the certified
-    set needs no rounding tolerance.  The ML side runs stronger than
-    ``brp_lsh_ml`` (12 hash tables vs 3, cutoff 1.35 vs 1.0):
-    containment needs a superset, and at d/L = 0.6 a single table
+    set needs no rounding tolerance.  The ML side runs 12 hash tables
+    at cutoff 1.35: containment needs a superset, and at d/L = 0.6 a single table
     misses ~43% of true pairs — 12 tables push the per-pair miss to
     ~4e-5."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
@@ -1115,10 +1080,6 @@ QUERIES = {
     "ann_ivf_topk": ann_ivf_topk,
     "embedding_near_dup": embedding_near_dup,
     "semantic_contamination_report": semantic_contamination_report,
-    # brp_lsh_ml: REMOVED from the driver surface (round-11, verdict
-    # item 5) — seeded JVM random projections are not oracle-
-    # reproducible; recall is driver-checked through the hash-
-    # certified brp_lsh_containment contract (function kept).
     "brp_lsh_containment": brp_lsh_containment,
     "ivf_upsert_equivalence": ivf_upsert_equivalence,
     "truncation_recall_report": truncation_recall_report,
@@ -1131,8 +1092,6 @@ ORACLES = {
     "ann_ivf_topk": ANN_IVF_ORACLE,
     "embedding_near_dup": NEAR_DUP_ORACLE,
     "semantic_contamination_report": SEM_CONTAMINATION_ORACLE,
-    # brp_lsh_ml: JVM-seeded projections, rows-only by design; its
-    # hash-certified sibling is brp_lsh_containment
     "brp_lsh_containment": BRP_CONTAINMENT_ORACLE,
     "ivf_upsert_equivalence": IVF_UPSERT_ORACLE,
     "truncation_recall_report": TRUNCATION_RECALL_ORACLE,

@@ -368,39 +368,13 @@ def count_min_table(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min estimates vs exact counts for the top-20 keys
-    (rows-only check: bucket collisions make estimates hash-specific,
-    so no cross-engine oracle; the CMS one-sided-error invariant
-    ``estimate >= exact`` is asserted in tests instead).
-
-    Estimate = min over the d rows of the counter each hash maps the
-    key to: candidates explode to (key, d, b), broadcast-join the
-    counter table, min per key.
-    """
-    l = _t(spark, sf_dir, "lineitem")
-    counters = count_min_table(l, "l_partkey")
-    candidates = (
-        heavy_hitters_exact(spark, sf_dir)
-        .select(F.col("l_partkey"), F.col("n_items").alias("exact_count"))
-        .withColumn("db", F.explode(_cms_buckets(F.col("l_partkey"))))
-        .select("l_partkey", "exact_count", F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-    )
-    return (
-        counters.join(F.broadcast(candidates), ["d", "b"])
-        .groupBy("l_partkey", "exact_count")
-        .agg(F.min("cnt").alias("cms_estimate"))
-    )
-
-
 def portable_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min with an ENGINE-NEUTRAL hash family (md5-derived, like
     ``portable_bloom_contract`` / ``portable_hll_registers``): the
     exact counter table and therefore the exact estimates reproduce
     in any engine, so the sketch gains a full value-level oracle —
-    unlike ``countmin_heavy_hitters``, whose xxhash64 rows are
-    Spark-private and can only be checked rows-only.  Same plan
-    shape: build = explode d buckets → one groupBy (counter table
+    unlike ``count_min_table``, whose xxhash64 rows are
+    Spark-private.  Plan shape: build = explode d buckets → one groupBy (counter table
     ≤ d·w rows, broadcastable); probe = top-20 exact keys joined to
     their d counters, min per key.  The CMS one-sided guarantee
     (estimate ≥ exact) is re-assertable cross-engine here because
@@ -2689,10 +2663,6 @@ QUERIES = {
     "range_join_price_bands": range_join_price_bands,
     "time_bucket_rollup": time_bucket_rollup,
     "heavy_hitters_exact": heavy_hitters_exact,
-    # countmin_heavy_hitters: REMOVED from the driver surface
-    # (round-11, verdict item 5) — the demo rides Spark-internal
-    # hashing; portable_countmin_topk is the hash-certified CM sketch
-    # and heavy_hitters_exact the exact form (function kept).
     "gapfill_daily_locf": gapfill_daily_locf,
     "ohlc_bars_hourly": ohlc_bars_hourly,
     "event_transition_matrix": event_transition_matrix,
@@ -2723,8 +2693,6 @@ ORACLES = {
     "range_join_price_bands": RANGE_JOIN_ORACLE,
     "time_bucket_rollup": TIME_BUCKET_ORACLE,
     "heavy_hitters_exact": HEAVY_HITTERS_ORACLE,
-    # countmin_heavy_hitters: intentionally no oracle (sketch estimates
-    # are engine-specific; rows-only + invariant test below)
     "gapfill_daily_locf": GAPFILL_ORACLE,
     "ohlc_bars_hourly": OHLC_ORACLE,
     "event_transition_matrix": TRANSITION_ORACLE,

@@ -597,7 +597,7 @@ def recursive_dup_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cross-certification: every reachable pair must share a connected
     component (`tests/test_r4b_ops.py`)."""
-    from ..io import fan_out
+    from ..io import checkpoint, fan_out
     from ..operators.dedup import lsh_jaccard_pairs
 
     # fan_out: the minhash HOFs are per-row-heavy and a small scan is
@@ -611,11 +611,10 @@ def recursive_dup_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # superstep's join is a single tiny task instead of 32 empty
     # ones. repartition (a shuffle boundary), NOT coalesce — coalesce
     # would pull the whole upstream LSH pipeline into that one task
-    edges = (
-        lsh_jaccard_pairs(d)
-        .select("doc_a", "doc_b")
-        .repartition(1)
-        .localCheckpoint()
+    edges = checkpoint(
+        spark,
+        "advanced.rcte_edges",
+        lambda: lsh_jaccard_pairs(d).select("doc_a", "doc_b").repartition(1),
     )
     edges.createOrReplaceTempView("dup_edges_rcte")
     return spark.sql(_RCTE_SQL("dup_edges_rcte"))

@@ -114,7 +114,9 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     losers = (
-        connected_components(pairs, src="doc_a", dst="doc_b")
+        connected_components(
+            pairs, src="doc_a", dst="doc_b", slot="corpus.llm_prep_cc"
+        )
         .filter(F.col("id") != F.col("component"))
         .select(F.col("id").alias("doc_id"))
     )

@@ -662,16 +662,6 @@ GROUP BY event_type
 """
 
 
-def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct + percentile_approx (rows-only check:
-    sketch results are engine-specific by construction)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id").alias("approx_users"),
-        F.percentile_approx("value", 0.5).alias("approx_median"),
-    )
-
-
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts, status × priority (fixed pivot values)."""
     o = _t(spark, sf_dir, "orders")
@@ -830,12 +820,6 @@ QUERIES = {
     "lag_lead_order_gaps": lag_lead_order_gaps,
     "events_json_extract": events_json_extract,
     "exact_distinct_and_quantiles": exact_distinct_and_quantiles,
-    # approx_sketches: REMOVED from the driver surface (round-11,
-    # verdict item 5) — approx_count_distinct/percentile_approx
-    # values are engine-specific by construction, so its driver row
-    # could only ever be the rows-only `no_oracle` check it carried
-    # since r1.  The function remains (pytest-covered demo); the
-    # exact surface is exact_distinct_and_quantiles.
     "pivot_status_by_priority": pivot_status_by_priority,
 }
 
@@ -858,6 +842,5 @@ ORACLES = {
     "lag_lead_order_gaps": LAG_LEAD_ORACLE,
     "events_json_extract": EVENTS_JSON_ORACLE,
     "exact_distinct_and_quantiles": DISTINCT_QUANTILE_ORACLE,
-    # approx_sketches: intentionally no oracle (sketches are engine-specific)
     "pivot_status_by_priority": PIVOT_ORACLE,
 }

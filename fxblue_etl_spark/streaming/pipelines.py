@@ -125,37 +125,33 @@ def run_to_table(
     return spark.table(name)
 
 
-def _fold_stream(
-    stream: DataFrame,
-    slot: str,
-    part,
-    merge,
-    progress_out: list | None = None,
-) -> DataFrame:
+def _fold_stream(stream: DataFrame, fold, progress_out: list | None = None):
     """Drive ``stream`` to completion (AvailableNow) through
-    ``foreachBatch``, folding each micro-batch into one carried state
-    frame: ``part(batch)`` for the first batch, ``merge(prev,
-    part(batch))`` after.  No state store — the merge keeps the state
-    bounded.
+    ``foreachBatch`` — the module's one ``foreachBatch`` driver —
+    folding each micro-batch into carried state:
+    ``state = fold(pin, state, batch)``, with ``state`` ``None``
+    before the first batch; returns the final state.  No state store
+    — each fold keeps its own state bounded.
 
-    Each batch's state is ``io.checkpoint``-ed (``coalesce(1)``) into
-    ``slot`` of the stream's session, which releases the previous
-    batch's state only after the new one is built from it.  The final
-    state stays pinned until the next invocation of the same query or
+    ``pin(slot, frame)`` is ``io.checkpoint`` under the stream's
+    session (foreachBatch wraps every batch in a fresh Python session
+    object): the slot's previous frame is released only after the new
+    one is built from it.  Every frame a fold carries across batches
+    must be pinned, and each fold compacts its own state
+    (``coalesce``) inside the frame it pins.  The final state stays
+    pinned until the next invocation of the same query or
     ``io.drain_all``."""
     from ..io import checkpoint
 
     spark = stream.sparkSession
-    prev: DataFrame | None = None
+    state = None
+
+    def pin(slot: str, frame: DataFrame) -> DataFrame:
+        return checkpoint(spark, slot, lambda: frame)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        nonlocal prev
-        new = part(batch_df)
-        if prev is not None:
-            new = merge(prev, new)
-        # the stream's session, not batch_df's: foreachBatch wraps
-        # every batch in a fresh Python session object
-        prev = checkpoint(spark, slot, lambda: new.coalesce(1))
+        nonlocal state
+        state = fold(pin, state, batch_df)
 
     q = (
         stream.writeStream.foreachBatch(sink)
@@ -166,7 +162,7 @@ def _fold_stream(
     q.awaitTermination()
     if progress_out is not None:
         progress_out.extend(q.recentProgress)
-    return prev
+    return state
 
 
 def _value_sum_e4() -> F.Column:
@@ -703,24 +699,13 @@ def streaming_csv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("account_id"),
         F.round("value", 4).alias("pnl"),
     )
-    target: dict[str, DataFrame] = {}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        new = batch_df
-        if "t" in target:
-            target["t"] = merge_upsert(target["t"], new, ["ticket"])
-        else:
-            target["t"] = new
-        target["t"] = target["t"].localCheckpoint()  # cut lineage per batch
-
-    q = (
-        s.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
+    return _fold_stream(
+        s,
+        lambda pin, target, batch: pin(
+            "streaming_csv_merge",
+            batch if target is None else merge_upsert(target, batch, ["ticket"]),
+        ),
     )
-    q.awaitTermination()
-    return target["t"]
 
 
 STREAMING_MERGE_ORACLE = """
@@ -797,33 +782,29 @@ def streaming_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (two filters over one batch scan); state is only the
     two accumulating sinks.  At production scale the same function
     writes two parquet/Delta sinks; here the tables accumulate
-    in-memory with per-batch lineage cuts."""
+    in-memory, each pinned per batch through ``io.checkpoint``."""
     s = events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
         F.floor(F.col("value") * 1e4).cast("long").alias("v_e4"),
     )
-    acc: dict[str, DataFrame] = {}
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        main = batch_df.filter(F.col("event_type") != "error")
-        dlq = batch_df.filter(F.col("event_type") == "error").withColumn(
-            "reject_reason", F.lit("error_event")
-        )
-        acc["main"] = (
-            acc["main"].unionByName(main) if "main" in acc else main
-        ).localCheckpoint()
-        acc["dlq"] = (
-            acc["dlq"].unionByName(dlq) if "dlq" in acc else dlq
-        ).localCheckpoint()
+    def fold(pin, acc: dict | None, batch: DataFrame) -> dict:
+        out = {
+            "main": batch.filter(F.col("event_type") != "error"),
+            "dlq": batch.filter(F.col("event_type") == "error").withColumn(
+                "reject_reason", F.lit("error_event")
+            ),
+        }
+        return {
+            k: pin(
+                f"streaming_dlq_split.{k}",
+                v if acc is None else acc[k].unionByName(v),
+            )
+            for k, v in out.items()
+        }
 
-    q = (
-        s.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
+    acc = _fold_stream(s, fold)
     main_row = acc["main"].agg(
         F.count("*").alias("n_main"),
         F.sum("v_e4").cast("long").alias("main_value_e4"),
@@ -1001,18 +982,17 @@ def scd2_from_stream(
     size of the user population; emission windows partition by
     user_id over runs, never globally."""
     ev = stream_df.select("user_id", "ts", "event_id", "event_type")
-    acc: dict[str, DataFrame] = {}
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        b_runs = _collapse_runs(batch_df)
-        if "runs" in acc:
+    def fold(pin, acc: dict | None, batch: DataFrame) -> dict:
+        runs = _collapse_runs(batch)
+        if acc is not None:
             cur = acc["cur"].select(
                 "user_id", F.col("event_type").alias("cur_type")
             )
             wf = Window.partitionBy("user_id").orderBy("from_ts", "from_id")
             first_flag = F.row_number().over(wf) == 1
             b_new = (
-                b_runs.withColumn("is_first", first_flag)
+                runs.withColumn("is_first", first_flag)
                 .join(cur, "user_id", "left")
                 .filter(
                     ~(
@@ -1022,32 +1002,25 @@ def scd2_from_stream(
                 )
                 .select("user_id", "event_type", "from_ts", "from_id")
             )
-            acc["runs"] = acc["runs"].unionByName(b_new).localCheckpoint()
-        else:
-            acc["runs"] = b_runs.localCheckpoint()
+            runs = acc["runs"].unionByName(b_new)
+        runs = pin("streaming_scd2.runs", runs)
         wl = Window.partitionBy("user_id").orderBy(
             F.desc("from_ts"), F.desc("from_id")
         )
-        acc["cur"] = (
-            acc["runs"]
-            .withColumn("rn", F.row_number().over(wl))
+        cur = pin(
+            "streaming_scd2.cur",
+            runs.withColumn("rn", F.row_number().over(wl))
             .filter(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint()
+            .drop("rn"),
         )
         if state_rows_out is not None:
             # per-epoch run-set size — the merge's entire cross-batch
             # state; the state-bound tests assert it tracks distinct
             # runs, not event volume or batch count
-            state_rows_out.append(acc["runs"].count())
+            state_rows_out.append(runs.count())
+        return {"runs": runs, "cur": cur}
 
-    q = (
-        ev.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
+    acc = _fold_stream(ev, fold)
     we = Window.partitionBy("user_id").orderBy("from_ts", "from_id")
     return acc["runs"].select(
         "user_id",
@@ -1274,9 +1247,81 @@ def _stage_table_splits(
     return d
 
 
-def _stage_docs_splits(sf_dir: str, n_splits: int) -> str:
-    """Doc_id-ordered micro-batch staging of documents.parquet."""
-    return _stage_table_splits(sf_dir, "documents", "doc_id", n_splits)
+def _dedup_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    slot: str,
+    table: str,
+    id_col: str,
+    n_splits: int,
+    progress_out: list | None,
+    *,
+    rows_of,
+    upsert,
+    keys: list[str],
+    payload: dict[str, str],
+    verify: F.Column,
+) -> DataFrame:
+    """The one sink of the incremental near-dup gates: ``table``
+    streams in ``id_col`` order, one staged split per micro-batch,
+    into an index that starts EMPTY.
+
+    Per batch: ``rows_of(batch)`` buckets the batch row-locally; the
+    index becomes ``upsert(index, batch, rows)``; one left-outer probe
+    of the rows against the post-upsert index on ``keys`` covers both
+    cross-batch and within-batch priors, and a row ``is_dup`` when an
+    earlier-id prior (its ``payload`` columns renamed) passes
+    ``verify``.  Batches arrive in id order, so every earlier-id row
+    is indexed when a verdict is emitted and the final table equals
+    the all-at-once batch result for any split count.  The rows, the
+    index and the carried union of verdicts are each pinned in
+    ``{slot}.*`` through ``io.checkpoint`` (the first batch's rows
+    are the index).  Re-pinning the verdict union copies the verdicts
+    so far (two narrow columns per row) every batch; a production
+    sink appends each batch's verdicts to a table instead.
+
+    The index is compacted to ``n_par`` partitions: each upsert
+    unions the batch's partitions onto it, so without compaction it
+    accretes ~n_par partitions per batch and per-batch task overhead
+    grows linearly with batch COUNT (measured: 1.02→1.71 s/batch over
+    10 batches at sf0.1).  coalesce is shuffle-free; at cluster scale
+    this is the bucketed index table's MERGE compaction."""
+    tune(spark)
+    d = _stage_table_splits(sf_dir, table, id_col, n_splits)
+    schema = spark.read.parquet(d).schema
+    n_par = spark.sparkContext.defaultParallelism
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+        .repartition(n_par)
+    )
+    hit = F.when((F.col("prior_id") < F.col(id_col)) & verify, 1).otherwise(0)
+
+    def fold(pin, state: dict | None, batch: DataFrame) -> dict:
+        if state is None:
+            rows = index = pin(f"{slot}.index", rows_of(batch))
+        else:
+            rows = pin(f"{slot}.rows", rows_of(batch))
+            index = pin(
+                f"{slot}.index",
+                upsert(state["index"], batch, rows).coalesce(n_par),
+            )
+        prior = index.select(
+            F.col(id_col).alias("prior_id"),
+            *keys,
+            *(F.col(c).alias(a) for c, a in payload.items()),
+        )
+        verdicts = (
+            rows.join(prior, keys, "left_outer")
+            .groupBy(id_col)
+            .agg(F.max(hit).cast("int").alias("is_dup"))
+        )
+        if state is not None:
+            verdicts = state["verdicts"].unionByName(verdicts)
+        return {"index": index, "verdicts": pin(f"{slot}.verdicts", verdicts)}
+
+    return _fold_stream(stream, fold, progress_out)["verdicts"]
 
 
 def streaming_lsh_dedup_incremental(
@@ -1293,17 +1338,13 @@ def streaming_lsh_dedup_incremental(
     (``dedup.upsert_band_index``) — the shape of a real ingest
     pipeline, where "the corpus" is whatever has already arrived.
 
-    Per batch (foreachBatch — no streaming state store at all):
-    band the batch row-locally, flag ``is_dup`` when any band hits an
-    already-ingested earlier doc's bucket OR an earlier doc in the
-    same batch (the post-upsert index contains both, so one left-outer
-    probe covers both cases), then swap the index to the upserted
-    frame (localCheckpoint per batch truncates cross-batch lineage;
-    the superseded checkpoint is released).  Batches arrive in doc_id
-    order (``_stage_docs_splits``), so every earlier-id doc is already
-    indexed when a doc's verdict is emitted and the final table equals
-    the all-at-once batch result — the oracle is shared with
-    ``streaming_lsh_dedup``.
+    Per batch (``_dedup_gate`` — no streaming state store at all):
+    band the batch row-locally, upsert it into the index, and flag
+    ``is_dup`` when any band hits an already-ingested earlier doc's
+    bucket OR an earlier doc in the same batch (the post-upsert index
+    contains both, so one left-outer probe covers both cases).  The
+    final table equals the all-at-once batch result — the oracle is
+    shared with ``streaming_lsh_dedup``.
 
     100 TB posture: driver/executor state is the 3-column band index
     only (16 narrow rows per doc — at cluster scale a bucketed table
@@ -1316,79 +1357,24 @@ def streaming_lsh_dedup_incremental(
     cross-run key dedup (`CSV PARSER/gcp_csv.py:148-157`), upgraded to
     content similarity with the index itself maintained incrementally.
     """
-    from ..io import release_local_checkpoint
     from ..operators.dedup import minhash_band_rows, upsert_band_index
 
-    tune(spark)
-    d = _stage_docs_splits(sf_dir, n_splits)
-    schema = spark.read.parquet(d).schema
-    n_par = spark.sparkContext.defaultParallelism
-    stream_docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(n_par)
+    return _dedup_gate(
+        spark,
+        sf_dir,
+        "streaming_lsh_dedup_incremental",
+        "documents",
+        "doc_id",
+        n_splits,
+        progress_out,
+        rows_of=lambda b: minhash_band_rows(b).select(
+            "doc_id", "band_idx", "band_sig"
+        ),
+        upsert=lambda index, b, rows: upsert_band_index(index, b, new_rows=rows),
+        keys=["band_idx", "band_sig"],
+        payload={},
+        verify=F.lit(True),
     )
-
-    state: dict[str, DataFrame] = {}
-    verdicts: list[DataFrame] = []
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        bands = (
-            minhash_band_rows(batch_df)
-            .select("doc_id", "band_idx", "band_sig")
-            .localCheckpoint()
-        )
-        if "index" in state:
-            # coalesce before the checkpoint: each upsert unions the
-            # batch's partitions onto the index, so without compaction
-            # the index accretes ~n_par partitions per batch and
-            # per-batch task overhead grows linearly with batch COUNT
-            # (measured: 1.02→1.71s/batch over 10 batches at sf0.1).
-            # coalesce is shuffle-free; at cluster scale this is the
-            # bucketed index table's MERGE compaction.
-            new_index = (
-                upsert_band_index(state["index"], batch_df, new_rows=bands)
-                .coalesce(n_par)
-                .localCheckpoint()
-            )
-            release_local_checkpoint(state["index"])
-        else:
-            new_index = bands
-        state["index"] = new_index
-        prior = new_index.select(
-            F.col("doc_id").alias("prior_id"), "band_idx", "band_sig"
-        )
-        verdicts.append(
-            bands.join(prior, ["band_idx", "band_sig"], "left_outer")
-            .groupBy("doc_id")
-            .agg(
-                F.max(
-                    F.when(F.col("prior_id") < F.col("doc_id"), 1).otherwise(0)
-                )
-                .cast("int")
-                .alias("is_dup")
-            )
-            .localCheckpoint()
-        )
-
-    q = (
-        stream_docs.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    if "index" in state:
-        # verdicts are themselves checkpointed, so the final index
-        # swap-chain head can be released before returning
-        release_local_checkpoint(state.pop("index"))
-    out = verdicts[0]
-    for v in verdicts[1:]:
-        out = out.unionByName(v)
-    return out
 
 
 def streaming_embed_dedup_incremental(
@@ -1408,14 +1394,10 @@ def streaming_embed_dedup_incremental(
     derives from the shared NEAR_DUP_ORACLE pair set (a vec is a dup
     iff it is the LATER side of a qualifying pair).
 
-    Per batch (foreachBatch — no streaming state store): bucket the
-    batch row-locally, swap the index to the upserted frame
-    (localCheckpoint truncates cross-batch lineage, superseded
-    checkpoint released, coalesce compacts the union-accreted
-    partitions), then one left-outer probe on the bucket key covers
-    both cross-batch and within-batch priors.  Batches arrive in
-    vec_id order (``_stage_table_splits``), so every earlier-id
-    vector is already indexed when a verdict is emitted.
+    Per batch (``_dedup_gate`` — no streaming state store): bucket
+    the batch row-locally, upsert it into the index, then one
+    left-outer probe on the bucket key covers both cross-batch and
+    within-batch priors.
 
     100 TB posture: unlike the text gate's 3-column band index, this
     index carries the vector payload (``(vec_id, bucket, v)``) — the
@@ -1425,71 +1407,26 @@ def streaming_embed_dedup_incremental(
     the exact-cosine verify runs only within candidate buckets (256
     fixed blocks at 8 bits — at real scale you widen the sign
     pattern, same note as ``embedding_near_dup``)."""
-    from ..io import release_local_checkpoint
     from ..operators.similarity import (
         cosine,
         sign_bucket_rows,
         upsert_sign_index,
     )
 
-    tune(spark)
-    d = _stage_table_splits(sf_dir, "embeddings", "vec_id", n_splits)
-    schema = spark.read.parquet(d).schema
-    n_par = spark.sparkContext.defaultParallelism
-    stream_vecs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(n_par)
+    return _dedup_gate(
+        spark,
+        sf_dir,
+        "streaming_embed_dedup_incremental",
+        "embeddings",
+        "vec_id",
+        n_splits,
+        progress_out,
+        rows_of=sign_bucket_rows,
+        upsert=lambda index, b, rows: upsert_sign_index(index, b, new_rows=rows),
+        keys=["bucket"],
+        payload={"v": "pv"},
+        verify=F.round(cosine(F.col("v"), F.col("pv")), 6) >= 0.15,
     )
-
-    state: dict[str, DataFrame] = {}
-    verdicts: list[DataFrame] = []
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = sign_bucket_rows(batch_df).localCheckpoint()
-        if "index" in state:
-            new_index = (
-                upsert_sign_index(state["index"], batch_df, new_rows=rows)
-                .coalesce(n_par)
-                .localCheckpoint()
-            )
-            release_local_checkpoint(state["index"])
-        else:
-            new_index = rows
-        state["index"] = new_index
-        prior = new_index.select(
-            F.col("vec_id").alias("prior_id"),
-            "bucket",
-            F.col("v").alias("pv"),
-        )
-        hit = F.when(
-            (F.col("prior_id") < F.col("vec_id"))
-            & (F.round(cosine(F.col("v"), F.col("pv")), 6) >= 0.15),
-            1,
-        ).otherwise(0)
-        verdicts.append(
-            rows.join(prior, ["bucket"], "left_outer")
-            .groupBy("vec_id")
-            .agg(F.max(hit).cast("int").alias("is_dup"))
-            .localCheckpoint()
-        )
-
-    q = (
-        stream_vecs.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    if "index" in state:
-        release_local_checkpoint(state.pop("index"))
-    out = verdicts[0]
-    for v in verdicts[1:]:
-        out = out.unionByName(v)
-    return out
 
 
 from ..operators.dedup import CAND_PAIRS_SQL as _CAND_PAIRS_SQL_REF  # noqa: E402
@@ -1537,18 +1474,15 @@ def streaming_ahash_dedup_incremental(
     of ``operators.multimodal``).  The band index starts EMPTY and
     each micro-batch probes it and appends itself.
 
-    Per batch (foreachBatch — no streaming state store): hash +
+    Per batch (``_dedup_gate`` — no streaming state store): hash +
     band the batch row-locally (``ahash_band_rows``: the Arrow kernel
     reduces each payload to one 8-byte hash before anything
-    shuffles), swap the index to the appended frame (localCheckpoint
-    truncates cross-batch lineage; coalesce compacts the
-    union-accreted partitions), then ONE left-outer probe on the
-    (band_idx, band_val) key covers both cross-batch and
+    shuffles), append it to the index, then ONE left-outer probe on
+    the (band_idx, band_val) key covers both cross-batch and
     within-batch priors; candidates verify EXACT Hamming ≤
     ``AHASH_HAM_T`` on the carried hashes.  Banding is
     pigeonhole-lossless at that radius, so the gate's verdict equals
-    the all-pairs predicate — and batches arrive in doc_id order
-    (``_stage_docs_splits``), so the final table equals the batch
+    the all-pairs predicate, and the final table equals the batch
     recompute for any split count; the oracle restates exactly that.
 
     100 TB posture: index state is (doc_id, ahash, band_idx,
@@ -1560,72 +1494,22 @@ def streaming_ahash_dedup_incremental(
     Reference parity: extends the reference's cross-run key dedup
     (`CSV PARSER/gcp_csv.py:148-157`) to perceptual media identity —
     the ingest-time gate a multimodal training pipeline runs."""
-    from ..io import release_local_checkpoint
     from ..operators.multimodal import AHASH_HAM_T, ahash_band_rows
 
-    tune(spark)
-    d = _stage_docs_splits(sf_dir, n_splits)
-    schema = spark.read.parquet(d).schema
-    n_par = spark.sparkContext.defaultParallelism
-    stream_docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(n_par)
+    return _dedup_gate(
+        spark,
+        sf_dir,
+        "streaming_ahash_dedup_incremental",
+        "documents",
+        "doc_id",
+        n_splits,
+        progress_out,
+        rows_of=ahash_band_rows,
+        upsert=lambda index, b, rows: index.unionByName(rows),
+        keys=["band_idx", "band_val"],
+        payload={"ahash": "prior_hash"},
+        verify=F.expr("CAST(bit_count(ahash ^ prior_hash) AS INT)") <= AHASH_HAM_T,
     )
-
-    state: dict[str, DataFrame] = {}
-    verdicts: list[DataFrame] = []
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        bands = ahash_band_rows(batch_df).localCheckpoint()
-        if "index" in state:
-            new_index = (
-                state["index"]
-                .unionByName(bands)
-                .coalesce(n_par)
-                .localCheckpoint()
-            )
-            release_local_checkpoint(state["index"])
-        else:
-            new_index = bands
-        state["index"] = new_index
-        prior = new_index.select(
-            F.col("doc_id").alias("prior_id"),
-            F.col("ahash").alias("prior_hash"),
-            "band_idx",
-            "band_val",
-        )
-        hit = F.when(
-            (F.col("prior_id") < F.col("doc_id"))
-            & (
-                F.expr("CAST(bit_count(ahash ^ prior_hash) AS INT)")
-                <= AHASH_HAM_T
-            ),
-            1,
-        ).otherwise(0)
-        verdicts.append(
-            bands.join(prior, ["band_idx", "band_val"], "left_outer")
-            .groupBy("doc_id")
-            .agg(F.max(hit).cast("int").alias("is_dup"))
-            .localCheckpoint()
-        )
-
-    q = (
-        stream_docs.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(q.recentProgress)
-    if "index" in state:
-        release_local_checkpoint(state.pop("index"))
-    out = verdicts[0]
-    for v in verdicts[1:]:
-        out = out.unionByName(v)
-    return out
 
 
 def streaming_quality_gate(
@@ -1717,24 +1601,21 @@ def streaming_kmv_distinct(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def merge(prev: DataFrame, sk: DataFrame) -> DataFrame:
-        # union of two ≤k sketches per group → ≤2k hashes: bounded by
-        # construction, so the explode/collect_set re-truncate is
-        # sketch-local work
-        return (
-            prev.unionByName(sk)
-            .select("grp", F.explode("ks").alias("h"))
-            .groupBy("grp")
-            .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("ks"))
-        )
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        sk = kmv_sketch_table(batch, "event_type", "user_id")
+        if prev is not None:
+            # union of two ≤k sketches per group → ≤2k hashes: bounded
+            # by construction, so the explode/collect_set re-truncate
+            # is sketch-local work
+            sk = (
+                prev.unionByName(sk)
+                .select("grp", F.explode("ks").alias("h"))
+                .groupBy("grp")
+                .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("ks"))
+            )
+        return pin("streaming_kmv_distinct", sk.coalesce(1))
 
-    final = _fold_stream(
-        stream,
-        "streaming_kmv_distinct",
-        lambda batch: kmv_sketch_table(batch, "event_type", "user_id"),
-        merge,
-        progress_out,
-    )
+    final = _fold_stream(stream, fold, progress_out)
     return final.select(
         F.col("grp").alias("event_type"),
         F.size("ks").cast("long").alias("n_sketch"),
@@ -1815,15 +1696,17 @@ def streaming_gram_maintenance(
         .parquet(d)
     )
 
-    final = _fold_stream(
-        stream_vecs,
-        "streaming_gram_maintenance",
-        gram_cells,
-        lambda prev, cells: prev.unionByName(cells)
-        .groupBy("i", "j")
-        .agg(F.sum("cross_sum").cast("long").alias("cross_sum")),
-        progress_out,
-    )
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        cells = gram_cells(batch)
+        if prev is not None:
+            cells = (
+                prev.unionByName(cells)
+                .groupBy("i", "j")
+                .agg(F.sum("cross_sum").cast("long").alias("cross_sum"))
+            )
+        return pin("streaming_gram_maintenance", cells.coalesce(1))
+
+    final = _fold_stream(stream_vecs, fold, progress_out)
     return final.select("i", "j", "cross_sum")
 
 
@@ -1872,19 +1755,21 @@ def streaming_bloom_maintenance(
         .parquet(d)
     )
 
-    final = _fold_stream(
-        stream,
-        "streaming_bloom_maintenance",
-        lambda batch: _bloom_words(
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        words = _bloom_words(
             batch.select("o_orderkey")
             .distinct()
             .filter(F.col("o_orderkey") % 2 == 0)
-        ),
-        lambda prev, words: prev.unionByName(words)
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(word)").alias("word")),
-        progress_out,
-    )
+        )
+        if prev is not None:
+            words = (
+                prev.unionByName(words)
+                .groupBy("word_idx")
+                .agg(F.expr("bit_or(word)").alias("word"))
+            )
+        return pin("streaming_bloom_maintenance", words.coalesce(1))
+
+    final = _fold_stream(stream, fold, progress_out)
     return final.select("word_idx", "word")
 
 
@@ -1926,15 +1811,13 @@ def streaming_hll_maintenance(
         .parquet(d)
     )
 
-    final = _fold_stream(
-        stream,
-        "streaming_hll_maintenance",
-        lambda batch: hll_register_table(batch.select("event_id"), "event_id"),
-        lambda prev, regs: prev.unionByName(regs)
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho")),
-        progress_out,
-    )
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        regs = hll_register_table(batch.select("event_id"), "event_id")
+        if prev is not None:
+            regs = prev.unionByName(regs).groupBy("bucket").agg(F.max("rho").alias("rho"))
+        return pin("streaming_hll_maintenance", regs.coalesce(1))
+
+    final = _fold_stream(stream, fold, progress_out)
     return final.select("bucket", F.col("rho").cast("long").alias("rho"))
 
 
@@ -1999,19 +1882,21 @@ def streaming_cms_maintenance(
         .parquet(d)
     )
 
-    final = _fold_stream(
-        stream,
-        "streaming_cms_maintenance",
-        lambda batch: batch.select(
-            F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db")
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        cells = (
+            batch.select(F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db"))
+            .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+            .agg(F.count("*").cast("long").alias("cnt"))
         )
-        .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-        .agg(F.count("*").cast("long").alias("cnt")),
-        lambda prev, part: prev.unionByName(part)
-        .groupBy("d", "b")
-        .agg(F.sum("cnt").cast("long").alias("cnt")),
-        progress_out,
-    )
+        if prev is not None:
+            cells = (
+                prev.unionByName(cells)
+                .groupBy("d", "b")
+                .agg(F.sum("cnt").cast("long").alias("cnt"))
+            )
+        return pin("streaming_cms_maintenance", cells.coalesce(1))
+
+    final = _fold_stream(stream, fold, progress_out)
     return final.select(
         F.col("d").cast("long").alias("d"),
         F.col("b").cast("long").alias("b"),
@@ -2428,24 +2313,22 @@ def streaming_ewma_monitor(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    final = _fold_stream(
-        stream,
-        "streaming_ewma_monitor",
-        lambda batch: batch.groupBy(
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        weekly = batch.groupBy(
             "o_orderpriority",
             F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
             .cast("long")
             .alias("wk"),
-        ).agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100))
-            .cast("long")
-            .alias("cents")
-        ),
-        lambda prev, part: prev.unionByName(part)
-        .groupBy("o_orderpriority", "wk")
-        .agg(F.sum("cents").cast("long").alias("cents")),
-        progress_out,
-    )
+        ).agg(F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents"))
+        if prev is not None:
+            weekly = (
+                prev.unionByName(weekly)
+                .groupBy("o_orderpriority", "wk")
+                .agg(F.sum("cents").cast("long").alias("cents"))
+            )
+        return pin("streaming_ewma_monitor", weekly.coalesce(1))
+
+    final = _fold_stream(stream, fold, progress_out)
     return ewma_from_weekly(final)
 
 
@@ -2485,21 +2368,19 @@ def streaming_cusum_monitor(
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    final = _fold_stream(
-        stream,
-        "streaming_cusum_monitor",
-        lambda batch: batch.groupBy(
-            F.col("o_orderdate").cast("string").alias("d")
-        ).agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100))
-            .cast("long")
-            .alias("cents")
-        ),
-        lambda prev, part: prev.unionByName(part)
-        .groupBy("d")
-        .agg(F.sum("cents").cast("long").alias("cents")),
-        progress_out,
-    )
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        daily = batch.groupBy(F.col("o_orderdate").cast("string").alias("d")).agg(
+            F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents")
+        )
+        if prev is not None:
+            daily = (
+                prev.unionByName(daily)
+                .groupBy("d")
+                .agg(F.sum("cents").cast("long").alias("cents"))
+            )
+        return pin("streaming_cusum_monitor", daily.coalesce(1))
+
+    final = _fold_stream(stream, fold, progress_out)
     return cusum_from_daily(final)
 
 

@@ -114,29 +114,14 @@ def test_order_independent_of_cwd(tmp_path):
 
 
 def test_rows_only_queries_are_the_documented_set():
-    """Round-11 (verdict item 5): the six engine-specific rows-only
-    queries were REMOVED from the driver surface — each is either an
-    approx demo or carries a hash-certified sibling/containment
-    contract that IS driver-checked (portable_countmin_topk,
-    kmeans_iterate_exact, minhash_lsh_containment,
-    brp_lsh_containment, dedup_pagerank_exact) — so every entry the
-    driver can reach now has an oracle and a `no_oracle` row can
-    never recur.  The functions remain importable and pytest-covered."""
+    """Every registered query has an oracle, so a `no_oracle` driver
+    row can never recur: engine-specific demos (JVM-seeded LSH, float
+    fixpoints, approx sketches) are checked through hash-certified
+    contracts instead (portable_countmin_topk, kmeans_iterate_exact,
+    minhash_lsh_containment, brp_lsh_containment,
+    dedup_pagerank_exact)."""
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
     rows_only = sorted(k for k in qs if k not in oracles)
     assert rows_only == []
-    # the removed demos must stay importable (documented, not deleted)
-    from fxblue_etl_spark.operators.dedup import minhash_lsh_ml  # noqa: F401
-    from fxblue_etl_spark.operators.graph import dedup_pagerank  # noqa: F401
-    from fxblue_etl_spark.operators.ml import kmeans_iterate  # noqa: F401
-    from fxblue_etl_spark.operators.similarity import (  # noqa: F401
-        brp_lsh_ml,
-    )
-    from fxblue_etl_spark.operators.temporal import (  # noqa: F401
-        countmin_heavy_hitters,
-    )
-    from fxblue_etl_spark.plans.relational import (  # noqa: F401
-        approx_sketches,
-    )

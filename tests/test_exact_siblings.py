@@ -1,9 +1,8 @@
-"""Round-6 exact siblings of the rows-only queries (round-5 verdict
-item 3): the production paths stay float/JVM-seeded, but each now has
-a hash-certifiable sibling whose oracle pins the full computation —
-these tests assert the *semantic* invariants the oracle compare can't
-see (cluster coverage, contract non-vacuity, float-vs-exact
-agreement)."""
+"""Hash-certifiable exact forms of engine-specific computations (exact
+Lloyd iteration, recall contracts over Spark ML's JVM-seeded LSH):
+each oracle pins the full computation, and these tests assert the
+*semantic* invariants the oracle compare can't see (cluster coverage,
+contract non-vacuity)."""
 
 from __future__ import annotations
 
@@ -21,18 +20,6 @@ def test_kmeans_exact_covers_every_vector(spark):
     assert sum(r.n_members for r in rows) == n_vecs
     assert all(r.inertia_q >= 0 for r in rows)
     assert all(0 <= r.cluster < K for r in rows)
-
-
-def test_kmeans_exact_tracks_float_iterate(spark):
-    """µ-unit quantization perturbs each component by < 1e-6, so the
-    exact sibling's memberships must agree with the float path's
-    (identical init, identical tie-breaks, fixture distances are
-    nowhere near 1e-6-degenerate)."""
-    from fxblue_etl_spark.operators.ml import kmeans_iterate, kmeans_iterate_exact
-
-    fl = {r.cluster: r.n_members for r in kmeans_iterate(spark, SF).collect()}
-    ex = {r.cluster: r.n_members for r in kmeans_iterate_exact(spark, SF).collect()}
-    assert fl == ex
 
 
 def test_minhash_containment_holds_and_is_not_vacuous(spark):

@@ -6,7 +6,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from fxblue_etl_spark.operators import graph
 from fxblue_etl_spark.operators.graph import connected_components, dedup_components
+
+#: the literal CC cases as edge batches: the first batch is labeled by
+#: connected_components, each later batch upserted onto it
+_CC_CASES = {
+    # chain 1-2-3 plus island 4-5
+    "chain_and_island": [[(1, 2), (2, 3), (4, 5)]],
+    # two triangles joined by one bridge edge
+    "bridge": [[(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (3, 10)]],
+    # a 12-vertex path needs several supersteps
+    "long_path": [[(i, i + 1) for i in range(12)]],
+    "upsert": [
+        [(10, 20), (20, 30), (40, 50), (60, 70), (80, 90)],
+        [
+            (30, 40),   # merges {10,20,30} with {40,50} -> label 10
+            (5, 60),    # new vertex 5 LOWERS component {60,70} -> label 5
+            (80, 90),   # duplicate edge inside an existing component
+            (100, 110), # brand-new island
+        ],
+    ],
+    # the third batch chains both earlier components; 0 lowers
+    "upsert_chain": [[(1, 2), (7, 8)], [(2, 3), (9, 10)], [(3, 7), (0, 9)]],
+}
 
 
 def _edges(spark, pairs):
@@ -14,25 +37,25 @@ def _edges(spark, pairs):
 
 
 def test_cc_chain_and_island(spark):
-    # chain 1-2-3 plus island 4-5: two components, labeled by min id
+    # two components, labeled by min id
+    (edges,) = _CC_CASES["chain_and_island"]
     out = {
         r.id: r.component
-        for r in connected_components(_edges(spark, [(1, 2), (2, 3), (4, 5)])).collect()
+        for r in connected_components(_edges(spark, edges)).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
 
 def test_cc_bridge_merges_components(spark):
-    # two triangles joined by one bridge edge collapse to one component
-    edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (3, 10)]
+    # the bridged triangles collapse to one component
+    (edges,) = _CC_CASES["bridge"]
     out = connected_components(_edges(spark, edges))
     assert out.select("component").distinct().count() == 1
     assert out.agg(F.min("component")).first()[0] == 1
 
 
 def test_cc_long_path_converges(spark):
-    # a 12-vertex path needs several supersteps — exercises the loop
-    edges = [(i, i + 1) for i in range(12)]
+    (edges,) = _CC_CASES["long_path"]
     out = connected_components(_edges(spark, edges))
     assert out.filter(F.col("component") != 0).count() == 0
 
@@ -147,13 +170,7 @@ def test_upsert_components_matches_full_recompute(spark):
     an existing component (no-op), and a brand-new island."""
     from fxblue_etl_spark.operators.graph import upsert_components
 
-    base_edges = [(10, 20), (20, 30), (40, 50), (60, 70), (80, 90)]
-    delta_edges = [
-        (30, 40),   # merges {10,20,30} with {40,50} -> label 10
-        (5, 60),    # new vertex 5 LOWERS component {60,70} -> label 5
-        (80, 90),   # duplicate edge inside an existing component
-        (100, 110), # brand-new island
-    ]
+    base_edges, delta_edges = _CC_CASES["upsert"]
     labels = connected_components(_edges(spark, base_edges))
     up = {
         r.id: r.component
@@ -177,9 +194,7 @@ def test_upsert_components_chained_batches(spark):
     property a nightly ingest loop actually relies on)."""
     from fxblue_etl_spark.operators.graph import upsert_components
 
-    e1 = [(1, 2), (7, 8)]
-    e2 = [(2, 3), (9, 10)]
-    e3 = [(3, 7), (0, 9)]  # chains both earlier components; 0 lowers
+    e1, e2, e3 = _CC_CASES["upsert_chain"]
     lab = connected_components(_edges(spark, e1))
     lab = upsert_components(lab, _edges(spark, e2))
     lab = upsert_components(lab, _edges(spark, e3))
@@ -190,6 +205,39 @@ def test_upsert_components_chained_batches(spark):
     }
     assert up == full
     assert up[8] == 1 and up[10] == 0
+
+
+@pytest.mark.parametrize("case", list(_CC_CASES))
+def test_superstep_path_matches_union_find(spark, monkeypatch, case):
+    """Above DRIVER_CC_MAX_EDGES the Spark superstep loop runs instead
+    of the driver union-find; with the bound at 0 every CC case
+    above, upserts included, must get union-find's labels.  Each
+    upsert link still reads the one before it, so each link gets its
+    own slot."""
+    from fxblue_etl_spark.operators.graph import upsert_components
+
+    def labels():
+        first, *rest = _CC_CASES[case]
+        lab = connected_components(_edges(spark, first))
+        for i, batch in enumerate(rest):
+            lab = upsert_components(lab, _edges(spark, batch), slot=f"t.upsert{i}")
+        return {r.id: r.component for r in lab.collect()}
+
+    want = labels()
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    assert labels() == want
+
+
+def test_components_upsert_equivalence_on_superstep_path(spark, sf_dir, monkeypatch):
+    """The contract holds the base, upserted and full CC results live
+    at once; on the superstep path each sits in its own slot, so no
+    result's pin releases another's blocks before the compare."""
+    from fxblue_etl_spark.operators.graph import components_upsert_equivalence
+
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    r = components_upsert_equivalence(spark, sf_dir).first()
+    assert r["n_vertices"] > 0
+    assert r["upsert_equals_full"] == 1
 
 
 @pytest.mark.parametrize(

@@ -11,7 +11,6 @@ from fxblue_etl_spark.operators.ml import (
     _init_centroids,
     embedding_quantize,
     kmeans_assign_stats,
-    kmeans_iterate,
 )
 from fxblue_etl_spark.operators.temporal import gapfill_daily_locf
 from fxblue_etl_spark.plans.sinks import KEPT_PRIORITIES, partitioned_sink_roundtrip
@@ -26,33 +25,6 @@ def test_assign_covers_all_vectors(spark, sf_dir):
     a = _assign(emb, _init_centroids(emb))
     for r in a.filter(F.col("vec_id") < K).collect():
         assert r["cluster"] == r["vec_id"]
-
-
-def test_kmeans_iteration_reduces_inertia(spark, sf_dir):
-    """Inertia after N_ITER Lloyd rounds <= inertia of the init
-    assignment (monotone non-increasing objective)."""
-    emb = table(spark, sf_dir, "embeddings")
-    init_assign = _assign(emb, _init_centroids(emb))
-    # inertia of init assignment
-    from fxblue_etl_spark.operators.ml import _sq_dist
-
-    cent = _init_centroids(emb)
-    cand = emb.join(F.broadcast(cent)).select(
-        "vec_id",
-        F.struct(
-            _sq_dist(
-                F.transform("embedding", lambda x: x.cast("double")), F.col("centroid")
-            ).alias("dist"),
-            F.col("cluster"),
-        ).alias("dc"),
-    )
-    init_inertia = (
-        cand.groupBy("vec_id").agg(F.min("dc").alias("dc")).agg(F.sum("dc.dist")).first()[0]
-    )
-    final = kmeans_iterate(spark, sf_dir).collect()
-    final_inertia = sum(r["inertia_e3"] for r in final) / 1e3
-    assert final_inertia <= init_inertia + 1e-6
-    assert sum(r["n_members"] for r in final) == emb.count()
 
 
 def test_quantize_bounds_and_argmax(spark, sf_dir):

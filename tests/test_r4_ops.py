@@ -205,27 +205,6 @@ def test_streaming_dlq_conserves_rows_and_mass(spark, sf_dir):
     assert r["main_value_e4"] + r["dlq_value_e4"] == total_e4
 
 
-def test_pagerank_conserves_mass_and_ranks_hubs(spark, sf_dir):
-    """Power-iteration invariants on the (symmetric) near-dup graph:
-    total rank ≈ n_nodes (damping conserves mass on a graph with no
-    dangling nodes — every node has out-degree ≥ 1 by symmetry), and
-    higher-degree nodes outrank low-degree ones on average."""
-    from fxblue_etl_spark.operators.graph import dedup_pagerank
-    from fxblue_etl_spark.operators.similarity import embedding_near_dup
-
-    ranks = {r["vec_id"]: r["rank_e9"] / 1e9 for r in dedup_pagerank(spark, sf_dir).collect()}
-    n = len(ranks)
-    assert abs(sum(ranks.values()) - n) < 1e-3 * n
-    deg: dict[int, int] = {}
-    for r in embedding_near_dup(spark, sf_dir).collect():
-        deg[r["vec_a"]] = deg.get(r["vec_a"], 0) + 1
-        deg[r["vec_b"]] = deg.get(r["vec_b"], 0) + 1
-    hi = [ranks[v] for v, d in deg.items() if d >= 3 and v in ranks]
-    lo = [ranks[v] for v, d in deg.items() if d == 1 and v in ranks]
-    if hi and lo:
-        assert sum(hi) / len(hi) > sum(lo) / len(lo)
-
-
 def test_moment_stats_consistency(spark, sf_dir):
     out = embedding_moment_stats(spark, sf_dir).collect()
     n_rows = table(spark, sf_dir, "embeddings").count()

@@ -121,31 +121,52 @@ def test_drain_all_scopes_to_session(spark):
 
 def test_drain_all_releases_every_pin(spark):
     """Everything the engine pins — swap_cache persists, the fixture
-    memos (dedup spine, corpus band index) and the streaming folds'
-    carried state — lives in the one registry, so drain_all alone,
-    with no GC, leaves no block pinned by these queries."""
-    from fxblue_etl_spark.operators.dedup import simhash_hamming_neardup
-    from fxblue_etl_spark.operators.graph import split_decontaminate
-    from fxblue_etl_spark.streaming.pipelines import (
-        streaming_cms_maintenance,
-        streaming_kmv_distinct,
-        streaming_lsh_dedup,
-    )
+    memos (dedup spine, corpus band index), the graph/ML superstep
+    loops' carried frames and the streaming folds' state — lives in
+    the one registry, so drain_all alone, with no GC, leaves no block
+    pinned by these queries."""
+    import __spark_entry__ as e
 
     sf = "/root/testdata/sf0.001"
     jsc = spark.sparkContext._jsc.sc()
     start = spark.sparkContext.emptyRDD().id()
-    for fn in (
-        split_decontaminate,
-        streaming_lsh_dedup,
-        streaming_kmv_distinct,
-        streaming_cms_maintenance,
-        simhash_hamming_neardup,
+    qs = e.queries()
+    for name in (
+        "split_decontaminate",
+        "streaming_lsh_dedup",
+        "streaming_kmv_distinct",
+        "streaming_cms_maintenance",
+        "simhash_hamming_neardup",
+        "kcore_decomposition",
+        "kcenter_coreset",
+        "greedy_max_cover_selection",
+        "kmeans_iterate_exact",
+        "recursive_dup_reachability",
+        "streaming_csv_merge",
+        "streaming_cdc_scd2",
+        "streaming_ahash_dedup_incremental",
     ):
-        fn(spark, sf).collect()
+        qs[name](spark, sf).collect()
     drain_all(spark)
     it = jsc.getPersistentRDDs().iterator()
     live = []
     while it.hasNext():
         live.append(it.next()._1())
     assert [i for i in live if i > start] == []
+
+
+def test_local_checkpoint_only_in_io():
+    """io.checkpoint is the one pin path for checkpoints: no other
+    package module may call localCheckpoint directly."""
+    import re
+    from pathlib import Path
+
+    import fxblue_etl_spark
+
+    pkg = Path(fxblue_etl_spark.__file__).parent
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if re.search(r"\.localCheckpoint\(", p.read_text())
+    )
+    assert callers == ["io.py"]
