@@ -21,9 +21,9 @@ Python UDFs anywhere on this surface):
 
 The ``queries()`` entries exercise each operator over the driver
 fixtures (orders/lineitem/customer/events standing in for trade data —
-FIXTURES.md role mapping), with exact DuckDB oracles. The reusable
-column-expression builders are the public API; the query functions are
-thin demonstrations over them.
+FIXTURES.md role mapping), with exact DuckDB oracles. The rules are the
+public API, each as SQL text (``<rule>_sql``) and as the Column builder
+over that text; the query functions are thin demonstrations over them.
 """
 
 from __future__ import annotations
@@ -42,54 +42,73 @@ RSS_FMT = "EEE d MMM yyyy HH:mm:ss"  # gcp_rss.py:34 "%a %d %b %Y %H:%M:%S"
 EPOCH_SENTINEL = "Thu 1 Jan 1970 00:00:00"  # gcp_rss.py:104
 
 
-# ── column-expression builders (the operator library proper) ─────────────
+# ── the rules: SQL text, and a Column builder over each ──────────────────
+# Each rule is written once, as SQL text over SQL expression text (a
+# column name is one; quote a name that needs it in backticks); its
+# builder wraps the text in one ``F.expr``. The per-batch write path
+# (``sources.fxblue_csv``, ``sources.rss_feed``) splices the text into
+# one ``selectExpr`` per step, because every PySpark Column call costs
+# several py4j round trips: building two ``rss_trades`` and their merge
+# took 0.55 CPU s from Column calls and 0.13 s as SQL text (4-core host,
+# ``local[2]``).
 
-def coerce_numeric(c: Column | str) -> Column:
+def coerce_numeric_sql(c: str) -> str:
     """T1: invalid → NULL, exactly ``pd.to_numeric(errors='coerce')``."""
-    c = F.col(c) if isinstance(c, str) else c
-    return c.try_cast("double")
+    return f"try_cast({c} AS double)"
 
 
-def iso_timestamp(c: Column | str) -> Column:
+def coerce_numeric(c: str) -> Column:
+    return F.expr(coerce_numeric_sql(c))
+
+
+def iso_timestamp_sql(c: str) -> str:
     """T2: parse anything timestamp-like, emit ISO-8601 string."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.date_format(F.try_to_timestamp(c), ISO_FMT)
+    return f'date_format(try_to_timestamp({c}), "{ISO_FMT}")'
 
 
-def parse_rss_timestamp(c: Column | str) -> Column:
+def iso_timestamp(c: str) -> Column:
+    return F.expr(iso_timestamp_sql(c))
+
+
+def parse_rss_timestamp_sql(c: str) -> str:
     """T3: ``'Thu 21 Mar 2019 09:00:11'`` → UTC timestamp; bad → NULL.
 
     Spark's CORRECTED datetime parser rejects day-of-week fields in
     *parse* patterns, so the (information-free) day name is stripped
-    first — Python's ``strptime('%a …')`` doesn't cross-validate the
-    day name against the date either, so semantics match the
-    reference (`RSS PARSER/gcp_rss.py:34`).
+    first (``substring_index(c, ' ', -4)`` = ``'21 Mar 2019 09:00:11'``)
+    — Python's ``strptime('%a …')`` doesn't cross-validate the day name
+    against the date either, so semantics match the reference
+    (`RSS PARSER/gcp_rss.py:34`).
     """
-    c = F.col(c) if isinstance(c, str) else c
-    tail = F.substring_index(c, " ", -4)  # '21 Mar 2019 09:00:11'
-    return F.try_to_timestamp(tail, F.lit("d MMM yyyy HH:mm:ss"))
+    return f"try_to_timestamp(substring_index({c}, ' ', -4), 'd MMM yyyy HH:mm:ss')"
 
 
-def pct_to_ratio(c: Column | str) -> Column:
+def parse_rss_timestamp(c: str) -> Column:
+    return F.expr(parse_rss_timestamp_sql(c))
+
+
+def pct_to_ratio_sql(c: str) -> str:
     """T4: ``'12%'``→0.12, ``'-'``→NULL, ``'0.5'``→0.5, NULL→NULL."""
-    c = F.col(c) if isinstance(c, str) else c
     return (
-        F.when(c.isNull() | (c == "-"), F.lit(None).cast("double"))
-        .when(
-            c.contains("%"),
-            F.regexp_replace(c, "%", "").try_cast("double") / 100.0,
-        )
-        .otherwise(c.try_cast("double"))
+        f"CASE WHEN {c} IS NULL OR {c} = '-' THEN CAST(NULL AS double) "
+        f"WHEN contains({c}, '%') THEN try_cast(regexp_replace({c}, '%', '') AS double) / 100.0D "
+        f"ELSE try_cast({c} AS double) END"
     )
 
 
-def null_if_sentinel(c: Column | str, *sentinels: str) -> Column:
-    """T5: any listed sentinel value (or empty string) → NULL."""
-    c = F.col(c) if isinstance(c, str) else c
-    out = F.when(c == "", F.lit(None))
-    for s in sentinels:
-        out = out.when(c == s, F.lit(None))
-    return out.otherwise(c)
+def pct_to_ratio(c: str) -> Column:
+    return F.expr(pct_to_ratio_sql(c))
+
+
+def null_if_sentinel_sql(c: str, *sentinels: str) -> str:
+    """T5: any listed sentinel value (or empty string) → NULL; sentinels
+    hold no quote character."""
+    whens = " ".join(f"WHEN {c} = '{s}' THEN NULL" for s in ("", *sentinels))
+    return f"CASE {whens} ELSE {c} END"
+
+
+def null_if_sentinel(c: str, *sentinels: str) -> Column:
+    return F.expr(null_if_sentinel_sql(c, *sentinels))
 
 
 def basename_account_id(path: Column | str) -> Column:
@@ -98,20 +117,23 @@ def basename_account_id(path: Column | str) -> Column:
     return F.regexp_extract(path, r"([^/]+)\.csv$", 1)
 
 
-def row_hash(*cols: Column | str) -> Column:
+def row_hash_sql(*cols: str) -> str:
     """T7/T8: ``md5(f"{account_id}{ticket}{timestamp}")`` parity."""
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.md5(F.concat_ws("", *parts))
+    return f"md5(concat_ws('', {', '.join(cols)}))"
+
+
+def row_hash(*cols: str) -> Column:
+    return F.expr(row_hash_sql(*cols))
 
 
 def with_null_defaults(df: DataFrame, cols: Mapping[str, str]) -> DataFrame:
     """P3: add each missing column as typed NULL (the reference's
     *intent* at gcp_csv.py:137-146 — see SURVEY §1.4 for the
     ``setdefault`` bug we deliberately do not reproduce)."""
-    for name, dtype in cols.items():
-        if name not in df.columns:
-            df = df.withColumn(name, F.lit(None).cast(dtype))
-    return df
+    present = set(df.columns)
+    return df.selectExpr(
+        "*", *[f"CAST(NULL AS {dtype}) AS `{name}`" for name, dtype in cols.items() if name not in present]
+    )
 
 
 def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
@@ -196,14 +218,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def t1_numeric_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 on mixed valid/invalid strings built from orders."""
     o = _t(spark, sf_dir, "orders")
-    raw = F.when(
-        F.col("o_orderkey") % 3 == 0, F.col("o_orderpriority")  # non-numeric
-    ).otherwise(F.format_string("%.2f", F.col("o_totalprice")))
-    return o.select(
+    raw = o.selectExpr(
         "o_orderkey",
-        raw.alias("raw_value"),
-        coerce_numeric(raw).alias("coerced"),
+        "CASE WHEN o_orderkey % 3 = 0 THEN o_orderpriority "  # non-numeric
+        "ELSE format_string('%.2f', o_totalprice) END AS raw_value",
     )
+    return raw.select("*", coerce_numeric("raw_value").alias("coerced"))
 
 
 T1_ORACLE = """
@@ -219,10 +239,7 @@ FROM orders
 def t2_timestamp_iso(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: normalize order dates to the reference's ISO-string form."""
     o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.date_format("o_orderdate", ISO_FMT).alias("timestamp_iso"),
-    )
+    return o.select("o_orderkey", iso_timestamp("o_orderdate").alias("timestamp_iso"))
 
 
 T2_ORACLE = """
@@ -235,14 +252,13 @@ def t3_custom_ts_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3: format order dates into the RSS feed format, parse back
     (UTC), with an injected unparseable value → NULL (F4 tolerance)."""
     o = _t(spark, sf_dir, "orders")
-    rss_str = F.when(F.col("o_orderkey") % 7 == 0, F.lit("not a date")).otherwise(
-        F.date_format("o_orderdate", RSS_FMT)
-    )
-    parsed = parse_rss_timestamp(rss_str)
-    return o.select(
+    raw = o.selectExpr(
         "o_orderkey",
-        rss_str.alias("rss_string"),
-        F.date_format(parsed, ISO_FMT).alias("parsed_iso"),
+        "CASE WHEN o_orderkey % 7 = 0 THEN 'not a date' "
+        f"ELSE date_format(o_orderdate, '{RSS_FMT}') END AS rss_string",
+    )
+    return raw.select(
+        "*", F.date_format(parse_rss_timestamp("rss_string"), ISO_FMT).alias("parsed_iso")
     )
 
 
@@ -261,23 +277,18 @@ FROM orders
 def t4_percent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 on registry-style strings built from customer balances."""
     c = _t(spark, sf_dir, "customer")
-    k = F.col("c_custkey") % 4
     # integer-derived strings: printf('%.Nf') rounds HALF_UP in the JVM
     # but half-even in C/DuckDB, so float-formatted fixtures would
     # diverge at the ulp — integers are exact in both engines.
-    pct_int = (F.col("c_custkey") % 200).cast("string")
-    frac_int = (F.col("c_custkey") % 1000).cast("string")
-    raw = (
-        F.when(k == 0, F.concat(pct_int, F.lit(".5%")))
-        .when(k == 1, F.lit("-"))
-        .when(k == 2, F.concat(F.lit("0."), frac_int))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    return c.select(
+    raw = c.selectExpr(
         "c_custkey",
-        raw.alias("raw_pct"),
-        F.round(pct_to_ratio(raw), 6).alias("ratio"),
+        "CASE c_custkey % 4 "
+        "WHEN 0 THEN concat(CAST(c_custkey % 200 AS string), '.5%') "
+        "WHEN 1 THEN '-' "
+        "WHEN 2 THEN concat('0.', CAST(c_custkey % 1000 AS string)) "
+        "ELSE CAST(NULL AS string) END AS raw_pct",
     )
+    return raw.select("*", F.round(pct_to_ratio("raw_pct"), 6).alias("ratio"))
 
 
 T4_ORACLE = """
@@ -302,24 +313,23 @@ FROM src
 def t5_sentinel_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5: epoch close-time / '0' tp-sl / empty-string sentinels → NULL."""
     l = _t(spark, sf_dir, "lineitem")
-    k = F.col("l_linenumber")
-    close_raw = F.when((k % 3) == 0, F.lit(EPOCH_SENTINEL)).otherwise(
-        F.date_format("l_shipdate", RSS_FMT)
-    )
-    tp_raw = F.when((k % 2) == 0, F.lit("0")).otherwise(
-        F.format_string("%.2f", F.col("l_extendedprice"))
-    )
-    lots_raw = F.when((k % 5) == 0, F.lit("")).otherwise(
-        F.format_string("%.1f", F.col("l_quantity"))
-    )
-    return l.select(
+    raw = l.selectExpr(
         "l_orderkey",
         "l_linenumber",
-        F.date_format(
-            parse_rss_timestamp(null_if_sentinel(close_raw, EPOCH_SENTINEL)), ISO_FMT
-        ).alias("close_time"),
-        null_if_sentinel(tp_raw, "0").try_cast("double").alias("tp"),
-        null_if_sentinel(lots_raw).try_cast("double").alias("lots"),
+        f"CASE WHEN l_linenumber % 3 = 0 THEN '{EPOCH_SENTINEL}' "
+        f"ELSE date_format(l_shipdate, '{RSS_FMT}') END AS close_raw",
+        "CASE WHEN l_linenumber % 2 = 0 THEN '0' "
+        "ELSE format_string('%.2f', l_extendedprice) END AS tp_raw",
+        "CASE WHEN l_linenumber % 5 = 0 THEN '' "
+        "ELSE format_string('%.1f', l_quantity) END AS lots_raw",
+    )
+    close = parse_rss_timestamp(null_if_sentinel_sql("close_raw", EPOCH_SENTINEL))
+    return raw.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.date_format(close, ISO_FMT).alias("close_time"),
+        null_if_sentinel("tp_raw", "0").try_cast("double").alias("tp"),
+        null_if_sentinel("lots_raw").try_cast("double").alias("lots"),
     )
 
 
@@ -373,7 +383,7 @@ def t7_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     doubled = o.unionAll(o)
     hashed = doubled.withColumn(
-        "row_hash", row_hash("account_id", F.col("ticket").cast("string"), "timestamp")
+        "row_hash", row_hash("account_id", "CAST(ticket AS string)", "`timestamp`")
     )
     return dedup_by_key(hashed, ["row_hash"], order_by=[F.asc("ticket")])
 
@@ -498,11 +508,11 @@ def csv_normalize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = (
         df.withColumn("account_id", F.concat(F.lit("acct_"), F.col("o_custkey") % 10))
         .withColumn("timestamp", F.date_format("timestamp", ISO_FMT))
-        .withColumn("pnl", coerce_numeric(F.format_string("%.2f", F.col("pnl_raw"))))
+        .withColumn("pnl", coerce_numeric("format_string('%.2f', pnl_raw)"))
     )
     df = with_null_defaults(df, GPT_PLACEHOLDER_COLS)
     df = df.withColumn(
-        "row_hash", row_hash("account_id", F.col("ticket").cast("string"), "timestamp")
+        "row_hash", row_hash("account_id", "CAST(ticket AS string)", "`timestamp`")
     )
     df = dedup_by_key(df, ["row_hash"], order_by=[F.asc("ticket")])
     return select_sink_schema(

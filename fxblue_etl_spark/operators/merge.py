@@ -17,19 +17,21 @@ here explicitly:
   updated, ``strategy_inferred``/``gpt_comments`` preserved.
 
 Implementation is a single full-outer shuffle join on the key — the
-natural Spark physical plan for CDC-style merge. Scale notes: both
-sides hash-partition on the key (one shuffle each, none if the base
-table is bucketed by key on disk); a small incoming batch against a
-huge base flips to broadcast under AQE automatically. Multi-run
-batches are first collapsed by last-write-wins (D3) so the join is
-1:1, keeping the merge skew-free.
+natural Spark physical plan for CDC-style merge. Scale notes: the join
+is a ``SortMergeJoin`` with both sides hash-partitioned on the key
+(one shuffle each, none if the base table is bucketed by key on
+disk). A small incoming batch does not change that: a full outer join
+must emit the unmatched rows of both sides, so Spark never plans it as
+a ``BroadcastHashJoin``, with or without AQE. Multi-run batches are
+first collapsed by last-write-wins (D3) so the join is 1:1, keeping
+the merge skew-free.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,6 +51,11 @@ def resolve_last_write(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def merge_upsert(
@@ -74,43 +81,26 @@ def merge_upsert(
     Both inputs must share the same schema (sink-schema projection P4
     runs upstream). Returns a DataFrame with that schema.
     """
-    if old.columns != new.columns:
-        raise ValueError(
-            f"schema mismatch: old={old.columns} new={new.columns}"
-        )
+    cols = old.columns
+    if cols != new.columns:
+        raise ValueError(f"schema mismatch: old={cols} new={new.columns}")
     if order_col is not None:
         new = resolve_last_write(new, key, order_col)
-    keyset = set(key)
-    o = old.alias("o")
-    n = new.alias("n")
-    cond = None
-    for k in key:
-        c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = o.join(n, cond, "full_outer")
+    cond = " AND ".join(f"o.{_q(k)} <=> n.{_q(k)}" for k in key)
+    joined = old.alias("o").join(new.alias("n"), F.expr(cond), "full_outer")
 
-    matched_new = F.col(f"n.{key[0]}").isNotNull()
-    matched_old = F.col(f"o.{key[0]}").isNotNull()
+    def pick(col: str) -> str:
+        c = _q(col)
+        if col in key:
+            return f"coalesce(n.{c}, o.{c}) AS {c}"
+        # a preserved column keeps old's value on a conflict even when
+        # NULL (the SQL UPDATE simply never touches it) — so this is a
+        # conditional, not a coalesce
+        side, other = ("o", "n") if col in preserve_cols else ("n", "o")
+        return f"CASE WHEN {side}.{_q(key[0])} IS NOT NULL THEN {side}.{c} ELSE {other}.{c} END AS {c}"
 
-    def pick(col: str) -> Column:
-        if col in keyset:
-            return F.coalesce(F.col(f"n.{col}"), F.col(f"o.{col}")).alias(col)
-        if col in preserve_cols:
-            # old's value survives a conflict even when NULL (the SQL
-            # UPDATE simply never touches the column) — so this is a
-            # conditional, not a coalesce.
-            return (
-                F.when(matched_old, F.col(f"o.{col}"))
-                .otherwise(F.col(f"n.{col}"))
-                .alias(col)
-            )
-        return (
-            F.when(matched_new, F.col(f"n.{col}"))
-            .otherwise(F.col(f"o.{col}"))
-            .alias(col)
-        )
-
-    return joined.select(*[pick(c) for c in old.columns])
+    # SQL text: one py4j call for the whole projection, not several per column
+    return joined.selectExpr(*[pick(c) for c in cols])
 
 
 # ── oracle-checked demonstrations over the fixtures ──────────────────────

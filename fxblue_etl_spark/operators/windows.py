@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -42,20 +42,22 @@ def locf(
     df: DataFrame,
     cols: Sequence[str],
     partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
+    order_by: Sequence[str],
 ) -> DataFrame:
-    """W1: forward-fill each column from the last non-NULL value seen
-    within the partition, in order. NULL until the first snapshot —
-    matching the reference's `bal = eq = … = None` initialization."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    """W1 (``locf_sql``) over each of ``cols``; ``order_by`` items are
+    SQL sort text (``"entry_idx"``, ``"ts DESC"``)."""
+    over = (", ".join(f"`{p}`" for p in partition_by), ", ".join(order_by))
+    return df.withColumns({c: F.expr(locf_sql(f"`{c}`", *over)) for c in cols})
+
+
+def locf_sql(expr: str, partition_by: str, order_by: str) -> str:
+    """W1: forward-fill ``expr`` from the last non-NULL value seen within
+    the partition, in order. NULL until the first snapshot — matching
+    the reference's `bal = eq = … = None` initialization."""
+    return (
+        f"last({expr}, true) OVER (PARTITION BY {partition_by} ORDER BY {order_by} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out
 
 
 # ── oracle-checked demonstration ─────────────────────────────────────────
@@ -73,7 +75,7 @@ def w1_locf_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"),
         snap.alias("account_balance"),
     )
-    filled = locf(feed, ["account_balance"], ["account_id"], [F.asc("entry_idx")])
+    filled = locf(feed, ["account_balance"], ["account_id"], ["entry_idx ASC"])
     return filled.filter(F.col("event_type") != "signup").select(
         "account_id", "entry_idx", "account_balance"
     )

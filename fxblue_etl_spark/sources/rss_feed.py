@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..io import table
 from ..session import tune
 from ..operators import cleaning as C
-from ..operators.windows import locf
+from ..operators.windows import locf_sql
 
 #: rss_trades sink columns (`RSS PARSER/gcp_rss.py:116-128`)
 RSS_TRADES_COLS = [
@@ -51,6 +51,15 @@ RSS_TRADES_COLS = [
     "gpt_recommendation_content", "gpt_recommendation_accuracy",
     "gpt_suggestion_score", "trade_deviation_reasoning",
 ]
+
+#: enrichment columns of the rss_trades sink, NULL on every insert
+_GPT_RSS_COLS = (
+    "gpt_recommendation_issued",
+    "gpt_recommendation_content",
+    "gpt_recommendation_accuracy",
+    "gpt_suggestion_score",
+    "trade_deviation_reasoning",
+)
 
 #: feed-entry columns as the fetch yields them (FIXTURES.md A3)
 ENTRY_COLS = (
@@ -111,13 +120,11 @@ def clean_registry(accounts_raw: DataFrame) -> DataFrame:
     """S4/T4: registry metrics → ratios (`gcp_rss.py:50-63`). Input
     columns: account_id, account_url, rss_url, trade_win,
     total_return, trades_per_day (strings)."""
-    return accounts_raw.select(
+    return accounts_raw.selectExpr(
         "account_id",
         "account_url",
         "rss_url",
-        C.pct_to_ratio("trade_win").alias("trade_win"),
-        C.pct_to_ratio("total_return").alias("total_return"),
-        C.pct_to_ratio("trades_per_day").alias("trades_per_day"),
+        *[f"{C.pct_to_ratio_sql(c)} AS {c}" for c in ("trade_win", "total_return", "trades_per_day")],
     )
 
 
@@ -141,53 +148,43 @@ def rss_trades(entries: DataFrame, accounts_raw: DataFrame) -> DataFrame:
         "account_closedprofit": "account_closed_profit",
         "account_freemargin": "account_free_margin",
     }
-    e = entries
-    for src, dst in snap_map.items():
-        e = e.withColumn(dst, F.col(src).try_cast("double"))
-    filled = locf(
-        e, list(snap_map.values()), ["account_id"], [F.asc("entry_idx")]
+    # one projection for the casts and the LOCF windows (W1), one for the
+    # position casts, one for the sink columns; all SQL text, see
+    # cleaning's SQL-text rules for why
+    filled = entries.withColumns(
+        {
+            dst: F.expr(locf_sql(C.coerce_numeric_sql(src), "account_id", "entry_idx"))
+            for src, dst in snap_map.items()
+        }
     )
-    pos = filled.filter(F.col("position_ticket").isNotNull())  # F2
+    pos = filled.where("position_ticket IS NOT NULL")  # F2
 
-    num = lambda c: C.null_if_sentinel(c).try_cast("double")  # ''→NULL→float
-    trades = pos.select(
+    num = lambda c: C.coerce_numeric_sql(C.null_if_sentinel_sql(c))  # ''→NULL→float
+    iso = lambda t: f'date_format({C.parse_rss_timestamp_sql(t)}, "{C.ISO_FMT}")'
+    trades = pos.selectExpr(
         "account_id",
-        *[F.col(c) for c in snap_map.values()],
-        F.col("position_ticket").try_cast("long").alias("ticket"),
-        F.col("position_action").alias("action"),
-        num("position_lots").alias("lots"),
-        F.col("position_symbol").alias("symbol"),
-        num("position_openprice").alias("open_price"),
-        num("position_closeprice").alias("close_price"),
-        F.date_format(
-            C.parse_rss_timestamp("position_opentime"), C.ISO_FMT
-        ).alias("open_time"),
-        F.date_format(
-            C.parse_rss_timestamp(
-                C.null_if_sentinel("position_closetime", C.EPOCH_SENTINEL)
-            ),
-            C.ISO_FMT,
-        ).alias("close_time"),
-        num("position_profit").alias("profit"),
-        num("position_swap").alias("swap"),
-        num("position_commission").alias("commission"),
-        num("position_totalprofit").alias("total_profit"),
-        C.null_if_sentinel("position_tp", "0").try_cast("double").alias("take_profit"),
-        C.null_if_sentinel("position_sl", "0").try_cast("double").alias("stop_loss"),
-        C.null_if_sentinel("position_magicnumber").try_cast("long").alias("magic_number"),
+        *snap_map.values(),
+        "try_cast(position_ticket AS long) AS ticket",
+        "position_action AS action",
+        f"{num('position_lots')} AS lots",
+        "position_symbol AS symbol",
+        f"{num('position_openprice')} AS open_price",
+        f"{num('position_closeprice')} AS close_price",
+        f"{iso('position_opentime')} AS open_time",
+        f"{iso(C.null_if_sentinel_sql('position_closetime', C.EPOCH_SENTINEL))} AS close_time",
+        f"{num('position_profit')} AS profit",
+        f"{num('position_swap')} AS swap",
+        f"{num('position_commission')} AS commission",
+        f"{num('position_totalprofit')} AS total_profit",
+        f"{C.coerce_numeric_sql(C.null_if_sentinel_sql('position_tp', '0'))} AS take_profit",
+        f"{C.coerce_numeric_sql(C.null_if_sentinel_sql('position_sl', '0'))} AS stop_loss",
+        f"try_cast({C.null_if_sentinel_sql('position_magicnumber')} AS long) AS magic_number",
     )
     registry = clean_registry(accounts_raw)
     joined = trades.join(F.broadcast(registry), "account_id", "left")  # J1
-    out = joined
-    for c in (
-        "gpt_recommendation_issued",
-        "gpt_recommendation_content",
-        "gpt_recommendation_accuracy",
-        "gpt_suggestion_score",
-        "trade_deviation_reasoning",
-    ):
-        out = out.withColumn(c, F.lit(None).cast("string"))
-    return out.select(*RSS_TRADES_COLS)
+    return joined.selectExpr(
+        *[f"CAST(NULL AS string) AS {c}" if c in _GPT_RSS_COLS else c for c in RSS_TRADES_COLS]
+    )
 
 
 # ── oracle-checked demonstration: deterministic feed from events ─────────

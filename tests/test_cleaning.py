@@ -150,3 +150,10 @@ def test_aes_oracle_pads_over_utf8_bytes(spark, tmp_path):
     # but fr: 23 chars -> char-pad 32; 26 bytes -> byte-pad 32 (equal); zh: 35 chars
     # -> char-pad 48; 105 bytes -> byte-pad 112.  The zh row is the discriminating one.
     assert by_lang["zh"][3] == 112
+
+
+def test_iso_timestamp_reference_cases(spark):
+    # gcp_csv.py:102-105: parse, emit '%Y-%m-%dT%H:%M:%S'; unparseable → None
+    df = spark.createDataFrame([("2019-03-21 09:00:11",), ("bad-time",), (None,)], ["v"])
+    out = [r.r for r in df.select(C.iso_timestamp("v").alias("r")).collect()]
+    assert out == ["2019-03-21T09:00:11", None, None]

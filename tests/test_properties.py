@@ -75,7 +75,7 @@ def test_rss_timestamp_roundtrip(spark, dts):
     df = spark.createDataFrame([(d,) for d in dts], ["ts"])
     out = df.select(
         "ts",
-        parse_rss_timestamp(F.date_format("ts", RSS_FMT)).alias("rt"),
+        parse_rss_timestamp(f"date_format(ts, '{RSS_FMT}')").alias("rt"),
     ).collect()
     for r in out:
         assert r.rt == r.ts, (r.ts, r.rt)

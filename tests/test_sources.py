@@ -1,7 +1,13 @@
-"""Source tests: CSV title-row skip + F1 gate, RSS fetch interface."""
+"""Source tests: CSV title-row skip + F1 gate, parse parity with pandas,
+RSS fetch interface, and the fx batch's plan shape."""
 
 from __future__ import annotations
 
+import io
+import os
+import re
+
+import pandas as pd
 import pytest
 
 from fxblue_etl_spark.sources import fxblue_csv, rss_feed
@@ -34,6 +40,154 @@ def test_csv_ingest_skips_title_and_bad_file(spark, csv_dir):
     assert rows[8].exit_price is None  # 'oops' coerced → NULL (T1)
     assert rows[8].timestamp is None  # 'bad-time' → NULL (F4)
     assert rows[7].gpt_inferred_strategy is None  # P3 placeholder
+
+
+# ── Catalyst parse vs the pandas reference ─────────────────────────────
+
+
+def pandas_parse_files(batches):
+    """The reference parse (`CSV PARSER/gcp_csv.py:76`) over batches of
+    ``(path, content)`` rows: per file, pandas with the title row
+    skipped, the filename as account_id, F1 and F5 as skip-the-file."""
+    from fxblue_etl_spark.sources.fxblue_csv import _FIELD_OF, _RAW_SCHEMA, REQUIRED_RAW
+
+    for pdf in batches:
+        for path, content in zip(pdf["path"], pdf["content"]):
+            account_id = os.path.basename(path).split(".csv")[0]
+            try:
+                raw = pd.read_csv(io.StringIO(content), skiprows=1, dtype=str)
+            except Exception:
+                continue  # F5: log-and-skip file (gcp_csv.py:197-198)
+            if not all(c in raw.columns for c in REQUIRED_RAW):
+                continue  # F1: whole file skipped (gcp_csv.py:117-119)
+            out = pd.DataFrame({"account_id": account_id}, index=raw.index)
+            for raw_name, field in _FIELD_OF.items():
+                out[field] = raw[raw_name] if raw_name in raw.columns else None
+            yield out[[f.name for f in _RAW_SCHEMA.fields]]
+
+
+_H = "Ticket,Symbol,Buy/sell,Open price,Close price,Open time,Lots,Profit"
+_R = "7,EURUSD,Buy,1.10,1.20,2019-03-21 09:00:11,0.5,10.5"
+
+#: one FXBlue export per case, title line first
+PARITY_CASES = {
+    "plain": f"FXBlue export\n{_H}\n{_R}\n8,GBPUSD,Sell,1.3,oops,bad-time,1,-2\n",
+    "crlf": f"FXBlue export\r\n{_H}\r\n{_R}\r\n",
+    "lone_cr": f"FXBlue export\r{_H}\r{_R}\r",
+    "blank_lines": f"FXBlue export\n\n \t\n{_H}\n\n{_R}\n   \n{_R}\n\n",
+    "reordered_extra": (
+        "FXBlue export\nComment,Profit,Lots,Open time,Close price,Open price,Buy/sell,Symbol,Ticket,Swap\n"
+        "x,1.5,2,2019-03-21 09:00:11,1.2,1.1,Buy,EURUSD,9,0.1\n"
+    ),
+    "quoted": f'FXBlue export\n{_H},Net profit\n7,"EUR,USD","Bu""y",1,2,"3",4,"-1,5","a""b"\n',
+    # text after a closing quote is plain: its "" stays two quotes
+    "quote_then_text": f'FXBlue export\n{_H}\n7,"EUR"USD""x,"B""u"y""",1,2,3,4,5\n',
+    # a ~20k-character quoted field in an unknown column
+    "long_quoted": f'FXBlue export\n{_H},Comment\n{_R},"{"ab,"" " * 4000}"\n{_R},x\n',
+    "na_tokens": f'FXBlue export\n{_H},Net profit\nNA,"NA",n/a,,null,NaN,None,#N/A,""\n,,,,,,,,\n',
+    "narrow_row": f"FXBlue export\n{_H}\n7,EURUSD\n{_R}\n",
+    "wide_row": f"FXBlue export\n{_H}\n{_R}\n{_R},9\n",
+    "gated": "FXBlue export\nTicket,Symbol\n1,EURUSD\n",
+    "title_only": "FXBlue export\n",
+    "header_only": f"FXBlue export\n{_H}\n",
+    "duplicate_header": f"FXBlue export\n{_H},Symbol\n{_R},GBPUSD\n",
+    "padded_fields": f"FXBlue export\n{_H}\n 7 , EURUSD ,Buy,1.1,1.2,x,0.5, NA \n",
+    "title_quoted_comma": f'"FXBlue, export",2019\n{_H}\n{_R}\n',
+}
+
+#: files pandas parses but the Catalyst parse skips as F5 (module docstring)
+DIVERGENT_CASES = {
+    "quoted_line_break": f'FXBlue export\n{_H}\n7,"EUR\nUSD",Buy,1,2,3,4,5\n',
+    "implicit_index": f"FXBlue export\n{_H}\n{_R},\n{_R},\n",
+}
+
+
+def _rows(pdfs) -> list[tuple]:
+    return [
+        tuple(None if pd.isna(v) else v for v in row)
+        for pdf in pdfs
+        for row in pdf.itertuples(index=False)
+    ]
+
+
+@pytest.fixture(scope="module")
+def parsed(spark):
+    """Every case parsed in one Spark job, grouped by file."""
+    cases = {**PARITY_CASES, **DIVERGENT_CASES}
+    files = spark.createDataFrame(
+        [(f"file:/exports/{k}.csv", v) for k, v in cases.items()], "path string, content string"
+    )
+    out: dict[str, list[tuple]] = {k: [] for k in cases}
+    for r in fxblue_csv.parse_fxblue_files(files).collect():
+        out[r.account_id].append(tuple(r))
+    return out
+
+
+def _reference(name: str, content: str) -> list[tuple]:
+    batch = pd.DataFrame({"path": [f"file:/exports/{name}.csv"], "content": [content]})
+    return _rows(pandas_parse_files([batch]))
+
+
+@pytest.mark.parametrize("name", sorted(PARITY_CASES))
+def test_parse_matches_pandas(parsed, name):
+    assert parsed[name] == _reference(name, PARITY_CASES[name])
+
+
+@pytest.mark.parametrize("name", sorted(DIVERGENT_CASES))
+def test_parse_divergence_skips_file(parsed, name):
+    """pandas reads these files; the Catalyst parse skips them (F5)."""
+    assert _reference(name, DIVERGENT_CASES[name])
+    assert parsed[name] == []
+
+
+# ── plan shape of one fx batch ──────────────────────────────────────────
+
+_PYTHON_NODES = re.compile(r"MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython|PythonUDF")
+
+
+def _python_nodes(df) -> set[str]:
+    """Python-worker nodes in ``df``'s analyzed plan (every node and
+    expression class, from its JSON form) and in its executed plan
+    (the final adaptive plan after an action)."""
+    qe = df._jdf.queryExecution()
+    found = set(_PYTHON_NODES.findall(qe.analyzed().toJSON()))
+    df.collect()
+    return found | set(_PYTHON_NODES.findall(qe.executedPlan().toString()))
+
+
+def test_fx_batch_runs_no_python_worker(spark, csv_dir, tmp_path):
+    """One fx batch — CSV ingest → K1 merge, feed entries → rss_trades →
+    K2 merge — over file inputs, as the write path reads them."""
+    from fxblue_etl_spark.operators import cleaning, merge
+
+    entries = pd.DataFrame(
+        [["a1", 0, "1000", "900", "10", "20", "30"] + [None] * 15,
+         ["a1", 1] + [None] * 5 + ["2", "Sell", "2", "GBPUSD", "1.3", "", "Thu 21 Mar 2019 10:00:11",
+                                   "Fri 22 Mar 2019 10:00:11", "-3", "1", "2", "-2", "1.5", "0", "77"]],
+        columns=[c.split()[0] for c in rss_feed.ENTRY_COLS.split(", ")],
+    )
+    entries.to_parquet(tmp_path / "entries.parquet")
+    (tmp_path / "registry.csv").write_text(
+        "account_id,account_url,rss_url,trade_win,total_return,trades_per_day\n"
+        "a1,http://u,http://r,60%,-,2\n"
+    )
+    accounts = spark.read.csv(str(tmp_path / "registry.csv"), header=True, schema=(
+        "account_id string, account_url string, rss_url string, "
+        "trade_win string, total_return string, trades_per_day string"))
+
+    new = fxblue_csv.ingest_fxblue_dir(spark, csv_dir + "/*.csv")
+    rss = rss_feed.rss_trades(spark.read.parquet(str(tmp_path / "entries.parquet")), accounts)
+    new.write.parquet(str(tmp_path / "hist"))
+    rss.write.parquet(str(tmp_path / "rss"))
+    k1 = merge.merge_upsert(
+        spark.read.parquet(str(tmp_path / "hist")), new, ["ticket"],
+        preserve_cols=list(cleaning.GPT_PLACEHOLDER_COLS),
+    )
+    k2 = merge.merge_upsert(spark.read.parquet(str(tmp_path / "rss")), rss, ["ticket"])
+    for df in (new, rss, k1, k2):
+        assert _python_nodes(df) == set()
+    # the guard sees a Python step when there is one
+    assert _python_nodes(new.mapInPandas(lambda it: it, new.schema)) >= {"MapInPandas"}
 
 
 def test_rss_fetch_requires_feedparser_or_injection(spark):

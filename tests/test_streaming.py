@@ -88,10 +88,9 @@ def test_streaming_csv_ingest_end_to_end(spark, tmp_path):
     identifies files by path, so an overwritten path is NOT re-read —
     each export drop must land as a new path (here: per-drop subdir),
     which is how object-store drops behave anyway."""
-    import pandas as pd
     from fxblue_etl_spark.operators.cleaning import GPT_PLACEHOLDER_COLS
     from fxblue_etl_spark.operators.merge import merge_upsert
-    from fxblue_etl_spark.sources.fxblue_csv import normalize_trades, _RAW_SCHEMA
+    from fxblue_etl_spark.sources.fxblue_csv import normalize_trades, parse_fxblue_files
 
     csv_dir = tmp_path / "in"
     csv_dir.mkdir()
@@ -123,28 +122,12 @@ def test_streaming_csv_ingest_end_to_end(spark, tmp_path):
     )
 
     def ingest_batch(batch_df, epoch_id):
-        import io as _io
         from pyspark.sql import functions as F
 
         files = batch_df.select(
             F.input_file_name().alias("path"), F.col("value").alias("content")
         )
-
-        def parse(batches):
-            import os as _os
-
-            for pdf in batches:
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    account = _os.path.basename(path).split(".csv")[0]
-                    raw = pd.read_csv(_io.StringIO(content), skiprows=1, dtype=str)
-                    out = pd.DataFrame({"account_id": account}, index=raw.index)
-                    from fxblue_etl_spark.sources.fxblue_csv import _FIELD_OF
-
-                    for raw_name, field in _FIELD_OF.items():
-                        out[field] = raw[raw_name] if raw_name in raw.columns else None
-                    yield out[[f.name for f in _RAW_SCHEMA.fields]]
-
-        new = normalize_trades(files.mapInPandas(parse, _RAW_SCHEMA))
+        new = normalize_trades(parse_fxblue_files(files))
         s = batch_df.sparkSession
         try:
             old = s.read.parquet(target)
