@@ -5,8 +5,8 @@ Prints ONE JSON line (COMPACT — guaranteed to fit the driver's
 2000-char stdout tail capture; see ``compact_stdout_record``):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "frozen15_total": ..., "frozen27_total": ..., "load_tainted_n": N}
-The full per-query detail (loads, redraws, prev_draws, lineage A/B)
-is written to $SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL_r{NN}_c{cpus}.json).
+The full per-query detail (loads, redraws, prev_draws) is written
+to $SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL_r{NN}_c{cpus}.json).
 """
 
 from __future__ import annotations
@@ -574,26 +574,6 @@ def main() -> None:
     redraws = _redraw_tainted_pass(rest, timings, query_loads, _measure)
     load_tainted = sorted(n for n in names if query_loads[n] >= TAINT_LOAD)
 
-    # Arrow/HOF lineage sidecar (round-7 verdict item 6): the Arrow
-    # signature stage is the default lineage for 11 certified
-    # queries; one forced-HOF draw of the frozen representative per
-    # round makes a numpy/pandas upgrade that silently degrades the
-    # Arrow path visible in the round-over-round record.
-    lineage_ab = None
-    if "minhash_lsh_pairs" in timings:
-        from fxblue_etl_spark.operators import dedup as _dedup
-
-        try:
-            _dedup.USE_ARROW_SIGNATURES = False
-            hof_sec, hof_load = _measure("minhash_lsh_pairs")
-        finally:
-            _dedup.USE_ARROW_SIGNATURES = True
-        lineage_ab = {
-            "query": "minhash_lsh_pairs",
-            "arrow_sec": timings["minhash_lsh_pairs"],
-            "hof_sec": hof_sec,
-            "hof_load": hof_load,
-        }
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
     total = round(sum(timings.values()), 3)
     frozen_total = round(
@@ -650,8 +630,6 @@ def main() -> None:
                 # first-draw vs re-draw record for every entry that
                 # got a second chance (empty when the run was clean)
                 "redraws": redraws,
-                # forced-HOF sidecar for the Arrow-default lineage
-                "lineage_ab": lineage_ab,
             }
     )
     print(_dumps(compact_stdout_record(record)))

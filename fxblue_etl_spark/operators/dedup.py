@@ -43,9 +43,13 @@ MERSENNE_31 = 2_147_483_647
 #: textbook pairwise-independent minhash family. NOT plain double
 #: hashing ``h1 + p*h2`` — that family's permutations share argmins
 #: (any common low-h shingle collides every band), which blew the
-#: LSH candidate set up ~50× on the sf0.1 fixture.
-PERM_A = [(2654435761 * (p + 1)) % 2**30 | 1 for p in range(N_PERM)]
-PERM_B = [(2246822519 * (p + 1)) % 2**30 for p in range(N_PERM)]
+#: LSH candidate set up ~50× on the sf0.1 fixture.  The 24-entry
+#: family is the S-curve planner's budget; the 12-permutation
+#: signature uses its first N_PERM entries.
+PERM_A24 = [(2654435761 * (p + 1)) % 2**30 | 1 for p in range(24)]
+PERM_B24 = [(2246822519 * (p + 1)) % 2**30 for p in range(24)]
+PERM_A = PERM_A24[:N_PERM]
+PERM_B = PERM_B24[:N_PERM]
 
 
 def _norm_text(c: Column | str) -> Column:
@@ -87,92 +91,101 @@ GROUP BY 1
 """
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id → (shingles, minhash signature array of N_PERM BIGINT mins).
-
-    ONE md5 per shingle, reduced to a 32-bit int h; the N_PERM
-    permutation hashes are the pairwise-independent universal family
-    ``(A[p]*h + B[p]) % MERSENNE_31`` — ~N_PERM× cheaper than hashing
-    each shingle N_PERM times, reproducible in any engine with hex +
-    BIGINT arithmetic (A[p] < 2^30, h < 2^32 → products < 2^62, far
-    from BIGINT overflow in either engine).
-
-    Both arrays are materialized behind Generate nodes: explode of a
-    1-element array makes each an *attribute*, so downstream
-    references use the computed value instead of CollapseProject
-    re-inlining the whole tokenize+shingle tree per reference
-    (measured 61s → ~2s on sf0.01).
-
-    The whole signature is ONE fold over the per-shingle hashes: acc
-    is the running element-wise minimum of the permutation-hash
-    vector. (A single combined fold also avoids a real PySpark 4.1.2
-    bug where multiple parallel *string* folds in one projection
-    corrupt minima — the fold here is numeric, but the shape is kept.)
-    """
-    sh_df = docs.select(
-        "doc_id", F.explode(F.array(word_shingles(text_col))).alias("shingles")
-    )
-    hashes = F.transform(
-        "shingles",
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-    hs_df = sh_df.select(
-        "doc_id", "shingles", F.explode(F.array(hashes)).alias("hs")
-    )
-    sig = F.aggregate(
-        "hs",
-        F.array_repeat(F.lit(2**62).cast("long"), N_PERM),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.lit(PERM_A[p]) * h + F.lit(PERM_B[p])) % F.lit(MERSENNE_31)
-                    for p in range(N_PERM)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-    return hs_df.select("doc_id", "shingles", F.explode(F.array(sig)).alias("sig"))
-
-
-def minhash_band_rows_hof(docs: DataFrame) -> DataFrame:
-    """The JVM higher-order-function lineage of the banded-LSH index
-    rows — the original implementation, kept as the cross-checked
-    sibling of the Arrow path (``tests/test_dedup.py`` pins the two
-    bit-identical on the fixture AND on an adversarial literal
-    frame).  Everything here is row-local expression work."""
-    d = docs.filter(F.size(ws_tokens(_norm_text("text"))) >= 3)
-    sig_df = minhash_signatures(d)
-    return sig_df.select(
-        "doc_id",
-        "shingles",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * BAND_ROWS + r + 1)
-                                    for r in range(BAND_ROWS)
-                                ],
-                            )
-                        ).alias("band_sig"),
-                    )
-                    for b in range(N_PERM // BAND_ROWS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "shingles", "band.band_idx", "band.band_sig")
-
-
 #: Java-regex ``\s`` is the ASCII class [ \t\n\x0B\f\r]; the Arrow
-#: path must match Spark's split/regexp_replace exactly (Python's
+#: kernels must match Spark's split/regexp_replace exactly (Python's
 #: ``\s`` is Unicode-aware and would tokenize U+00A0 etc. differently)
 _JAVA_WS_RE = "[ \t\n\x0b\f\r]+"
+
+
+def _doc_rows(batches, k: int, columns: tuple[str, ...], rows_of, extra=()):
+    """The shared body of the five text-signature ``mapInPandas``
+    kernels.  Each document of each pandas batch is lowercased and
+    split on Java ``\\s`` runs (the ``ws_tokens(_norm_text(text))``
+    tokenizer); documents with null text or fewer than ``k`` tokens
+    are dropped; the rest get their distinct k-word shingles in
+    first-seen order (the order ``array_distinct`` keeps).
+    ``rows_of(toks, shingles, *extra)`` returns the document's output
+    rows without ``doc_id``; each non-empty batch yields one frame of
+    ``doc_id`` + ``columns``.  Every kernel is bit-identical to its
+    JVM reference at the end of this module
+    (tests/test_arrow_signatures.py).
+
+    LOCALE CONTRACT: bit-identity of the lowercasing assumes the JVM
+    default locale is ROOT-like for case mapping — Spark's ``lower()``
+    delegates to ``UTF8String.toLowerCase``, which on a
+    Turkish-locale JVM maps I→ı (dotless) while Python's
+    locale-independent ``str.lower()`` yields i.  Deployments on
+    non-ROOT-default JVMs MUST pin ``-Duser.language=``; the parity
+    tests assert the session JVM is not Turkish/Azerbaijani-locale,
+    so the contract is checked, not assumed, on the test host."""
+    import re as _re
+
+    import pandas as _pd
+
+    ws = _re.compile(_JAVA_WS_RE)
+    for pdf in batches:
+        out = []
+        for doc_id, text, *rest in zip(
+            pdf["doc_id"], pdf["text"], *(pdf[c] for c in extra)
+        ):
+            if not isinstance(text, str):
+                continue  # null text: None normally, but a fully-null
+                # Arrow batch can surface as float NaN in pandas
+            # no .strip(): Python strips Unicode whitespace, Spark's
+            # trim only 0x20 — the empty-token filter already drops
+            # leading/trailing Java-\s runs identically to ws_tokens
+            toks = [t for t in ws.split(text.lower()) if t]
+            if len(toks) < k:
+                continue
+            sh = list(
+                dict.fromkeys(
+                    toks
+                    if k == 1
+                    else map(" ".join, zip(*(toks[j:] for j in range(k))))
+                )
+            )
+            # a null doc_id passes through, as in the JVM references;
+            # a nullable bigint batch surfaces it as float NaN, which
+            # would fail the Arrow bigint cast and kill the task
+            doc_id = None if _pd.isna(doc_id) else int(doc_id)
+            out.extend((doc_id, *row) for row in rows_of(toks, sh, *rest))
+        if out:  # an all-empty pandas frame types list columns as
+            # float64, which Arrow cannot cast to list<string>
+            cols = [list(c) for c in zip(*out)]
+            yield _pd.DataFrame(
+                {
+                    # nullable Int64, not a bare list: a passed-through
+                    # null doc_id must reach Arrow as null, not NaN
+                    "doc_id": _pd.array(cols[0], dtype="Int64"),
+                    **dict(zip(columns, cols[1:])),
+                }
+            )
+
+
+def _minhasher(perm_a: list, perm_b: list):
+    """A function from a shingle list to its universal-hash-minimum
+    signature over the family ``(perm_a, perm_b)``, as in
+    :func:`minhash_signatures`: one md5 per shingle reduced to a
+    32-bit int h, then the element-wise min of
+    ``(A[p]*h + B[p]) % MERSENNE_31`` — hashlib md5 == Spark md5, and
+    the products (< 2^62) stay exact in int64."""
+    import hashlib
+
+    import numpy as _np
+
+    a_vec = _np.array(perm_a, dtype=_np.int64)[None, :]
+    b_vec = _np.array(perm_b, dtype=_np.int64)[None, :]
+
+    def minhash(shingles: list):
+        hs = _np.fromiter(
+            (int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles),
+            dtype=_np.int64,
+            count=len(shingles),
+        )
+        return ((hs[:, None] * a_vec + b_vec) % MERSENNE_31).min(axis=0)
+
+    return minhash
+
 
 _BAND_ROWS_SCHEMA = (
     "doc_id bigint, shingles array<string>, band_idx int, band_sig string"
@@ -182,100 +195,21 @@ _BAND_ROWS_SCHEMA = (
 def _band_rows_arrow_fn(batches):
     """``mapInPandas`` worker for :func:`minhash_band_rows`: the
     normalize → shingle → md5 → universal-hash-min → band-sig chain
-    in numpy/hashlib, bit-identical to the HOF lineage (hashlib md5 ==
-    Spark md5; the universal family is exact int64 arithmetic,
-    products < 2^62).  Defined at module level so cloudpickle ships a
+    in numpy/hashlib.  Defined at module level so cloudpickle ships a
     module reference, not a closure."""
     import hashlib
-    import re as _re
 
-    import numpy as _np
-    import pandas as _pd
+    minhash = _minhasher(PERM_A, PERM_B)
 
-    ws = _re.compile(_JAVA_WS_RE)
-    a_vec = _np.array(PERM_A, dtype=_np.int64)
-    b_vec = _np.array(PERM_B, dtype=_np.int64)
-    n_bands = N_PERM // BAND_ROWS
-    for pdf in batches:
-        out_doc, out_sh, out_bi, out_bs = [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue  # null text: None normally, but a fully-null
-                # Arrow batch can surface as float NaN in pandas
-            # null doc_id parity (round-7 advice): the HOF lineage
-            # passes a null-doc_id row through with its bands intact,
-            # so the Arrow path must too — but a nullable bigint batch
-            # surfaces as float64 in pandas, and appending NaN to the
-            # int output column would fail the Arrow bigint cast and
-            # kill the whole task.  Map NaN → None and emit the
-            # column as nullable Int64 below.
-            doc_id = None if _pd.isna(doc_id) else int(doc_id)
-            # no .strip(): Python strips Unicode whitespace, Spark's
-            # trim only 0x20 — the empty-token filter already drops
-            # leading/trailing Java-\s runs identically to ws_tokens
-            toks = [t for t in ws.split(text.lower()) if t]
-            if len(toks) < 3:
-                continue
-            sh = list(
-                dict.fromkeys(
-                    " ".join(toks[i : i + 3])
-                    for i in range(max(len(toks) - 3, 0) + 1)
-                )
-            )
-            hs = _np.fromiter(
-                (
-                    int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                    for s in sh
-                ),
-                dtype=_np.int64,
-                count=len(sh),
-            )
-            sig = ((hs[:, None] * a_vec[None, :]) + b_vec[None, :]) % MERSENNE_31
-            sig = sig.min(axis=0)
-            for b in range(n_bands):
-                out_doc.append(doc_id)
-                out_sh.append(sh)
-                out_bi.append(b)
-                out_bs.append(
-                    hashlib.md5(
-                        "|".join(
-                            str(sig[b * BAND_ROWS + r])
-                            for r in range(BAND_ROWS)
-                        ).encode()
-                    ).hexdigest()
-                )
-        if out_doc:  # an all-empty pandas frame types shingles as
-            # float64, which Arrow cannot cast to list<string>
-            yield _pd.DataFrame(
-                {
-                    # nullable Int64, not bare list: a passed-through
-                    # null doc_id must reach Arrow as null, not NaN
-                    "doc_id": _pd.array(out_doc, dtype="Int64"),
-                    "shingles": out_sh,
-                    "band_idx": out_bi,
-                    "band_sig": out_bs,
-                }
-            )
+    def bands(_toks, sh):
+        sig = minhash(sh).tolist()
+        for b in range(N_PERM // BAND_ROWS):
+            band = "|".join(map(str, sig[b * BAND_ROWS : (b + 1) * BAND_ROWS]))
+            yield sh, b, hashlib.md5(band.encode()).hexdigest()
 
-
-#: Arrow signature stage (round-7 A/B, sf0.1, fan_out both sides,
-#: full-output checksum forced): HOF warm 1.47-1.62s vs Arrow warm
-#: 0.78-0.94s (~45% faster), outputs bit-identical including shingle
-#: order.  The HOF fold is interpreted expression-tree evaluation per
-#: shingle×permutation; hashlib+numpy batch the same math through C.
-#: Flip to False to restore the pure-JVM lineage.
-#:
-#: LOCALE CONTRACT (round-7 advice): bit-identity of the two
-#: lineages' lowercasing assumes the JVM default locale is ROOT-like
-#: for case mapping — Spark's ``lower()`` delegates to
-#: ``UTF8String.toLowerCase`` which on a Turkish-locale JVM maps
-#: I→ı (dotless) while Python's locale-independent ``str.lower()``
-#: yields i.  Deployments MUST pin ``-Duser.language=`` (or run the
-#: HOF lineage) on non-ROOT-default JVMs; the parity test
-#: (tests/test_arrow_signatures.py) asserts the session JVM is not
-#: Turkish/Azerbaijani-locale so the contract is checked, not
-#: assumed, on the test host.
-USE_ARROW_SIGNATURES = True
+    return _doc_rows(
+        batches, 3, ("shingles", "band_idx", "band_sig"), bands
+    )
 
 
 def minhash_band_rows(docs: DataFrame) -> DataFrame:
@@ -283,20 +217,19 @@ def minhash_band_rows(docs: DataFrame) -> DataFrame:
     ``text``): one ``(doc_id, shingles, band_idx, band_sig)`` row per
     band — the shared primitive behind batch candidate pairing
     (:func:`lsh_candidate_pairs`), the corpus composites, and the
-    streaming near-dup gates.  Row-local either way, so the same code
-    path runs unchanged on a streaming frame.
+    streaming near-dup gates.  Row-local, so the same code path runs
+    unchanged on a streaming frame.
 
-    Two bit-identical lineages: the default is an Arrow-batched
-    ``mapInPandas`` (numpy universal hashes + hashlib md5 — measured
-    ~45% faster than the higher-order-function fold at sf0.1, see
-    ``USE_ARROW_SIGNATURES``); ``minhash_band_rows_hof`` keeps the
-    pure-JVM expression lineage, cross-checked equal in tests.  At
-    100 TB both are embarrassingly parallel scan stages with no
-    exchange before the band-bucket shuffle; the Arrow path adds a
-    Python worker per core, the standard posture for LLM-corpus
-    pipelines."""
-    if not USE_ARROW_SIGNATURES:
-        return minhash_band_rows_hof(docs)
+    An Arrow-batched ``mapInPandas`` (numpy universal hashes +
+    hashlib md5): round 7 measured it ~45% faster than the JVM
+    higher-order-function fold at sf0.1 (HOF warm 1.47-1.62s vs
+    Arrow 0.78-0.94s) — the fold is interpreted expression-tree
+    evaluation per shingle×permutation, hashlib+numpy batch the same
+    math through C.  That fold stays as the parity reference
+    :func:`minhash_band_rows_hof`.  At 100 TB this is an
+    embarrassingly parallel scan stage with no exchange before the
+    band-bucket shuffle; the kernel adds a Python worker per core,
+    the standard posture for LLM-corpus pipelines."""
     return docs.select("doc_id", "text").mapInPandas(
         _band_rows_arrow_fn, _BAND_ROWS_SCHEMA
     )
@@ -923,43 +856,17 @@ _BIGRAM_BLOCKED_SCHEMA = (
 
 
 def _bigram_blocked_arrow_fn(batches):
-    """``mapInPandas`` worker for :func:`_bigram_blocked` —
-    byte-identical to the JVM expression tree (same tokenizer
-    contract as :func:`_band_rows_arrow_fn`; first-occurrence shingle
-    order preserved)."""
-    import re as _re
-
-    import pandas as _pd
-
-    ws = _re.compile(_JAVA_WS_RE)
-    for pdf in batches:
-        out = {"doc_id": [], "block_lang": [], "block_tok": [], "grams": []}
-        for doc_id, lang, text in zip(
-            pdf["doc_id"], pdf["lang"], pdf["text"]
-        ):
-            if not isinstance(text, str):
-                continue  # null text is filtered by the JVM lineage too
-            toks = [t for t in ws.split(text.lower()) if t]
-            if len(toks) < 2:
-                continue
-            out["doc_id"].append(
-                None if _pd.isna(doc_id) else int(doc_id)
-            )
-            out["block_lang"].append(
-                lang if isinstance(lang, str) else None
-            )
-            out["block_tok"].append(toks[0])
-            out["grams"].append(
-                list(
-                    dict.fromkeys(
-                        f"{toks[i]} {toks[i + 1]}"
-                        for i in range(len(toks) - 1)
-                    )
-                )
-            )
-        if out["doc_id"]:
-            out["doc_id"] = _pd.array(out["doc_id"], dtype="Int64")
-            yield _pd.DataFrame(out)
+    """``mapInPandas`` worker for :func:`_bigram_blocked`: each doc's
+    first token and distinct word bigrams (see :func:`_doc_rows`)."""
+    return _doc_rows(
+        batches,
+        2,
+        ("block_lang", "block_tok", "grams"),
+        lambda toks, sh, lang: [
+            (lang if isinstance(lang, str) else None, toks[0], sh)
+        ],
+        extra=("lang",),
+    )
 
 
 def _bigram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,24 +878,11 @@ def _bigram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded up front (same guard as minhash_lsh_pairs' 3-token
     filter: Spark's concat_ws skips the missing second token while
     SQL || propagates NULL, so partial grams diverge across engines).
-
-    Default lineage is the Arrow kernel above (r14 optimization
-    round, guide §4.2; parity pinned in
-    tests/test_arrow_signatures.py); ``USE_ARROW_SIGNATURES = False``
-    restores the pure-JVM tree."""
+    An Arrow kernel (r14 optimization round, guide §4.2); the JVM
+    parity reference is :func:`bigram_blocked_hof`."""
     d = fan_out(table(tune(spark), sf_dir, "documents"))
-    if USE_ARROW_SIGNATURES:
-        return d.select("doc_id", "lang", "text").mapInPandas(
-            _bigram_blocked_arrow_fn, _BIGRAM_BLOCKED_SCHEMA
-        )
-    d = d.filter(F.size(ws_tokens(_norm_text("text"))) >= 2)
-    grams = word_shingles("text", k=2)
-    toks = ws_tokens(_norm_text("text"))
-    return d.select(
-        "doc_id",
-        F.col("lang").alias("block_lang"),
-        F.element_at(toks, 1).alias("block_tok"),
-        grams.alias("grams"),
+    return d.select("doc_id", "lang", "text").mapInPandas(
+        _bigram_blocked_arrow_fn, _BIGRAM_BLOCKED_SCHEMA
     )
 
 
@@ -1271,55 +1165,14 @@ WHERE levenshtein(a.text, b.text) * {LEV_RATIO} <= least(a.n_chars, b.n_chars)
 """
 
 
-#: 24-permutation universal-hash family for the S-curve planner —
-#: same generator formula as PERM_A/PERM_B (the first 12 entries
-#: coincide), kept separate so the certified 12-perm oracle text
-#: (_A_SQL/_B_SQL) is untouched
-PERM_A24 = [(2654435761 * (p + 1)) % 2**30 | 1 for p in range(24)]
-PERM_B24 = [(2246822519 * (p + 1)) % 2**30 for p in range(24)]
-
-
 _GRAMS3_SCHEMA = "doc_id bigint, grams array<string>, sz bigint"
 
 
 def _grams3_arrow_fn(batches):
     """``mapInPandas`` worker producing the (doc_id, distinct 3-word
-    shingles, shingle count) frame of the prefix-filter join —
-    byte-identical to ``word_shingles(text, k=3)`` over the
-    ``size(ws_tokens) >= 3`` filter (same tokenizer contract as
-    :func:`_band_rows_arrow_fn`, including first-occurrence shingle
-    order, which array_distinct preserves on the JVM side)."""
-    import re as _re
-
-    import pandas as _pd
-
-    ws = _re.compile(_JAVA_WS_RE)
-    for pdf in batches:
-        out_doc, out_gr, out_sz = [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue  # null text is filtered by the JVM lineage too
-            doc_id = None if _pd.isna(doc_id) else int(doc_id)
-            toks = [t for t in ws.split(text.lower()) if t]
-            if len(toks) < 3:
-                continue
-            sh = list(
-                dict.fromkeys(
-                    " ".join(toks[i : i + 3])
-                    for i in range(max(len(toks) - 3, 0) + 1)
-                )
-            )
-            out_doc.append(doc_id)
-            out_gr.append(sh)
-            out_sz.append(len(sh))
-        if out_doc:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _pd.array(out_doc, dtype="Int64"),
-                    "grams": out_gr,
-                    "sz": _pd.array(out_sz, dtype="Int64"),
-                }
-            )
+    shingles, shingle count) frame of the prefix-filter join (see
+    :func:`_doc_rows`)."""
+    return _doc_rows(batches, 3, ("grams", "sz"), lambda _t, sh: [(sh, len(sh))])
 
 
 _SCURVE_SIG_SCHEMA = "doc_id bigint, sig array<bigint>"
@@ -1327,101 +1180,28 @@ _SCURVE_SIG_SCHEMA = "doc_id bigint, sig array<bigint>"
 
 def _scurve_sigs_arrow_fn(batches):
     """``mapInPandas`` worker for :func:`_scurve_sigs`: the
-    normalize → shingle → md5 → 24-perm universal-hash-min chain in
-    numpy/hashlib, bit-identical to the HOF fold (hashlib md5 ==
-    Spark md5; products < 2^62 stay exact in int64) — the same
-    lineage split as :func:`_band_rows_arrow_fn`, which measured
-    ~45% faster than the interpreted expression fold."""
-    import hashlib
-    import re as _re
-
-    import numpy as _np
-    import pandas as _pd
-
-    ws = _re.compile(_JAVA_WS_RE)
-    a_vec = _np.array(PERM_A24, dtype=_np.int64)
-    b_vec = _np.array(PERM_B24, dtype=_np.int64)
-    for pdf in batches:
-        out_doc, out_sig = [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue  # null text is filtered by the HOF lineage too
-            doc_id = None if _pd.isna(doc_id) else int(doc_id)
-            toks = [t for t in ws.split(text.lower()) if t]
-            if len(toks) < 3:
-                continue
-            sh = list(
-                dict.fromkeys(
-                    " ".join(toks[i : i + 3])
-                    for i in range(max(len(toks) - 3, 0) + 1)
-                )
-            )
-            hs = _np.fromiter(
-                (
-                    int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                    for s in sh
-                ),
-                dtype=_np.int64,
-                count=len(sh),
-            )
-            sig = (
-                ((hs[:, None] * a_vec[None, :]) + b_vec[None, :])
-                % MERSENNE_31
-            ).min(axis=0)
-            out_doc.append(doc_id)
-            out_sig.append(sig.tolist())
-        if out_doc:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _pd.array(out_doc, dtype="Int64"),
-                    "sig": out_sig,
-                }
-            )
+    24-permutation :func:`_minhasher` signature of each doc's
+    distinct 3-word shingles."""
+    minhash = _minhasher(PERM_A24, PERM_B24)
+    return _doc_rows(
+        batches, 3, ("sig",), lambda _t, sh: [(minhash(sh).tolist(),)]
+    )
 
 
 def _scurve_sigs(docs: DataFrame) -> DataFrame:
     """doc_id → 24-perm minhash signature (the planner's budget) —
     the `minhash_signatures` fold at doubled width.  Docs under 3
-    tokens are excluded to match the certified 12-perm lineage
-    (``minhash_band_rows_hof``) and the oracle's ``len(toks) >= 3``
+    tokens are excluded to match the certified 12-perm index rows
+    (:func:`minhash_band_rows`) and the oracle's ``len(toks) >= 3``
     shingle CTE — a 0-2-token doc would otherwise get a degenerate
     single-shingle signature here while being absent from the
     oracle's signature set (round-13 advice item 1).
 
-    Default lineage is the Arrow kernel above (r14 optimization
-    round, guide §4.2); ``USE_ARROW_SIGNATURES = False`` restores the
-    pure-JVM HOF fold, cross-checked bit-identical in
-    ``tests/test_arrow_signatures.py``."""
-    if USE_ARROW_SIGNATURES:
-        return docs.select("doc_id", "text").mapInPandas(
-            _scurve_sigs_arrow_fn, _SCURVE_SIG_SCHEMA
-        )
-    sh_df = docs.filter(F.size(ws_tokens(_norm_text("text"))) >= 3).select(
-        "doc_id", F.explode(F.array(word_shingles("text"))).alias("shingles")
+    An Arrow kernel (r14 optimization round, guide §4.2); the JVM
+    parity reference is :func:`scurve_sigs_hof`."""
+    return docs.select("doc_id", "text").mapInPandas(
+        _scurve_sigs_arrow_fn, _SCURVE_SIG_SCHEMA
     )
-    hashes = F.transform(
-        "shingles",
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-    hs_df = sh_df.select(
-        "doc_id", F.explode(F.array(hashes)).alias("hs")
-    )
-    sig = F.aggregate(
-        "hs",
-        F.array_repeat(F.lit(2**62).cast("long"), 24),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.lit(PERM_A24[p]) * h + F.lit(PERM_B24[p]))
-                    % F.lit(MERSENNE_31)
-                    for p in range(24)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-    return hs_df.select("doc_id", F.explode(F.array(sig)).alias("sig"))
 
 
 #: S-curve planning grid: candidate (bands, rows) geometries with
@@ -2092,59 +1872,36 @@ _SIMHAM_SIG_SCHEMA = "doc_id bigint, lo bigint, hi bigint"
 
 
 def _simham_sigs_arrow_fn(batches):
-    """``mapInPandas`` worker for :func:`_simhash64_sigs`: the
-    normalize → distinct-token → md5 → per-bit majority vote in
-    numpy/hashlib, bit-identical to the HOF fold — Spark's
+    """``mapInPandas`` worker for :func:`_simhash64_sigs`: md5 of each
+    distinct token, then a per-bit majority vote in numpy — Spark's
     ``(h / 2**b) cast long % 2`` equals ``(h >> b) & 1`` exactly for
     h < 2^32 (double division by a power of two is exact there), and
     votes are commutative sums, so token order cannot matter.  The
-    HOF lineage evaluates 64 interpreted per-bit fold expressions per
-    document; this kernel is one vectorized bit-matrix sum (guide
-    §4.2)."""
+    JVM reference evaluates 64 interpreted per-bit fold expressions
+    per document; this kernel is one vectorized bit-matrix sum
+    (guide §4.2)."""
     import hashlib
-    import re as _re
 
     import numpy as _np
-    import pandas as _pd
 
-    ws = _re.compile(_JAVA_WS_RE)
     bits = _np.arange(32, dtype=_np.int64)
     pow2 = _np.int64(1) << bits
-    for pdf in batches:
-        out_doc, out_lo, out_hi = [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue  # null text has no tokens in the HOF lineage
-            doc_id = None if _pd.isna(doc_id) else int(doc_id)
-            toks = list(
-                dict.fromkeys(t for t in ws.split(text.lower()) if t)
-            )
-            if not toks:
-                continue  # whitespace-only doc: excluded on both sides
-            digs = [hashlib.md5(t.encode()).hexdigest() for t in toks]
 
-            def word(col0: int, col1: int) -> int:
-                hs = _np.fromiter(
-                    (int(d[col0:col1], 16) for d in digs),
-                    dtype=_np.int64,
-                    count=len(digs),
-                )
-                votes = (
-                    2 * ((hs[:, None] >> bits[None, :]) & 1) - 1
-                ).sum(axis=0)
-                return int(pow2[votes > 0].sum())
+    def word(digs: list, col0: int, col1: int) -> int:
+        hs = _np.fromiter(
+            (int(d[col0:col1], 16) for d in digs),
+            dtype=_np.int64,
+            count=len(digs),
+        )
+        votes = (2 * ((hs[:, None] >> bits[None, :]) & 1) - 1).sum(axis=0)
+        return int(pow2[votes > 0].sum())
 
-            out_doc.append(doc_id)
-            out_lo.append(word(0, 8))
-            out_hi.append(word(8, 16))
-        if out_doc:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _pd.array(out_doc, dtype="Int64"),
-                    "lo": _np.array(out_lo, dtype=_np.int64),
-                    "hi": _np.array(out_hi, dtype=_np.int64),
-                }
-            )
+    def sig(_toks, distinct):
+        digs = [hashlib.md5(t.encode()).hexdigest() for t in distinct]
+        return [(word(digs, 0, 8), word(digs, 8, 16))]
+
+    # k = 1: a whitespace-only document has no tokens, hence no row
+    return _doc_rows(batches, 1, ("lo", "hi"), sig)
 
 
 def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2154,51 +1911,11 @@ def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit).  Shared by the near-dup operator and its brute-force
     losslessness pin.
 
-    Default lineage is the Arrow kernel above (r14 optimization
-    round); ``USE_ARROW_SIGNATURES = False`` restores the pure-JVM
-    64-fold vote, cross-checked bit-identical in
-    ``tests/test_arrow_signatures.py``."""
+    An Arrow kernel (r14 optimization round); the JVM parity
+    reference is :func:`simham_sigs_hof`."""
     d = fan_out(table(tune(spark), sf_dir, "documents"))
-    if USE_ARROW_SIGNATURES:
-        return d.select("doc_id", "text").mapInPandas(
-            _simham_sigs_arrow_fn, _SIMHAM_SIG_SCHEMA
-        )
-    toks = F.array_distinct(ws_tokens(_norm_text("text")))
-
-    def word(offset: int) -> Column:
-        th = lambda t: F.conv(
-            F.substring(F.md5(t), offset, 8), 16, 10
-        ).cast("long")
-        hashes = F.transform(toks, th)
-
-        def _vote(b):
-            def merge(acc, h):
-                return acc + F.when(
-                    ((h / (2 ** b)).cast("long") % 2) == 1, 1
-                ).otherwise(-1)
-
-            return merge
-
-        votes = [
-            F.aggregate(hashes, F.lit(0).cast("long"), _vote(b))
-            for b in range(32)
-        ]
-        return sum(
-            (
-                F.when(v > 0, F.lit(2 ** b)).otherwise(F.lit(0))
-                for b, v in enumerate(votes)
-            ),
-            start=F.lit(0).cast("long"),
-        )
-
-    # a whitespace-only document has no tokens, hence no signature:
-    # without this filter Spark would emit an all-zero signature and
-    # pair every such doc at Hamming 0, while the oracle's
-    # list_reduce (no initial value) errors on the empty list —
-    # both engines now agree empty-text docs are excluded
-    # (round-12 advice item 3)
-    return d.filter(F.size(toks) > 0).select(
-        "doc_id", word(1).alias("lo"), word(9).alias("hi")
+    return d.select("doc_id", "text").mapInPandas(
+        _simham_sigs_arrow_fn, _SIMHAM_SIG_SCHEMA
     )
 
 
@@ -2378,24 +2095,15 @@ def prefix_filter_jaccard_pairs(
     d = fan_out(table(tune(spark), sf_dir, "documents"))
     # Persist the shingled frame: four consumers (df build, prefix
     # postings, and the two verification sides) otherwise re-execute
-    # the normalize→tokenize→shingle tree per consumer — the scan
+    # the normalize→tokenize→shingle step per consumer — the scan
     # sweep's classic shape, and the dominant cost of the 21.6s r13
     # canonical draw (r14 optimization round, guide §2.4/§5).  The
-    # shingle tree itself is the next cost (6.8s of the remaining
-    # 7s): default lineage is the Arrow kernel (guide §4.2),
-    # bit-identical to the expression path (parity pinned in
-    # tests/test_arrow_signatures.py); USE_ARROW_SIGNATURES = False
-    # restores the pure-JVM tree.
-    if USE_ARROW_SIGNATURES:
-        shingled = d.select("doc_id", "text").mapInPandas(
-            _grams3_arrow_fn, _GRAMS3_SCHEMA
-        )
-    else:
-        shingled = (
-            d.filter(F.size(ws_tokens(_norm_text("text"))) >= 3)
-            .select("doc_id", word_shingles("text", k=3).alias("grams"))
-            .withColumn("sz", F.size("grams").cast("long"))
-        )
+    # shingle step itself is the next cost (6.8s of the remaining
+    # 7s with the JVM tree), hence the Arrow kernel (guide §4.2;
+    # parity reference :func:`grams3_hof`).
+    shingled = d.select("doc_id", "text").mapInPandas(
+        _grams3_arrow_fn, _GRAMS3_SCHEMA
+    )
     docs = swap_cache("dedup.pf_docs", shingled)
     posts = docs.select(
         "doc_id", "sz", F.explode("grams").alias("gram")
@@ -2715,3 +2423,171 @@ ORACLES = {
     "containment_pairs": CONTAINMENT_ORACLE,
     "source_overlap_matrix": SOURCE_OVERLAP_ORACLE,
 }
+
+
+# ── JVM parity references ────────────────────────────────────────────
+# The pure-expression (higher-order-function) forms of the five Arrow
+# kernels, one per kernel, each taking a docs frame.  No operator runs
+# them: tests/test_arrow_signatures.py pins each kernel bit-identical
+# to its reference on the fixture and on an adversarial frame, and
+# checks that no package code outside this block calls them.
+# Everything here is row-local expression work.
+
+
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", n_perm: int = N_PERM
+) -> DataFrame:
+    """doc_id → (shingles, minhash signature array of ``n_perm``
+    BIGINT mins over the first ``n_perm`` entries of PERM_A24/B24).
+
+    ONE md5 per shingle, reduced to a 32-bit int h; the permutation
+    hashes are the pairwise-independent universal family
+    ``(A[p]*h + B[p]) % MERSENNE_31`` — ~n_perm× cheaper than hashing
+    each shingle n_perm times, reproducible in any engine with hex +
+    BIGINT arithmetic (A[p] < 2^30, h < 2^32 → products < 2^62, far
+    from BIGINT overflow in either engine).
+
+    Both arrays are materialized behind Generate nodes: explode of a
+    1-element array makes each an *attribute*, so downstream
+    references use the computed value instead of CollapseProject
+    re-inlining the whole tokenize+shingle tree per reference
+    (measured 61s → ~2s on sf0.01).
+
+    The whole signature is ONE fold over the per-shingle hashes: acc
+    is the running element-wise minimum of the permutation-hash
+    vector. (A single combined fold also avoids a real PySpark 4.1.2
+    bug where multiple parallel *string* folds in one projection
+    corrupt minima — the fold here is numeric, but the shape is kept.)
+    """
+    sh_df = docs.select(
+        "doc_id", F.explode(F.array(word_shingles(text_col))).alias("shingles")
+    )
+    hashes = F.transform(
+        "shingles",
+        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
+    )
+    hs_df = sh_df.select(
+        "doc_id", "shingles", F.explode(F.array(hashes)).alias("hs")
+    )
+    sig = F.aggregate(
+        "hs",
+        F.array_repeat(F.lit(2**62).cast("long"), n_perm),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(
+                *[
+                    (F.lit(PERM_A24[p]) * h + F.lit(PERM_B24[p]))
+                    % F.lit(MERSENNE_31)
+                    for p in range(n_perm)
+                ]
+            ),
+            lambda a, b: F.least(a, b),
+        ),
+    )
+    return hs_df.select("doc_id", "shingles", F.explode(F.array(sig)).alias("sig"))
+
+
+def _min_tokens(docs: DataFrame, k: int) -> DataFrame:
+    return docs.filter(F.size(ws_tokens(_norm_text("text"))) >= k)
+
+
+def minhash_band_rows_hof(docs: DataFrame) -> DataFrame:
+    """Reference for :func:`_band_rows_arrow_fn` — the original
+    banded-LSH index rows of :func:`minhash_band_rows`."""
+    sig_df = minhash_signatures(_min_tokens(docs, 3))
+    return sig_df.select(
+        "doc_id",
+        "shingles",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        F.md5(
+                            F.concat_ws(
+                                "|",
+                                *[
+                                    F.element_at("sig", b * BAND_ROWS + r + 1)
+                                    for r in range(BAND_ROWS)
+                                ],
+                            )
+                        ).alias("band_sig"),
+                    )
+                    for b in range(N_PERM // BAND_ROWS)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "shingles", "band.band_idx", "band.band_sig")
+
+
+def bigram_blocked_hof(docs: DataFrame) -> DataFrame:
+    """Reference for :func:`_bigram_blocked_arrow_fn` (needs
+    ``doc_id``, ``lang``, ``text``)."""
+    toks = ws_tokens(_norm_text("text"))
+    return _min_tokens(docs, 2).select(
+        "doc_id",
+        F.col("lang").alias("block_lang"),
+        F.element_at(toks, 1).alias("block_tok"),
+        word_shingles("text", k=2).alias("grams"),
+    )
+
+
+def grams3_hof(docs: DataFrame) -> DataFrame:
+    """Reference for :func:`_grams3_arrow_fn`."""
+    return (
+        _min_tokens(docs, 3)
+        .select("doc_id", word_shingles("text", k=3).alias("grams"))
+        .withColumn("sz", F.size("grams").cast("long"))
+    )
+
+
+def scurve_sigs_hof(docs: DataFrame) -> DataFrame:
+    """Reference for :func:`_scurve_sigs_arrow_fn`: the
+    :func:`minhash_signatures` fold at 24 permutations."""
+    return minhash_signatures(_min_tokens(docs, 3), n_perm=24).select(
+        "doc_id", "sig"
+    )
+
+
+def simham_sigs_hof(docs: DataFrame) -> DataFrame:
+    """Reference for :func:`_simham_sigs_arrow_fn`: 32 interpreted
+    per-bit vote folds per 32-bit word."""
+    toks = F.array_distinct(ws_tokens(_norm_text("text")))
+
+    def word(offset: int) -> Column:
+        hashes = F.transform(
+            toks,
+            lambda t: F.conv(F.substring(F.md5(t), offset, 8), 16, 10).cast(
+                "long"
+            ),
+        )
+
+        def _vote(b):
+            def merge(acc, h):
+                return acc + F.when(
+                    ((h / (2 ** b)).cast("long") % 2) == 1, 1
+                ).otherwise(-1)
+
+            return merge
+
+        votes = [
+            F.aggregate(hashes, F.lit(0).cast("long"), _vote(b))
+            for b in range(32)
+        ]
+        return sum(
+            (
+                F.when(v > 0, F.lit(2 ** b)).otherwise(F.lit(0))
+                for b, v in enumerate(votes)
+            ),
+            start=F.lit(0).cast("long"),
+        )
+
+    # a whitespace-only document has no tokens, hence no signature:
+    # without this filter Spark would emit an all-zero signature and
+    # pair every such doc at Hamming 0, while the oracle's
+    # list_reduce (no initial value) errors on the empty list —
+    # both engines agree empty-text docs are excluded
+    # (round-12 advice item 3)
+    return docs.filter(F.size(toks) > 0).select(
+        "doc_id", word(1).alias("lo"), word(9).alias("hi")
+    )

@@ -30,9 +30,8 @@ re-expressed as compositions of built-in DataFrame ops (SURVEY §2.13
   resolution derives from it for free.
 * **Heavy hitters** — exact top-k by frequency (two-phase: partial
   count per partition, merged — plain groupBy), plus a Count-Min
-  sketch variant (`df.stat.countMinSketch`, JVM-side merged partials)
-  whose estimates are checked rows-only, the sketch being
-  engine-specific by construction.
+  sketch over an md5-derived hash family, so its counter table and
+  estimates reproduce in the oracle engine.
 """
 
 from __future__ import annotations
@@ -309,25 +308,11 @@ _CMS_DEPTH = 4
 _CMS_WIDTH = 8192
 
 
-def _cms_buckets(key, depth: int = _CMS_DEPTH, width: int = _CMS_WIDTH):
-    """(row, bucket) struct per hash row for one key column; row i uses
-    ``xxhash64`` seeded by i as its independent hash function."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("d"),
-                F.pmod(F.xxhash64(F.lit(i), key), F.lit(width)).alias("b"),
-            )
-            for i in range(depth)
-        ]
-    )
-
-
 def _cms_md5_buckets(key):
-    """The ENGINE-NEUTRAL (md5-derived) Count-Min bucket array —
-    extracted from ``portable_countmin_topk`` (round 12) so the
-    upsert contract shares the hash family byte-for-byte (the
-    xxhash64 family in ``_cms_buckets`` is Spark-private)."""
+    """The ENGINE-NEUTRAL (md5-derived) Count-Min bucket array: one
+    (row, bucket) struct per hash row, row i hashing ``cms{i}|key`` —
+    shared by ``portable_countmin_topk`` and the upsert contract so
+    both use the hash family byte-for-byte."""
     return F.array(
         *[
             F.struct(
@@ -354,27 +339,12 @@ def _cms_md5_buckets(key):
     )
 
 
-def count_min_table(df: DataFrame, key_col: str) -> DataFrame:
-    """Build a Count-Min sketch as a (d, b, cnt) DataFrame: explode each
-    key into its d buckets, one groupBy. Fully distributed — the
-    counter table is ≤ d·w rows regardless of input size, and never
-    touches the driver (contrast the removed JVM
-    ``df.stat.countMinSketch``, which collected the sketch).
-    """
-    return (
-        df.select(F.explode(_cms_buckets(F.col(key_col))).alias("db"))
-        .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def portable_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min with an ENGINE-NEUTRAL hash family (md5-derived, like
     ``portable_bloom_contract`` / ``portable_hll_registers``): the
     exact counter table and therefore the exact estimates reproduce
-    in any engine, so the sketch gains a full value-level oracle —
-    unlike ``count_min_table``, whose xxhash64 rows are
-    Spark-private.  Plan shape: build = explode d buckets → one groupBy (counter table
+    in any engine, so the sketch gains a full value-level oracle.
+    Plan shape: build = explode d buckets → one groupBy (counter table
     ≤ d·w rows, broadcastable); probe = top-20 exact keys joined to
     their d counters, min per key.  The CMS one-sided guarantee
     (estimate ≥ exact) is re-assertable cross-engine here because

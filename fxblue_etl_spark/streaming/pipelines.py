@@ -1149,7 +1149,7 @@ def streaming_lsh_dedup(
 ) -> DataFrame:
     """Streaming near-duplicate gate: incoming documents are banded
     with the SAME MinHash-LSH machinery as the batch path
-    (``dedup.minhash_band_rows`` — pure row-local expressions, so the
+    (``dedup.minhash_band_rows`` — a row-local Arrow kernel, so the
     one implementation serves both) and probed against a static band
     index of the already-ingested corpus via a stream-static
     left-outer join.  A document is flagged ``is_dup`` when any of

@@ -1,87 +1,162 @@
-"""The Arrow signature stage must be bit-identical to the JVM HOF
-lineage (round-7 flip: ``dedup.USE_ARROW_SIGNATURES``) — on the
-fixture corpus AND on an adversarial literal frame exercising the
-whitespace/empty/short/duplicate edges where the two runtimes could
-plausibly diverge."""
+"""Each text-signature Arrow kernel in ``operators/dedup.py`` must be
+bit-identical to its JVM expression reference — on the fixture corpus
+AND on one adversarial literal frame exercising the whitespace/empty/
+short/duplicate/Unicode edges where the two runtimes could plausibly
+diverge."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
+import pytest
+
 from fxblue_etl_spark.io import fan_out, table
-from fxblue_etl_spark.operators.dedup import (
-    _BAND_ROWS_SCHEMA,
-    _band_rows_arrow_fn,
-    minhash_band_rows,
-    minhash_band_rows_hof,
-)
+from fxblue_etl_spark.operators import dedup
+
+#: (kernel, output schema, JVM reference, input columns)
+KERNELS = {
+    "band_rows": (
+        dedup._band_rows_arrow_fn,
+        dedup._BAND_ROWS_SCHEMA,
+        dedup.minhash_band_rows_hof,
+        ("doc_id", "text"),
+    ),
+    "bigram_blocked": (
+        dedup._bigram_blocked_arrow_fn,
+        dedup._BIGRAM_BLOCKED_SCHEMA,
+        dedup.bigram_blocked_hof,
+        ("doc_id", "lang", "text"),
+    ),
+    "grams3": (
+        dedup._grams3_arrow_fn,
+        dedup._GRAMS3_SCHEMA,
+        dedup.grams3_hof,
+        ("doc_id", "text"),
+    ),
+    "scurve24": (
+        dedup._scurve_sigs_arrow_fn,
+        dedup._SCURVE_SIG_SCHEMA,
+        dedup.scurve_sigs_hof,
+        ("doc_id", "text"),
+    ),
+    "simham": (
+        dedup._simham_sigs_arrow_fn,
+        dedup._SIMHAM_SIG_SCHEMA,
+        dedup.simham_sigs_hof,
+        ("doc_id", "text"),
+    ),
+}
+
+ADVERSARIAL = [
+    (1, "en", "  leading and trailing   \t\n  whitespace mix here  "),
+    (2, "en", "tabs\tbetween\ttokens\tand\tmore\ttokens"),
+    (3, "en", "exactly three tokens"),
+    (4, "en", "two tokens"),  # < 3 tokens
+    (5, "en", ""),  # empty: excluded everywhere
+    (6, "en", None),  # null: excluded everywhere
+    (7, "en", "MiXeD CaSe TOKENS normalize THE same WAY"),
+    (8, "en", "dup dup dup dup dup dup"),  # one distinct shingle
+    (9, "en", "a b c a b c a b c d"),  # repeated shingles, order matters
+    (10, "en", "newline\nseparated\ntokens\nwith\x0cformfeed\x0bvertical"),
+    (11, "en", "exactly three tokens"),  # exact dup of doc 3
+    (12, "en", "punct, stays! glued? to:tokens; here's more text now"),
+    # Unicode casing/whitespace parity: Python str.lower() must match
+    # Spark's lower(), and Python must NOT split on \xa0 (Java \s is
+    # ASCII-only — the _JAVA_WS_RE contract)
+    (13, "en", "İstanbul CASE test here İİİ okay done"),
+    (14, "en", "straße STRASSE ẞharp esszett test words here"),
+    (15, "en", "ΣΙΣΥΦΟΣ greek sigma ΟΔΥΣΣΕΥΣ test tokens here"),
+    (16, "en", "nbsp\xa0separated\xa0tokens maybe different split here"),
+    (17, "en", "ǅungla titlecase DŽ digraph test tokens here"),
+    (18, "en", "ffi ﬁ ligature ﬀ tokens FFI test here"),
+    (21, "en", "tabs\tbetween\ttokens"),
+    (22, "en", "one"),  # single token
+    (23, "en", "dup dup dup dup"),  # one distinct token
+    (24, "en", " \t\n "),  # whitespace-only: excluded everywhere
+    (25, "en", "nbsp\xa0glued\xa0token"),  # \xa0 is NOT Java \s
+    (31, "en", "two tokens here and more"),
+    (32, None, "null lang tokens"),
+    (33, "de", "one"),
+    (34, "fr", ""),
+    (35, "es", None),
+    (36, "en", "DUP dup DUP dup"),  # case-folds to repeated bigrams
+    # null doc_id with valid text: the reference passes it through
+    # with null doc_id — the kernel must too (a nullable bigint batch
+    # surfaces as float64/NaN in pandas; round-7 advice: NaN in the
+    # int output column failed the Arrow cast and killed the task)
+    (None, "en", "null doc id with enough tokens here"),
+    (None, "en", "null doc id with tokens"),
+    (None, "en", "null doc id tokens"),
+]
+
+#: per kernel: ids that must be absent, ids that must be present
+EXPECT = {
+    "band_rows": ({4, 5, 6}, {1, 2, 3, 11, 12}),
+    "bigram_blocked": ({33, 34, 35}, {31, 32, 36}),
+    "grams3": ({4, 5, 6}, {1, 3, 8, 9, 16}),
+    "scurve24": ({4, 5, 6}, {1, 2, 3, 11}),
+    "simham": ({5, 6, 24}, {1, 21, 22, 7, 23, 25}),
+}
 
 
 def _canon(df):
+    """Order-free, value-exact form of a result: each row as a tuple
+    (arrays as tuples, so shingle ORDER is compared too)."""
     return sorted(
         (
-            (r["doc_id"], tuple(r["shingles"]), r["band_idx"], r["band_sig"])
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
             for r in df.collect()
         ),
-        # None-safe: null doc_id rows (passed through by both
-        # lineages) sort after all numeric ids
-        key=lambda t: (t[0] is None, t[0] or 0, t[1], t[2], t[3]),
+        key=repr,
     )
 
 
-def test_arrow_equals_hof_on_fixture(spark, sf_dir):
-    docs = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    arrow = docs.mapInPandas(_band_rows_arrow_fn, _BAND_ROWS_SCHEMA)
-    assert _canon(arrow) == _canon(minhash_band_rows_hof(docs))
+def _both(docs, case):
+    kernel, schema, reference, cols = KERNELS[case]
+    arrow = docs.select(*cols).mapInPandas(kernel, schema)
+    return _canon(arrow), _canon(reference(docs))
 
 
-def test_arrow_equals_hof_on_adversarial_frame(spark):
-    rows = [
-        (1, "  leading and trailing   \t\n  whitespace mix here  "),
-        (2, "tabs\tbetween\ttokens\tand\tmore\ttokens"),
-        (3, "exactly three tokens"),
-        (4, "two tokens"),  # < 3 tokens: excluded
-        (5, ""),  # empty: excluded
-        (6, None),  # null: excluded
-        (7, "MiXeD CaSe TOKENS normalize THE same WAY"),
-        (8, "dup dup dup dup dup dup"),  # one distinct shingle
-        (9, "a b c a b c a b c d"),  # repeated shingles
-        (10, "newline\nseparated\ntokens\nwith\x0cformfeed\x0bvertical"),
-        (11, "exactly three tokens"),  # exact dup of doc 3
-        (12, "punct, stays! glued? to:tokens; here's more text now"),
-        # Unicode casing/whitespace parity: Python str.lower() must
-        # match Spark's lower(), and Python must NOT split on \xa0
-        # (Java \s is ASCII-only — the _JAVA_WS_RE contract)
-        (13, "İstanbul CASE test here İİİ okay done"),
-        (14, "straße STRASSE ẞharp esszett test words here"),
-        (15, "ΣΙΣΥΦΟΣ greek sigma ΟΔΥΣΣΕΥΣ test tokens here"),
-        (16, "nbsp\xa0separated\xa0tokens maybe different split here"),
-        (17, "ǅungla titlecase DŽ digraph test tokens here"),
-        (18, "ffi ﬁ ligature ﬀ tokens FFI test here"),
-        # null doc_id with valid text: the HOF lineage passes it
-        # through with null doc_id — the Arrow path must too (a
-        # nullable bigint batch surfaces as float64/NaN in pandas;
-        # round-7 advice: NaN in the int output column failed the
-        # Arrow cast and killed the task)
-        (None, "null doc id with enough tokens here"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    arrow = docs.mapInPandas(_band_rows_arrow_fn, _BAND_ROWS_SCHEMA)
-    got = _canon(arrow)
-    want = _canon(minhash_band_rows_hof(docs))
+@pytest.mark.parametrize("case", sorted(KERNELS))
+def test_kernel_equals_reference_on_fixture(spark, sf_dir, case):
+    docs = fan_out(
+        table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    )
+    got, want = _both(docs, case)
     assert got == want
-    ids = {d for d, *_ in got}
-    assert {4, 5, 6}.isdisjoint(ids) and {1, 2, 3, 11, 12} <= ids
-    assert None in ids, "null-doc_id row must pass through, as in HOF"
-    # exact-dup docs share every band signature
-    by_doc = {}
-    for d, _sh, bi, bs in got:
-        by_doc.setdefault(d, {})[bi] = bs
-    assert by_doc[3] == by_doc[11]
+    assert got, "fixture must produce rows"
+    if case == "scurve24":
+        assert all(len(sig) == 24 for _d, sig in got)
+
+
+@pytest.mark.parametrize("case", sorted(KERNELS))
+def test_kernel_equals_reference_on_adversarial_frame(spark, case):
+    docs = spark.createDataFrame(
+        ADVERSARIAL, "doc_id bigint, lang string, text string"
+    )
+    got, want = _both(docs, case)
+    assert got == want
+    ids = {r[0] for r in got}
+    absent, present = EXPECT[case]
+    assert absent.isdisjoint(ids) and present <= ids
+    assert None in ids, "null-doc_id row must pass through"
+
+    def rows_of(doc_id):
+        return [r[1:] for r in got if r[0] == doc_id]
+
+    assert rows_of(3) == rows_of(11), "exact-dup docs share a signature"
+    if case == "grams3":
+        # \xa0 glues tokens: the doc's first shingle spans three
+        # \xa0-joined words, not three \xa0-separated tokens
+        (grams16, _sz) = rows_of(16)[0]
+        assert grams16[0] == "nbsp\xa0separated\xa0tokens maybe different"
 
 
 def test_jvm_locale_is_root_like(spark):
-    """The Arrow/HOF bit-identity contract assumes a ROOT-like JVM
-    default locale for case mapping (see USE_ARROW_SIGNATURES in
-    operators/dedup.py): a Turkish/Azerbaijani-locale JVM maps I→ı
+    """The kernel/reference bit-identity assumes a ROOT-like JVM
+    default locale for case mapping (the LOCALE CONTRACT on
+    ``dedup._doc_rows``): a Turkish/Azerbaijani-locale JVM maps I→ı
     in ``lower()`` while Python's str.lower() yields i, so the
     adversarial parity test would only pin parity for a host it
     doesn't run on.  Assert the assumption instead of assuming it."""
@@ -89,231 +164,58 @@ def test_jvm_locale_is_root_like(spark):
         spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
     )
     assert lang not in ("tr", "az"), (
-        f"JVM default locale '{lang}' breaks Arrow/HOF lower() parity "
-        "on dotted/dotless I — pin -Duser.language= or set "
-        "dedup.USE_ARROW_SIGNATURES = False"
+        f"JVM default locale '{lang}' breaks kernel/reference lower() "
+        "parity on dotted/dotless I — pin -Duser.language= for the JVM"
     )
-
-
-def test_default_dispatch_is_arrow(spark):
-    docs = spark.createDataFrame(
-        [(1, "three tokens minimum wanted")], "doc_id bigint, text string"
-    )
-    plan = (
-        minhash_band_rows(docs)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan
 
 
 def test_arrow_path_survives_all_null_batch(spark):
     """A fully-null text batch surfaces as float NaN in pandas, not
-    None — the worker must skip it, matching the HOF null filter."""
+    None — the worker must skip it, matching the reference's null
+    filter."""
     docs = spark.createDataFrame(
         [(1, None), (2, None)], "doc_id bigint, text string"
     )
-    assert minhash_band_rows(docs).count() == 0
-    assert minhash_band_rows_hof(docs).count() == 0
+    assert dedup.minhash_band_rows(docs).count() == 0
+    assert dedup.minhash_band_rows_hof(docs).count() == 0
 
 
-def _canon24(df):
-    return sorted(
-        ((r["doc_id"], tuple(r["sig"])) for r in df.collect()),
-        key=lambda t: (t[0] is None, t[0] or 0, t[1]),
+def test_references_called_only_in_reference_block():
+    """Each text-signature operator has one lineage: the JVM reference
+    builders are called only inside dedup.py's reference block (and
+    by tests), and the retired lineage switch is gone."""
+    import fxblue_etl_spark
+
+    pkg = Path(fxblue_etl_spark.__file__).parent
+    repo = pkg.parent
+    names = (
+        "minhash_signatures",
+        "minhash_band_rows_hof",
+        "bigram_blocked_hof",
+        "grams3_hof",
+        "scurve_sigs_hof",
+        "simham_sigs_hof",
+        "_min_tokens",
     )
-
-
-def test_scurve24_arrow_equals_hof_on_fixture(spark, sf_dir, monkeypatch):
-    from fxblue_etl_spark.operators import dedup
-
-    docs = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    arrow = dedup._scurve_sigs(docs)
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    hof = dedup._scurve_sigs(docs)
-    got, want = _canon24(arrow), _canon24(hof)
-    assert got == want
-    assert got, "fixture must produce signatures"
-    assert all(len(sig) == 24 for _d, sig in got)
-
-
-def test_scurve24_arrow_equals_hof_on_adversarial_frame(spark, monkeypatch):
-    from fxblue_etl_spark.operators import dedup
-
-    rows = [
-        (1, "  leading and trailing   \t\n  whitespace mix here  "),
-        (2, "tabs\tbetween\ttokens\tand\tmore\ttokens"),
-        (3, "exactly three tokens"),
-        (4, "two tokens"),  # < 3 tokens: excluded
-        (5, ""),  # empty: excluded
-        (6, None),  # null: excluded
-        (7, "MiXeD CaSe TOKENS normalize THE same WAY"),
-        (8, "dup dup dup dup dup dup"),  # one distinct shingle
-        (9, "a b c a b c a b c d"),  # repeated shingles
-        (10, "newline\nseparated\ntokens\nwith\x0cformfeed\x0bvertical"),
-        (11, "exactly three tokens"),  # exact dup of doc 3
-        (16, "nbsp\xa0separated\xa0tokens maybe different split here"),
-        (None, "null doc id with enough tokens here"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    arrow = dedup._scurve_sigs(docs)
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    hof = dedup._scurve_sigs(docs)
-    got, want = _canon24(arrow), _canon24(hof)
-    assert got == want
-    ids = {d for d, _s in got}
-    assert {4, 5, 6}.isdisjoint(ids) and {1, 2, 3, 11} <= ids
-    assert None in ids, "null-doc_id row must pass through, as in HOF"
-    sig = dict(got)
-    assert sig[3] == sig[11], "exact-dup docs share the signature"
-
-
-def _canon_simham(df):
-    return sorted(
-        ((r["doc_id"], r["lo"], r["hi"]) for r in df.collect()),
-        key=lambda t: (t[0] is None, t[0] or 0, t[1], t[2]),
+    marker = "# ── JVM parity references"
+    src = (pkg / "operators" / "dedup.py").read_text()
+    body, block = src.split(marker)
+    for n in names:
+        assert f"\ndef {n}(" in block, n
+    call = re.compile(r"\b(?:%s)\(" % "|".join(names))
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if call.search(body if p.name == "dedup.py" else p.read_text())
     )
-
-
-def test_simham_arrow_equals_hof_on_fixture(spark, sf_dir, monkeypatch):
-    from fxblue_etl_spark.operators import dedup
-
-    arrow = dedup._simhash64_sigs(spark, sf_dir)
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    hof = dedup._simhash64_sigs(spark, sf_dir)
-    got, want = _canon_simham(arrow), _canon_simham(hof)
-    assert got == want
-    assert got, "fixture must produce signatures"
-
-
-def test_simham_arrow_equals_hof_on_adversarial_frame(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    # _simhash64_sigs reads the documents table itself, so stage an
-    # adversarial documents.parquet in a temp sf_dir
-    rows = [
-        (1, "  leading and trailing   \t\n  whitespace mix here  "),
-        (2, "tabs\tbetween\ttokens"),
-        (3, "one"),  # single token: INCLUDED (size > 0)
-        (5, ""),  # empty: excluded
-        (6, None),  # null: excluded
-        (7, "MiXeD CaSe TOKENS normalize THE same WAY"),
-        (8, "dup dup dup dup"),  # one distinct token
-        (9, " \t\n "),  # whitespace-only: excluded
-        (16, "nbsp\xa0glued\xa0token"),  # \xa0 is NOT Java \s
-        (None, "null doc id with tokens"),
-    ]
-    from fxblue_etl_spark.operators import dedup
-
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "documents.parquet"))
-    arrow = dedup._simhash64_sigs(spark, str(tmp_path))
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    hof = dedup._simhash64_sigs(spark, str(tmp_path))
-    got, want = _canon_simham(arrow), _canon_simham(hof)
-    assert got == want
-    ids = {d for d, *_ in got}
-    assert {5, 6, 9}.isdisjoint(ids) and {1, 2, 3, 7, 8, 16} <= ids
-    assert None in ids, "null-doc_id row must pass through, as in HOF"
-
-
-def _canon_grams(df):
-    return sorted(
-        ((r["doc_id"], tuple(r["grams"]), r["sz"]) for r in df.collect()),
-        key=lambda t: (t[0] is None, t[0] or 0, t[1]),
+    assert callers == []
+    switch = sorted(
+        str(p.relative_to(repo))
+        for p in [
+            *pkg.rglob("*.py"),
+            repo / "bench.py",
+            *(repo / "tools").rglob("*.py"),
+        ]
+        if "USE_ARROW_SIGNATURES" in p.read_text()
     )
-
-
-def test_grams3_arrow_equals_jvm_on_fixture(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from fxblue_etl_spark.operators import dedup
-
-    d = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    arrow = d.mapInPandas(dedup._grams3_arrow_fn, dedup._GRAMS3_SCHEMA)
-    jvm = (
-        d.filter(
-            F.size(dedup.ws_tokens(dedup._norm_text("text"))) >= 3
-        )
-        .select("doc_id", dedup.word_shingles("text", k=3).alias("grams"))
-        .withColumn("sz", F.size("grams").cast("long"))
-    )
-    got, want = _canon_grams(arrow), _canon_grams(jvm)
-    assert got == want
-    assert got, "fixture must produce shingled docs"
-
-
-def test_grams3_arrow_equals_jvm_on_adversarial_frame(spark):
-    from pyspark.sql import functions as F
-
-    from fxblue_etl_spark.operators import dedup
-
-    rows = [
-        (1, "  leading and trailing   \t\n  whitespace mix here  "),
-        (3, "exactly three tokens"),
-        (4, "two tokens"),  # < 3 tokens: excluded
-        (5, ""),  # excluded
-        (6, None),  # excluded
-        (8, "dup dup dup dup dup dup"),  # one distinct shingle
-        (9, "a b c a b c a b c d"),  # repeated shingles, order matters
-        (16, "nbsp\xa0separated\xa0tokens maybe different split here"),
-        (None, "null doc id with enough tokens here"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    arrow = d.mapInPandas(dedup._grams3_arrow_fn, dedup._GRAMS3_SCHEMA)
-    jvm = (
-        d.filter(
-            F.size(dedup.ws_tokens(dedup._norm_text("text"))) >= 3
-        )
-        .select("doc_id", dedup.word_shingles("text", k=3).alias("grams"))
-        .withColumn("sz", F.size("grams").cast("long"))
-    )
-    got, want = _canon_grams(arrow), _canon_grams(jvm)
-    assert got == want
-    ids = {d_ for d_, *_ in got}
-    assert {4, 5, 6}.isdisjoint(ids) and {1, 3, 8, 9, 16} <= ids
-    assert None in ids
-
-
-def test_bigram_blocked_arrow_equals_jvm(spark, sf_dir, tmp_path, monkeypatch):
-    from fxblue_etl_spark.operators import dedup
-
-    def canon(df):
-        return sorted(
-            (
-                (r["doc_id"], r["block_lang"], r["block_tok"], tuple(r["grams"]))
-                for r in df.collect()
-            ),
-            key=lambda t: (t[0] is None, t[0] or 0, t[1] or "", t[2]),
-        )
-
-    # fixture parity
-    arrow = dedup._bigram_blocked(spark, sf_dir)
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    jvm = dedup._bigram_blocked(spark, sf_dir)
-    got, want = canon(arrow), canon(jvm)
-    assert got == want and got
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", True)
-
-    # adversarial parity (incl. null lang, 1-token and empty docs)
-    rows = [
-        (1, "en", "two tokens here and more"),
-        (2, None, "null lang tokens"),
-        (3, "de", "one"),  # < 2 tokens: excluded
-        (4, "fr", ""),  # excluded
-        (5, "es", None),  # excluded
-        (6, "en", "DUP dup DUP dup"),  # case-folds to repeated bigrams
-        (None, "en", "null doc id tokens"),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id bigint, lang string, text string"
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    arrow = dedup._bigram_blocked(spark, str(tmp_path))
-    monkeypatch.setattr(dedup, "USE_ARROW_SIGNATURES", False)
-    jvm = dedup._bigram_blocked(spark, str(tmp_path))
-    got, want = canon(arrow), canon(jvm)
-    assert got == want
-    ids = {d for d, *_ in got}
-    assert {3, 4, 5}.isdisjoint(ids) and {1, 2, 6} <= ids and None in ids
+    assert switch == []

@@ -87,7 +87,6 @@ def _fake_full_record(n_extra: int = 0) -> dict:
         "load_tainted": list(names[:13]),
         "taint_load": 8.0,
         "redraws": {n: {"first_sec": 1, "redraw_sec": 2} for n in names[:13]},
-        "lineage_ab": {"query": "minhash_lsh_pairs", "arrow_sec": 1.0},
     }
 
 
@@ -108,7 +107,7 @@ def test_stdout_record_fits_driver_tail_capture():
     assert "frozen15_total" in out and "frozen27_total" in out
     assert out["load_tainted_n"] == 13
     # heavy fields must NOT ride stdout
-    for k in ("query_loads", "redraws", "prev_draws", "lineage_ab"):
+    for k in ("query_loads", "redraws", "prev_draws"):
         assert k not in out
     # full per-query coverage at today's HEADLINE size
     assert set(out["queries"]) == set(bench.HEADLINE)

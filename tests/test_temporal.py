@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fxblue_etl_spark.operators.temporal import (
+    _cms_md5_buckets,
     asof_join,
-    count_min_table,
     heavy_hitters_exact,
     range_join_buckets,
     time_bucket_rollup,
@@ -154,7 +154,11 @@ def test_time_bucket_daily_level_matches_direct_aggregate(spark, sf_dir):
 
 def test_cms_counter_table_bounded(spark, sf_dir):
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cms = count_min_table(l, "l_partkey")
+    cms = (
+        l.select(F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db"))
+        .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+        .agg(F.count("*").alias("cnt"))
+    )
     assert cms.count() <= 4 * 8192
     # total mass per hash row == number of input rows
     per_row = {r.d: r.total for r in cms.groupBy("d").agg(F.sum("cnt").alias("total")).collect()}
