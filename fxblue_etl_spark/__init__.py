@@ -24,3 +24,9 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from fxblue_etl_spark.session import _cache_zip_directories
+
+# A Python worker imports this package when it unpickles a kernel, so
+# every worker that runs one stops re-reading unchanged zips per task.
+_cache_zip_directories()

@@ -155,6 +155,26 @@ def _python_nodes(df) -> set[str]:
     return found | set(_PYTHON_NODES.findall(qe.executedPlan().toString()))
 
 
+def test_glob_and_folder_filter_read_the_same_files(spark, csv_dir, tmp_path, monkeypatch):
+    """``read_fxblue_csv`` reads ``dir/*.csv`` as the folder with a name
+    filter; the ``(path, content)`` rows it parses are those the glob
+    spelling reads."""
+    from pyspark.sql import functions as F
+
+    for name in os.listdir(csv_dir):
+        (tmp_path / name).write_text(open(os.path.join(csv_dir, name)).read())
+    (tmp_path / "notes.txt").write_text("not an export\n")
+    path_glob = str(tmp_path / "*.csv")
+    parsed = []
+    monkeypatch.setattr(fxblue_csv, "parse_fxblue_files", parsed.append)
+    fxblue_csv.read_fxblue_csv(spark, path_glob)
+    glob_rows = spark.read.text(path_glob, wholetext=True).select(
+        F.input_file_name().alias("path"), F.col("value").alias("content")
+    ).collect()
+    assert len(glob_rows) == 2
+    assert sorted(map(tuple, parsed[0].collect())) == sorted(map(tuple, glob_rows))
+
+
 def test_fx_batch_runs_no_python_worker(spark, csv_dir, tmp_path):
     """One fx batch — CSV ingest → K1 merge, feed entries → rss_trades →
     K2 merge — over file inputs, as the write path reads them."""
