@@ -9,7 +9,9 @@ scale the same call fans out one task per row-group/split.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import threading
 import weakref
 
@@ -107,16 +109,22 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
-def fixture_fingerprint(sf_dir: str, name: str = "documents") -> tuple:
-    """(mtime_ns, size) of a fixture table file — the invalidation key
-    for fixture-derived artifacts pinned through :func:`checkpoint`.
-    A driver-regenerated fixture at the same path must never serve a
-    stale artifact."""
-    try:
-        st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
+def fixture_key(sf_dir: str) -> str:
+    """The one key of every fixture-derived artifact: a short digest
+    of ``realpath(sf_dir)`` and each :data:`TABLES` file's
+    ``(st_mtime_ns, st_size)`` (a missing file counts as ``(0, 0)``).
+    Two fixtures with the same basename, or one regenerated in place,
+    never share a key, so neither a staged file (:func:`stage_fixture`)
+    nor a memo (:func:`checkpoint`) can serve another fixture's data."""
+    h = hashlib.md5(os.path.realpath(sf_dir).encode())
+    for name in TABLES:
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = (0, 0)
+        h.update(repr(stamp).encode())
+    return h.hexdigest()[:12]
 
 
 #: The one registry of pinned state: SparkSession → {slot name →
@@ -235,8 +243,8 @@ def checkpoint(spark: SparkSession, slot: str, build, key=None) -> DataFrame:
     With a non-``None`` ``key`` the slot is a memo: when it already
     holds a frame built under an equal key, that frame is returned
     and ``build`` never runs — a fixture artifact passes
-    ``(sf_dir, fixture_fingerprint(sf_dir))``, so a regenerated
-    fixture or another ``sf_dir`` rebuilds.  ``key=None`` always
+    ``fixture_key(sf_dir)``, so a regenerated fixture or another
+    ``sf_dir`` rebuilds.  ``key=None`` always
     builds (a fold's per-batch state).
 
     Build FIRST, release SECOND — the reverse of :func:`swap_cache`:
@@ -323,6 +331,17 @@ def stage_once(path: str, build) -> str:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path
+
+
+def stage_fixture(sf_dir: str, name: str, build) -> str:
+    """The one place fixture-derived files live: ``build(tmp_dir)``
+    writes artifact ``name`` of fixture ``sf_dir`` once, through
+    :func:`stage_once`, under a directory named by
+    :func:`fixture_key`; every later call returns the published
+    path without building.  ``tmp_dir`` does not exist yet — a
+    Spark writer creates it, a Python writer makes it first."""
+    root = os.path.join(tempfile.gettempdir(), f"fxblue_stage_{fixture_key(sf_dir)}")
+    return stage_once(os.path.join(root, name), build)
 
 
 def write_partitioned(

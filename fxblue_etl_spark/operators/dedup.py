@@ -246,8 +246,8 @@ def clear_band_memo() -> None:
 
 def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's banded-LSH index — ``(doc_id, band_idx,
-    band_sig)``, NO shingle payload — checkpointed once per (session,
-    sf_dir, fixture fingerprint) in the ``io`` registry.
+    band_sig)``, NO shingle payload — checkpointed once per session and
+    ``io.fixture_key`` in the ``io`` registry.
 
     In a real deployment this is a *maintained artifact*: the index
     of the already-ingested corpus is built once (and upserted as
@@ -259,7 +259,7 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     live as a table bucketed on (band_idx, band_sig).  A regenerated
     fixture or another sf_dir rebuilds and releases the superseded
     checkpoint; ``io.drain_all`` releases it too."""
-    from ..io import checkpoint, fan_out, fixture_fingerprint, table
+    from ..io import checkpoint, fan_out, fixture_key, table
 
     return checkpoint(
         spark,
@@ -267,7 +267,7 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: minhash_band_rows(
             fan_out(table(tune(spark), sf_dir, "documents"))
         ).select("doc_id", "band_idx", "band_sig"),
-        key=(sf_dir, fixture_fingerprint(sf_dir)),
+        key=fixture_key(sf_dir),
     )
 
 

@@ -535,12 +535,12 @@ def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc is in a Jaccard ≥ DECON_J MinHash/LSH cluster, else the
     doc's own id.  The shared spine of ``split_decontaminate`` and
     ``canonical_doc_selection`` — the single most expensive sub-plan
-    on the surface, so it is checkpointed once per (session, sf_dir,
-    fixture fingerprint) in the ``io`` registry and served to every
+    on the surface, so it is checkpointed once per session and
+    ``io.fixture_key`` in the ``io`` registry and served to every
     consumer until ``io.drain_all``.  The frame is 3 narrow columns —
     spill-safe even at corpus scale, and a fraction of the shuffle
     the LSH re-run would cost."""
-    from ..io import fan_out, fixture_fingerprint, table
+    from ..io import fan_out, fixture_key, table
     from .dedup import lsh_jaccard_pairs
 
     def build() -> DataFrame:
@@ -563,9 +563,7 @@ def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return checkpoint(
-        spark, "doc_dup_groups", build, key=(sf_dir, fixture_fingerprint(sf_dir))
-    )
+    return checkpoint(spark, "doc_dup_groups", build, key=fixture_key(sf_dir))
 
 
 def split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

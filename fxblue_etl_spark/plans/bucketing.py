@@ -22,14 +22,10 @@ match (or divide evenly with `spark.sql.bucketing.coalesceBucketsInJoin`).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import fixture_key, stage_fixture, table
 from ..session import tune
 
 N_BUCKETS = 8
@@ -42,24 +38,34 @@ _LAYOUT = (
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Idempotently materialize orders/customer as bucketed external
-    tables (bucket metadata lives in the session catalog, data under
-    tmp). Re-registers on a fresh session; skips the write when the
-    catalog entry already exists."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"fxblue_bucketed_{tag}")
+    """Orders/customer as bucketed external tables: the bucketed files
+    are staged once per fixture (``io.stage_fixture``), and the table
+    over them is registered in the session catalog unless it already
+    exists.  The build writes through a scratch table, the only writer
+    that buckets, and drops the entry; the files stay."""
+    tag = fixture_key(sf_dir)
     names = []
     for suffix, src, key in _LAYOUT:
         name = f"fxb_{suffix}_{tag}"
         if not spark.catalog.tableExists(name):
-            (
-                table(spark, sf_dir, src)
-                .write.mode("overwrite")
-                .format("parquet")
-                .option("path", os.path.join(base, name))
-                .bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .saveAsTable(name)
+            df = table(spark, sf_dir, src)
+
+            def build(tmp: str) -> None:
+                (
+                    df.write.mode("overwrite")
+                    .format("parquet")
+                    .option("path", tmp)
+                    .bucketBy(N_BUCKETS, key)
+                    .sortBy(key)
+                    .saveAsTable(f"{name}_build")
+                )
+                spark.sql(f"DROP TABLE {name}_build")
+
+            path = stage_fixture(sf_dir, f"bucketed_{suffix}", build)
+            spark.sql(
+                f"CREATE TABLE {name} ({df.schema.toDDL()}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS "
+                f"LOCATION '{path}'"
             )
         names.append(name)
     return names[0], names[1]

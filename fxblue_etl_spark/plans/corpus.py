@@ -249,11 +249,7 @@ def training_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split is 3-valued — bounded cardinality, the partition rule from
     `io.write_partitioned`); the certify pass reads only the shard
     columns it aggregates."""
-    import hashlib as _hashlib
-    import os as _os
-    import tempfile as _tempfile
-
-    from ..io import table
+    from ..io import stage_fixture, table
     from ..operators.corpusops import TRAIN_PCT, VAL_PCT, _hash_bucket
     from ..operators.textops import ws_tokens
 
@@ -266,14 +262,9 @@ def training_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("test"))
     )
     shards = d.select("doc_id", "lang", "text", split.alias("split"))
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = _os.path.join(
-        _tempfile.gettempdir(), f"fxblue_sink_{tag}", "training_shards"
-    )
-    from ..io import stage_once
-
-    stage_once(
-        path,
+    path = stage_fixture(
+        sf_dir,
+        "training_shards",
         lambda tmp: shards.write.partitionBy("split")
         .mode("overwrite")
         .parquet(tmp),

@@ -18,14 +18,12 @@ PartitionFilters line carries the predicate instead of row-level IO.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import stage_once, table, write_partitioned
+from ..io import stage_fixture, table, write_partitioned
 from ..session import tune
 
 #: the partition predicate certified by the round-trip
@@ -36,9 +34,11 @@ def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → partitioned parquet sink → pruned scan → summary."""
     tune(spark)
     o = table(spark, sf_dir, "orders")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_by_priority")
-    write_partitioned(o, path, ["o_orderpriority"])
+    path = stage_fixture(
+        sf_dir,
+        "orders_by_priority",
+        lambda tmp: write_partitioned(o, tmp, ["o_orderpriority"]),
+    )
 
     back = spark.read.parquet(path).filter(
         F.col("o_orderpriority").isin(*KEPT_PRIORITIES)
@@ -64,15 +64,15 @@ GROUP BY 1, 2
 
 
 def _monthly_layout(spark: SparkSession, sf_dir: str) -> str:
-    """orders written hive-partitioned by order month (idempotent per
-    sf_dir; the layout a date-bounded fact sink would use at scale)."""
+    """orders written hive-partitioned by order month (staged once per
+    fixture; the layout a date-bounded fact sink would use at scale)."""
     o = table(spark, sf_dir, "orders").withColumn(
         "order_month", F.date_format("o_orderdate", "yyyy-MM")
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_by_month")
-    return stage_once(
-        path, lambda tmp: write_partitioned(o, tmp, ["order_month"])
+    return stage_fixture(
+        sf_dir,
+        "orders_by_month",
+        lambda tmp: write_partitioned(o, tmp, ["order_month"]),
     )
 
 
@@ -131,9 +131,9 @@ def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "lineitem_orc")
-    stage_once(path, lambda tmp: li.write.mode("overwrite").orc(tmp))
+    path = stage_fixture(
+        sf_dir, "lineitem_orc", lambda tmp: li.write.mode("overwrite").orc(tmp)
+    )
     back = spark.read.orc(path).filter(F.col("l_quantity") > 10)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_items"),
@@ -182,20 +182,18 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     o = table(spark, sf_dir, "orders")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}")
-    frag = os.path.join(base, "orders_frag")
-    compact = os.path.join(base, "orders_compact")
     # two atomic stages: frag publishes complete before compact reads
     # it, and each dir flips into place in one rename
-    stage_once(
-        frag,
+    frag = stage_fixture(
+        sf_dir,
+        "orders_frag",
         lambda tmp: o.repartition(FRAG_FILES)
         .write.mode("overwrite")
         .parquet(tmp),
     )
-    stage_once(
-        compact,
+    compact = stage_fixture(
+        sf_dir,
+        "orders_compact",
         lambda tmp: spark.read.parquet(frag)
         .repartitionByRange(COMPACT_FILES, "o_orderdate")
         .write.mode("overwrite")
@@ -205,8 +203,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash the INVARIANT, not the exact file counts: repartitionByRange
     # writes no file for an empty range partition, so compact-side
     # count is <= COMPACT_FILES (not ==) across fixtures/scales. The
-    # counts come from the directory listing at call time (the query
-    # functions rebuild per invocation, so no stale-literal hazard).
+    # counts come from the listing of this fixture's staged dirs at
+    # call time, so no stale-literal hazard.
     n_frag, n_compact = _parquet_files(frag), _parquet_files(compact)
     compacted_ok = n_frag > n_compact and 1 <= n_compact <= COMPACT_FILES
     return back.agg(
@@ -376,15 +374,9 @@ def compaction_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the execute pass is one manifest-broadcast join +
     a task-keyed repartition write (COMPACT_TASKS writers); the
     certify pass reads back only the columns it aggregates."""
-    from ..io import stage_once
-
     tune(spark)
     asg = _compaction_assignment(spark, sf_dir)
     plan = compaction_tier_plan(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(
-        tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_tier_exec"
-    )
     fact = spark.read.parquet(_monthly_layout(spark, sf_dir))
     ym = (
         F.substring("order_month", 1, 4).cast("long") * 100
@@ -400,8 +392,9 @@ def compaction_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "ym",
     )
-    stage_once(
-        path,
+    path = stage_fixture(
+        sf_dir,
+        "orders_tier_exec",
         lambda tmp: tagged.repartition(COMPACT_TASKS, "task_id")
         .write.partitionBy("task_id")
         .mode("overwrite")
@@ -490,10 +483,9 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "customer_csv")
-    stage_once(
-        path,
+    path = stage_fixture(
+        sf_dir,
+        "customer_csv",
         lambda tmp: c.write.mode("overwrite")
         .option("header", "true")
         .csv(tmp),
@@ -611,8 +603,6 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the option itself; the certified semantics are identical."""
     tune(spark)
     o = table(spark, sf_dir, "orders")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_evo")
     old = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     new = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -622,7 +612,7 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         old.write.mode("overwrite").parquet(os.path.join(tmp, "batch=1"))
         new.write.mode("overwrite").parquet(os.path.join(tmp, "batch=2"))
 
-    stage_once(base, build)
+    base = stage_fixture(sf_dir, "orders_evo", build)
     back = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(base, "batch=1"), os.path.join(base, "batch=2")
     )
@@ -664,28 +654,27 @@ def corrupt_file_tolerant_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corruption tolerance is per-split, so one bad file never
     fails the 100 TB scan; the skipped-file count surfaces via the
     row-count delta a DQ gate would alarm on."""
-    import os
     import shutil
 
-    from ..io import table
-
     tune(spark)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/corrupt_read_{tag}"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    for i in range(3):
-        part = f"{out_dir}/stage_{i}"
-        d.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(part)
-        (src,) = [
-            f for f in os.listdir(part) if f.startswith("part-") and f.endswith(".parquet")
-        ]
-        shutil.copyfile(os.path.join(part, src), f"{out_dir}/good-{i}.parquet")
-        shutil.rmtree(part)
-    with open(f"{out_dir}/bad-trunc.parquet", "wb") as fh:
-        fh.write(b"PAR1 this is not a parquet footer")
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        for i in range(3):
+            part = f"{tmp}/stage_{i}"
+            d.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(part)
+            (src,) = [
+                f
+                for f in os.listdir(part)
+                if f.startswith("part-") and f.endswith(".parquet")
+            ]
+            shutil.copyfile(os.path.join(part, src), f"{tmp}/good-{i}.parquet")
+            shutil.rmtree(part)
+        with open(f"{tmp}/bad-trunc.parquet", "wb") as fh:
+            fh.write(b"PAR1 this is not a parquet footer")
+
+    out_dir = stage_fixture(sf_dir, "corrupt_read", build)
 
     # per-read OPTION, not a session conf: the returned frame is lazy,
     # so a conf set-then-restore here would be unwound before the

@@ -17,14 +17,10 @@ parallelizes by HDFS block exactly like any other line format.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import stage_once, table
+from ..io import stage_fixture, table
 from ..session import tune
 
 #: the staged layout: (column, start [1-based], width, spark type)
@@ -57,12 +53,9 @@ def read_fwf(
 
 
 def _stage_fwf(spark: SparkSession, sf_dir: str) -> str:
-    """orders rendered as a fixed-width file (idempotent per sf_dir):
+    """orders rendered as a fixed-width file (staged once per fixture):
     integers right-padded into their slots with lpad, exactly the
     layout FWF_SPEC reads back."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_fwf")
-
     def build(tmp: str) -> None:
         o = table(spark, sf_dir, "orders")
         line = F.concat(
@@ -80,7 +73,7 @@ def _stage_fwf(spark: SparkSession, sf_dir: str) -> str:
         )
         o.select(line.alias("value")).write.mode("overwrite").text(tmp)
 
-    return stage_once(path, build)
+    return stage_fixture(sf_dir, "orders_fwf", build)
 
 
 def fwf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

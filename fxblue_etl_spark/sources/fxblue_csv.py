@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import table
+from ..io import stage_fixture, table
 from ..session import tune
 from ..operators import cleaning as C
 
@@ -238,50 +238,46 @@ def ingest_fxblue_dir(spark: SparkSession, path_glob: str) -> DataFrame:
 
 # ── deterministic CSV fixture generation (for the oracle query) ──────────
 
-def materialize_fixture_csvs(sf_dir: str, out_dir: str) -> str:
-    """Write FXBlue-shaped CSVs derived from the orders parquet: one
-    file per (o_custkey % 8) with a title row, plus one file missing a
-    required column (must be gate-skipped). Idempotent per sf_dir."""
+def materialize_fixture_csvs(sf_dir: str) -> str:
+    """Stage FXBlue-shaped CSVs derived from the orders parquet: one
+    file per (o_orderkey % 8) with a title row, plus one file missing
+    a required column (must be gate-skipped). Built once per fixture
+    (``io.stage_fixture``); returns the directory."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    marker = os.path.join(out_dir, "_done")
-    if os.path.exists(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    orders = pq.read_table(os.path.join(sf_dir, "orders.parquet")).to_pandas()
-    orders["acct"] = orders["o_orderkey"] % 8
-    for acct, grp in orders.groupby("acct"):
-        rows = pd.DataFrame(
-            {
-                "Ticket": grp["o_orderkey"],
-                "Symbol": "EURUSD",
-                "Buy/sell": grp["o_orderstatus"].map({"O": "Buy"}).fillna("Sell"),
-                "Open price": (grp["o_orderkey"] % 1000).astype(str),
-                "Close price": (grp["o_orderkey"] % 997).astype(str),
-                "Open time": grp["o_orderdate"].dt.strftime("%Y-%m-%d %H:%M:%S"),
-                "Lots": (grp["o_orderkey"] % 10).astype(str),
-                "Profit": grp["o_totalprice"].map("{:.2f}".format),
-            }
-        ).sort_values("Ticket")
-        path = os.path.join(out_dir, f"acct_{acct}.csv")
-        with open(path, "w") as f:
-            f.write("FXBlue trade history export\n")
-            rows.to_csv(f, index=False)
-    # a file failing the F1 gate: no 'Open time' column
-    with open(os.path.join(out_dir, "acct_bad.csv"), "w") as f:
-        f.write("FXBlue trade history export\nTicket,Symbol\n1,EURUSD\n")
-    with open(marker, "w") as f:
-        f.write("ok")
-    return out_dir
+    def build(out_dir: str) -> None:
+        os.makedirs(out_dir)
+        orders = pq.read_table(os.path.join(sf_dir, "orders.parquet")).to_pandas()
+        orders["acct"] = orders["o_orderkey"] % 8
+        for acct, grp in orders.groupby("acct"):
+            rows = pd.DataFrame(
+                {
+                    "Ticket": grp["o_orderkey"],
+                    "Symbol": "EURUSD",
+                    "Buy/sell": grp["o_orderstatus"].map({"O": "Buy"}).fillna("Sell"),
+                    "Open price": (grp["o_orderkey"] % 1000).astype(str),
+                    "Close price": (grp["o_orderkey"] % 997).astype(str),
+                    "Open time": grp["o_orderdate"].dt.strftime("%Y-%m-%d %H:%M:%S"),
+                    "Lots": (grp["o_orderkey"] % 10).astype(str),
+                    "Profit": grp["o_totalprice"].map("{:.2f}".format),
+                }
+            ).sort_values("Ticket")
+            with open(os.path.join(out_dir, f"acct_{acct}.csv"), "w") as f:
+                f.write("FXBlue trade history export\n")
+                rows.to_csv(f, index=False)
+        # a file failing the F1 gate: no 'Open time' column
+        with open(os.path.join(out_dir, "acct_bad.csv"), "w") as f:
+            f.write("FXBlue trade history export\nTicket,Symbol\n1,EURUSD\n")
+
+    return stage_fixture(sf_dir, "fxblue_csv", build)
 
 
 def s2_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end CSV ingest over real files (title-row skip, filename
     account_id, F1 gate dropping the bad file) — oracle recomputes the
     same result relationally from orders."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = materialize_fixture_csvs(sf_dir, f"/tmp/fxblue_csv_{sf_tag}")
+    out_dir = materialize_fixture_csvs(sf_dir)
     df = ingest_fxblue_dir(spark, os.path.join(out_dir, "*.csv"))
     return df.select(
         "ticket", "account_id", "symbol", "trade_type", "entry_price",
@@ -329,19 +325,16 @@ def csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference parses CSV via pandas
     (`CSV PARSER/gcp_csv.py:76`), which handles quoted newlines —
     this keeps that capability in the Spark restatement."""
-    import hashlib
-    import tempfile
-
     tune(spark)
     d = table(spark, sf_dir, "documents")
     txt = F.expr("replace(text, ' line ', concat(chr(10), 'line', chr(10)))")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_mlcsv_{tag}")
-    (
-        d.select("doc_id", "lang", txt.alias("txt"))
+    path = stage_fixture(
+        sf_dir,
+        "documents_mlcsv",
+        lambda tmp: d.select("doc_id", "lang", txt.alias("txt"))
         .write.mode("overwrite")
         .options(header=True, escape='"')
-        .csv(path)
+        .csv(tmp),
     )
     back = spark.read.options(header=True, multiLine=True, escape='"').csv(path)
     h8 = F.conv(F.substring(F.md5("txt"), 1, 8), 16, 10).cast("long")

@@ -19,15 +19,13 @@ aggregation as the good rows.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import stage_once, table
+from ..io import stage_fixture, table
 from ..session import tune
 
 #: known-bad lines planted next to the real shards
@@ -51,9 +49,6 @@ _SCHEMA = T.StructType(
 
 
 def _jsonl_layout(spark: SparkSession, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_jsonl_{tag}", "orders")
-
     def build(tmp: str) -> None:
         o = table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -67,7 +62,7 @@ def _jsonl_layout(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(tmp, "part-corrupt.json"), "w") as f:
             f.write("\n".join(CORRUPT_LINES) + "\n")
 
-    return stage_once(path, build)
+    return stage_fixture(sf_dir, "orders_jsonl", build)
 
 
 def jsonl_tolerant_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

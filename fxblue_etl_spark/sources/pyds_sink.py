@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -391,17 +392,16 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("lang"),
         F.col("props").alias("text"),
     )
-    import uuid
-
-    q = (
-        s.writeStream.format("jsonl_shards")
-        .option("path", out_dir)
-        .option("columns_json", json.dumps(["doc_id", "lang", "text"]))
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            s.writeStream.format("jsonl_shards")
+            .option("path", out_dir)
+            .option("columns_json", json.dumps(["doc_id", "lang", "text"]))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     with open(
         os.path.join(out_dir, "epoch-shard-99999-orphan.jsonl"),
         "w",

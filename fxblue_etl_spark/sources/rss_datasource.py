@@ -305,17 +305,17 @@ def _registry_parquet(spark, sf_dir: str) -> str:
     """Materialize the demo registry (distinct event users) as parquet
     via a Spark write — executor-side end to end, no driver collect.
     At scale the registry already lives in storage and this step
-    disappears; only the parquet path crosses the driver."""
-    import tempfile
-
+    disappears; only the parquet path crosses the driver.  Staged once
+    per fixture (``io.stage_fixture``)."""
     from pyspark.sql import functions as F
 
-    from ..io import table
+    from ..io import stage_fixture, table
     from ..session import tune
 
-    path = tempfile.mkdtemp(prefix="fxblue_registry_") + "/registry"
-    (
-        table(tune(spark), sf_dir, "events")
+    return stage_fixture(
+        sf_dir,
+        "registry_parquet",
+        lambda tmp: table(tune(spark), sf_dir, "events")
         .select(F.col("user_id").cast("string").alias("account_id"))
         .distinct()
         .select(
@@ -323,9 +323,8 @@ def _registry_parquet(spark, sf_dir: str) -> str:
             F.concat(F.lit("https://fxblue/feed/u"), "account_id").alias("rss_url"),
         )
         .write.mode("overwrite")
-        .parquet(path)
+        .parquet(tmp),
     )
-    return path
 
 
 def rss_datasource_scan(spark, sf_dir: str):

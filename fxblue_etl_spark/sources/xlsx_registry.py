@@ -21,10 +21,8 @@ through this path.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
-import tempfile
 import zipfile
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
@@ -32,7 +30,7 @@ from xml.sax.saxutils import escape
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import stage_fixture, table
 from ..session import tune
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
@@ -195,23 +193,20 @@ def _fixture_xlsx(spark: SparkSession, sf_dir: str) -> str:
     the reference's bucket; the certified operator is the read-back."""
     from .rss_feed import _synthetic_accounts
 
-    rows = [
-        [r["account_id"], r["account_url"], r["rss_url"], r["trade_win"], r["total_return"], r["trades_per_day"]]
-        for r in sorted(
-            _synthetic_accounts(spark, sf_dir).collect(),
-            key=lambda r: int(r["account_id"]),
-        )
-    ]
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_registry_{tag}.xlsx")
-    tmp = path + ".tmp"
-    write_xlsx(
-        tmp,
-        ["account_id", "account_url", "rss_url", "trade_win", "total_return", "trades_per_day"],
-        rows,
-    )
-    os.replace(tmp, path)
-    return path
+    cols = ["account_id", "account_url", "rss_url", "trade_win", "total_return", "trades_per_day"]
+
+    def build(tmp: str) -> None:
+        rows = [
+            [r[c] for c in cols]
+            for r in sorted(
+                _synthetic_accounts(spark, sf_dir).collect(),
+                key=lambda r: int(r["account_id"]),
+            )
+        ]
+        os.makedirs(tmp)
+        write_xlsx(os.path.join(tmp, "registry.xlsx"), cols, rows)
+
+    return os.path.join(stage_fixture(sf_dir, "registry", build), "registry.xlsx")
 
 
 def s4_xlsx_registry(spark: SparkSession, sf_dir: str) -> DataFrame:

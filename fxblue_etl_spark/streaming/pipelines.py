@@ -30,6 +30,7 @@ sink (K1/K2) on any table format.
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 import uuid
 
@@ -39,29 +40,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..io import stage_fixture
 from ..session import tune
 
+
 def _stage_table_dir(sf_dir: str, table: str) -> str:
-    """The file-stream source tracks *directories*; stage
-    ``{table}.parquet`` into one (testdata itself is read-only). The
-    staged copy is refreshed whenever the fixture's size or mtime
-    changes, so a driver-regenerated testdata set never streams stale
-    bytes."""
+    """The file-stream source tracks *directories*; stage a copy of
+    ``{table}.parquet`` into one (testdata itself is read-only).  The
+    stream ignores the staging marker: Spark skips ``_``-prefixed
+    files."""
     import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/stream_{table}_{tag}"
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    dst = os.path.join(d, f"{table}.parquet")
-    s = os.stat(src)
-    if (
-        not os.path.exists(dst)
-        or os.stat(dst).st_size != s.st_size
-        or os.stat(dst).st_mtime < s.st_mtime
-    ):
-        os.makedirs(d, exist_ok=True)
-        shutil.copyfile(src, dst)
-    return d
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        shutil.copyfile(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            os.path.join(tmp, f"{table}.parquet"),
+        )
+
+    return stage_fixture(sf_dir, f"stream_{table}", build)
 
 
 def events_stream(
@@ -109,7 +106,11 @@ def run_to_table(
     ``progress_out``, when given, receives the query's recentProgress
     dicts after termination — the state-store introspection surface
     (``stateOperators[*].numRowsTotal``) the scale-stress harness
-    asserts bounded-state contracts against."""
+    asserts bounded-state contracts against.
+
+    The sink's view is dropped once the result frame is taken: the
+    frame keeps the sink's rows, and the rows are freed with it
+    instead of living in the driver for the life of the session."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (
         stream_df.writeStream.outputMode(output_mode)
@@ -122,7 +123,9 @@ def run_to_table(
     if progress_out is not None:
         progress_out.extend(q.recentProgress)
     spark = stream_df.sparkSession
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _fold_stream(stream: DataFrame, fold, progress_out: list | None = None):
@@ -153,13 +156,14 @@ def _fold_stream(stream: DataFrame, fold, progress_out: list | None = None):
         nonlocal state
         state = fold(pin, state, batch_df)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.awaitTermination()
     if progress_out is not None:
         progress_out.extend(q.recentProgress)
     return state
@@ -1213,38 +1217,30 @@ def _stage_table_splits(
     ``order_col``-range files with ascending mtimes, so the file
     stream ingests them as ordered micro-batches (FileStreamSource
     picks files oldest mtime first; names ``part_00N`` tie-break).
-    Same freshness contract as :func:`_stage_table_dir`."""
+    The publishing rename keeps the mtimes."""
     import duckdb
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/tmp/stream_{table_name}_{tag}_x{n_splits}"
     src = os.path.join(sf_dir, f"{table_name}.parquet")
-    probe = os.path.join(d, "part_000.parquet")
-    s = os.stat(src)
-    if (
-        os.path.exists(probe)
-        and os.stat(probe).st_mtime >= s.st_mtime
-        and len(os.listdir(d)) == n_splits
-    ):
-        return d
-    import shutil
 
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    con = duckdb.connect()
-    base = time.time()
-    for i in range(n_splits):
-        dst = os.path.join(d, f"part_{i:03d}.parquet")
-        con.execute(f"""
-        COPY (SELECT * FROM (
-                SELECT *, ntile({n_splits}) OVER (ORDER BY {order_col}) AS _nt
-                FROM read_parquet('{src}'))
-              WHERE _nt = {i + 1} ORDER BY {order_col})
-        TO '{dst}' (FORMAT PARQUET)
-        """)
-        os.utime(dst, (base + i, base + i))
-    con.close()
-    return d
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        con = duckdb.connect()
+        base = time.time()
+        for i in range(n_splits):
+            dst = os.path.join(tmp, f"part_{i:03d}.parquet")
+            con.execute(f"""
+            COPY (SELECT * FROM (
+                    SELECT *, ntile({n_splits}) OVER (ORDER BY {order_col}) AS _nt
+                    FROM read_parquet('{src}'))
+                  WHERE _nt = {i + 1} ORDER BY {order_col})
+            TO '{dst}' (FORMAT PARQUET)
+            """)
+            os.utime(dst, (base + i, base + i))
+        con.close()
+
+    return stage_fixture(
+        sf_dir, f"stream_{table_name}_by_{order_col}_x{n_splits}", build
+    )
 
 
 def _dedup_gate(
@@ -2187,15 +2183,17 @@ def streaming_observed_metrics(
         .agg(F.count("*").alias("n"))
     )
     name = f"obs_{uuid.uuid4().hex[:10]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ckpt_{uuid.uuid4().hex[:12]}")
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.awaitTermination()
+    spark.catalog.dropTempView(name)
     progs = sorted(q.recentProgress, key=lambda p: p["batchId"])
     if progress_out is not None:
         progress_out.extend(progs)

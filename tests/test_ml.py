@@ -84,16 +84,17 @@ def test_sink_roundtrip_prunes_partitions(spark, sf_dir):
 
 
 def test_compaction_is_range_clustered(spark, sf_dir):
-    import hashlib
     import os
-    import tempfile
 
+    from fxblue_etl_spark.io import stage_fixture
     from fxblue_etl_spark.plans.sinks import compact_small_files
+
+    def unstaged(tmp):
+        raise AssertionError("compact_small_files did not stage orders_compact")
 
     row = compact_small_files(spark, sf_dir).collect()[0]
     assert row["compaction_ok"] is True
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_sink_{tag}", "orders_compact")
+    path = stage_fixture(sf_dir, "orders_compact", unstaged)
     spans = []
     for n in sorted(os.listdir(path)):
         if n.startswith("part-") and n.endswith(".parquet"):

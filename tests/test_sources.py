@@ -287,11 +287,9 @@ def test_csv_multiline_roundtrip_really_splits_lines(spark, sf_dir):
     newlines (more raw lines than records) and the multiLine reader
     must reassemble exactly one record per document."""
     import glob
-    import hashlib
     import os
-    import tempfile
 
-    from fxblue_etl_spark.io import table
+    from fxblue_etl_spark.io import stage_fixture, table
     from fxblue_etl_spark.sources.fxblue_csv import csv_multiline_roundtrip
 
     out = csv_multiline_roundtrip(spark, sf_dir).collect()
@@ -299,8 +297,10 @@ def test_csv_multiline_roundtrip_really_splits_lines(spark, sf_dir):
     assert sum(r["n_docs"] for r in out) == n_docs
     assert all(r["newlines_total"] > 0 for r in out)
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"fxblue_mlcsv_{tag}")
+    def unstaged(tmp):
+        raise AssertionError("csv_multiline_roundtrip did not stage its CSV")
+
+    path = stage_fixture(sf_dir, "documents_mlcsv", unstaged)
     raw_lines = 0
     n_files = 0
     for f in glob.glob(os.path.join(path, "*.csv")):
