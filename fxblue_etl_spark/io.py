@@ -9,14 +9,17 @@ scale the same call fans out one task per row-group/split.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
 import threading
 import weakref
 
 from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -39,8 +42,32 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: The confs that change what parquet schema inference returns; their
+#: values are part of a memoized schema's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: SparkSession → {(fixture_key, table, *schema conf values) →
+#: inferred StructType}.  A Python StructType holds no JVM handle, so
+#: a dropped session frees its entry; :func:`drain_all` leaves it be.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. `name` must be in TABLES.
+
+    The first scan of a table in a session infers its parquet schema
+    (one Spark job); the schema is memoized per session under
+    ``fixture_key(sf_dir)``, the table name and the values of
+    :data:`_SCHEMA_CONFS`, and later scans pass it to the reader, so
+    they start no job.  A fixture rewritten in place changes its key
+    and is inferred afresh.
 
     ``events.ts`` has shipped in two physical parquet forms across
     driver rounds — TIMESTAMP(NANOS) (surfacing as epoch-nanos long
@@ -57,11 +84,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .session import tune
 
     tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = (fixture_key(sf_dir), name, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    with _SWAP_LOCK:
+        memo = _SCHEMAS.setdefault(spark, {})
+        schema = memo.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = memo[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     if name == "events":
         from pyspark.sql import functions as F
 
-        t = dict(df.dtypes).get("ts")
+        t = dtypes.get("ts")
         if t == "bigint":
             # integer div — float division would lose precision at 1e18 nanos
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -77,7 +114,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         for c in ("o_orderdate", "l_shipdate"):
-            if dict(df.dtypes).get(c) == "bigint":
+            if dtypes.get(c) == "bigint":
                 df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 
@@ -304,7 +341,6 @@ def stage_once(path: str, build) -> str:
     is fine: the winner's dir is complete by construction, so the
     loser discards its own temp dir and returns the published path.
     """
-    import shutil
     import uuid
 
     done = os.path.join(path, "_fxblue_done")
@@ -342,6 +378,42 @@ def stage_fixture(sf_dir: str, name: str, build) -> str:
     Spark writer creates it, a Python writer makes it first."""
     root = os.path.join(tempfile.gettempdir(), f"fxblue_stage_{fixture_key(sf_dir)}")
     return stage_once(os.path.join(root, name), build)
+
+
+#: ``(pid, path)`` of this process's scratch directory, made on first
+#: use by :func:`proc_dir`.
+_PROC_DIR: tuple[int, str] | None = None
+
+
+def _remove_proc_dir(pid: int, path: str) -> None:
+    if os.getpid() == pid:  # a forked child inherits the hook, not the dir
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def proc_dir() -> str:
+    """This process's scratch directory, ``<tmp>/fxblue_proc_<pid>``:
+    files one process writes and no other process may touch (the
+    shipped package zip, the sink directories a query rewrites on
+    every call).  Made on first use, emptied of what a dead process
+    with the same pid left, and removed by one ``atexit`` hook, so a
+    process that never calls this (a Python worker) leaves nothing."""
+    global _PROC_DIR
+    with _SWAP_LOCK:
+        if _PROC_DIR is None or _PROC_DIR[0] != os.getpid():
+            path = os.path.join(tempfile.gettempdir(), f"fxblue_proc_{os.getpid()}")
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            atexit.register(_remove_proc_dir, os.getpid(), path)
+            _PROC_DIR = (os.getpid(), path)
+        return _PROC_DIR[1]
+
+
+def sink_dir(sf_dir: str, query: str) -> str:
+    """The output directory ``query`` rewrites on every call over
+    fixture ``sf_dir``: ``<proc_dir>/<query>_<fixture_key>``, so two
+    processes, or two fixtures with one basename, never delete each
+    other's output.  The caller empties it."""
+    return os.path.join(proc_dir(), f"{query}_{fixture_key(sf_dir)}")
 
 
 def write_partitioned(

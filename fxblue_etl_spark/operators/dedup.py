@@ -15,10 +15,15 @@ engine-specific seeded hashing in the oracle-checked paths):
 * **n-gram Jaccard** — blocked pairwise token-shingle Jaccard.
 
 Scale notes: every pairwise step is *blocked* (LSH band, simhash
-prefix, first-token block) so candidate generation is an equi-join on
-the block key — a hash-partitioned shuffle that AQE can skew-split —
+prefix, first-token block) so candidates come from one
+hash-partitioned shuffle on the block key that AQE can skew-split,
 followed by per-pair verification. Nothing materializes the full
-cross product. Spark's built-in `ml.feature.MinHashLSH` (JVM sketches,
+cross product. The banded detectors (MinHash-LSH, SimHash Hamming
+and ``multimodal.media_ahash_neardup``) share one primitive,
+:func:`_first_band_pairs`: each bucket explodes its member pairs
+locally, and a pair is kept only in the first band its two documents
+share, so it is emitted once and no dedup shuffle follows. Spark's
+built-in `ml.feature.MinHashLSH` (JVM sketches,
 `approxSimilarityJoin`) is checked for recall by
 `minhash_lsh_containment`.
 """
@@ -188,50 +193,107 @@ def _minhasher(perm_a: list, perm_b: list):
 
 
 _BAND_ROWS_SCHEMA = (
-    "doc_id bigint, shingles array<string>, band_idx int, band_sig string"
+    "doc_id bigint, shingles array<string>, band_sigs array<string>"
 )
 
 
 def _band_rows_arrow_fn(batches):
     """``mapInPandas`` worker for :func:`minhash_band_rows`: the
     normalize → shingle → md5 → universal-hash-min → band-sig chain
-    in numpy/hashlib.  Defined at module level so cloudpickle ships a
-    module reference, not a closure."""
+    in numpy/hashlib, one ``(doc_id, shingles, band_sigs)`` row per
+    document.  Defined at module level so cloudpickle ships a module
+    reference, not a closure."""
     import hashlib
 
     minhash = _minhasher(PERM_A, PERM_B)
 
     def bands(_toks, sh):
-        sig = minhash(sh).tolist()
-        for b in range(N_PERM // BAND_ROWS):
-            band = "|".join(map(str, sig[b * BAND_ROWS : (b + 1) * BAND_ROWS]))
-            yield sh, b, hashlib.md5(band.encode()).hexdigest()
+        sig = list(map(str, minhash(sh).tolist()))
+        yield sh, [
+            hashlib.md5("|".join(sig[b : b + BAND_ROWS]).encode()).hexdigest()
+            for b in range(0, N_PERM, BAND_ROWS)
+        ]
 
-    return _doc_rows(
-        batches, 3, ("shingles", "band_idx", "band_sig"), bands
+    return _doc_rows(batches, 3, ("shingles", "band_sigs"), bands)
+
+
+def _minhash_doc_rows(docs: DataFrame) -> DataFrame:
+    """``(doc_id, shingles, band_sigs)``: each document of ``docs``
+    with at least 3 tokens, its distinct shingles and its
+    ``N_PERM // BAND_ROWS`` band signatures in band order."""
+    return docs.select("doc_id", "text").mapInPandas(
+        _band_rows_arrow_fn, _BAND_ROWS_SCHEMA
     )
 
 
 def minhash_band_rows(docs: DataFrame) -> DataFrame:
     """The banded-LSH index rows of ``docs`` (needs ``doc_id``,
     ``text``): one ``(doc_id, shingles, band_idx, band_sig)`` row per
-    band — the shared primitive behind batch candidate pairing
-    (:func:`lsh_candidate_pairs`), the corpus composites, and the
+    band — the shared primitive behind the corpus band index and the
     streaming near-dup gates.  Row-local, so the same code path runs
     unchanged on a streaming frame.
 
     An Arrow-batched ``mapInPandas`` (numpy universal hashes +
-    hashlib md5): round 7 measured it ~45% faster than the JVM
-    higher-order-function fold at sf0.1 (HOF warm 1.47-1.62s vs
-    Arrow 0.78-0.94s) — the fold is interpreted expression-tree
-    evaluation per shingle×permutation, hashlib+numpy batch the same
-    math through C.  That fold stays as the parity reference
-    :func:`minhash_band_rows_hof`.  At 100 TB this is an
+    hashlib md5) emits one row per document, which ``posexplode``
+    turns into its band rows: round 7 measured the kernel ~45% faster
+    than the JVM higher-order-function fold at sf0.1 (HOF warm
+    1.47-1.62s vs Arrow 0.78-0.94s) — the fold is interpreted
+    expression-tree evaluation per shingle×permutation, hashlib+numpy
+    batch the same math through C.  That fold stays as the parity
+    reference :func:`minhash_band_rows_hof`.  At 100 TB this is an
     embarrassingly parallel scan stage with no exchange before the
     band-bucket shuffle; the kernel adds a Python worker per core,
     the standard posture for LLM-corpus pipelines."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _band_rows_arrow_fn, _BAND_ROWS_SCHEMA
+    return _minhash_doc_rows(docs).selectExpr(
+        "doc_id", "shingles", "posexplode(band_sigs) AS (band_idx, band_sig)"
+    )
+
+
+def _first_band_pairs(rows: DataFrame, band_keys, member_cols) -> DataFrame:
+    """Every pair of documents in ``rows`` that agree on at least one
+    band key, each pair exactly once: ``(a, b)``, two structs of
+    ``member_cols`` (``doc_id`` among them) with ``a.doc_id <
+    b.doc_id``.
+
+    ``rows`` holds one row per document; ``band_keys(m)`` lists the
+    band keys in band order as SQL text over the columns of ``m``
+    (``""`` for a row, ``"a."``/``"b."`` for a pair's members, so
+    ``member_cols`` must cover what the keys read).  Each row is
+    exploded to its ``(band_idx, band_key)`` buckets, which shuffle
+    once; each bucket collects its members and explodes its pairs
+    locally.  A pair that shares several bands meets in each of their
+    buckets, and is kept only in the first: no band before
+    ``band_idx`` may hold equal keys for both members.  So no pair
+    repeats and no dedup shuffle follows.
+
+    Pair generation is bucket-grouped, not a self-join: a band-table
+    self-join computes the row lineage twice (Spark does not reuse the
+    exchange across the join's two sides) and, at scale, either
+    broadcasts the full band table or shuffles the payload on BOTH
+    sides; here the payload crosses the wire exactly once.  Per-bucket
+    memory is O(|bucket| · payload) — the same row set a shuffled join
+    would gather in one partition for a skewed band key.  Shuffle cost
+    is O(docs × bands) on the bucket key — never the all-pairs
+    product."""
+    keys = band_keys("")
+    earlier = [
+        f"(band_idx <= {j} OR NOT ({ka} <=> {kb}))"
+        for j, (ka, kb) in enumerate(zip(band_keys("a."), band_keys("b.")))
+    ][:-1]
+    buckets = (
+        rows.selectExpr(
+            f"struct({', '.join(member_cols)}) AS m",
+            f"posexplode(array({', '.join(keys)})) AS (band_idx, band_key)",
+        )
+        .groupBy("band_idx", "band_key")
+        .agg(F.collect_list("m").alias("members"))
+        .filter(F.size("members") >= 2)
+    )
+    return (
+        buckets.selectExpr("band_idx", "explode(members) AS a", "members")
+        .selectExpr("band_idx", "a", "explode(members) AS b")
+        .filter(" AND ".join(["a.doc_id < b.doc_id", *earlier]))
+        .select("a", "b")
     )
 
 
@@ -309,49 +371,27 @@ def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     containment, …).
 
     Bands of BAND_ROWS minhashes are hashed to a band signature;
-    pairs sharing any (band_idx, band_sig) bucket are candidates;
-    each candidate pair is verified with exact shingle Jaccard.
-
-    Pair generation is bucket-grouped, not a self-join: band rows
-    hash-shuffle ONCE on (band_idx, band_sig), each bucket collects
-    its members, and within-bucket pairs explode locally.  A
-    band-table self-join computes the whole tokenize→minhash→band
-    lineage twice (Spark does not reuse the exchange across the
-    join's two sides — measured A/B at sf0.1: 1.94s → 1.49s) and, at
-    scale, either broadcasts the full band table or shuffles the
-    shingle payload on BOTH sides; here the payload crosses the wire
-    exactly once.  Per-bucket memory is O(|bucket| · shingles) — the
-    same row set a shuffled join would gather in one partition for a
-    skewed band key, so the grouped shape adds no new skew exposure;
-    bucket sizes are bounded by the LSH collision statistics (a
-    mega-bucket means near-identical boilerplate, which upstream
-    exact-dedup already collapses in the composite pipelines).
-    Shuffle cost is O(docs × bands) on the band-bucket key — never
-    the all-pairs product.
+    pairs sharing any (band_idx, band_sig) bucket are candidates,
+    each emitted once, from the first band the two documents share
+    (:func:`_first_band_pairs`): the kernel's per-document rows carry
+    every band signature, so no dedup shuffle follows the bucket
+    grouping.
 
     Documents with fewer than 3 tokens cannot form a 3-word shingle
     and are excluded up front (otherwise partial shingles pair every
     short doc with every other — and NULL-handling of the partial
     concat differs between engines).
     """
-    bands = minhash_band_rows(docs)
-
-    buckets = (
-        bands.groupBy("band_idx", "band_sig")
-        .agg(F.collect_list(F.struct("doc_id", "shingles")).alias("members"))
-        .filter(F.size("members") >= 2)
+    pairs = _first_band_pairs(
+        _minhash_doc_rows(docs),
+        lambda m: [f"{m}band_sigs[{b}]" for b in range(N_PERM // BAND_ROWS)],
+        ("doc_id", "shingles", "band_sigs"),
     )
-    m = buckets.select(F.explode("members").alias("a"), "members")
-    return (
-        m.select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    return pairs.selectExpr(
+        "a.doc_id AS doc_a",
+        "b.doc_id AS doc_b",
+        "a.shingles AS sh_a",
+        "b.shingles AS sh_b",
     )
 
 
@@ -1919,6 +1959,15 @@ def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _simham_band_keys(m: str) -> list[str]:
+    """The SIMHAM_BANDS 16-bit band keys of ``{m}lo`` and ``{m}hi``
+    as SQL text: the low and high halves of each word."""
+    return [
+        f"({m}{'lo' if i < 2 else 'hi'} DIV {65536 ** (i % 2)}) % 65536"
+        for i in range(SIMHAM_BANDS)
+    ]
+
+
 def simhash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document near-dup pairs by SimHash Hamming distance — the
     signature-level TEXT sibling of ``media_ahash_neardup`` (same
@@ -1938,56 +1987,16 @@ def simhash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift — production dedup stacks run both.
 
     Scale shape: signatures are one row-local fold per doc (no
-    shuffle), candidates come from the band-bucket equi-join (never
-    all-pairs), verification is two bit_counts per candidate."""
-    from ..io import swap_cache
-
-    sh = swap_cache("dedup.simham_sigs", _simhash64_sigs(spark, sf_dir))
-    bands = sh.select(
-        "doc_id",
-        "lo",
-        "hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.expr(
-                            f"({'lo' if i < 2 else 'hi'}"
-                            f" DIV {65536 ** (i % 2)}) % 65536"
-                        ).alias("band_val"),
-                    )
-                    for i in range(SIMHAM_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "lo", "hi", "b.band_idx", "b.band_val")
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lo").alias("la"),
-        F.col("hi").alias("qa"),
-        "band_idx",
-        "band_val",
+    shuffle), read once; candidates come from the band buckets, each
+    pair once from the first band it shares (:func:`_first_band_pairs`,
+    never all-pairs); verification is two bit_counts per candidate."""
+    pairs = _first_band_pairs(
+        _simhash64_sigs(spark, sf_dir), _simham_band_keys, ("doc_id", "lo", "hi")
     )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lo").alias("lb"),
-        F.col("hi").alias("qb"),
-        "band_idx",
-        "band_val",
-    )
-    cand = (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "la", "qa", "lb", "qb")
-        .distinct()
-    )
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        F.expr(
-            "CAST(bit_count(la ^ lb) + bit_count(qa ^ qb) AS INT)"
-        ).alias("hamming"),
+    return pairs.selectExpr(
+        "a.doc_id AS doc_a",
+        "b.doc_id AS doc_b",
+        "CAST(bit_count(a.lo ^ b.lo) + bit_count(a.hi ^ b.hi) AS INT) AS hamming",
     ).filter(F.col("hamming") <= SIMHAM_T)
 
 
@@ -2058,7 +2067,7 @@ def prefix_filter_jaccard_pairs(
 ) -> DataFrame:
     """Exact similarity join by PREFIX FILTERING (PPJoin family,
     Xiao et al., WWW 2008) — the third blocking strategy next to the
-    banded-LSH equi-join (`minhash_lsh_pairs`, probabilistic) and the
+    banded-LSH buckets (`minhash_lsh_pairs`, probabilistic) and the
     sorted neighborhood (`snm_sorted_neighborhood_pairs`, heuristic):
     unlike both, the prefix filter is LOSSLESS at its threshold — a
     pair with Jaccard ≥ t MUST share at least one token in either

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..io import fan_out, table
 from ..session import tune
+from .dedup import _first_band_pairs
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, payload_sha string, "
@@ -323,31 +324,32 @@ def _ahash_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         yield pd.DataFrame(out, columns=["doc_id", "ahash"])
 
 
-def ahash_band_rows(docs: DataFrame) -> DataFrame:
-    """``(doc_id, ahash, band_idx, band_val)`` rows for eligible docs
-    (payload ≥ AHASH_SEGS bytes) — the banded index/probe unit shared
-    by the batch near-dup query and the streaming ingest gate.  The
-    kernel reduces each payload to one 8-byte hash on the scan
-    partition; only these narrow band rows ever shuffle."""
+def _ahash_band_keys(m: str) -> list[str]:
+    """The AHASH_BANDS 8-bit band keys of ``{m}ahash`` as SQL text."""
+    return [f"shiftright({m}ahash, {8 * b}) & 255" for b in range(AHASH_BANDS)]
+
+
+def _ahash_rows(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ahash)`` for eligible docs (payload ≥ AHASH_SEGS
+    bytes): the kernel reduces each payload to one 8-byte hash on the
+    scan partition."""
     payloads = with_binary_payload(docs).filter(
         F.col("media_meta.n_bytes") >= AHASH_SEGS
     )
-    hashes = payloads.select("doc_id", "payload").mapInPandas(
+    return payloads.select("doc_id", "payload").mapInPandas(
         _ahash_batches, "doc_id long, ahash long"
     )
-    return hashes.select(
+
+
+def ahash_band_rows(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ahash, band_idx, band_val)`` rows for eligible docs
+    — the banded index/probe unit of the streaming ingest gate.  Only
+    these narrow band rows ever shuffle."""
+    return _ahash_rows(docs).selectExpr(
         "doc_id",
         "ahash",
-        F.explode(
-            F.array(*[F.lit(b) for b in range(AHASH_BANDS)])
-        ).alias("band_idx"),
-    ).select(
-        "doc_id",
-        "ahash",
-        "band_idx",
-        F.expr("(ahash >> CAST(8 * band_idx AS INT)) & 255").alias(
-            "band_val"
-        ),
+        f"posexplode(array({', '.join(_ahash_band_keys(''))}))"
+        " AS (band_idx, band_val)",
     )
 
 
@@ -361,35 +363,22 @@ def media_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: payloads never shuffle — the kernel reduces each to
     one 8-byte hash, and only (doc_id, ahash) rows move; candidates
-    come from the band-bucket equi-join (the minhash-LSH shape, never
+    come from the band buckets, each pair once from the first band it
+    shares (``dedup._first_band_pairs``, the minhash-LSH shape, never
     all-pairs), and the pigeonhole bound makes the banding LOSSLESS
     at radius 3, so this is exact near-dup, not approximate.  Docs
     shorter than the segment count are excluded identically in both
     engines (no stable signature below one byte per segment).
     """
-    bands = ahash_band_rows(table(tune(spark), sf_dir, "documents"))
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ahash").alias("ha"),
-        "band_idx",
-        "band_val",
+    pairs = _first_band_pairs(
+        _ahash_rows(table(tune(spark), sf_dir, "documents")),
+        _ahash_band_keys,
+        ("doc_id", "ahash"),
     )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ahash").alias("hb"),
-        "band_idx",
-        "band_val",
-    )
-    cand = (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ha", "hb")
-        .distinct()
-    )
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        F.expr("CAST(bit_count(ha ^ hb) AS INT)").alias("hamming"),
+    return pairs.selectExpr(
+        "a.doc_id AS doc_a",
+        "b.doc_id AS doc_b",
+        "CAST(bit_count(a.ahash ^ b.ahash) AS INT) AS hamming",
     ).filter(F.col("hamming") <= AHASH_HAM_T)
 
 

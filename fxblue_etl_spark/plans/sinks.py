@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import stage_fixture, table, write_partitioned
+from ..io import sink_dir, stage_fixture, table, write_partitioned
 from ..session import tune
 
 #: the partition predicate certified by the round-trip
@@ -541,8 +541,7 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date(F.date_trunc("day", "ts")).alias("day"),
         F.floor(F.col("value") * 1e4).cast("long").alias("value_e4"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = f"/tmp/dpo_backfill_{tag}"
+    out = sink_dir(sf_dir, "dynamic_partition_backfill")
     shutil.rmtree(out, ignore_errors=True)
     e.write.partitionBy("day").mode("overwrite").parquet(out)
 

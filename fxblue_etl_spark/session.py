@@ -23,17 +23,17 @@ count) on a real cluster.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-#: process-local memo: zip built once per python process (never
-#: reused across processes — a stale zip would shadow newer package
-#: code in the workers, since module-level functions are pickled by
-#: qualified name), shipped once per SparkContext application id
+#: process-local memo: zip built once per python process into its
+#: ``io.proc_dir`` (never reused across processes — a stale zip would
+#: shadow newer package code in the workers, since module-level
+#: functions are pickled by qualified name) and removed with it at
+#: exit; shipped once per SparkContext application id
 _PYFILES_ZIP: str | None = None
 _PYFILES_SENT: set[str] = set()
 
@@ -55,11 +55,10 @@ def _ship_package(spark: SparkSession) -> None:
     if app_id in _PYFILES_SENT:
         return
     if _PYFILES_ZIP is None or not os.path.exists(_PYFILES_ZIP):
+        from .io import proc_dir
+
         pkg_dir = Path(__file__).resolve().parent
-        fd, zpath = tempfile.mkstemp(
-            prefix="fxblue_etl_spark_", suffix=".zip"
-        )
-        os.close(fd)
+        zpath = os.path.join(proc_dir(), f"{pkg_dir.name}.zip")
         with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
             for py in sorted(pkg_dir.rglob("*.py")):
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")

@@ -151,15 +151,14 @@ def pyds_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     total chars, and an order-insensitive md5-based content sum."""
     import shutil
 
-    from ..io import table
+    from ..io import sink_dir, table
     from ..operators.dedup import _hex8_sql  # noqa: F401  (oracle twin below)
     from ..session import tune
 
     tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/pyds_jsonl_{tag}"
+    out_dir = sink_dir(sf_dir, "pyds_jsonl_sink_roundtrip")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -240,14 +239,13 @@ def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     would ingest the orphan and fail the hash."""
     import shutil
 
-    from ..io import table
+    from ..io import sink_dir, table
     from ..session import tune
 
     tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/pyds_manifest_{tag}"
+    out_dir = sink_dir(sf_dir, "pyds_manifest_reader_roundtrip")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -377,14 +375,14 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataSource surface (reader/writer × batch/streaming)."""
     import shutil
 
+    from ..io import sink_dir
     from ..session import tune
     from ..streaming.pipelines import events_stream
 
     tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/pyds_stream_{tag}"
+    out_dir = sink_dir(sf_dir, "pyds_stream_sink_roundtrip")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     s = events_stream(spark, sf_dir).select(

@@ -14,11 +14,12 @@ import pytest
 from fxblue_etl_spark.io import fan_out, table
 from fxblue_etl_spark.operators import dedup
 
-#: (kernel, output schema, JVM reference, input columns)
+#: (kernel, output schema, JVM reference, input columns); a kernel
+#: without a schema is the operator that runs it, called on the docs
 KERNELS = {
     "band_rows": (
-        dedup._band_rows_arrow_fn,
-        dedup._BAND_ROWS_SCHEMA,
+        dedup.minhash_band_rows,
+        None,
         dedup.minhash_band_rows_hof,
         ("doc_id", "text"),
     ),
@@ -114,7 +115,11 @@ def _canon(df):
 
 def _both(docs, case):
     kernel, schema, reference, cols = KERNELS[case]
-    arrow = docs.select(*cols).mapInPandas(kernel, schema)
+    arrow = (
+        kernel(docs.select(*cols))
+        if schema is None
+        else docs.select(*cols).mapInPandas(kernel, schema)
+    )
     return _canon(arrow), _canon(reference(docs))
 
 

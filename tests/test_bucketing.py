@@ -30,14 +30,14 @@ def test_dynamic_backfill_touches_only_target_partition(spark, sf_dir):
     directory: other partitions keep their original file mtimes."""
     import os
 
+    from fxblue_etl_spark.io import sink_dir
     from fxblue_etl_spark.plans.sinks import (
         BACKFILL_DAY,
         dynamic_partition_backfill,
     )
 
     dynamic_partition_backfill(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = f"/tmp/dpo_backfill_{tag}"
+    out = sink_dir(sf_dir, "dynamic_partition_backfill")
     days = [d for d in os.listdir(out) if d.startswith("day=")]
     assert f"day={BACKFILL_DAY}" in days
     assert len(days) > 1

@@ -105,6 +105,7 @@ def test_pyds_sink_manifest_and_shards(spark, sf_dir):
     import json
     import os
 
+    from fxblue_etl_spark.io import sink_dir
     from fxblue_etl_spark.sources.pyds_sink import (
         N_SHARDS,
         pyds_jsonl_sink_roundtrip,
@@ -114,8 +115,7 @@ def test_pyds_sink_manifest_and_shards(spark, sf_dir):
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert row["n_rows"] == row["n_docs"] == n_docs
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/pyds_jsonl_{tag}"
+    out_dir = sink_dir(sf_dir, "pyds_jsonl_sink_roundtrip")
     with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
         manifest = json.load(fh)
     assert manifest["n_rows"] == n_docs

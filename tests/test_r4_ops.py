@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fxblue_etl_spark.io import table
+from fxblue_etl_spark.io import sink_dir, table
 from fxblue_etl_spark.operators.corpusops import dsir_importance_stats
 from fxblue_etl_spark.operators.graph import (
     DECON_J,
@@ -132,8 +132,7 @@ def test_manifest_reader_ignores_orphan_shards(spark, sf_dir):
     n_docs = table(spark, sf_dir, "documents").count()
     assert out["n_rows"] == n_docs
     assert out["n_docs"] == n_docs
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/pyds_manifest_{tag}"
+    out_dir = sink_dir(sf_dir, "pyds_manifest_reader_roundtrip")
     assert os.path.exists(os.path.join(out_dir, "shard-99999.jsonl"))
     naive = (
         spark.read.schema("doc_id long, lang string, text string")
