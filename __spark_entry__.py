@@ -17,10 +17,18 @@ beside this file (a row counts only if ``hash_match`` is true): the
 flagship, then every oracle-backed query never certified, then the
 rest stalest first (last certified round ascending, ties in
 registration order).
+
+A driver's session enters the engine here, so ``entry`` and every
+``queries()`` callable pass it through
+:func:`fxblue_etl_spark.session.tune` first, pinning UTC and non-ANSI
+casts on whatever session the driver hands in.  The operator and plan
+modules never tune; a caller that uses them directly brings a session
+built by ``get_spark`` or passed through ``tune``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from collections.abc import Callable
 from pathlib import Path
@@ -72,12 +80,13 @@ from fxblue_etl_spark.sources import (
     rss_feed,
     xlsx_registry,
 )
+from fxblue_etl_spark.session import tune
 from fxblue_etl_spark.streaming import pipelines
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return relational.flagship_account_pnl(spark, "/root/testdata/sf0.001")
+    return relational.flagship_account_pnl(tune(spark), "/root/testdata/sf0.001")
 
 
 _MODULES = [
@@ -148,11 +157,23 @@ def certification_order(ledger_dir: Path = _HERE) -> list[str]:
     return [_FLAGSHIP, *keys]
 
 
+def _tuned(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``fn`` under its own name, run on the session after ``tune``."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(tune(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-    return {k: merged[k] for k in certification_order()}
+    return {k: _tuned(merged[k]) for k in certification_order()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -8,7 +8,7 @@ Spark DataFrame / SQL plans, and adds the LLM-data-pipeline operators
 north-star mandates — all designed for cluster scale.
 
 Layout:
-  session.py            SparkSession builder + per-query conf guard
+  session.py            SparkSession builder + session conf guard
   io.py                 fixture/table loaders
   operators/cleaning.py scalar transforms T1-T8, P1-P5, F2-F4 (SURVEY §2.3-2.5)
   operators/merge.py    keyed upsert/merge K1-K3, D2-D3 (SURVEY §2.2, §2.6)

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..io import table
-from ..session import tune
 
 
 # ── scalar pandas_udf ────────────────────────────────────────────────────
@@ -50,7 +49,7 @@ def make_log_return():
 
 
 def pandas_udf_log_return(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     log_return = make_log_return()
     return o.select(
         "o_orderkey",
@@ -71,7 +70,7 @@ def grouped_map_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the applyInPandas shape used for per-key model fitting). The same
     semantics are a window expression — the point here is the
     machinery contract: key-partitioned shuffle, per-group pandas."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
 
     def share(pdf: pd.DataFrame) -> pd.DataFrame:
         total = pdf["o_totalprice"].sum()
@@ -117,7 +116,6 @@ def udtf_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, tok in enumerate(text.split()):
                 yield doc_id, i, tok
 
-    spark = tune(spark)
     spark.udtf.register("token_explode", TokenExplode)
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents_v")
     return spark.sql(
@@ -164,7 +162,7 @@ def arrow_udf_order_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
             return "mid"
         return "large"
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.select(tier("o_totalprice").alias("tier"), "o_totalprice")
         .groupBy("tier")
@@ -199,9 +197,8 @@ def arrow_grouped_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — fine for a catalog-bounded key like event_type; a
     high-cardinality key would use the two-level pattern instead."""
     from ..io import table
-    from ..session import tune
 
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 1e4).cast("long").alias("v_e4")
     )
 
@@ -247,7 +244,6 @@ def udtf_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
     from ..io import table
-    from ..session import tune
 
     @udtf(returnType="col_name string, n_rows long, n_nulls long")
     class NullProfile:
@@ -267,7 +263,6 @@ def udtf_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c, n_null in self.nulls.items():
                 yield c, self.n, n_null
 
-    tune(spark)
     spark.udtf.register("null_profile", NullProfile)
     table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "props"
@@ -307,7 +302,6 @@ def pandas_api_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conversion shuffle-free."""
     import pyspark.pandas as ps
 
-    tune(spark)
     ps.set_option("compute.default_index_type", "distributed")
     pdf = ps.read_parquet(f"{sf_dir}/documents.parquet")
     g = (
@@ -349,7 +343,6 @@ def sql_udf_percent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Input strings are the same integer-derived registry-style
     fixtures as ``t1``–``t4`` (float-formatted fixtures would diverge
     at the ulp between JVM and C rounding)."""
-    spark = tune(spark)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION fx_pct_to_frac(s STRING)
@@ -416,7 +409,7 @@ def map_in_arrow_char_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    d = table(tune(spark), sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def profile(batches):
         for b in batches:
@@ -483,7 +476,7 @@ def pandas_grouped_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow — fine for group-bounded aggregates like this (statuses
     are 3); for high-cardinality groups the tournament/histogram
     formulations elsewhere in the repo are the scale path."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     gini_ppm = make_gini_ppm_udf()
 
     @pandas_udf("long")

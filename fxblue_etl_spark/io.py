@@ -34,13 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimensions small enough to broadcast at any realistic scale factor
-#: (region/nation are bounded by geography; supplier/part/customer are
-#: orders-of-magnitude smaller than the fact tables).
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: The confs that change what parquet schema inference returns; their
 #: values are part of a memoized schema's key.
@@ -62,6 +55,10 @@ _SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]]" = (
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. `name` must be in TABLES.
 
+    The scan runs on ``spark`` as given: the session is expected to be
+    tuned already (built by ``session.get_spark`` or passed through
+    ``session.tune``, as ``__spark_entry__`` does for the driver's).
+
     The first scan of a table in a session infers its parquet schema
     (one Spark job); the schema is memoized per session under
     ``fixture_key(sf_dir)``, the table name and the values of
@@ -74,16 +71,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     under ``spark.sql.legacy.parquet.nanosAsLong``) and untagged
     TIMESTAMP(MICROS) (surfacing as TIMESTAMP_NTZ). Both normalize
     here to session-TZ ``TimestampType`` at microsecond precision:
-    with the session pinned to UTC (session.tune) the NTZ→LTZ cast
+    with the session pinned to UTC the NTZ→LTZ cast
     preserves the wall clock, which is exactly how the DuckDB oracle
     reads the same file (naive TIMESTAMP). Every downstream operator
     sees one ts type regardless of fixture vintage.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    from .session import tune
-
-    tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = (fixture_key(sf_dir), name, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
     with _SWAP_LOCK:
@@ -428,13 +422,3 @@ def write_partitioned(
     ingest date / account bucket, never by a high-cardinality key).
     """
     df.write.partitionBy(*partition_by).mode(mode).parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -34,7 +34,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 
 # reference formats
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"  # gcp_csv.py:105 strftime("%Y-%m-%dT%H:%M:%S")
@@ -196,28 +195,12 @@ GPT_PLACEHOLDER_COLS = {
     "gpt_impact_alignment": "string",
 }
 
-#: required-column gate F1 (`CSV PARSER/gcp_csv.py:107-119`)
-REQUIRED_TRADE_COLS = (
-    "timestamp",
-    "symbol",
-    "trade_type",
-    "entry_price",
-    "exit_price",
-    "lot_size",
-    "pnl",
-)
-
 
 # ── oracle-checked demonstration queries over the fixtures ───────────────
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
-
-
 def t1_numeric_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 on mixed valid/invalid strings built from orders."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     raw = o.selectExpr(
         "o_orderkey",
         "CASE WHEN o_orderkey % 3 = 0 THEN o_orderpriority "  # non-numeric
@@ -238,7 +221,7 @@ FROM orders
 
 def t2_timestamp_iso(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: normalize order dates to the reference's ISO-string form."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.select("o_orderkey", iso_timestamp("o_orderdate").alias("timestamp_iso"))
 
 
@@ -251,7 +234,7 @@ FROM orders
 def t3_custom_ts_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3: format order dates into the RSS feed format, parse back
     (UTC), with an injected unparseable value → NULL (F4 tolerance)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     raw = o.selectExpr(
         "o_orderkey",
         "CASE WHEN o_orderkey % 7 = 0 THEN 'not a date' "
@@ -276,7 +259,7 @@ FROM orders
 
 def t4_percent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 on registry-style strings built from customer balances."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     # integer-derived strings: printf('%.Nf') rounds HALF_UP in the JVM
     # but half-even in C/DuckDB, so float-formatted fixtures would
     # diverge at the ulp — integers are exact in both engines.
@@ -312,7 +295,7 @@ FROM src
 
 def t5_sentinel_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5: epoch close-time / '0' tp-sl / empty-string sentinels → NULL."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     raw = l.selectExpr(
         "l_orderkey",
         "l_linenumber",
@@ -355,7 +338,7 @@ FROM src
 
 def t6_string_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6/S3: account id from a storage path (basename minus .csv)."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     path = F.concat(F.lit("gs://bucket/testcsvs/acct_"), F.col("c_custkey"), F.lit(".csv"))
     return c.select(
         "c_custkey",
@@ -376,7 +359,7 @@ FROM customer
 def t7_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7+D1: md5 composite-key hash, dedup a doubled input back to one
     row per key (the reference's intra-file dedup on a re-read file)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("string").alias("account_id"),
         F.col("o_orderkey").alias("ticket"),
         F.date_format("o_orderdate", ISO_FMT).alias("timestamp"),
@@ -410,7 +393,7 @@ WHERE rn = 1
 def p1_p4_rename_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 bulk rename + P2 derived const + P4 sink projection, lineitem
     standing in for an FXBlue file (FIXTURES.md role mapping)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     df = rename_columns(
         l,
         {
@@ -444,7 +427,7 @@ FROM lineitem
 
 def p3_null_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: typed-NULL enrichment placeholders added when absent."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ticket"),
         F.col("o_totalprice").alias("pnl"),
     )
@@ -472,7 +455,7 @@ def f2_f3_record_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2/F3: feed-record routing by field presence — events rows with a
     JSON `k` ≥ 50 act as 'position' records, others as snapshots; only
     positions pass, and each carries the snapshot branch marker."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").try_cast("long")
     typed = e.withColumn("position_ticket", F.when(k >= 50, F.col("event_id")))
     return (
@@ -500,7 +483,7 @@ def csv_normalize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     defaults → hash dedup), orders standing in for an FXBlue file.
     Catalyst fuses every step before the dedup shuffle into a single
     whole-stage-codegen pass over the scan."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     df = rename_columns(
         o,
         {"o_orderkey": "ticket", "o_totalprice": "pnl_raw", "o_orderdate": "timestamp"},
@@ -562,7 +545,7 @@ def aes_column_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the determinism is the point here (content-addressed dedup on
     ciphertext), and block-level confidentiality would use GCM with
     a stored IV column."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     enc = F.expr(f"aes_encrypt(text, '{AES_DEMO_KEY}', 'ECB')")
     x = d.select("lang", "text", enc.alias("c")).select(
         "lang",
@@ -615,7 +598,7 @@ def formatted_number_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; DuckDB has no ``to_number`` and parses by
     stripping the separators — agreement certifies Spark's format
     parse against first principles."""
-    c = table(tune(spark), sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     k1 = F.col("c_custkey") % 9 + 1
     k2 = F.col("c_custkey") % 1000
     k3 = F.col("c_custkey") % 100
@@ -664,7 +647,7 @@ def try_function_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`CSV PARSER/gcp_csv.py:163-191`); a declarative engine needs the
     same totality inside codegen, which is exactly what ``try_*``
     provides."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     probes = o.select(
         k.alias("k"),
@@ -749,7 +732,7 @@ def bool_concat_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``||``-style) and null-skipping (``concat_ws``) concatenation
     of a sometimes-NULL middle operand.  Entirely map-side
     aggregable; the probe table is vocabulary-sized."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     probes = F.array(*[F.lit(p) for p in _BOOL_PROBES])
     base = o.select(
         F.element_at(probes, (F.col("o_orderkey") % len(_BOOL_PROBES) + 1).cast("int"))
@@ -859,7 +842,7 @@ def regex_portability_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pure row-local map + one map-side-combined groupBy
     over a pattern-count-sized key space."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     s = F.concat(
         F.substring("text", 1, 80),
         F.lit(" #"),
@@ -972,7 +955,7 @@ def unicode_case_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probe literals ride the orders table (element_at by key mod),
     so the expressions run the distributed path and aggregate
     map-side, like the boolean-vocabulary probe."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     names = F.array(*[F.lit(n) for n, _s in _UNI_PROBES])
     vals = F.array(*[F.lit(sv) for _n, sv in _UNI_PROBES])
     idx = (F.col("o_orderkey") % len(_UNI_PROBES) + 1).cast("int")

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, table
-from ..session import tune
 from .dedup import _hex8_sql
 from .textops import ws_tokens
 
@@ -71,7 +70,7 @@ def _hash_bucket_sql(key_sql: str, salt: str, mod: int) -> str:
 
 def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 split, summarized per (lang, split)."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     b = _hash_bucket(F.col("doc_id"), "split|", 100)
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
@@ -108,7 +107,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language hash-threshold sample: doc kept iff its per-mille
     bucket falls under the language's rate. Pure row-local predicate —
     fuses into the scan, no shuffle at all."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     rate = F.coalesce(
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in SAMPLE_RATES.items()],
         F.lit(DEFAULT_RATE),
@@ -182,7 +181,7 @@ def padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (corpus / B) batch rows."""
     from ..io import swap_cache
 
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     base = swap_cache(
         "corpusops.padding",
         d.select(
@@ -286,7 +285,7 @@ def quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = swap_cache(
         "corpusops.qnorm",
-        table(tune(spark), sf_dir, "documents").select(
+        table(spark, sf_dir, "documents").select(
             "doc_id", "source", F.col("n_chars").cast("long").alias("v")
         ),
     )
@@ -362,7 +361,7 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads bins within a bucket exactly as before. One hash shuffle on
     (lang, bucket) for the window; the same pass at scale writes the
     shard files."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     w = (
         Window.partitionBy("lang", "pack_bucket")
         .orderBy("doc_id")
@@ -423,7 +422,7 @@ def df_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (token, df) pairs, bounded by vocabulary size not corpus
     size.
     """
-    base = table(tune(spark), sf_dir, "documents")
+    base = table(spark, sf_dir, "documents")
     d = fan_out(base).select("doc_id", ws_tokens("text").alias("toks"))
     # corpus size off the raw scan: a metadata-only count, not routed
     # through the fan_out exchange or the tokenizer
@@ -498,7 +497,7 @@ def temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the floor is cross-engine exact — no round-half hazard."""
     from ..io import swap_cache
 
-    d = table(tune(spark), sf_dir, "documents").select("doc_id", "lang")
+    d = table(spark, sf_dir, "documents").select("doc_id", "lang")
     # lang-bounded rate table with two consumers (the keep filter and
     # the final report join) — persisted so the corpus count runs once
     rates = swap_cache(
@@ -568,7 +567,7 @@ def mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources, thousands at most) — the apportionment window is
     trivially small; the corpus-sized part is only the per-language
     availability count, one map-side-combined aggregate."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     wsum = sum(MIX_WEIGHTS.values())
     wmap = F.create_map(
         *[F.lit(x) for kv in MIX_WEIGHTS.items() for x in kv]
@@ -653,7 +652,7 @@ def source_ablation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a |langs|·|sources| grid."""
     from ..io import swap_cache
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     # the config-sized grid feeds six consumers below — cache it so
     # the corpus-sized token aggregate runs exactly once
     grid = swap_cache(
@@ -832,7 +831,7 @@ def mixture_temperature_weights(
     Scale shape: one map-side-combined token aggregate is the only
     corpus-sized work; the weight/apportionment frame is
     |languages| rows with a bounded window."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     toks = (
         d.select(
             "lang",
@@ -964,7 +963,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     then deviations against the broadcast per-stratum moments); the
     apportionment windows run on the stratum frame (≤ languages —
     config-sized, the allowlisted mixture pattern)."""
-    d = table(tune(spark), sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "lang", F.col("n_chars").cast("long").alias("x")
     )
     mom = d.groupBy("lang").agg(
@@ -1074,7 +1073,7 @@ def hierarchical_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the apportionment runs on the (lang × source) config-sized
     grid; only the availability counts touch the corpus."""
     lang_q = mixture_allocation(spark, sf_dir).select("lang", "final_quota")
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     avail = d.groupBy("lang", "source").agg(F.count("*").alias("n_avail"))
     # language totals as a window over the config-sized grid — a
     # re-aggregate joined back re-scans the corpus (scan_sweep)
@@ -1168,7 +1167,7 @@ def per_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window per language ordered by the hash — at real
     scale this runs as the same two-level tournament as the posting
     heads; the fixture keeps the single window."""
-    d = table(tune(spark), sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "lang",
         "doc_id",
         F.md5(F.concat(F.lit("sample|"), F.col("doc_id").cast("string"))).alias(
@@ -1226,7 +1225,7 @@ def dsir_importance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized pass — two total, the minimum for
     profile-then-score.  No window, no self-join."""
     d = (
-        fan_out(table(tune(spark), sf_dir, "documents"))
+        fan_out(table(spark, sf_dir, "documents"))
         .select("doc_id", "lang", ws_tokens("text").alias("toks"))
         .filter(F.size("toks") >= 2)
     )
@@ -1346,7 +1345,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: row-local token/char counts fused into the scan, one
     map-side-combined groupBy over a (lang, source) key space bounded
     by the catalog, not the corpus."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     return (
         d.select(
             "lang",
@@ -1413,7 +1412,7 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern): top-K inside each (lang, hash-bucket) — many small
     window tasks — then top-K of the ≤ B·K survivors per language.
     No language ever sorts on a single task."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     u = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("wsample|"), F.col("doc_id").cast("string"))),
@@ -1484,7 +1483,7 @@ def temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-lang count agg (tiny) × 3 alphas broadcast back onto
     one corpus scan; row-local threshold filter; one groupBy."""
-    d = table(tune(spark), sf_dir, "documents").select("doc_id", "lang")
+    d = table(spark, sf_dir, "documents").select("doc_id", "lang")
     pow_expr = (
         "CASE WHEN alpha_pct = 25 THEN sqrt(sqrt(CAST(n_in AS DOUBLE)))"
         " WHEN alpha_pct = 50 THEN sqrt(CAST(n_in AS DOUBLE))"
@@ -1642,13 +1641,13 @@ def capped_waterfill_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     would re-run the corpus tokenize pass."""
     from ..io import swap_cache
 
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     caps = d.groupBy("source").agg(
         F.sum(F.size(ws_tokens("text"))).cast("long").alias("cap")
     )
     caps = swap_cache("corpusops.waterfill", caps)
     caps.createOrReplaceTempView("wf_caps")
-    return tune(spark).sql(WATERFILL_FILL_SQL)
+    return spark.sql(WATERFILL_FILL_SQL)
 
 
 def _waterfill_oracle() -> str:
@@ -1733,7 +1732,7 @@ def greedy_max_cover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import checkpoint, swap_cache
     from .dedup import _norm_text, word_shingles
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     # coverage unit = distinct 3-word shingles (the LSH lineage's
     # unit): the fixture's whitespace VOCABULARY is ~31 tokens (one
     # doc covers it all — selection would be vacuous), while the
@@ -1879,7 +1878,7 @@ def vocab_divergence_report(
     aggregate over the same grid."""
     from ..io import swap_cache
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     grid = swap_cache(
         "corpusops.vocab_grid",
         d.select(
@@ -2020,7 +2019,7 @@ def shapley_vocab_coverage(
     token) pairs, nothing pairwise."""
     from ..io import swap_cache
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     grid = swap_cache(
         "corpusops.vocab_grid",
         d.select(

@@ -34,7 +34,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import fan_out, table
-from ..session import tune
 from .textops import CHUNK_STRIDE, CHUNK_TOKS, ws_tokens
 
 N_PERM = 12  # minhash permutations
@@ -78,7 +77,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     No fan_out here: sha2 is codegen'd JVM work, cheap enough that a
     repartition shuffle of the full text would cost more than it buys.
     """
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     h = F.sha2(_norm_text("text"), 256)
     return (
         d.select("doc_id", h.alias("content_sha"))
@@ -327,7 +326,7 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "corpus_band_index",
         lambda: minhash_band_rows(
-            fan_out(table(tune(spark), sf_dir, "documents"))
+            fan_out(table(spark, sf_dir, "documents"))
         ).select("doc_id", "band_idx", "band_sig"),
         key=fixture_key(sf_dir),
     )
@@ -411,7 +410,7 @@ def lsh_jaccard_pairs(docs: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash/LSH near-dup pairs over the documents fixture (see
     ``lsh_jaccard_pairs`` for the plan shape)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     return lsh_jaccard_pairs(d).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -485,7 +484,7 @@ def chunk_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-partitioned and the bucket join's skew posture is unchanged
     (boilerplate mega-buckets collapse upstream via
     ``chunk_boilerplate`` exact dedup)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     pseudo = chunk_pseudo_docs(d).select(
         F.col("key").alias("doc_id"),
         F.concat_ws(" ", "ctoks").alias("text"),
@@ -552,7 +551,7 @@ def chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import connected_components
     from .textops import quality_score
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     chunks = swap_cache(
         "dedup.chunk_rewrite_stream",
         chunk_pseudo_docs(d).select(
@@ -833,7 +832,7 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes, sign-aggregated bit-wise (majority vote). The token hash
     is the first 8 md5 hex chars as an int — `conv` here, explicit
     base-16 arithmetic in the oracle, identical values."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     toks = F.array_distinct(ws_tokens(_norm_text("text")))
     tok_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
     hashes = F.transform(toks, lambda t: tok_hash(t))
@@ -920,7 +919,7 @@ def _bigram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL || propagates NULL, so partial grams diverge across engines).
     An Arrow kernel (r14 optimization round, guide §4.2); the JVM
     parity reference is :func:`bigram_blocked_hof`."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     return d.select("doc_id", "lang", "text").mapInPandas(
         _bigram_blocked_arrow_fn, _BIGRAM_BLOCKED_SCHEMA
     )
@@ -1058,7 +1057,7 @@ def minhash_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
 
     d = fan_out(
-        table(tune(spark), sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
+        table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     )
     toks = d.select(
         "doc_id", "lang", ws_tokens(_norm_text("text")).alias("toks")
@@ -1160,7 +1159,7 @@ def edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines implement classic unit-cost Levenshtein over
     codepoints, so the distance is cross-engine exact — no float, no
     rounding surface at all."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", "text", "n_chars", F.expr(f"n_chars DIV {LEV_BAND}").alias("lb")
     )
     a, b = d.alias("a"), d.alias("b")
@@ -1299,7 +1298,7 @@ def lsh_s_curve_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" CAST(0 AS BIGINT) AS band_hit_ppm,"
             f" CAST(0 AS BIGINT) AS pair_found_ppm"
         )
-    theory = tune(spark).sql(" UNION ALL ".join(legs))
+    theory = spark.sql(" UNION ALL ".join(legs))
 
     d = fan_out(table(spark, sf_dir, "documents"))
     # 24-permutation signature stream (the planner's budget), same
@@ -1454,7 +1453,7 @@ def fastss_editdist1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized the whole variant explode + join build on one core
     # (measured 3.2s for the 285k-row variant frame alone at sf0.1;
     # r14 optimization round, guide §2.5 input skew).
-    c = fan_out(table(tune(spark), sf_dir, "customer").select("c_name"))
+    c = fan_out(table(spark, sf_dir, "customer").select("c_name"))
     variants = c.select(
         F.col("c_name").alias("name"),
         F.explode(
@@ -1512,7 +1511,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     long one scores low Jaccard but 1e6 containment ppm on the short
     side; dedup policies drop the contained copy. Same banded plan as
     ``minhash_lsh_pairs``; only the verification expression differs."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     cand = lsh_candidate_pairs(d)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     return cand.select(
@@ -1550,7 +1549,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two equi-joins of the (tiny) pair graph against the
     doc→source projection on ``doc_id``, then a sources²-group
     aggregate. The pair graph is edges-sized, never corpus-sized."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     src = d.select("doc_id", "source")
     pairs = lsh_candidate_pairs(d).select("doc_a", "doc_b")
     both = (
@@ -1645,7 +1644,7 @@ def snm_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     closest rank gap, verified Jaccard."""
     from ..io import swap_cache
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     norm = _norm_text("text")
     d = d.filter(F.size(ws_tokens(norm)) >= 2)
     # g feeds both rank passes and both sides of the verify join;
@@ -1787,7 +1786,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id except the final distinct-chunk count (hash-grouped)."""
     from pyspark.sql.window import Window
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     # empty-text guard (round-10 advice): Spark's sequence(1, 0) is
     # the DESCENDING [1, 0] while the oracle's range(1, len+1) is
     # empty — gate the explode so zero-length documents contribute
@@ -1953,7 +1952,7 @@ def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     An Arrow kernel (r14 optimization round); the JVM parity
     reference is :func:`simham_sigs_hof`."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     return d.select("doc_id", "text").mapInPandas(
         _simham_sigs_arrow_fn, _SIMHAM_SIG_SCHEMA
     )
@@ -2101,7 +2100,7 @@ def prefix_filter_jaccard_pairs(
 
     from ..io import swap_cache
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     # Persist the shingled frame: four consumers (df build, prefix
     # postings, and the two verification sides) otherwise re-execute
     # the normalize→tokenize→shingle step per consumer — the scan
@@ -2271,7 +2270,7 @@ def duplicated_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: rolling k-gram postings reuse the winnowing
     (``textops.winnowing_fingerprint_pairs``) and CDC
     (``cdc_chunk_dedup``) lineages' machinery."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     from ..io import swap_cache
 
     # persist the tokenized stream (three consumers: gram explode,

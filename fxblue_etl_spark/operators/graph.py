@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import checkpoint
-from ..session import tune
 
 
 #: edge-count ceiling for the driver-side union-find fast path; above
@@ -204,7 +203,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     document per."""
     from .similarity import embedding_near_dup
 
-    tune(spark)
     pairs = embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b")
     return connected_components(
         pairs, src="vec_a", dst="vec_b", slot="graph.dedup_components"
@@ -266,7 +264,6 @@ def group_aware_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpusops import _hash_bucket
     from .similarity import embedding_near_dup
 
-    tune(spark)
     pairs = swap_cache(
         "graph.cvfold.pairs",
         embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b"),
@@ -383,7 +380,6 @@ def dedup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree — scale-linear in edges, pair-finder runs once."""
     from .similarity import embedding_near_dup
 
-    tune(spark)
     pairs = embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b")
     sym = pairs.select(
         F.explode(
@@ -468,7 +464,6 @@ def dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
     from .similarity import embedding_near_dup
 
-    tune(spark)
     e = swap_cache(
         "graph.triangles",
         embedding_near_dup(spark, sf_dir).select(
@@ -544,7 +539,7 @@ def _doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import lsh_jaccard_pairs
 
     def build() -> DataFrame:
-        docs = fan_out(table(tune(spark), sf_dir, "documents"))
+        docs = fan_out(table(spark, sf_dir, "documents"))
         pairs = (
             lsh_jaccard_pairs(docs)
             .filter(F.round("jaccard", 6) >= DECON_J)
@@ -656,10 +651,8 @@ def dedup_threshold_sensitivity(
     Integer discipline: thresholds compare as ppm against the
     round(jaccard, 6) both engines share (the DECON_J spelling)."""
     from ..io import swap_cache
-    from ..session import tune
     from .dedup import ngram_jaccard_pairs_capped
 
-    tune(spark)
     raw_pairs, n_capped = ngram_jaccard_pairs_capped(spark, sf_dir)
     pairs = swap_cache(
         "graph.threshold_pairs",
@@ -894,7 +887,6 @@ def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree normalization, teleport term, iteration count);
     ``sf_dir`` is deliberately unused — the graph must be canned for
     the ranks to be closed-form."""
-    tune(spark)
     edges = spark.createDataFrame(PR_EXACT_EDGES, "a int, b int")
     sym = checkpoint(
         spark,
@@ -1061,7 +1053,7 @@ def components_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..io import fan_out, swap_cache, table
     from .dedup import lsh_jaccard_pairs
 
-    docs = fan_out(table(tune(spark), sf_dir, "documents"))
+    docs = fan_out(table(spark, sf_dir, "documents"))
     pairs = (
         lsh_jaccard_pairs(docs)
         .filter(F.round("jaccard", 6) >= DECON_J)
@@ -1171,7 +1163,6 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation is not observable."""
     from .similarity import embedding_near_dup
 
-    tune(spark)
     pairs = embedding_near_dup(spark, sf_dir).select("vec_a", "vec_b")
     edges = pairs.select(
         F.explode(

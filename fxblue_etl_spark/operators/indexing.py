@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, table
-from ..session import tune
 from .corpusops import _hash_bucket, _hash_bucket_sql
 from .textops import ws_tokens
 
@@ -110,7 +109,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN_DF), document frequency, total term frequency, and the first
     POSTINGS_K doc_ids of the sorted posting list (comma-joined)."""
     td = term_doc_index(
-        fan_out(table(tune(spark), sf_dir, "documents"))
+        fan_out(table(spark, sf_dir, "documents"))
     )
     stats = td.groupBy("tok").agg(
         F.count("*").alias("df"),
@@ -196,7 +195,7 @@ def postings_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 8); persisted, one physical corpus scan feeds everything
     docs = swap_cache(
         "indexing.upsert_equiv.docs",
-        fan_out(table(tune(spark), sf_dir, "documents")).select(
+        fan_out(table(spark, sf_dir, "documents")).select(
             "doc_id", "text"
         ),
     )
@@ -276,7 +275,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     count reaches each of COVERAGE_PCTS percent of the language's
     token mass. ``100 * cum >= pct * total`` keeps the threshold
     integer-exact in both engines."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "lang", ws_tokens("text").alias("toks")
     )
     cnt = (
@@ -347,7 +346,7 @@ def training_order_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket of doc_id, position within shard by the full md5 string
     (doc_id tiebreak — md5 collisions are astronomically unlikely but
     determinism must not rest on that)."""
-    d = table(tune(spark), sf_dir, "documents").select("doc_id")
+    d = table(spark, sf_dir, "documents").select("doc_id")
     key = F.md5(F.concat(F.lit("order|"), F.col("doc_id").cast("string")))
     sharded = d.select(
         "doc_id",

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 from .corpusops import _hash_bucket, _hash_bucket_sql
 
 #: corruption rates (percent) for the derived dirty feed
@@ -93,7 +92,6 @@ def record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, true-match counts, m/u probabilities in exact integer
     ppm, and match-odds ppm (NULL when the pattern never occurs among
     non-matches — infinite evidence).  See module docstring."""
-    tune(spark)
     c = table(spark, sf_dir, "customer")
     cand = _clean_side(c).join(_dirty_side(c), ["blk_nation", "blk_bal"])
     pat = cand.select(
@@ -219,7 +217,6 @@ def linkage_greedy_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-ppm.  Scale: ranks partition by record key (block-bounded
     candidate lists), the pattern join is 8 broadcast rows, and the
     summary is one aggregate."""
-    tune(spark)
     from pyspark.sql.window import Window
 
     from ..io import swap_cache
@@ -344,7 +341,6 @@ def golden_record_survivorship(
     Scale shape: both feeds project off one customer scan, the merge
     is a key equi-join, and the audit is one aggregate — no window,
     no skew surface."""
-    tune(spark)
     c = table(spark, sf_dir, "customer")
     a = _dirty_side(c).select(
         F.col("key_d").alias("k"),

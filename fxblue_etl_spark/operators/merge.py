@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 
 def resolve_last_write(
@@ -109,7 +108,7 @@ def merge_upsert(
 # the exact shape of a reference re-run.
 
 def _old_new(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("ticket"),
         F.col("o_custkey").cast("string").alias("account_id"),
@@ -177,7 +176,7 @@ FROM old o FULL OUTER JOIN new n ON o.ticket = n.ticket
 def merge_k3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3: account_metadata-shaped merge — metrics updated,
     strategy_inferred/gpt_comments preserved."""
-    c = table(tune(spark), sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     old = c.select(
         F.col("c_custkey").alias("account_id"),
         F.concat(F.lit("https://old/"), F.col("c_custkey")).alias("account_url"),
@@ -226,7 +225,7 @@ FROM old o FULL OUTER JOIN new n ON o.account_id = n.account_id
 def d3_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: three simulated runs of the same export land in one batch;
     the newest run's row survives per key."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     runs = None
     for run in (1, 2, 3):
         batch = o.filter(F.col("o_orderkey") % run == 0).select(
@@ -332,7 +331,7 @@ def scd2_customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 demo: a customer dimension opened on 2024-01-01 receives a
     batch where every 4th key changed balance (→ close + open), every
     other even key re-sent unchanged (→ no-op), odd keys absent."""
-    cust = table(tune(spark), sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     dim = cust.select(
         F.col("c_custkey").alias("account_id"),
         "c_name",

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, swap_cache, table
-from ..session import tune
 
 #: number of clusters (init = the K lowest vec_ids)
 K = 8
@@ -84,7 +83,7 @@ def _assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
 def kmeans_assign_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One assignment pass against the deterministic init centroids,
     summarized per cluster (exact-integer outputs → robust oracle)."""
-    emb = table(tune(spark), sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     a = _assign(emb, _init_centroids(emb))
     return a.groupBy("cluster").agg(
         F.count("*").alias("n_members"),
@@ -127,7 +126,7 @@ def kmeans_update_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One full Lloyd step: assignment + centroid recompute, emitted
     per (cluster, dim) as floor(1e6·mean) (the quotient-rounding rule;
     a mean is a sum/count quotient)."""
-    emb = table(tune(spark), sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     a = _assign(emb, _init_centroids(emb)).select("vec_id", "cluster")
     j = a.join(emb.select("vec_id", "embedding"), "vec_id").select(
         "cluster",
@@ -186,7 +185,7 @@ def _exact_lloyd(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     that slot's next pin or ``io.drain_all``."""
     from ..io import checkpoint
 
-    emb = table(tune(spark), sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
             "embedding",
@@ -422,7 +421,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dc.cluster").alias("cluster"),
         F.col("dc.dist").alias("d"),
     )
-    vecs = table(tune(spark), sf_dir, "embeddings").select(
+    vecs = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("v")
     )
     # m feeds three consumers (both self-join sides + the final
@@ -593,7 +592,7 @@ SEMDEDUP_ORACLE = _semdedup_oracle()
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x|/127,
     q_i = floor(x_i·127 / max|x|). Row-local, fuses into the scan."""
-    emb = table(tune(spark), sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     xd = F.transform("embedding", lambda x: x.cast("double"))
     mx = F.array_max(F.transform(xd, F.abs))
     return emb.select(
@@ -689,7 +688,7 @@ def quantized_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact float baseline is certified in `tests/test_ml.py`."""
     from .similarity import _dvec, cosine
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("v"))
     cents = base.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
@@ -821,7 +820,7 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
     from .similarity import _dvec, cosine
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("v"))
     cents = base.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
@@ -998,7 +997,7 @@ def label_cohesion_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the numerator reaches ~4.7e20 already for cohesive ~200-member
     labels) — that division therefore runs in DECIMAL(38,0) in both
     engines and only the ≤1e6 quotient is cast back to BIGINT."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     qv = F.transform("embedding", lambda x: F.floor(x.cast("double") * 1e5).cast("long"))
     q = emb.select("vec_id", "label", qv.alias("q"))
     self_dot = F.aggregate(
@@ -1091,7 +1090,7 @@ def ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cluster id; ranking one bounded per-query window."""
     from .similarity import _dvec, cosine
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("v"))
     cents = base.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
@@ -1222,7 +1221,7 @@ def embedding_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: linear in rows×dim, fully map-side combined; no
     join, no window."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     qv = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1e5).cast("long")
     )
@@ -1280,7 +1279,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is int64 numpy.
 
     Output: upper triangle (i ≤ j): i, j, cross_sum = Σ qᵢ·qⱼ."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     return gram_cells(emb)
 
 
@@ -1575,7 +1574,7 @@ def _pca_projection_frame(
         v[r["dim_i"]] = r["v_scaled"]
         lam, ev = r["lam_e3q"], r["ev_ppm"]
     arr = "array({})".format(", ".join(f"{x}L" for x in v))
-    emb = table(tune(spark), sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
             "embedding", lambda x: F.floor(x.cast("double") * 1e3).cast("long")
@@ -1820,7 +1819,7 @@ def gram_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One summary row, the family's standard shape: report-row count
     + both full-outer mismatch counts pinned to 0 by the oracle."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     even = gram_cells(emb.filter(F.col("vec_id") % 2 == 0))
     odd = gram_cells(emb.filter(F.col("vec_id") % 2 == 1))
     inc = (
@@ -1921,7 +1920,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``io.checkpoint``."""
     from ..io import checkpoint
 
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings")).select(
+    emb = fan_out(table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.transform(
             "embedding",
@@ -2114,7 +2113,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, v: acc + v,
         )
 
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     pts = swap_cache(
         "ml.kcenter.pts",
         emb.select(
@@ -2210,7 +2209,7 @@ def _pq_subspaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, sv): each embedding e3-quantized to int64 and cut
     into M_PQ contiguous subvectors — the integer grid makes every
     later distance exact in both engines."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     qv = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1e3).cast("long")
     )
@@ -2413,7 +2412,7 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key at scale (probe = one partition's codes)."""
     from .similarity import _dvec, cosine
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     # one float scan feeds centroids AND the assignment probe side;
     # the assignment table feeds the candidate read AND the query
     # cluster lookup — both persisted (scan-gate: 2 physical corpus
@@ -2567,7 +2566,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: probe set broadcast against the corpus scan (the honest
     full-scan eval; IVF/PQ composition prunes it exactly as in
     `quantized_ivf_topk`); everything after top-K is probe-sized."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     qv = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1e3).cast("long")
     )
@@ -2784,7 +2783,7 @@ def jl_sign_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: beyond-reference LLM-pipeline surface
     (BASELINE.json "similarity search"); complements ``pq_encode`` /
     ``embedding_quantize`` as the third compression primitive."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     signs = _jl_signs()
     qv = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1e6).cast("long")
@@ -2872,7 +2871,7 @@ def triplet_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline is O(n·|queries|) with the query set broadcast; the
     production path swaps in the IVF/PQ variants already on the
     surface and keeps this as the recall-audit truth."""
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     qv = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * 1e3).cast("long")
     )
@@ -2957,7 +2956,7 @@ def semantic_topic_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc↔vector link is one equi-join on the shared key (co-partition
     or bucket both tables on it at 100 TB); summary is map-side
     combined.  No pairwise anything."""
-    emb = table(tune(spark), sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     sel = (
         _assign(emb, _init_centroids(emb))
         .filter(F.col("cluster") == 0)
@@ -3020,7 +3019,7 @@ def split_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized after the first aggregate."""
     from .corpusops import TRAIN_PCT, VAL_PCT, _hash_bucket
 
-    emb = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    emb = fan_out(table(spark, sf_dir, "embeddings"))
     b = _hash_bucket(F.col("vec_id"), "split|", 100)
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import fan_out, table
-from ..session import tune
 from .dedup import _first_band_pairs
 
 FEATURE_SCHEMA = (
@@ -103,7 +102,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism suffices — a 32-way repartition just multiplies Arrow
     batch + Python-worker startup overhead at test scale.
     """
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     feats = extract_byte_features(with_binary_payload(d))
     return feats.select(
         "doc_id",
@@ -140,7 +139,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native-function metadata over binary payloads (no Python):
     size, sha, magic-byte sniff — the cheap pre-filter that runs
     before any decode at scale. Native codegen only — no fan_out."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     payload = F.encode("text", "utf-8")
     return d.select(
         "doc_id",
@@ -180,7 +179,7 @@ def media_frame_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode shape are the real, tested plumbing.
 
     All row-local arithmetic — fuses into the scan, no shuffle."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     n_frames = F.expr(
         f"CAST(ceil(length(text) / {FRAME_BYTES}.0) AS BIGINT)"
     )
@@ -243,7 +242,7 @@ def media_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes re-crawled under different ids).  One map-side-combined
     aggregate over (origin, sha); payloads never shuffle — only
     digests move."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     payload = F.encode("text", "utf-8")
     per_sha = (
         d.select(
@@ -371,7 +370,7 @@ def media_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (no stable signature below one byte per segment).
     """
     pairs = _first_band_pairs(
-        _ahash_rows(table(tune(spark), sf_dir, "documents")),
+        _ahash_rows(table(spark, sf_dir, "documents")),
         _ahash_band_keys,
         ("doc_id", "ahash"),
     )

@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import fan_out, table
-from ..session import tune
 from .textops import ws_tokens
 
 #: Gopher-style keep thresholds (ppm)
@@ -67,7 +66,7 @@ def gopher_repetition(
     belong in array expressions, not exploded aggregates."""
     d = (
         docs if docs is not None
-        else fan_out(table(tune(spark), sf_dir, "documents"))
+        else fan_out(table(spark, sf_dir, "documents"))
     ).select("doc_id", "lang", ws_tokens("text").alias("toks"))
     bigrams = _tok_ngrams(F.col("toks"), 2)
     row_local = d.select(
@@ -148,7 +147,7 @@ FROM m
 def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training docs sharing any token 3-gram with the eval split,
     summarized per language with a floored-ppm contamination rate."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id",
         "lang",
         F.array_distinct(_tok_ngrams(ws_tokens("text"), NGRAM_N)).alias("grams"),
@@ -240,7 +239,7 @@ def span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     for global span document-frequency → equi-join back → per-doc
     count. O(corpus spans) with two hash shuffles, never pairwise
     over docs — the same scale shape as ``contamination_check``."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id",
         F.array_distinct(_tok_ngrams(ws_tokens("text"), SPAN_K)).alias("spans"),
     )
@@ -338,7 +337,7 @@ def span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale shape as the detection half.  Docs shorter than SPAN_K
     carry through with zero removals (left join).
     """
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     base = d.select("doc_id", F.size("toks").cast("long").alias("n_tokens"), "toks")
@@ -432,7 +431,7 @@ def domain_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale. Plan: one groupBy(source) agg (map-side combined),
     one 1-row corpus agg broadcast back — the per-source table is
     bounded by domain cardinality, never corpus size."""
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -489,7 +488,7 @@ def quality_lm_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = swap_cache(
         "quality.calibration",
-        fan_out(table(tune(spark), sf_dir, "documents")).select(
+        fan_out(table(spark, sf_dir, "documents")).select(
             "doc_id", "text"
         ),
     )
@@ -547,7 +546,7 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: beyond-reference quality surface; shares the
     shingle normalization with the dedup family
     (`operators/dedup.py`)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     from .dedup import word_shingles
 
     tri = d.filter(F.size(ws_tokens(F.lower("text"))) >= 3).select(
@@ -635,7 +634,7 @@ def quality_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = swap_cache(
         "quality.feature_matrix",
-        fan_out(table(tune(spark), sf_dir, "documents")).select(
+        fan_out(table(spark, sf_dir, "documents")).select(
             "doc_id", "lang", "text"
         ),
     )

@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, table
-from ..session import tune
 from .corpusops import _hash_bucket
 from .ml import embedding_quantize
 from .textops import ws_tokens
@@ -126,7 +125,7 @@ def _bm25_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     scorers share the candidate lineage; the isin filter still runs
     before the groupBy shuffle, so non-query tokens never leave the
     scan stage."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", ws_tokens("text").alias("toks")
     )
     docs = d.select("doc_id", "lang", F.size("toks").alias("dl"), "toks")
@@ -505,7 +504,7 @@ def boolean_retrieval_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate emitting all expressions at once, unpivoted to a row
     per expression."""
     t0, t1, t2 = BOOL_TERMS
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     flags = d.select(
@@ -609,7 +608,6 @@ def ranking_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import swap_cache
 
-    tune(spark)
     ranked = cosine_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id", "rank"
     )
@@ -723,7 +721,7 @@ def _bm25_scored_dyn(
     termset (broadcast semi-join in place of the literal ``isin`` —
     the shape a real per-request query binder uses; the arithmetic is
     character-identical)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", ws_tokens("text").alias("toks")
     )
     docs = d.select("doc_id", "lang", F.size("toks").alias("dl"), "toks")
@@ -792,7 +790,7 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fb = _tournament_topk(seed, order, PRF_FB, F.col("doc_id")).select(
         "doc_id"
     )
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     docs = swap_cache(

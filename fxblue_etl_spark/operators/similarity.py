@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 
 def _dvec(c: Column | str) -> Column:
@@ -63,7 +62,7 @@ COSINE_TOPK_K = 5
 def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector
     (vec_id % 50 == 0), excluding self."""
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("v"))
     q = base.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -152,7 +151,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: assign every vector to its nearest fixed
     centroid (vec_id % 100 == 0), then answer each query (vec_id %
     50 == 0) from its own cluster only — top-3 by cosine."""
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", _dvec("embedding").alias("v"))
     cents = base.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
@@ -245,7 +244,7 @@ def ivf_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``postings_upsert_equivalence``."""
     from ..io import fan_out, swap_cache
 
-    e = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    e = fan_out(table(spark, sf_dir, "embeddings"))
     # persist the decoded base FIRST: centroids, corpus, both delta
     # branches, and the rebuild side all derive from it —
     # unpersisted, the plan re-reads embeddings NINE times per
@@ -374,7 +373,7 @@ def truncation_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs)."""
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     full_dim = 64
     all_dims = (*TRUNC_DIMS, full_dim)
     base = swap_cache(
@@ -522,7 +521,7 @@ def margin_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     this certified formulation IS the scale path's scoring stage."""
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = swap_cache(
         "similarity.margin.base",
         e.filter(F.col("vec_id") % 4 <= 1).select(
@@ -619,7 +618,7 @@ def margin_bitext_mine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantifies precisely what the blocking costs in match quality."""
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = swap_cache(
         "similarity.margin_blk.base",
         e.filter(F.col("vec_id") % 4 <= 1).select(
@@ -791,7 +790,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at real scale you widen the sign pattern (more bits ⇒
     finer blocks), which changes recall and therefore the published
     contract; the fixture keeps 8 for oracle parity."""
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     base = e.select(
         "vec_id",
         _dvec("embedding").alias("v"),
@@ -856,7 +855,7 @@ def semantic_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..io import swap_cache
     from .corpusops import _hash_bucket
 
-    e = table(tune(spark), sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     # persist the (vec_id, is_eval) split — three consumers (both
     # pair-annotation sides and the size counts) otherwise re-scan
     # embeddings each (r14 scan sweep: 7 embeddings scans here;
@@ -995,7 +994,7 @@ def brp_lsh_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out: the per-pair distance work downstream is CPU-bound and
     # a small fixture scans as 1-2 splits — without the spread the ML
     # join's heavy stages inherit that width
-    e = fan_out(table(tune(spark), sf_dir, "embeddings"))
+    e = fan_out(table(spark, sf_dir, "embeddings"))
     v = _dvec("embedding")
     bucket = F.concat_ws(
         "",

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 
 
 def salted_join(
@@ -71,7 +70,6 @@ def salted_join_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem ⋈ supplier through an 8-way salted join, then revenue
     per nation — values identical to the unsalted join (oracle), only
     task placement differs."""
-    spark = tune(spark)
     l = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier").withColumnRenamed("s_suppkey", "l_suppkey")
     joined = salted_join(
@@ -100,7 +98,6 @@ GROUP BY s_nationkey
 
 
 def salted_count_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = tune(spark)
     e = table(spark, sf_dir, "events")
     return salted_count(e, ["event_type"])
 
@@ -133,7 +130,6 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     key_col-partitioned re-aggregate — the per-key count table is the
     same size a real join shuffle would build, which is the honest
     cost of measuring it; sample first if even that is too dear."""
-    spark = tune(spark)
     li = table(spark, sf_dir, "lineitem")
     stacked = li.select(
         F.expr(
@@ -222,7 +218,6 @@ def hybrid_skew_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-level aggregate."""
     from ..io import swap_cache
 
-    spark = tune(spark)
     o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     # persist the hot-key set (bounded by the number of hot keys,

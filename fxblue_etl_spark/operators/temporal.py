@@ -41,12 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
 
 
 # ── As-of join ───────────────────────────────────────────────────────────
@@ -107,7 +101,7 @@ def asof_join(
 def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase event joined as-of to the user's most recent view:
     the 'trade gets the prevailing quote' shape on the events fixture."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -182,7 +176,7 @@ _PRICE_BANDS = [
 
 
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     bands = spark.createDataFrame(_PRICE_BANDS, "band string, lo double, hi double")
     joined = range_join_buckets(p, bands, "p_retailprice", bucket_width=10.0)
     return joined.groupBy("band").agg(
@@ -223,7 +217,7 @@ def time_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-string HALF_UP round and DuckDB's binary-double round
     legitimately disagree; averages are oracle-checked elsewhere.)
     """
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     fine = (
         e.groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
         .agg(
@@ -283,7 +277,7 @@ def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side partial counts, one shuffle of distinct keys); the
     top-k sort runs on the aggregated (small) side only.
     """
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     return (
         l.groupBy("l_partkey")
         .agg(F.count("*").alias("n_items"), F.round(F.sum("l_quantity"), 4).alias("sum_qty"))
@@ -354,7 +348,7 @@ def portable_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow projection + fan_out: the md5 bucket explode is per-row
     # CPU work; a single-split fixture scan serializes it on one core
     # (no-op at real scale — guide §2.5 input skew)
-    l = fan_out(_t(spark, sf_dir, "lineitem").select("l_partkey"))
+    l = fan_out(table(spark, sf_dir, "lineitem").select("l_partkey"))
     md5_buckets = _cms_md5_buckets
     counters = (
         l.select(F.explode(md5_buckets(F.col("l_partkey"))).alias("db"))
@@ -430,7 +424,7 @@ def countmin_upsert_equivalence(
     # single-split fixture scan would serialize ~12 md5s/row on one
     # core (no-op at real scale — guide §2.5 input skew)
     l = fan_out(
-        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     )
 
     def cms(df: DataFrame) -> DataFrame:
@@ -550,7 +544,7 @@ def gapfill_daily_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     user. At scale everything shuffles once on user_id and the grid
     explode is linear in output rows, never a cross join.
     """
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     # exact integer day totals: floor-scaled e4 sums are partial-agg-
     # order-independent, unlike round(sum(double), 4) (README rule)
     daily = e.groupBy(
@@ -600,7 +594,7 @@ def gapfill_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, co-partitioned join) plus two bounded per-user windows
     (last-non-null backward, first-non-null forward) — still one
     shuffle on user_id."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("day")
     ).agg(
@@ -727,7 +721,7 @@ def ohlc_bars_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final groupBy reuses the same keys — a single shuffle total.
     Bar populations are time-bounded, so no skew regardless of total
     scale."""
-    e = _t(spark, sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("hour"),
         "event_type",
         "ts",
@@ -800,7 +794,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan a session-based recommender or anomaly model starts from.
     Windows partition by user_id: bounded state, parallelism = user
     count."""
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    e = table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         e.select(
@@ -859,7 +853,7 @@ def daily_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type stats broadcast back."""
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         F.to_date(F.date_trunc("day", "ts")).alias("day"),
         "event_type",
         F.floor(F.col("value") * 1e4).cast("long").alias("v_e4"),
@@ -936,7 +930,7 @@ def asof_tolerance_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the WHOLE matched struct (never mixing fields of different
     quotes).  Too-stale matches also flip a ``stale_dropped`` flag so
     the output distinguishes "no prior view" from "view too old"."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -1004,7 +998,7 @@ def tz_local_day_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference localizes RSS timestamps to UTC
     and never back (`RSS PARSER/gcp_rss.py:31-37`); this adds the
     reporting-side local-calendar view."""
-    return local_day_rollup(_t(spark, sf_dir, "events"))
+    return local_day_rollup(table(spark, sf_dir, "events"))
 
 
 def local_day_rollup(e: DataFrame, tz: str = LOCAL_TZ) -> DataFrame:
@@ -1058,7 +1052,7 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: beyond-reference analytics on the event
     stream; complements `daily_anomaly_days` (detection) with
     evaluation."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     daily = (
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("n"))
@@ -1120,7 +1114,7 @@ def calendar_arithmetic_semantics(
 
     One groupBy over row-local derivations; group count = distinct
     (year, month) of the fixture."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
     epoch = F.lit("1970-01-01").cast("date")
     day = lambda c: F.datediff(c, epoch).cast("long")
@@ -1202,7 +1196,7 @@ def scd2_asof_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes are not equi-joinable), and each route ends in a
     probe-grouped aggregate.  At 100 TB the version table IS the
     stored dim; only the audit's fact route re-scans history."""
-    o = table(tune(spark), sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("string").alias("d"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -1349,7 +1343,7 @@ def cusum_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data-scaled work — same allowlisted bounded global window as
     `changepoint_detection`/`seasonal_naive_backtest`).  Headroom:
     |P| ≤ n·S ~ 2^60 at sf100."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("string").alias("d")).agg(
         F.sum(F.floor(F.col("o_totalprice") * 100))
         .cast("long")
@@ -1522,7 +1516,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a 5-row fold over calendar-bounded arrays (`F.aggregate`,
     row-local — no window, no shuffle beyond the group-by).  At
     100 TB the fold input is still |calendar| × |segments| rows."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     weekly = o.groupBy(
         "o_orderpriority",
         F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
@@ -1636,7 +1630,7 @@ def changepoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     `seasonal_naive_backtest` carries.  Output: the chosen split
     date, segment sizes and exact mean cents, the split objective,
     the no-split baseline floor(S²/n), and the gain."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = (
         o.groupBy(F.col("o_orderdate").cast("string").alias("d"))
         .agg(
@@ -1785,7 +1779,7 @@ def theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar, not the data (allowlisted, the seasonal_naive class)."""
     from .ml import _pmod_floordiv
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     monthly = (
         o.groupBy(F.substring(F.col("o_orderdate").cast("string"), 1, 7).alias("m"))
         .agg(
@@ -1914,7 +1908,7 @@ def twap_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned by type — no coordination beyond the shuffle."""
     from .ml import _pmod_floordiv
 
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(
         F.asc("ts"), F.asc("event_id")
     )
@@ -2015,7 +2009,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow."""
     from ..io import swap_cache
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # one data-scaled scan; the weekly frame (calendar × priorities)
     # feeds three aggregates (S, n, ties) — cache it so the corpus
     # is read once
@@ -2166,7 +2160,7 @@ def max_drawdown_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partitioned running-max window over (user, ts)
     — hash-partitioned by user, no global window — then two
     per-user aggregates and one broadcast-sized argmax join-back."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.asc("ts"), F.asc("event_id"))
@@ -2256,7 +2250,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE data-scaled partial aggregate (week ×
     priority), then a |segments|-row fold over calendar-bounded
     arrays — the ``ewma_control_chart`` shape exactly."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     weekly = o.groupBy(
         "o_orderpriority",
         F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
@@ -2396,7 +2390,7 @@ def isotonic_weekly_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per (priority, week) with the observed and
     fitted cents; the fit is non-decreasing in week within each
     priority (property-pinned)."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     weekly = o.groupBy(
         "o_orderpriority",
         F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, table
-from ..session import tune
 
 #: BPE-ish pretokenizer: word pieces or single non-space symbols
 BPE_RE = r"\w+|[^\w\s]"
@@ -52,7 +51,7 @@ def text_stats(
     ``docs`` lets a composite (quality_feature_matrix) feed all its
     signals from ONE persisted scan instead of five."""
     d = docs if docs is not None else fan_out(
-        table(tune(spark), sf_dir, "documents")
+        table(spark, sf_dir, "documents")
     )
     toks = ws_tokens("text")
     bpe = bpeish_tokens("text")
@@ -146,7 +145,7 @@ def quality_score(
     """Composite quality score: length band + stopword presence -
     punctuation noise (a Gopher-rules-flavored heuristic)."""
     d = docs if docs is not None else fan_out(
-        table(tune(spark), sf_dir, "documents")
+        table(spark, sf_dir, "documents")
     )
     n_tok, n_stop, score = quality_signal_cols()
     return d.select(
@@ -183,7 +182,7 @@ FROM scored
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-token language-ID: argmax of per-language marker hits
     (deterministic tie-break by fixed language order)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     toks = ws_tokens(F.lower(F.col("text")))
     hit_cols = []
     df = d.select("doc_id", "lang", toks.alias("toks"))
@@ -223,7 +222,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: md5 of whitespace/case-normalized text +
     a rolling-hash-style minimum over character 8-gram hashes
     (winnowing's select-min step over the full document)."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     n = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(n - 7, F.lit(1)))
@@ -311,7 +310,7 @@ def winnowing_fingerprint_pairs(
     carries ``n_capped_fps`` = how many fingerprints the absolute
     leg dropped beyond the template rule: 0 means the output is the
     exact uncapped answer; > 0 makes the truncation explicit."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     n = F.length(norm)
     docs = d.select("doc_id", norm.alias("t"), n.alias("len")).filter(
@@ -474,7 +473,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python, no shuffle); the scrubbed text is certified by md5 and the
     per-doc match counts are taken on the ORIGINAL text so the oracle
     checks detection and rewrite independently."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     n_pii = (
         F.regexp_count("text", F.lit(PII_EMAIL_RE))
         + F.regexp_count("text", F.lit(PII_PHONE_RE))
@@ -557,9 +556,8 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplication is the ~n_toks/STRIDE output rows per doc. No
     shuffle at all."""
     from ..io import fan_out, table
-    from ..session import tune
 
-    return chunk_frame(fan_out(table(tune(spark), sf_dir, "documents")))
+    return chunk_frame(fan_out(table(spark, sf_dir, "documents")))
 
 
 CHUNKING_ORACLE = rf"""
@@ -652,7 +650,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5, and whether the document changed — all row-local codegen,
     fused into the scan; the oracle reproduces each rewrite with the
     same RE2-safe patterns."""
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     norm = F.lower(
         F.trim(
             F.regexp_replace(

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import fan_out, table
-from ..session import tune
 from .dedup import minhash_lsh_pairs
 from .textops import ws_tokens
 
@@ -61,7 +60,7 @@ def term_salience_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k. The top-k window partitions by doc_id — millions of tiny
     partitions, never one big one.
     """
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     tf = (
@@ -170,7 +169,7 @@ def rare_token_quality(
         d = (
             docs
             if docs is not None
-            else fan_out(table(tune(spark), sf_dir, "documents"))
+            else fan_out(table(spark, sf_dir, "documents"))
         ).select("doc_id", ws_tokens("text").alias("toks"))
         px = d.select("doc_id", F.explode("toks").alias("tok"))
     else:
@@ -238,7 +237,7 @@ def token_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     window task."""
     from .corpusops import _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     pair_col = F.transform(
@@ -329,7 +328,7 @@ def lm_doc_perplexity(
     if pairs is None:
         d = (
             docs if docs is not None
-            else fan_out(table(tune(spark), sf_dir, "documents"))
+            else fan_out(table(spark, sf_dir, "documents"))
         ).select("doc_id", ws_tokens("text").alias("toks"))
         pair_col = F.transform(
             F.sequence(F.lit(1), F.size("toks") - 1),
@@ -418,7 +417,7 @@ def token_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined) → ~10-row band aggregate; type/mass shares are
     DECIMAL-exact ppm against broadcast scalar totals.  No global
     sort — the spectrum needs no ranks, unlike a top-k Zipf plot."""
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     cnt = (
@@ -542,7 +541,7 @@ def token_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``token_bigram_lm`` (`tfidf.py`)."""
     from .corpusops import _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     from ..io import swap_cache
@@ -764,7 +763,7 @@ def bpe_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort."""
     from .corpusops import _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     words = (
         d.select(F.explode(ws_tokens("text")).alias("w"))
         .groupBy("w")
@@ -829,7 +828,7 @@ def cross_split_lm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local split predicate fused into each scan."""
     from .corpusops import TRAIN_PCT, VAL_PCT, _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", ws_tokens("text").alias("toks")
     )
     b = _hash_bucket(F.col("doc_id"), "split|", 100)
@@ -1019,7 +1018,7 @@ def _fh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
     from .corpusops import _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("tok")
     )
@@ -1217,7 +1216,7 @@ def kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
     from .corpusops import _hash_bucket
 
-    d = fan_out(table(tune(spark), sf_dir, "documents")).select(
+    d = fan_out(table(spark, sf_dir, "documents")).select(
         "doc_id", ws_tokens("text").alias("toks")
     )
     pair_col = F.transform(

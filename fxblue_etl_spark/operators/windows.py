@@ -26,16 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
-
-#: snapshot columns carried forward in the reference (gcp_rss.py:88-92)
-SNAPSHOT_COLS = (
-    "account_balance",
-    "account_equity",
-    "account_floating_profit",
-    "account_closed_profit",
-    "account_free_margin",
-)
 
 
 def locf(
@@ -67,7 +57,7 @@ def locf_sql(expr: str, partition_by: str, order_by: str) -> str:
 # (F2) — the exact RSS pipeline shape §3.2.
 
 def w1_locf_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     snap = F.when(F.col("event_type") == "signup", F.col("value"))
     feed = e.select(
         F.col("user_id").alias("account_id"),
@@ -101,7 +91,7 @@ FROM filled WHERE event_type != 'signup'
 
 def w2_keep_one_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: newest event per (user, event_type) — row_number()==1."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -149,7 +139,7 @@ def jitter_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store form (`applyInPandasWithState`, as in
     streaming_locf_stateful) — this is the batch contract of that
     rule."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     arr = (
         e.select(
             "user_id",
@@ -216,7 +206,7 @@ GROUP BY 1, 2 ORDER BY 1
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (gaps-and-islands): a new session starts after
     >30 min of inactivity per user; batch analogue of session_window."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     new_sess = (gap.isNull() | (gap > 1800)).cast("int")
@@ -290,7 +280,7 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is single-event iff its start's NEXT event (same user) also
     starts a session (or doesn't exist) — one lead() on the shared
     window, still one pass."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     tsl = F.col("ts").cast("long")
     gap = tsl - F.lag(tsl).over(w)
@@ -394,7 +384,7 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle on (user_id, session merge) — Spark merges
     adjacent session fragments in the aggregation itself, no window
     pass at all."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -452,9 +442,8 @@ def interarrival_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one lag window per user (bounded state), then a
     vocab-group aggregate."""
     from ..io import table
-    from ..session import tune
 
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros("ts").alias("ts_us"),
@@ -507,7 +496,7 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sessionize_events``; path strings are bounded by session length
     (gap-bounded), and the top-k rank runs over the path-vocabulary
     aggregate, not the event stream."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     new_sess = (gap.isNull() | (gap > 1800)).cast("int")
@@ -584,7 +573,7 @@ def traffic_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonality heatmap behind capacity planning. Day names via the
     locale-stable short pattern, identical in both engines; one
     map-side-combined aggregate, 168 output cells max."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.date_format("ts", "E").alias("dow"),

@@ -21,22 +21,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
 
 
 def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    _t(spark, sf_dir, name).createOrReplaceTempView(name)
+    table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ── TPC-H Q6 shape: selective filter + single agg (pushdown showcase) ────
 
 def q6_selective_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -162,7 +156,7 @@ def rolling_week_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer rolling 7-day order spend: RANGE frame over the
     event-time axis — the frame is value-bounded, not row-bounded, so
     gaps and bursts are handled correctly."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.unix_timestamp(F.col("o_orderdate").cast("timestamp")))
@@ -194,7 +188,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector L2 norm / mean / extremes via array HOFs — the
     vector hygiene pass (NaN/zero-norm detection) before any
     similarity join. Entirely per-row until the final projection."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     vec = F.transform("embedding", lambda x: x.cast("double"))
     sq = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)
     s = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x)
@@ -224,7 +218,7 @@ FROM embeddings
 # ── event-time bucketing (batch complement of streaming windows) ─────────
 
 def hourly_event_load(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.date_trunc("hour", "ts").alias("hour"),
@@ -264,7 +258,7 @@ def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     per metric. Unpivot is a row-local Generate — no shuffle is added
     beyond the final 4-group aggregation, and column pruning still
     reaches the scan (only the four measure columns are read)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").alias("quantity"),
         F.col("l_extendedprice").alias("extendedprice"),
         F.col("l_discount").alias("discount"),
@@ -302,7 +296,7 @@ def winsorized_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual order statistic, not interpolated `percentile_cont`) is
     chosen deliberately: both engines return an exact data value, so
     there is no interpolation-formula float divergence."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     pct = o.groupBy("o_orderpriority").agg(
         F.expr(
             "percentile_disc(0.01) WITHIN GROUP (ORDER BY o_totalprice)"
@@ -354,7 +348,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     values), and the deviation is |a - b| of exact doubles, so the
     whole contract is float-divergence-free except the final
     deterministic comparison."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     med = o.groupBy("o_orderpriority").agg(
         F.expr(
             "percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)"
@@ -406,7 +400,7 @@ def regression_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are continuous statistics (not decimal-terminating
     quotients), so round() is stable here — verified identical at
     sf0.01 and sf0.1."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.round(F.regr_slope("l_extendedprice", "l_quantity"), 4).alias("slope"),
@@ -435,7 +429,7 @@ def variant_json_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, extraction is binary-encoded field access, and the whole
     pipeline stays in codegen). Compare `events_json_extract`, which
     uses per-path string parsing (get_json_object)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     k = F.try_variant_get(F.parse_json(F.col("props")), "$.k", "int")
     return (
         e.select("event_type", k.alias("k"))
@@ -468,7 +462,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a time-range cross product; the same shape as the streaming
     interval join but in batch. Conversion rate is a k/n integer
     quotient emitted as DIV ppm (README rounding rule)."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("c_ts")
     )
@@ -527,7 +521,7 @@ def value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     double bit-for-bit (the continuous interpolated variant is
     cross-engine half-boundary bait — see exact_distinct_and_quantiles).
     One partial-aggregable shuffle; group count = type vocabulary."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").alias("p50"),
@@ -602,7 +596,7 @@ def recursive_dup_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fan_out: the minhash HOFs are per-row-heavy and a small scan is
     # one split — without it the whole LSH pass serializes on one task
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     # materialize the (tiny) pair graph ONCE: the recursion references
     # its edge relation every superstep, and re-deriving the whole
     # LSH pipeline per step would dominate the closure by orders of
@@ -676,7 +670,7 @@ def collated_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combined aggregate; collation
     comparisons stay inside codegen."""
-    p = table(tune(spark), sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     raw = F.when(F.col("p_partkey") % 2 == 0, F.lower("p_type")).otherwise(
         F.col("p_type")
     )
@@ -728,7 +722,6 @@ def parameterized_sql_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES directly into SQL strings via psycopg2 placeholders
     (`CSV PARSER/gcp_csv.py:159-193`); this is the engine-side
     equivalent contract."""
-    tune(spark)
     table(spark, sf_dir, "orders").createOrReplaceTempView("fx_orders_v")
     return spark.sql(
         """
@@ -773,7 +766,7 @@ def argmax_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision family the round-3 advice flagged; the struct is the
     scale-safe form.  ``min_by`` on the same struct gives the
     smallest order for a spread metric."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     price_e2 = F.floor(F.col("o_totalprice") * 100).cast("long")
     key = F.struct(price_e2.alias("p"), F.col("o_orderkey").alias("k"))
     return (
@@ -830,7 +823,7 @@ def map_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: entries are assembled from a pre-aggregated
     (status, count) list sorted by status, so map iteration order is
     fixed in both the build and the ``map_keys`` projection."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     per_status = o.groupBy("o_custkey", "o_orderstatus").agg(
         F.count("*").alias("n")
     )
@@ -878,7 +871,7 @@ def xml_roundtrip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     B2B feeds (and RSS itself — the reference's second source,
     `RSS PARSER/gcp_rss.py:83`) are XML; this certifies the typed
     extraction path end to end without a network fetch."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     xml = F.concat(
         F.lit('<o id="'),
@@ -924,7 +917,6 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine trips over first; certifying both engines implement the
     same standard behavior is the point (any engine 'helpfully'
     filtering the NULL would diverge)."""
-    tune(spark)
     table(spark, sf_dir, "customer").createOrReplaceTempView("nn_customer")
     table(spark, sf_dir, "orders").createOrReplaceTempView("nn_orders")
     return spark.sql(
@@ -983,7 +975,7 @@ def integer_division_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     always-non-negative variant — rederived in the oracle as
     ``((a%7)+7)%7``), truncating div, and flooring div, aggregated to
     one row per (sign, congruence-class) bucket."""
-    c = table(tune(spark), sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     a = (F.col("c_custkey") % 100 - 50).cast("long")
     return (
         c.select(a.alias("a"))
@@ -1043,7 +1035,7 @@ def null_ordering_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     a checksum mismatch catches ANY permutation difference, not just
     misplaced nulls.  One window pass per placement over the same
     sort key; entirely map-side aggregable after ranking."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderstatus",
         "o_orderkey",
@@ -1163,7 +1155,7 @@ def window_frame_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (== n_rows when the order is total — the trap quantified), and
     the full-frame last value.  All integer; windows partition on
     user_id (thousands of keys — no concentration)."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     base = e.select(
         "user_id",
         "event_id",

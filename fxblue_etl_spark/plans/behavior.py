@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import swap_cache, table
-from ..session import tune
 
 
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,7 +51,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
     )
     first = e.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
@@ -123,7 +122,7 @@ def event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sets = swap_cache(
         "behavior.cooc",
-        table(tune(spark), sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .distinct()
         .groupBy("user_id")
@@ -216,7 +215,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     The semi-join back to the observed-day grid (calendar-sized,
     broadcast) keeps only days that actually appear, matching the
     oracle's grid semantics."""
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
     )
     ud = e.distinct()
@@ -259,7 +258,7 @@ def type_correlation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: hourly aligned series are calendar-bounded — the self-join
     on ``hour`` is tiny regardless of event volume; the corpus-sized
     work is the one map-side-combined hourly aggregate."""
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("hour"),
         "event_type",
         F.floor(F.col("value") * 1e4).cast("long").alias("v_e4"),
@@ -332,7 +331,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, then a ≤125-group count."""
     from pyspark.sql.window import Window
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # epoch-long recency, not the raw timestamp: an order-isomorphic
     # injection (session tz pinned UTC), so every rank (and hence
     # every NTILE bucket) is identical, and percentile_disc accepts
@@ -454,7 +453,7 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-locally, so no order-keyed self-join ever materializes
     |lineitem|²-shaped intermediates."""
     lp = (
-        table(tune(spark), sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -521,7 +520,7 @@ def association_rules_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5 lineitem scans (r14 scan sweep; guide §2.4)
     lp = swap_cache(
         "behavior.assoc_lp",
-        table(tune(spark), sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct(),
     )
@@ -611,7 +610,7 @@ def revenue_wow_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded weekly series."""
     from pyspark.sql.window import Window
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     weekly = o.groupBy(
         F.date_format(F.date_trunc("week", "o_orderdate"), "yyyy-MM-dd").alias(
             "week"
@@ -670,7 +669,7 @@ def attribution_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle on user_id; the range frame is
     time-bounded, so window state per row is the 30-minute slice, not
     the user's history."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     base = e.select(
         "event_id",
         "user_id",
@@ -761,7 +760,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after runs on a tenure-indexed frame bounded by
     calendar weeks — the fold is a single ≤|weeks|-element
     `F.aggregate`, no global window over data."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     wk = F.expr(
         "datediff(o_orderdate, DATE'1970-01-01') DIV 7"
     ).cast("long")
@@ -880,7 +879,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to KM — one data-scaled per-user
     aggregate, then a calendar-bounded fold."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     wk = F.expr(
         "datediff(o_orderdate, DATE'1970-01-01') DIV 7"
     ).cast("long")

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import fixture_key, stage_fixture, table
-from ..session import tune
 
 N_BUCKETS = 8
 
@@ -76,7 +75,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by market segment. The `merge` hint pins SortMergeJoin (the plan a
     100 TB fact forces anyway — broadcast is off the table) so the
     test certifies the bucketing, not AQE's choice for a small fixture."""
-    tune(spark)
     orders_t, customer_t = _bucketed_tables(spark, sf_dir)
     o = spark.table(orders_t)
     c = spark.table(customer_t)

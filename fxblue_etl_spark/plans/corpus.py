@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.dedup import BAND_SIG_SQL, SIG_LIST_SQL
-from ..session import tune
 
 #: exact-Jaccard threshold for a candidate pair to count as near-dup
 NEAR_DUP_JACCARD = 0.5
@@ -60,7 +59,6 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_tokens,
     )
 
-    tune(spark)
     # ONE corpus scan computes every pre-dedup signal: the quality
     # gate, the marker language-ID, and the content md5 are all
     # row-local expressions over the same text column (the shared
@@ -253,7 +251,6 @@ def training_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpusops import TRAIN_PCT, VAL_PCT, _hash_bucket
     from ..operators.textops import ws_tokens
 
-    tune(spark)
     d = table(spark, sf_dir, "documents")
     b = _hash_bucket(F.col("doc_id"), "split|", 100)
     split = (
@@ -333,7 +330,7 @@ def rag_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import fan_out, table
     from ..operators.textops import chunk_frame, ws_tokens
 
-    d = fan_out(table(tune(spark), sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"))
     n_in = d.select(F.count("*").alias("n_docs_in"))
     kept = d.filter(F.size(ws_tokens("text")) >= RAG_MIN_TOKS)
     chunks = chunk_frame(kept)
@@ -429,7 +426,6 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpusops import mixture_allocation, tokenizer_fertility
     from ..operators.graph import split_decontaminate
 
-    tune(spark)
     docs = table(spark, sf_dir, "documents")
     raw = docs.agg(
         F.count("*").alias("raw_docs"),
@@ -517,7 +513,6 @@ def corpus_release_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import chunk_dedup_rewrite
     from ..operators.graph import _TRAIN_PCT, _VAL_PCT, _doc_dup_groups
 
-    tune(spark)
     surv = llm_survivor_docs(spark, sf_dir).select(
         "doc_id", "pred_lang", "n_tokens", "quality_score"
     )

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 #: sane business-date window for the orders fact
 DATE_LO, DATE_HI = "1990-01-01", "2005-01-01"
@@ -37,7 +36,6 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (a separate aggregate branch per check re-scans the fact
     each time — the scan_sweep finding); only the two referential
     checks pay joins, which no aggregate can express."""
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     li = table(spark, sf_dir, "lineitem")
@@ -123,7 +121,7 @@ def source_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import swap_cache
 
-    d = table(tune(spark), sf_dir, "documents").select("source", "n_chars")
+    d = table(spark, sf_dir, "documents").select("source", "n_chars")
     counts = swap_cache(
         "dq.drift",
         d.groupBy("source", "n_chars").agg(F.count("*").alias("n_sl")),
@@ -212,7 +210,6 @@ def order_totals_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined per-order aggregate, one
     co-partitioned key join, a handful of output groups."""
-    tune(spark)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = table(spark, sf_dir, "lineitem")
     line_tot = li.groupBy("l_orderkey").agg(
@@ -273,7 +270,6 @@ def supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation's exact e2 revenue (DIV — deterministic), HHI is the sum
     of squared ppm shares (≤1e12, no overflow) — the readout that
     flags a nation one supplier failure away from supply risk."""
-    tune(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey", F.floor(F.col("l_extendedprice") * 100).cast("long").alias("rev_e2")
     )
@@ -362,7 +358,7 @@ def gdpr_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import swap_cache
     from ..operators.textops import chunk_frame
 
-    d = table(tune(spark), sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     is_del = F.col("doc_id") % GDPR_MOD == 0
     per_doc = swap_cache(
         "dq.gdpr",
@@ -472,7 +468,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one full-outer equi-join on the id (AQE-handled),
     comparison by content hash, then a 4-row map-side-combined
     rollup; no windows, nothing pairwise."""
-    tune(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.length("text").cast("long").alias("n_chars")
     )
@@ -546,7 +541,6 @@ def file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rowcount diff, not a silent pass)."""
     import os as _os
 
-    tune(spark)
     d = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
     return (
         d.select(
@@ -601,7 +595,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs per run (`CSV PARSER/gcp_csv.py:203-211`) but recomputes
     nothing downstream; this adds the maintained-aggregate layer a
     warehouse on those tables needs."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cut = o.agg(
         F.expr(f"percentile_disc({INCR_CUT_FRACTION}) WITHIN GROUP (ORDER BY o_orderkey)")
     ).collect()[0][0]
@@ -665,7 +659,7 @@ def ivm_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two partial aggregates (standing + delete batch), one
     groups-sized broadcast of the repair set, and one filtered
     re-aggregate over only the repaired groups' retained rows."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     dels = o.filter(F.col("o_orderkey") % 10 == 3)
 
     def partial(df: DataFrame) -> DataFrame:
@@ -791,7 +785,6 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the dim; the merge aggregates a 2×nations-row union.
     The oracle recomputes the full join from scratch — maintenance
     must be indistinguishable from recompute."""
-    spark = tune(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     cut = o.agg(
@@ -882,7 +875,6 @@ def incremental_session_maintenance(
     partition of the data, O(base)+O(delta) — never the full table
     twice), one users-sized join for the boundary test.  At 100 TB
     the delta pass is the only recurring cost."""
-    spark = tune(spark)
     e = table(spark, sf_dir, "events")
     # the cut lives on floored epoch SECONDS (percentile_disc needs a
     # numeric; the second grain is also what the gap algebra uses, so
@@ -1026,7 +1018,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping keys are low-cardinality so the final agg is tiny.
     Exact integer contract end to end — the only float op is the
     IEEE-identical floor(balance / width)."""
-    tune(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     qi = c.select(
@@ -1112,7 +1103,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows bounded by m."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     rows = c.select(
@@ -1302,7 +1292,6 @@ def dp_noisy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     the noise is a row-local CASE over ~21 integer thresholds."""
     from ..operators.corpusops import _hash_bucket
 
-    tune(spark)
     d = table(spark, sf_dir, "documents")
     g = d.groupBy("lang", "source").agg(F.count("*").cast("long").alias("true_n"))
     u = _hash_bucket(
@@ -1383,7 +1372,6 @@ def merkle_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     only level-0 recompute touches changed partitions."""
     from ..operators.corpusops import _hash_bucket
 
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     blk = F.expr(f"o_orderkey DIV {MKL_BLOCK}")
     b_blk = _hash_bucket(blk, "mklb|", 100)
@@ -1611,7 +1599,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combinable 9-group aggregate over the
     scan; everything after runs on 9 rows."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     digits = o.select(cents.alias("cents")).filter(
         F.col("cents") > 0

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 #: customers kept per status in the listagg
 LISTAGG_K = 5
@@ -51,7 +50,7 @@ def observed_ingest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the difference between metrics-for-free and a second
     100 TB scan. Money is accumulated as exact e2 integers (the
     repo-wide cross-engine money discipline)."""
-    li = table(tune(spark), sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     obs = Observation("ingest")
     monitored = li.observe(
         obs,
@@ -94,7 +93,7 @@ def listagg_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     by order count, concatenated with Spark 4's ``listagg`` under an
     explicit WITHIN-GROUP order — deterministic because the ranked
     input order (n desc, custkey asc) is total."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     per_cust = o.groupBy(
         F.col("o_orderstatus").alias("status"),
         F.col("o_custkey").cast("string").alias("cust"),
@@ -136,7 +135,7 @@ def order_status_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     former row-index values into column NAMES, so it is only
     legitimate when the row count is bounded (3 statuses here) — the
     inverse of the corpus-sized cases where ``unpivot`` applies."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     agg = (
         o.groupBy(F.lower("o_orderstatus").alias("status"))
         .agg(

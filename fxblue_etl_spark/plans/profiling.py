@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 #: floor(1e6·log10(1 + 1/d)) for d = 1..9 — computed ONCE here and
 #: injected as literals into BOTH engines' queries, so no runtime
@@ -49,7 +48,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected| column is the anomaly signal a DQ gate thresholds.
     ``o_totalprice`` ≥ 1 in every TPC-H-like vintage, so the first
     digit of ``floor(x)`` is the first significant digit."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     digit = (
         F.substring(F.floor("o_totalprice").cast("long").cast("string"), 1, 1)
         .cast("int")
@@ -123,7 +122,7 @@ def approx_quantile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two single-pass aggregates; the sketch is mergeable
     (map-side partials), the rank check is a conditional count."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     sk = o.agg(
         *[
             F.percentile_approx(
@@ -205,7 +204,7 @@ def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: all comparisons run on ``floor(price·100)`` int64, so
     the Spark plan and the brute-force oracle agree bit-for-bit."""
-    p = table(tune(spark), sf_dir, "part").select(
+    p = table(spark, sf_dir, "part").select(
         "p_partkey",
         F.floor(F.col("p_retailprice") * 100).cast("long").alias("price_e2"),
         "p_size",
@@ -301,7 +300,7 @@ def functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarize); candidates are config-sized."""
     outs = []
     for name, tbl, lhs, rhs in FD_CANDIDATES:
-        t = table(tune(spark), sf_dir, tbl)
+        t = table(spark, sf_dir, tbl)
         per_key = t.groupBy(*lhs).agg(
             F.countDistinct(rhs).alias("n_rhs")
         )
@@ -374,7 +373,7 @@ def fd_discovery_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round, guide §2.5)
     from ..io import fan_out
 
-    t = fan_out(table(tune(spark), sf_dir, "orders"))
+    t = fan_out(table(spark, sf_dir, "orders"))
     samp = t.filter(
         _hash_bucket(
             F.col("o_orderkey").cast("string"), "fdsweep|", 100
@@ -541,7 +540,6 @@ def catalog_snapshot_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     union is 10 one-row frames. The reference has no cross-table
     integrity story at all (each pipeline trusts its own sink);
     this is the missing release gate."""
-    spark = tune(spark)
     parts = []
     for name, key in CATALOG_KEYS.items():
         t = table(spark, sf_dir, name)
@@ -592,7 +590,6 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Stats passes are map-side-combined count(+distinct)
     aggregates; the actual counts are the joins a calibration run
     pays once."""
-    spark = tune(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     li = table(spark, sf_dir, "lineitem")

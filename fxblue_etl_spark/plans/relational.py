@@ -28,12 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
 
 
 # ── Flagship: per-account trade rollup with broadcast dims ───────────────
@@ -43,11 +37,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # the reference's registry consumes (`RSS PARSER/gcp_rss.py:61-63`).
 
 def flagship_account_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    customer = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
+    lineitem = table(spark, sf_dir, "lineitem")
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region")
 
     # dims: nation⋈region is bounded (geography) — always broadcast.
     # The denormalized account dim is customer-sized: broadcastable at
@@ -138,7 +132,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (predicate pushdown + column pruning); map-side partial aggregation
     means the shuffle carries only 6 groups regardless of fact size.
     """
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -179,11 +173,11 @@ GROUP BY l_returnflag, l_linestatus
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join + agg + deterministic top-10."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     # no broadcast hint on customer: AQE broadcasts the pruned
@@ -234,15 +228,15 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, shuffle-join at warehouse scale where a forced hint
     would OOM the build side.
     """
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = table(spark, sf_dir, "region")
+    n = table(spark, sf_dir, "nation")
+    c = table(spark, sf_dir, "customer")
+    s = table(spark, sf_dir, "supplier")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     # customer and supplier must share a nation (TPC-H Q5 semantics)
     joined = (
         l.join(o.select("o_orderkey", "o_custkey"), l.l_orderkey == o.o_orderkey)
@@ -284,8 +278,8 @@ GROUP BY r_name, n_name
 
 def semi_customers_with_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS: customers having ≥1 urgent order (left_semi — no row dup)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -302,8 +296,8 @@ WHERE EXISTS (SELECT 1 FROM orders o
 
 def anti_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS: customers with no orders at all (left_anti)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_name", "c_acctbal")
@@ -325,10 +319,10 @@ def setop_active_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns one row per (op, nationkey) so all three set ops are
     exercised and hash-checked in a single deterministic result.
     """
-    c = _t(spark, sf_dir, "customer").select(
+    c = table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("int").alias("nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").cast("int").alias("nationkey")
     )
     union = c.union(s).distinct().withColumn("op", F.lit("union"))
@@ -356,7 +350,7 @@ def setop_multiset_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT ALL keeps max(n_a − n_b, 0) copies and INTERSECT ALL keeps
     min(n_a, n_b) — multiplicity arithmetic both engines implement
     natively; the aggregate certifies it exactly."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_orderpriority").alias("v")
     )
@@ -393,8 +387,8 @@ def shuffle_hash_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ShuffledHashJoin`` node and value-equality with the unhinted
     plan.  At 100 TB, picking this per-join is the difference between
     a sort-spill and a straight hash probe."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     return (
         o.join(c.hint("SHUFFLE_HASH"), o["o_custkey"] == c["c_custkey"])
         .groupBy("c_mktsegment")
@@ -420,7 +414,7 @@ GROUP BY 1
 
 def rollup_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (returnflag, linestatus) with grouping() markers."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     return (
         l.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -445,7 +439,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 def cube_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (orderstatus, orderpriority)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -472,7 +466,7 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by totalprice (deterministic tiebreak)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -505,7 +499,7 @@ def ranking_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     41/640 = .0640625 at sf0.1), where Spark's HALF_UP round and
     DuckDB's binary round disagree — floor of the bit-identical
     quotient double is deterministic in both engines."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return c.select(
         "c_custkey",
@@ -531,7 +525,7 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC)
 
 def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative spend per customer over order date (ROWS frame)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
@@ -558,7 +552,7 @@ FROM orders
 
 def lag_lead_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead analytics: days since a customer's previous order."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
     prev = F.lag("o_orderdate").over(w)
     return o.select(
@@ -584,7 +578,7 @@ FROM orders
 
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction + scalar string/math functions."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("k"),
@@ -622,7 +616,7 @@ def exact_distinct_and_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of a handful of rows — strictly better than one de-optimized
     object agg over the corpus.
     """
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     fast = e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
         F.min("value").alias("min_value"),
@@ -664,7 +658,7 @@ GROUP BY event_type
 
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts, status × priority (fixed pivot values)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["O", "F", "P"])

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 
 #: selective build-side predicate certified by the round trip
 MAX_PART_SIZE = 3
@@ -41,7 +40,6 @@ _FIXTURE_CONFS = {
 def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem ⋈ part(p_size ≤ 3): bloom-pruned shuffle join, revenue
     rolled up per brand."""
-    tune(spark)
     old = {k: spark.conf.get(k) for k in _FIXTURE_CONFS}
     for k, v in _FIXTURE_CONFS.items():
         spark.conf.set(k, v)
@@ -153,7 +151,7 @@ def portable_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-partition partial OR, then word-wise OR).  Probe =
     k-way equi-join against those 512 rows (broadcast), then an
     all-bits-set aggregate per probe key."""
-    o = table(tune(spark), sf_dir, "orders").select("o_orderkey").distinct()
+    o = table(spark, sf_dir, "orders").select("o_orderkey").distinct()
     members = o.filter(F.col("o_orderkey") % 2 == 0)
     words = _bloom_words(members)
     probes = _bloom_positions(o).select(
@@ -247,7 +245,6 @@ def bloom_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently derivable from the member set alone."""
     from ..io import swap_cache
 
-    tune(spark)
     o = table(spark, sf_dir, "orders").select("o_orderkey").distinct()
     members = o.filter(F.col("o_orderkey") % 2 == 0)
     # persist the two partial word tables (BLOOM_WORDS-sized — these
@@ -388,7 +385,6 @@ def counting_bloom_delete_equivalence(
 
     Output: one row — counter-table sizes, word-wise mismatches
     (must be 0), total counts both sides, max counter, verdict."""
-    tune(spark)
     o = table(spark, sf_dir, "orders").select("o_orderkey").distinct()
     members = o.filter(F.col("o_orderkey") % 2 == 0)
     full = _cbf_counters(members)

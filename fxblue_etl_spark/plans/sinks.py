@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import sink_dir, stage_fixture, table, write_partitioned
-from ..session import tune
 
 #: the partition predicate certified by the round-trip
 KEPT_PRIORITIES = ("1-URGENT", "2-HIGH")
@@ -32,7 +31,6 @@ KEPT_PRIORITIES = ("1-URGENT", "2-HIGH")
 
 def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → partitioned parquet sink → pruned scan → summary."""
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     path = stage_fixture(
         sf_dir,
@@ -84,7 +82,6 @@ def dpp_monthly_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mechanism that makes date-dim joins cheap on a 100 TB
     partitioned fact. `tests/test_ml.py` asserts the
     dynamicpruning expression is present in the plan."""
-    tune(spark)
     fact = spark.read.parquet(_monthly_layout(spark, sf_dir))
     # month dim derived from the fact's own calendar: quarter rollup
     months = (
@@ -127,7 +124,6 @@ def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer/reader, predicate pushdown works the same as parquet);
     oracle computed straight off the source table, so any loss in the
     round trip diverges the hash."""
-    tune(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     )
@@ -180,7 +176,6 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     happened) and payload (the rewrite lost nothing) against the
     source table.
     """
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     # two atomic stages: frag publishes complete before compact reads
     # it, and each dir flips into place in one rename
@@ -279,7 +274,6 @@ def _compaction_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan prices — same lineage, two consumers."""
     from pyspark.sql.window import Window
 
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     man = o.groupBy(
         F.year("o_orderdate").cast("long").alias("y"),
@@ -374,7 +368,6 @@ def compaction_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the execute pass is one manifest-broadcast join +
     a task-keyed repartition write (COMPACT_TASKS writers); the
     certify pass reads back only the columns it aggregates."""
-    tune(spark)
     asg = _compaction_assignment(spark, sf_dir)
     plan = compaction_tier_plan(spark, sf_dir)
     fact = spark.read.parquet(_monthly_layout(spark, sf_dir))
@@ -479,7 +472,6 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass) and must reproduce doubles exactly: Spark writes shortest
     round-trip decimal text, so parse(write(x)) == x bit-for-bit and
     the rollup hashes identically to the source table's."""
-    tune(spark)
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
@@ -535,7 +527,6 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-cost at warehouse scale."""
     import shutil
 
-    tune(spark)
     e = table(spark, sf_dir, "events").select(
         "event_id",
         F.to_date(F.date_trunc("day", "ts")).alias("day"),
@@ -600,7 +591,6 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a 100 TB layout you pay one footer read per file, which is why
     the batch layout (few large files per schema vintage) matters more
     than the option itself; the certified semantics are identical."""
-    tune(spark)
     o = table(spark, sf_dir, "orders")
     old = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     new = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -655,7 +645,6 @@ def corrupt_file_tolerant_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-count delta a DQ gate would alarm on."""
     import shutil
 
-    tune(spark)
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
     def build(tmp: str) -> None:

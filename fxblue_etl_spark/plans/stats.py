@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
 
 #: equi-depth buckets
 N_BUCKETS = 32
@@ -38,7 +37,7 @@ MCV_K = 20
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram of orders.o_totalprice: N_BUCKETS buckets
     of equal row count, each with exact bounds and population."""
-    o = table(tune(spark), sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return (
         o.withColumn("bucket", F.ntile(N_BUCKETS).over(w))
@@ -68,7 +67,7 @@ def mcv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most-common-value list for lineitem.l_quantity with the
     accompanying column-level stats every MCV consumer needs: total
     rows, distinct values, and each value's exact frequency ppm."""
-    li = table(tune(spark), sf_dir, "lineitem").select("l_quantity")
+    li = table(spark, sf_dir, "lineitem").select("l_quantity")
     counts = li.groupBy("l_quantity").agg(F.count("*").alias("n"))
     tot = counts.agg(
         F.sum("n").cast("long").alias("n_total"),
@@ -128,7 +127,7 @@ def sampled_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpusops import _hash_bucket
 
     o = (
-        table(tune(spark), sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(_hash_bucket(F.col("o_orderkey"), "analyze|", 100) < SAMPLE_PCT)
     )
@@ -185,7 +184,7 @@ def hll_accuracy_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both sides are single-pass map-side-combined
     aggregates; HLL is the one that still works when the exact
     distinct's shuffle won't."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     li = table(spark, sf_dir, "lineitem")
     ev = e.agg(
         F.countDistinct("user_id").alias("n_exact"),
@@ -240,7 +239,7 @@ def freq_items_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sketch is one merge-combinable pass with k=1/support
     counters per partition; the exact side is a catalog-bounded count
     aggregate."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     sketch_items = set(
         e.stat.freqItems(["event_type"], FREQ_ITEMS_SUPPORT).collect()[0][0]
     )
@@ -271,7 +270,7 @@ def hll_per_group_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sketch to a sketch per group, which is how dashboards
     actually consume HLL (one counter per dimension value, merged
     across partitions)."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(
@@ -319,7 +318,7 @@ def decimal_money_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference stores money as Postgres floats
     (`CSV PARSER/gcp_csv.py:40-42`); this is the exact-ledger upgrade
     of the same totals."""
-    li = table(tune(spark), sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     disc_f = (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
     return (
@@ -382,7 +381,6 @@ def parquet_agg_pushdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit made O(footers)."""
     import os as _os
 
-    tune(spark)
     v1_key = "spark.sql.sources.useV1SourceList"
     push_key = "spark.sql.parquet.aggregatePushdown"
     prev_v1 = spark.conf.get(v1_key, None)
@@ -448,7 +446,6 @@ def ndv_catalog_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     them."""
     from ..io import TABLES, table
 
-    tune(spark)
     outs = []
     for tbl in TABLES:
         df = table(spark, sf_dir, tbl)
@@ -590,7 +587,7 @@ def portable_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: register-table digest (registers used, Σrho, max rho),
     the exact scaled harmonic sum, and the integer estimate."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     regs = hll_register_table(e, "event_id")
     # all m registers: empty ones contribute rho = 0 (2^53 scaled)
     contrib = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({HLL_W + 1} - rho AS INT))")
@@ -666,7 +663,7 @@ def hll_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes it a DRIVER-CERTIFIED row like the rest of the family."""
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     # persist the two partial register tables (HLL_M-bounded — the
     # stored sketch states): the MAX-merge and the register-count
     # audit both consume each side; un-persisted the member hash pass
@@ -789,7 +786,7 @@ def conformal_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..io import swap_cache
 
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * 1e4).cast("long").alias("v"),
         _stats_hash_bucket(F.col("user_id").cast("string"), "conf|", 100)
@@ -948,7 +945,7 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is one distinct + a 7-way explode over (day, user) pairs.
     All integers — the estimate is the portable-HLL DECIMAL(38,0)
     quotient, bit-identical cross-engine."""
-    e = table(tune(spark), sf_dir, "events").select(
+    e = table(spark, sf_dir, "events").select(
         F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id"
     )
     h = F.conv(
@@ -1180,7 +1177,7 @@ def portable_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: sketch build per :func:`kmv_sketch_table`; the pair
     stage is a broadcast self-join of #groups sketch rows with all
     array algebra row-local over ≤ 2k-element arrays."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     sk = kmv_sketch_table(e, "event_type", "user_id")
     a = sk.select(F.col("grp").alias("type_a"), F.col("ks").alias("ka"))
     b = sk.select(F.col("grp").alias("type_b"), F.col("ks").alias("kb"))
@@ -1333,7 +1330,7 @@ def qdigest_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     group — the input is ≤ 2^16 rows by construction, the same
     'sketch-state is small' posture as the portable HLL register
     table)."""
-    e = table(tune(spark), sf_dir, "events").filter(F.col("value").isNotNull())
+    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     leaf = (
         e.select(
             (
@@ -1544,7 +1541,7 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at +0.8s on the benched query — it forces the cache
     build plus a full aggregate pass — and was replaced by this
     bound; both plans share the oracle)."""
-    n_rows = table(tune(spark), sf_dir, "lineitem").count()
+    n_rows = table(spark, sf_dir, "lineitem").count()
     li = _spearman_rows(spark, sf_dir)
     if n_rows > SPEAR_GATE_ROWS:
         return _spearman_bucketed_tail(li)
@@ -1593,7 +1590,7 @@ def _spearman_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return swap_cache(
         "stats.spearman",
-        table(tune(spark), sf_dir, "lineitem").select(
+        table(spark, sf_dir, "lineitem").select(
             F.col("l_returnflag").alias("g"),
             F.floor(F.col("l_quantity") * 100).cast("long").alias("x"),
             F.floor(F.col("l_extendedprice") * 100).cast("long").alias("y"),
@@ -2277,7 +2274,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one partitioned (never global) rank window per
     group, one broadcast threshold join-back, one aggregate."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderpriority").alias("pr"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -2448,7 +2445,7 @@ def percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the caller."""
     from ..io import swap_cache
 
-    o = table(tune(spark), sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("v"),
     )
@@ -2671,7 +2668,7 @@ def encoding_advisor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     All integer: strings enter as their first codepoint, money on
     the e2 grid, dates as epoch-day offsets; delta bit width via
     ``length(bin(x))`` (no float log2)."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     v = _enc_stack(o)
     return _enc_report(enc_block_state(v), enc_value_state(v))
 
@@ -2693,7 +2690,7 @@ def encoding_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     + both full-outer mismatch counts pinned to 0 by the oracle."""
     from ..io import swap_cache
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # persist each stacked value frame: both state builders (block
     # and value set) consume every stack, and the value-set upsert
     # reads the even side twice more — un-persisted that was 7
@@ -2815,7 +2812,7 @@ def chi2_contingency_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     premultiplier or emit the raw sufficient statistics."""
     from ..io import swap_cache
 
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cells = swap_cache(
         "stats.chi2",
         o.groupBy(
@@ -2895,7 +2892,7 @@ def bitmap_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket, popcounts summed over buckets.  Without the bucket
     key, custkeys alias modulo 32768 and every domain past the first
     bucket silently undercounts (round-4 advice)."""
-    c = table(tune(spark), sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     per_seg_bucket = c.groupBy(
         F.col("c_nationkey").cast("int").alias("c_nationkey"),
         "c_mktsegment",
@@ -2994,7 +2991,6 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import fan_out
     from ..operators.corpusops import _hash_bucket
 
-    tune(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),

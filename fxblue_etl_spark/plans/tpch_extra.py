@@ -32,12 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import table
-from ..session import tune
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
 
 
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,8 +44,8 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities are small integers, so sums are exact in double and
     the quotient is bit-identical in both engines.
     """
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1").select(
+    l = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1").select(
         "p_partkey"
     )
     thresh = l.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
@@ -97,14 +91,14 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the only shuffles are the l_orderkey equi-join and
     the 3-key aggregate; the CASE sums combine map-side.
     """
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_shipdate",
         F.concat(F.lit("MODE_"), (F.col("l_suppkey") % 3).cast("string")).alias(
             "ship_mode"
         ),
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     j = l.join(o, l.l_orderkey == o.o_orderkey).filter(
@@ -142,10 +136,10 @@ def q20_part_supp_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both IN levels decorrelate to semi joins; the grouped HAVING is a
     map-side-combinable aggregate on the (supp, part) key.
     """
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select(
+    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select(
         "p_partkey"
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -157,8 +151,8 @@ def q20_part_supp_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")
         .join(heavy_supp, s.s_suppkey == heavy_supp.l_suppkey, "left_semi")
@@ -190,15 +184,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Argmin is a row_number window over the derived relation — one
     shuffle on the part key, no correlated re-scan per part.
     """
-    l = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    l = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
     p = (
-        _t(spark, sf_dir, "part")
+        table(spark, sf_dir, "part")
         .filter((F.col("p_type") == "STANDARD") & (F.col("p_size") >= 40))
         .select("p_partkey", "p_name")
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     region_supp = (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -249,12 +243,12 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture). The name filter prunes the part side before the fact
     join; nation is hard-broadcast.
     """
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red")).select(
+    l = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").contains("red")).select(
         "p_partkey", "p_retailprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = table(spark, sf_dir, "nation")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(0.1) * F.col(
         "p_retailprice"
     ) * F.col("l_quantity")
@@ -292,9 +286,9 @@ def q11_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the grand total selects nothing once the part count grows).
     The global scalar is a one-row aggregate broadcast into the
     compare, not a shuffle."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
+    l = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
     val = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     nat = (
         l.join(s, l.l_suppkey == s.s_suppkey)
@@ -329,8 +323,8 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers — the Q13 outer-join histogram. The left join keeps
     customers with no orders (count = 0); the second aggregate is a
     count-of-counts over at most |customers| rows."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer").select("c_custkey")
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_orderkey", "o_custkey")
     per_cust = (
@@ -357,13 +351,13 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     Brand#1 parts, excluding suppliers from a NOT-IN subquery
     (negative-balance suppliers) — the Q16 shape: anti join feeding a
     count(DISTINCT) over a derived supplier×part relation."""
-    rel = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    rel = table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
     p = (
-        _t(spark, sf_dir, "part")
+        table(spark, sf_dir, "part")
         .filter((F.col("p_brand") != "Brand#1") & (F.col("p_size") <= 20))
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (

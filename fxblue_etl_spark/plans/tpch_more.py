@@ -27,20 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return table(spark, sf_dir, name)
 
 
 def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders per priority having ≥1 lineitem shipped >60 days after
     order date — EXISTS with a non-equi correlated predicate, planned
     as a left-semi join (no row duplication, fact shuffled once)."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = table(spark, sf_dir, "orders")
+    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = o.join(
         l,
         (o.o_orderkey == l.l_orderkey)
@@ -67,11 +61,11 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffles are the two fact joins."""
     n1 = "NATION_1"
     n2 = "NATION_2"
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = _t(spark, sf_dir, "lineitem")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    l = table(spark, sf_dir, "lineitem")
 
     supp_n = supp.join(
         F.broadcast(nation.withColumnRenamed("n_name", "supp_nation")),
@@ -123,13 +117,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 customers by revenue lost to returns in one quarter —
     selective fact filters first (pushed to the scans), then the
     4-way join, then top-k on the aggregated (small) side."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    l = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = table(spark, sf_dir, "nation")
     joined = (
         l.join(o.select("o_orderkey", "o_custkey"), l.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == c.c_custkey)
@@ -167,8 +161,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promo revenue share for one quarter: conditional aggregate over
     a fact×part join — one output row, so the whole query is map-side
     partials + a singleton reduce."""
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -202,9 +196,9 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders whose total quantity exceeds 300, with their customer —
     the aggregate-feeds-its-own-filter shape: group the fact, HAVING,
     then join the survivors (tiny) back to dims broadcast-style."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    l = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 4).alias("total_qty"))
@@ -239,8 +233,8 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue under an OR-of-ANDs predicate across brand/size/quantity
     bands — the pushdown-hostile shape: the disjunction can't reach the
     scan, but column pruning and the part-side broadcast still apply."""
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    l = _t(spark, sf_dir, "lineitem").select(
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    l = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     joined = l.join(p, l.l_partkey == p.p_partkey)
@@ -284,11 +278,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier(s) with the maximum quarterly revenue — the argmax-via-
     scalar-subquery shape: the revenue 'view' is computed once, its max
     is a 1-row broadcast back onto itself."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = table(spark, sf_dir, "supplier")
     revenue = l.groupBy("l_suppkey").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
             "total_revenue"
@@ -319,9 +313,9 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — the q21 double-correlation shape: EXISTS (another supplier
     on the order) AND NOT EXISTS (another LATE supplier on the order),
     planned as a semi join and an anti join on the same fact."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    s = _t(spark, sf_dir, "supplier")
+    l = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = table(spark, sf_dir, "supplier")
     li = l.join(o, l.l_orderkey == o.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",
@@ -371,8 +365,8 @@ def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation count/balance of customers with above-average balance
     and no orders after 1999 — scalar-average subquery feeding an anti
     join (the q22 shape on available columns)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
     avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
@@ -406,13 +400,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-sum ratio on top. Bounded dims broadcast; the fact is
     shuffled only on its join keys; the share ratio is a quotient of
     two float sums (non-terminating decimals — no round-half hazard)."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    l = _t(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    l = table(spark, sf_dir, "lineitem")
 
     # region of the TARGET nation, resolved from the bounded dims
     target_region = (

@@ -25,7 +25,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 
 BITS = 8  # per-dimension bits → 16-bit z-value
 DIM_MOD = 1 << BITS
@@ -59,7 +58,7 @@ def zorder_clustering_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders keyed by (custkey bucket, epoch-day bucket) → z-value →
     per-z-bucket bounding-box stats. The area column is what min/max
     skipping sees per file after a z-ordered write."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     x = (F.col("o_custkey") % DIM_MOD).cast("int")
     y = (
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -96,7 +95,7 @@ def hilbert_clustering_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically (3·rx + ry − 2·rx·ry — identical truth table) so
     neither engine needs a bitwise-xor operator.  Pure integer math,
     exact in both engines."""
-    o = table(tune(spark), sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     x = (F.col("o_custkey") % DIM_MOD).cast("int")
     y = (
         F.datediff(
@@ -255,7 +254,7 @@ def zonemap_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays cheap at 100 TB (file stats are O(files), never O(rows)).
     Exact integer contract end to end (the efficiency quotient is
     floored to integer ppm)."""
-    li = table(tune(spark), sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     day = F.datediff(
         F.to_date("l_shipdate"), F.lit(str(_ZM_ANCHOR)).cast("date")
     )

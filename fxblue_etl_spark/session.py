@@ -1,9 +1,18 @@
-"""SparkSession construction and per-session conf guards.
+"""SparkSession construction and the session conf guard.
 
-The engine never *owns* the session when driven externally (the driver
-contract passes one in), so every public query funnels through
-:func:`tune` — a cheap, idempotent runtime-conf guard that pins the
-semantics the engine's operators assume:
+:func:`tune` is a cheap, idempotent runtime-conf guard that pins the
+semantics the engine's operators assume.  It runs once where a session
+enters the engine, and nowhere else:
+
+* :func:`get_spark`, which builds the local session (tests, bench,
+  perfbench, tools);
+* ``__spark_entry__``, where the driver hands in a session the engine
+  does not own: ``entry(spark)`` and every callable of ``queries()``
+  pass it through :func:`tune` first.
+
+An operator or plan module called directly runs on the session it is
+given, so its caller brings one built by :func:`get_spark` or passed
+through :func:`tune`.  The pinned confs:
 
 * ``spark.sql.session.timeZone=UTC`` — required for timestamp parity
   with the reference's ``pytz.utc.localize`` behavior

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import stage_fixture, table
-from ..session import tune
 
 #: the staged layout: (column, start [1-based], width, spark type)
 FWF_SPEC: tuple[tuple[str, int, int, str], ...] = (
@@ -83,7 +82,6 @@ def fwf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash.  The line-width gate (every line exactly FWF_LINE_WIDTH
     chars) is asserted inside the result so a drifting writer is a
     visible integer, not a silent parse skew."""
-    tune(spark)
     path = _stage_fwf(spark, sf_dir)
     parsed = read_fwf(spark, path)
     return parsed.groupBy("o_orderstatus").agg(

@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import stage_fixture, table
-from ..session import tune
 from ..operators import cleaning as C
 
 #: raw FXBlue columns (pre-rename) surfaced from the CSV text — all
@@ -191,7 +190,6 @@ def read_fxblue_csv(spark: SparkSession, path_glob: str) -> DataFrame:
     as the reference's prefix listing reads every blob under the prefix,
     and a folder with no match reads as no files instead of raising
     ``PATH_NOT_FOUND``."""
-    tune(spark)
     reader = spark.read
     folder, name = os.path.split(path_glob)
     if folder and _GLOB.search(name) and not _GLOB.search(folder):
@@ -325,7 +323,6 @@ def csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference parses CSV via pandas
     (`CSV PARSER/gcp_csv.py:76`), which handles quoted newlines —
     this keeps that capability in the Spark restatement."""
-    tune(spark)
     d = table(spark, sf_dir, "documents")
     txt = F.expr("replace(text, ' line ', concat(chr(10), 'line', chr(10)))")
     path = stage_fixture(

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import stage_fixture, table
-from ..session import tune
 
 #: known-bad lines planted next to the real shards
 CORRUPT_LINES = (
@@ -71,7 +70,6 @@ def jsonl_tolerant_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row: good/corrupt counts and payload aggregates. If the reader
     dropped good rows, mangled a type, or mis-quarantined, the hash
     diverges from the oracle computed off the source table."""
-    tune(spark)
     path = _jsonl_layout(spark, sf_dir)
     back = (
         spark.read.schema(_SCHEMA)

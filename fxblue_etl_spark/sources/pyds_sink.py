@@ -153,9 +153,7 @@ def pyds_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import sink_dir, table
     from ..operators.dedup import _hex8_sql  # noqa: F401  (oracle twin below)
-    from ..session import tune
 
-    tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
     out_dir = sink_dir(sf_dir, "pyds_jsonl_sink_roundtrip")
@@ -240,9 +238,7 @@ def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
 
     from ..io import sink_dir, table
-    from ..session import tune
 
-    tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
     out_dir = sink_dir(sf_dir, "pyds_manifest_reader_roundtrip")
@@ -376,10 +372,8 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..io import sink_dir
-    from ..session import tune
     from ..streaming.pipelines import events_stream
 
-    tune(spark)
     spark.dataSource.register(JsonlShardDataSource)
 
     out_dir = sink_dir(sf_dir, "pyds_stream_sink_roundtrip")

@@ -51,20 +51,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-#: entry schema, identical to rss_feed.ENTRY_COLS
-ENTRY_SCHEMA_DDL = (
-    "account_id string, entry_idx long, "
-    "account_balance string, account_equity string, "
-    "account_floatingprofit string, account_closedprofit string, "
-    "account_freemargin string, "
-    "position_ticket string, position_action string, position_lots string, "
-    "position_symbol string, position_openprice string, position_closeprice string, "
-    "position_opentime string, position_closetime string, position_profit string, "
-    "position_swap string, position_commission string, position_totalprofit string, "
-    "position_tp string, position_sl string, position_magicnumber string"
-)
-
-_FIELDS = [s.strip().split(" ")[0] for s in ENTRY_SCHEMA_DDL.split(",")]
+from .rss_feed import ENTRY_COLS, ENTRY_FIELDS
 
 RSS_TS = "Thu 21 Mar 2019 09:00:11"
 EPOCH_TS = "Thu 1 Jan 1970 00:00:00"
@@ -106,7 +93,7 @@ def fake_entry(account_id: str, idx: int) -> tuple:
         }
     vals["account_id"] = account_id
     vals["entry_idx"] = idx
-    return tuple(vals.get(f) for f in _FIELDS)
+    return tuple(vals.get(f) for f in ENTRY_FIELDS)
 
 
 def _network_entries(rss_url: str) -> list[dict]:
@@ -197,7 +184,7 @@ def _read_accounts(accounts: list[dict], mode: str):
             for idx, entry in enumerate(_network_entries(acct["rss_url"])):
                 yield tuple(
                     aid if f == "account_id" else idx if f == "entry_idx" else entry.get(f)
-                    for f in _FIELDS
+                    for f in ENTRY_FIELDS
                 )
 
 
@@ -290,7 +277,7 @@ class RssFeedDataSource(DataSource):
         return "fxblue_rss"
 
     def schema(self) -> str:
-        return ENTRY_SCHEMA_DDL
+        return ENTRY_COLS
 
     def reader(self, schema: StructType) -> RssFeedReader:
         return RssFeedReader(self.options)
@@ -310,12 +297,11 @@ def _registry_parquet(spark, sf_dir: str) -> str:
     from pyspark.sql import functions as F
 
     from ..io import stage_fixture, table
-    from ..session import tune
 
     return stage_fixture(
         sf_dir,
         "registry_parquet",
-        lambda tmp: table(tune(spark), sf_dir, "events")
+        lambda tmp: table(spark, sf_dir, "events")
         .select(F.col("user_id").cast("string").alias("account_id"))
         .distinct()
         .select(
@@ -331,9 +317,6 @@ def rss_datasource_scan(spark, sf_dir: str):
     """Batch scan through the custom DataSource: registry = distinct
     event users via a path-backed parquet (partitions planned from
     its row groups), fake-feed mode, full 22-column entry output."""
-    from ..session import tune
-
-    spark = tune(spark)
     spark.dataSource.register(RssFeedDataSource)
     return (
         spark.read.format("fxblue_rss")
@@ -381,10 +364,8 @@ def rss_datasource_stream(spark, sf_dir: str):
     reader: one poll per micro-batch, offset-tracked, each batch
     fanned out over the registry's row groups; driven to completion
     into a memory sink. Result must equal the batch scan."""
-    from ..session import tune
     from ..streaming.pipelines import run_to_table
 
-    spark = tune(spark)
     spark.dataSource.register(RssFeedDataSource)
     s = (
         spark.readStream.format("fxblue_rss")

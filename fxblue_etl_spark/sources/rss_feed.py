@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..session import tune
 from ..operators import cleaning as C
 from ..operators.windows import locf_sql
 
@@ -73,6 +72,8 @@ ENTRY_COLS = (
     "position_swap string, position_commission string, position_totalprofit string, "
     "position_tp string, position_sl string, position_magicnumber string"
 )
+#: ENTRY_COLS' field names, in schema order
+ENTRY_FIELDS = [s.strip().split(" ")[0] for s in ENTRY_COLS.split(",")]
 
 
 def fetch_feed_entries(
@@ -102,16 +103,15 @@ def fetch_feed_entries(
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        field_names = [s.strip().split(" ")[0] for s in ENTRY_COLS.split(",")]
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
                 for idx, entry in enumerate(fetcher(row["rss_url"])):
-                    rec = {k: entry.get(k.replace("account_", "account_", 1)) for k in field_names}
+                    rec = {k: entry.get(k) for k in ENTRY_FIELDS}
                     rec["account_id"] = row["account_id"]
                     rec["entry_idx"] = idx
                     out.append(rec)
-            yield pd.DataFrame(out, columns=field_names)
+            yield pd.DataFrame(out, columns=ENTRY_FIELDS)
 
     return accounts.mapInPandas(run, ENTRY_COLS)
 
@@ -190,7 +190,7 @@ def rss_trades(entries: DataFrame, accounts_raw: DataFrame) -> DataFrame:
 # ── oracle-checked demonstration: deterministic feed from events ─────────
 
 def _synthetic_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     uid = F.col("user_id")
     return e.select(uid).distinct().select(
         uid.cast("string").alias("account_id"),
@@ -222,7 +222,7 @@ syn_accounts AS (
 def _synthetic_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed entries from events: 'signup' rows are account snapshots,
     everything else a position record (FIXTURES.md A3 shape)."""
-    e = table(tune(spark), sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     k = F.col("event_id")
     is_snap = F.col("event_type") == "signup"
     s = lambda expr: expr.cast("string")

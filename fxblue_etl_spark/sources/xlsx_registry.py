@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import stage_fixture, table
-from ..session import tune
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -216,7 +215,6 @@ def s4_xlsx_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     mangling in the write→read round-trip breaks the hash."""
     from .rss_feed import account_metadata
 
-    tune(spark)
     path = _fixture_xlsx(spark, sf_dir)
     return account_metadata(xlsx_registry_df(spark, path))
 

@@ -41,7 +41,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..io import stage_fixture
-from ..session import tune
 
 
 def _stage_table_dir(sf_dir: str, table: str) -> str:
@@ -80,7 +79,6 @@ def events_stream(
     feed a pre-split multi-file directory one file per micro-batch;
     the default single-staged-file path (what the driver certifies)
     is unchanged."""
-    tune(spark)
     d = stage_dir if stage_dir is not None else _stage_table_dir(sf_dir, "events")
     schema = spark.read.parquet(d).schema
     reader = spark.readStream.schema(schema)
@@ -871,7 +869,6 @@ def streaming_ohlc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is six longs per (hour, type) bar — bounded by the
     calendar, not the event volume."""
-    tune(spark)
     return ohlc_bars_from_stream(events_stream(spark, sf_dir))
 
 
@@ -1052,7 +1049,6 @@ def streaming_cdc_scd2(
     """SCD2 dimension built from the events CDC feed (see
     `scd2_from_stream`); the batch gaps-and-islands oracle certifies
     the merged history exactly."""
-    tune(spark)
     return scd2_from_stream(
         events_stream(
             spark,
@@ -1175,7 +1171,6 @@ def streaming_lsh_dedup(
     the incremental path."""
     from ..operators.dedup import corpus_band_index, minhash_band_rows
 
-    tune(spark)
     # the static side is the MAINTAINED corpus index (memoized per
     # session/fixture, like a deployment's persistent banded index) —
     # a stream-static join re-executes its static subtree every
@@ -1282,7 +1277,6 @@ def _dedup_gate(
     grows linearly with batch COUNT (measured: 1.02→1.71 s/batch over
     10 batches at sf0.1).  coalesce is shuffle-free; at cluster scale
     this is the bucketed index table's MERGE compaction."""
-    tune(spark)
     d = _stage_table_splits(sf_dir, table, id_col, n_splits)
     schema = spark.read.parquet(d).schema
     n_par = spark.sparkContext.defaultParallelism
@@ -1534,7 +1528,6 @@ def streaming_quality_gate(
     to content-quality scoring."""
     from ..operators.textops import quality_signal_cols
 
-    tune(spark)
     d = _stage_table_dir(sf_dir, "documents")
     schema = spark.read.parquet(d).schema
     stream_docs = (
@@ -1587,7 +1580,6 @@ def streaming_kmv_distinct(
     upgraded to mergeable distinct cardinality."""
     from ..plans.stats import KMV_DOM, KMV_K, kmv_sketch_table
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "events", "event_id", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -1683,7 +1675,6 @@ def streaming_gram_maintenance(
     re-scanning the corpus."""
     from ..operators.ml import gram_cells
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "embeddings", "vec_id", n_splits)
     schema = spark.read.parquet(d).schema
     stream_vecs = (
@@ -1742,7 +1733,6 @@ def streaming_bloom_maintenance(
     pruning in `bloom_filter_join` reads the standing state."""
     from ..plans.runtime_filters import _bloom_words
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -1798,7 +1788,6 @@ def streaming_hll_maintenance(
     checkpoint supersedes the previous (released eagerly)."""
     from ..plans.stats import hll_register_table
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "events", "event_id", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -1869,7 +1858,6 @@ def streaming_cms_maintenance(
     checkpoint supersedes the previous (released eagerly)."""
     from ..operators.temporal import _cms_md5_buckets
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "lineitem", "l_orderkey", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -1956,7 +1944,6 @@ def streaming_jitter_dedup(
 
     from ..operators.windows import JITTER_T_S
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "events", "ts", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -2043,7 +2030,6 @@ def streaming_drawdown_monitor(
         GroupStateTimeout,
     )
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "events", "ts", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -2174,7 +2160,6 @@ def streaming_observed_metrics(
     the streaming sibling of `observed_ingest_metrics`."""
     from datetime import datetime
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "events", "event_id", OBS_N_SPLITS)
     raw = events_stream(spark, sf_dir, stage_dir=d, max_files_per_trigger=1)
     agg = (
@@ -2301,7 +2286,6 @@ def streaming_ewma_monitor(
     aggregate."""
     from ..operators.temporal import ewma_from_weekly
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
@@ -2356,7 +2340,6 @@ def streaming_cusum_monitor(
     the distribution" without re-scanning history."""
     from ..operators.temporal import cusum_from_daily
 
-    tune(spark)
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
     schema = spark.read.parquet(d).schema
     stream = (
