@@ -25,8 +25,10 @@ Layout:
 
 __version__ = "0.1.0"
 
-from fxblue_etl_spark.session import _cache_zip_directories
+from fxblue_etl_spark.session import _cache_zip_directories, _freeze_worker_heap
 
 # A Python worker imports this package when it unpickles a kernel, so
-# every worker that runs one stops re-reading unchanged zips per task.
+# every worker that runs one stops re-reading unchanged zips per task
+# and stops re-walking its import heap after each task.
 _cache_zip_directories()
+_freeze_worker_heap()

@@ -113,7 +113,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out(
+    df: DataFrame, min_parts: int | None = None, part_bytes: int = 0
+) -> DataFrame:
     """Spread per-row-heavy (interpreted HOF / Pandas-UDF) work.
 
     A small table scans as one split, which serializes CPU-bound
@@ -121,6 +123,12 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     Repartition up to cluster parallelism when the scan is narrower;
     at real scale the scan already yields enough splits and this is a
     no-op (no shuffle inserted).
+
+    ``part_bytes > 0`` also caps the target at ``ceil(sizeInBytes /
+    part_bytes)``, Catalyst's size estimate of the optimized plan (a
+    driver-side statistic, no job): input worth less than one part per
+    core then runs in fewer tasks, and input under one part runs in
+    its scan stage with no repartition at all.
 
     The width probe uses ``inputFiles()`` (a driver-side metadata
     lookup), never ``df.rdd`` — RDD conversion re-plans the whole
@@ -135,6 +143,9 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         files = df.inputFiles()
     except Exception:
         files = []
+    if files and len(files) < target and part_bytes > 0:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        target = min(target, -(-int(stats.sizeInBytes()) // part_bytes))
     if files and len(files) < target:
         return df.repartition(target)
     return df

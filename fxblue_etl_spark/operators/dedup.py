@@ -55,6 +55,16 @@ PERM_B24 = [(2246822519 * (p + 1)) % 2**30 for p in range(24)]
 PERM_A = PERM_A24[:N_PERM]
 PERM_B = PERM_B24[:N_PERM]
 
+#: Input bytes per task for the MinHash, S-curve and SimHash kernels
+#: (``io.fan_out(..., part_bytes=)``).  Splitting a scan costs a
+#: repartition job and a Python task per extra part: 0.045 CPU s per op
+#: on perfbench's 123 KB corpus, two parts against one (4 alternating
+#: pairs, 4-core host).  The kernels cost about 0.5 (MinHash) and 0.3
+#: (SimHash) ms of CPU per KiB of parquet, so a 256 KiB part carries
+#: 0.08-0.13 s of kernel work, two to three times what it costs to
+#: split off; a 64 KiB part would cost more to split than it carries.
+KERNEL_PART_BYTES = 256 * 1024
+
 
 def _norm_text(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
@@ -101,18 +111,18 @@ GROUP BY 1
 _JAVA_WS_RE = "[ \t\n\x0b\f\r]+"
 
 
-def _doc_rows(batches, k: int, columns: tuple[str, ...], rows_of, extra=()):
-    """The shared body of the five text-signature ``mapInPandas``
-    kernels.  Each document of each pandas batch is lowercased and
-    split on Java ``\\s`` runs (the ``ws_tokens(_norm_text(text))``
-    tokenizer); documents with null text or fewer than ``k`` tokens
-    are dropped; the rest get their distinct k-word shingles in
-    first-seen order (the order ``array_distinct`` keeps).
-    ``rows_of(toks, shingles, *extra)`` returns the document's output
-    rows without ``doc_id``; each non-empty batch yields one frame of
-    ``doc_id`` + ``columns``.  Every kernel is bit-identical to its
-    JVM reference at the end of this module
-    (tests/test_arrow_signatures.py).
+def _doc_rows(batches, k: int, extra=()):
+    """The one tokenizer of the five text-signature ``mapInPandas``
+    kernels, run once per Arrow batch.  Each document of each pandas
+    batch is lowercased and split on Java ``\\s`` runs (the
+    ``ws_tokens(_norm_text(text))`` tokenizer); documents with null
+    text or fewer than ``k`` tokens are dropped; the rest get their
+    distinct k-word grams in first-seen order (the order
+    ``array_distinct`` keeps).  Each batch that keeps a document yields
+    ``(ids, toks, grams, extras)``: parallel lists of its kept
+    documents' ``doc_id``, tokens and grams, and one list per column
+    of ``extra``.  Every kernel is bit-identical to its JVM reference
+    at the end of this module (tests/test_arrow_signatures.py).
 
     LOCALE CONTRACT: bit-identity of the lowercasing assumes the JVM
     default locale is ROOT-like for case mapping — Spark's ``lower()``
@@ -128,7 +138,7 @@ def _doc_rows(batches, k: int, columns: tuple[str, ...], rows_of, extra=()):
 
     ws = _re.compile(_JAVA_WS_RE)
     for pdf in batches:
-        out = []
+        ids, toks_of, grams_of, extras = [], [], [], [[] for _ in extra]
         for doc_id, text, *rest in zip(
             pdf["doc_id"], pdf["text"], *(pdf[c] for c in extra)
         ):
@@ -141,54 +151,82 @@ def _doc_rows(batches, k: int, columns: tuple[str, ...], rows_of, extra=()):
             toks = [t for t in ws.split(text.lower()) if t]
             if len(toks) < k:
                 continue
-            sh = list(
-                dict.fromkeys(
-                    toks
-                    if k == 1
-                    else map(" ".join, zip(*(toks[j:] for j in range(k))))
-                )
-            )
             # a null doc_id passes through, as in the JVM references;
             # a nullable bigint batch surfaces it as float NaN, which
             # would fail the Arrow bigint cast and kill the task
-            doc_id = None if _pd.isna(doc_id) else int(doc_id)
-            out.extend((doc_id, *row) for row in rows_of(toks, sh, *rest))
-        if out:  # an all-empty pandas frame types list columns as
-            # float64, which Arrow cannot cast to list<string>
-            cols = [list(c) for c in zip(*out)]
-            yield _pd.DataFrame(
-                {
-                    # nullable Int64, not a bare list: a passed-through
-                    # null doc_id must reach Arrow as null, not NaN
-                    "doc_id": _pd.array(cols[0], dtype="Int64"),
-                    **dict(zip(columns, cols[1:])),
-                }
+            ids.append(None if _pd.isna(doc_id) else int(doc_id))
+            toks_of.append(toks)
+            grams_of.append(
+                list(
+                    dict.fromkeys(
+                        toks
+                        if k == 1
+                        else map(" ".join, zip(*(toks[j:] for j in range(k))))
+                    )
+                )
             )
+            for col, v in zip(extras, rest):
+                col.append(v)
+        if ids:  # an all-empty pandas frame types list columns as
+            # float64, which Arrow cannot cast to list<string>
+            yield ids, toks_of, grams_of, extras
 
 
-def _minhasher(perm_a: list, perm_b: list):
-    """A function from a shingle list to its universal-hash-minimum
-    signature over the family ``(perm_a, perm_b)``, as in
-    :func:`minhash_signatures`: one md5 per shingle reduced to a
-    32-bit int h, then the element-wise min of
-    ``(A[p]*h + B[p]) % MERSENNE_31`` — hashlib md5 == Spark md5, and
-    the products (< 2^62) stay exact in int64."""
+def _frame(ids: list, **columns):
+    """One kernel output batch: ``doc_id`` as nullable Int64 (a
+    passed-through null must reach Arrow as null, not NaN), then
+    ``columns`` in order."""
+    import pandas as _pd
+
+    return _pd.DataFrame({"doc_id": _pd.array(ids, dtype="Int64"), **columns})
+
+
+def _md5_words(vocab):
+    """``(len(vocab), 4)`` int64: each word's md5 digest as four
+    big-endian 32-bit words, so column ``i`` is
+    ``int(hexdigest()[8*i : 8*i + 8], 16)`` — hashlib md5 == Spark
+    md5, and the JVM references read the same hex slices."""
     import hashlib
 
     import numpy as _np
 
-    a_vec = _np.array(perm_a, dtype=_np.int64)[None, :]
-    b_vec = _np.array(perm_b, dtype=_np.int64)[None, :]
+    md5 = hashlib.md5
+    digests = b"".join(map(type(md5()).digest, map(md5, map(str.encode, vocab))))
+    return _np.frombuffer(digests, dtype=">u4").reshape(-1, 4).astype(_np.int64)
 
-    def minhash(shingles: list):
-        hs = _np.fromiter(
-            (int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles),
-            dtype=_np.int64,
-            count=len(shingles),
-        )
-        return ((hs[:, None] * a_vec + b_vec) % MERSENNE_31).min(axis=0)
 
-    return minhash
+def _batch_grams(grams: list, words: int):
+    """``(hashes, codes, starts)`` for one batch's per-document gram
+    lists: the first ``words`` md5 words of each distinct gram of the
+    batch (each hashed once), every gram occurrence's row in
+    ``hashes`` in document order, and each document's first offset
+    into ``codes``.  Every document has at least one gram, so
+    ``starts`` is strictly increasing and a ``ufunc.reduceat`` over it
+    folds no empty segment."""
+    from itertools import chain
+
+    import numpy as _np
+    import pandas as _pd
+
+    codes, vocab = _pd.factorize(
+        _np.fromiter(chain.from_iterable(grams), dtype=object)
+    )
+    starts = _np.zeros(len(grams), dtype=_np.int64)
+    _np.cumsum([len(g) for g in grams[:-1]], out=starts[1:])
+    return _md5_words(vocab)[:, :words], codes, starts
+
+
+def _minhash_sigs(grams: list, perm_a: list, perm_b: list):
+    """``(len(grams), len(perm_a))`` int64: each document's universal-
+    hash-minimum signature over the family ``(perm_a, perm_b)``, as
+    in :func:`minhash_signatures` — the min over its grams of
+    ``(A[p]*h + B[p]) % MERSENNE_31`` with ``h`` the gram's first md5
+    word (the products, < 2^62, stay exact in int64)."""
+    import numpy as _np
+
+    h, codes, starts = _batch_grams(grams, 1)
+    perm = (h * _np.array(perm_a) + _np.array(perm_b)) % MERSENNE_31
+    return _np.minimum.reduceat(perm[codes], starts, axis=0)
 
 
 _BAND_ROWS_SCHEMA = (
@@ -197,23 +235,28 @@ _BAND_ROWS_SCHEMA = (
 
 
 def _band_rows_arrow_fn(batches):
-    """``mapInPandas`` worker for :func:`minhash_band_rows`: the
-    normalize → shingle → md5 → universal-hash-min → band-sig chain
-    in numpy/hashlib, one ``(doc_id, shingles, band_sigs)`` row per
-    document.  Defined at module level so cloudpickle ships a module
-    reference, not a closure."""
+    """``mapInPandas`` worker for :func:`minhash_band_rows`: per
+    batch, the normalize → shingle → md5 → universal-hash-min →
+    band-sig chain in numpy/hashlib, one ``(doc_id, shingles,
+    band_sigs)`` row per document.  Defined at module level so
+    cloudpickle ships a module reference, not a closure."""
     import hashlib
 
-    minhash = _minhasher(PERM_A, PERM_B)
-
-    def bands(_toks, sh):
-        sig = list(map(str, minhash(sh).tolist()))
-        yield sh, [
-            hashlib.md5("|".join(sig[b : b + BAND_ROWS]).encode()).hexdigest()
+    md5 = hashlib.md5
+    n_bands = N_PERM // BAND_ROWS
+    for ids, _toks, grams, _ in _doc_rows(batches, 3):
+        sigs = _minhash_sigs(grams, PERM_A, PERM_B).astype(str).tolist()
+        keys = [
+            "|".join(sig[b : b + BAND_ROWS])
+            for sig in sigs
             for b in range(0, N_PERM, BAND_ROWS)
         ]
-
-    return _doc_rows(batches, 3, ("shingles", "band_sigs"), bands)
+        hexes = list(map(type(md5()).hexdigest, map(md5, map(str.encode, keys))))
+        yield _frame(
+            ids,
+            shingles=grams,
+            band_sigs=[hexes[i : i + n_bands] for i in range(0, len(hexes), n_bands)],
+        )
 
 
 def _minhash_doc_rows(docs: DataFrame) -> DataFrame:
@@ -265,11 +308,18 @@ def _first_band_pairs(rows: DataFrame, band_keys, member_cols) -> DataFrame:
     ``band_idx`` may hold equal keys for both members.  So no pair
     repeats and no dedup shuffle follows.
 
-    Pair generation is bucket-grouped, not a self-join: a band-table
-    self-join computes the row lineage twice (Spark does not reuse the
-    exchange across the join's two sides) and, at scale, either
-    broadcasts the full band table or shuffles the payload on BOTH
-    sides; here the payload crosses the wire exactly once.  Per-bucket
+    Pair generation is bucket-grouped, not a self-join.  The payload
+    crosses the wire once per band: for MinHash on perfbench's 1,000
+    documents the bucket shuffle writes 3,814 rows and 3.6 MB, the
+    shingle list four times per document.  A band-table self-join was
+    measured and is no cheaper: it runs the kernel on both sides (when
+    the input is repartitioned, the executed plan reuses that exchange,
+    ``ReusedExchange``, below the two kernels), and a warm op went from
+    0.47 to 0.60 CPU s for MinHash and from 0.31 to 0.42 for SimHash.
+    Shipping only ``(doc_id, band keys)`` and attaching the shingles to
+    the surviving pairs would save at most 0.095 CPU s per MinHash op
+    (the pairs without any payload or verification, an upper bound that
+    leaves out the attaching join), so it is not done.  Per-bucket
     memory is O(|bucket| · payload) — the same row set a shuffled join
     would gather in one partition for a skewed band key.  Shuffle cost
     is O(docs × bands) on the bucket key — never the all-pairs
@@ -326,7 +376,9 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "corpus_band_index",
         lambda: minhash_band_rows(
-            fan_out(table(spark, sf_dir, "documents"))
+            fan_out(
+                table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES
+            )
         ).select("doc_id", "band_idx", "band_sig"),
         key=fixture_key(sf_dir),
     )
@@ -410,7 +462,7 @@ def lsh_jaccard_pairs(docs: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash/LSH near-dup pairs over the documents fixture (see
     ``lsh_jaccard_pairs`` for the plan shape)."""
-    d = fan_out(table(spark, sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES)
     return lsh_jaccard_pairs(d).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -897,15 +949,13 @@ _BIGRAM_BLOCKED_SCHEMA = (
 def _bigram_blocked_arrow_fn(batches):
     """``mapInPandas`` worker for :func:`_bigram_blocked`: each doc's
     first token and distinct word bigrams (see :func:`_doc_rows`)."""
-    return _doc_rows(
-        batches,
-        2,
-        ("block_lang", "block_tok", "grams"),
-        lambda toks, sh, lang: [
-            (lang if isinstance(lang, str) else None, toks[0], sh)
-        ],
-        extra=("lang",),
-    )
+    for ids, toks, grams, (langs,) in _doc_rows(batches, 2, ("lang",)):
+        yield _frame(
+            ids,
+            block_lang=[v if isinstance(v, str) else None for v in langs],
+            block_tok=[t[0] for t in toks],
+            grams=grams,
+        )
 
 
 def _bigram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,20 +1261,19 @@ def _grams3_arrow_fn(batches):
     """``mapInPandas`` worker producing the (doc_id, distinct 3-word
     shingles, shingle count) frame of the prefix-filter join (see
     :func:`_doc_rows`)."""
-    return _doc_rows(batches, 3, ("grams", "sz"), lambda _t, sh: [(sh, len(sh))])
+    for ids, _toks, grams, _ in _doc_rows(batches, 3):
+        yield _frame(ids, grams=grams, sz=[len(g) for g in grams])
 
 
 _SCURVE_SIG_SCHEMA = "doc_id bigint, sig array<bigint>"
 
 
 def _scurve_sigs_arrow_fn(batches):
-    """``mapInPandas`` worker for :func:`_scurve_sigs`: the
-    24-permutation :func:`_minhasher` signature of each doc's
+    """``mapInPandas`` worker for :func:`_scurve_sigs`: per batch, the
+    24-permutation :func:`_minhash_sigs` signature of each doc's
     distinct 3-word shingles."""
-    minhash = _minhasher(PERM_A24, PERM_B24)
-    return _doc_rows(
-        batches, 3, ("sig",), lambda _t, sh: [(minhash(sh).tolist(),)]
-    )
+    for ids, _toks, grams, _ in _doc_rows(batches, 3):
+        yield _frame(ids, sig=_minhash_sigs(grams, PERM_A24, PERM_B24).tolist())
 
 
 def _scurve_sigs(docs: DataFrame) -> DataFrame:
@@ -1300,7 +1349,7 @@ def lsh_s_curve_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     theory = spark.sql(" UNION ALL ".join(legs))
 
-    d = fan_out(table(spark, sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES)
     # 24-permutation signature stream (the planner's budget), same
     # universal-hash family as the certified 12-perm lineage
     sigs = swap_cache("dedup.scurve_sigs", _scurve_sigs(d))
@@ -1511,7 +1560,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     long one scores low Jaccard but 1e6 containment ppm on the short
     side; dedup policies drop the contained copy. Same banded plan as
     ``minhash_lsh_pairs``; only the verification expression differs."""
-    d = fan_out(table(spark, sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES)
     cand = lsh_candidate_pairs(d)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     return cand.select(
@@ -1549,7 +1598,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two equi-joins of the (tiny) pair graph against the
     doc→source projection on ``doc_id``, then a sources²-group
     aggregate. The pair graph is edges-sized, never corpus-sized."""
-    d = fan_out(table(spark, sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES)
     src = d.select("doc_id", "source")
     pairs = lsh_candidate_pairs(d).select("doc_a", "doc_b")
     both = (
@@ -1911,36 +1960,25 @@ _SIMHAM_SIG_SCHEMA = "doc_id bigint, lo bigint, hi bigint"
 
 
 def _simham_sigs_arrow_fn(batches):
-    """``mapInPandas`` worker for :func:`_simhash64_sigs`: md5 of each
-    distinct token, then a per-bit majority vote in numpy — Spark's
-    ``(h / 2**b) cast long % 2`` equals ``(h >> b) & 1`` exactly for
-    h < 2^32 (double division by a power of two is exact there), and
-    votes are commutative sums, so token order cannot matter.  The
-    JVM reference evaluates 64 interpreted per-bit fold expressions
-    per document; this kernel is one vectorized bit-matrix sum
-    (guide §4.2)."""
-    import hashlib
-
+    """``mapInPandas`` worker for :func:`_simhash64_sigs`: per batch,
+    md5 of each distinct token, then a per-bit majority vote in numpy
+    — Spark's ``(h / 2**b) cast long % 2`` equals ``(h >> b) & 1``
+    exactly for h < 2^32 (double division by a power of two is exact
+    there), and votes are commutative sums, so token order cannot
+    matter.  The JVM reference evaluates 64 interpreted per-bit fold
+    expressions per document; this kernel is one bit-matrix gather and
+    one ``np.add.reduceat`` per batch (guide §4.2)."""
     import numpy as _np
 
     bits = _np.arange(32, dtype=_np.int64)
     pow2 = _np.int64(1) << bits
-
-    def word(digs: list, col0: int, col1: int) -> int:
-        hs = _np.fromiter(
-            (int(d[col0:col1], 16) for d in digs),
-            dtype=_np.int64,
-            count=len(digs),
-        )
-        votes = (2 * ((hs[:, None] >> bits[None, :]) & 1) - 1).sum(axis=0)
-        return int(pow2[votes > 0].sum())
-
-    def sig(_toks, distinct):
-        digs = [hashlib.md5(t.encode()).hexdigest() for t in distinct]
-        return [(word(digs, 0, 8), word(digs, 8, 16))]
-
     # k = 1: a whitespace-only document has no tokens, hence no row
-    return _doc_rows(batches, 1, ("lo", "hi"), sig)
+    for ids, _toks, grams, _ in _doc_rows(batches, 1):
+        h, codes, starts = _batch_grams(grams, 2)
+        signs = (2 * ((h[:, :, None] >> bits) & 1) - 1).astype(_np.int8)
+        votes = _np.add.reduceat(signs[codes], starts, axis=0, dtype=_np.int32)
+        lo, hi = ((votes > 0) * pow2).sum(axis=2).T
+        yield _frame(ids, lo=lo, hi=hi)
 
 
 def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1952,7 +1990,7 @@ def _simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     An Arrow kernel (r14 optimization round); the JVM parity
     reference is :func:`simham_sigs_hof`."""
-    d = fan_out(table(spark, sf_dir, "documents"))
+    d = fan_out(table(spark, sf_dir, "documents"), part_bytes=KERNEL_PART_BYTES)
     return d.select("doc_id", "text").mapInPandas(
         _simham_sigs_arrow_fn, _SIMHAM_SIG_SCHEMA
     )
@@ -1985,8 +2023,8 @@ def simhash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure SET overlap, SimHash Hamming measures WEIGHTED-profile
     drift — production dedup stacks run both.
 
-    Scale shape: signatures are one row-local fold per doc (no
-    shuffle), read once; candidates come from the band buckets, each
+    Scale shape: signatures are one row-local Arrow kernel pass over
+    the scan's batches (no shuffle), read once; candidates come from the band buckets, each
     pair once from the first band it shares (:func:`_first_band_pairs`,
     never all-pairs); verification is two bit_counts per candidate."""
     pairs = _first_band_pairs(

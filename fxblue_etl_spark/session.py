@@ -79,6 +79,15 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already registered under this name, or locked down
 
 
+def _on_worker() -> bool:
+    """Whether this process is a PySpark Python worker."""
+    try:
+        from pyspark.core.files import SparkFiles
+    except ImportError:
+        return False  # a Spark Connect-only client runs no Python worker
+    return SparkFiles._is_running_on_worker
+
+
 def _cache_zip_directories(importer: type = zipimport.zipimporter) -> bool:
     """Read each unchanged zip's directory once per Python worker.
 
@@ -100,12 +109,7 @@ def _cache_zip_directories(importer: type = zipimport.zipimporter) -> bool:
     directory, the importer is pointed at that directory; else the
     original method re-reads it and the stamp is renewed. Returns
     whether it installed."""
-    try:
-        from pyspark.core.files import SparkFiles
-    except ImportError:
-        return False  # a Spark Connect-only client runs no Python worker
-
-    if not SparkFiles._is_running_on_worker or hasattr(importer, "_get_files"):
+    if not _on_worker() or hasattr(importer, "_get_files"):
         return False
     reread = importer.invalidate_caches
     stamps: dict[str, tuple[int, int, int]] = {}
@@ -125,6 +129,29 @@ def _cache_zip_directories(importer: type = zipimport.zipimporter) -> bool:
 
     invalidate_caches.__wrapped__ = reread
     importer.invalidate_caches = invalidate_caches
+    return True
+
+
+def _freeze_worker_heap() -> bool:
+    """Keep a Python worker's import heap out of its per-task collection.
+
+    ``pyspark/daemon.py`` runs a full ``gc.collect()`` after every task
+    of a reused worker, and each one walks every container object the
+    worker holds, most of them the pyspark/pandas/pyarrow import-time
+    heap: about 0.038 of the 0.048 CPU s a reused worker spent per task
+    outside the UDF.  On a worker, this imports the three libraries the
+    kernels use and moves every live object into the permanent
+    generation (``gc.freeze()``), which later collections skip; the
+    driver is left alone.  Returns whether it froze."""
+    if not _on_worker():
+        return False
+    import gc
+
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    gc.freeze()
     return True
 
 
