@@ -18,7 +18,8 @@ Layout:
   operators/textops.py  token/quality/lang-id/fingerprint text analysis
   operators/multimodal.py  binary-column pipelines (decode stubbed)
   sources/fxblue_csv.py FXBlue CSV scan (title-row skip) + ingest pipeline
-  sources/rss_feed.py   RSS feed entry pipeline (fetch behind interface)
+  sources/rss_feed.py   RSS feed entry pipeline (entries → rss_trades)
+  sources/rss_datasource.py  fxblue_rss DataSource: the one RSS fetch path
   plans/relational.py   relational query surface (joins/aggs/windows/setops)
   streaming/pipelines.py Structured Streaming restatement (SURVEY §2.11)
 """

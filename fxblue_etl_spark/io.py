@@ -113,9 +113,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(
-    df: DataFrame, min_parts: int | None = None, part_bytes: int = 0
-) -> DataFrame:
+def fan_out(df: DataFrame, part_bytes: int = 0) -> DataFrame:
     """Spread per-row-heavy (interpreted HOF / Pandas-UDF) work.
 
     A small table scans as one split, which serializes CPU-bound
@@ -137,8 +135,7 @@ def fan_out(
     repartition threshold at cluster scale; non-scan plans (no input
     files) keep their upstream shuffle partitioning untouched.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:

@@ -50,7 +50,7 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity; ``llm_corpus_prep`` is exactly this frame's
     per-language rollup — same plan, same oracle lineage."""
     from ..io import fan_out, swap_cache, table
-    from ..operators.dedup import KERNEL_PART_BYTES, lsh_jaccard_pairs
+    from ..operators.dedup import lsh_jaccard_pairs
     from ..operators.graph import connected_components
     from ..operators.textops import (
         marker_hits,
@@ -104,17 +104,11 @@ def llm_survivor_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cluster-minimum doc. Docs outside the pair graph keep
     # themselves. The component label IS the min reachable doc_id, so
     # "keeper" = (id == component).
-    # fan_out: the MinHash Arrow kernel is per-document Python work.
-    # exact_kept is persisted, which hides its input files from
-    # fan_out, so the kernel runs on the exact-dedup window's shuffle
-    # partitions; the byte cap applies if that persist goes away.
+    # The MinHash kernel runs on the exact-dedup window's shuffle
+    # partitions: the persisted exact_kept has no input files to
+    # fan out by.
     pairs = (
-        lsh_jaccard_pairs(
-            fan_out(
-                exact_kept.select("doc_id", "text"),
-                part_bytes=KERNEL_PART_BYTES,
-            )
-        )
+        lsh_jaccard_pairs(exact_kept.select("doc_id", "text"))
         .filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
         .select("doc_a", "doc_b")
     )

@@ -28,6 +28,7 @@ import json
 import os
 import tempfile
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
@@ -50,19 +51,20 @@ class ShardCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-class JsonlShardWriter(DataSourceWriter):
+class _ShardSink:
+    """What the batch and the streaming writer share: the option check,
+    one sorted-key JSONL shard per task, the atomic manifest publish
+    and the abort path. They differ only in shard name and manifest."""
+
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("jsonl_shards sink requires a 'path' option")
         self.columns = json.loads(options.get("columns_json", "[]"))
 
-    def write(self, iterator):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
+    def _write_shard(self, name: str, iterator) -> ShardCommit:
         os.makedirs(self.path, exist_ok=True)
-        shard = os.path.join(self.path, f"shard-{pid:05d}.jsonl")
+        shard = os.path.join(self.path, name)
         n = 0
         with open(shard, "w", encoding="utf-8") as fh:
             for row in iterator:
@@ -74,26 +76,36 @@ class JsonlShardWriter(DataSourceWriter):
                 n += 1
         return ShardCommit(shard, n)
 
-    def commit(self, messages):
+    def _publish(self, name: str, messages, **fields) -> None:
+        """Write the manifest of ``messages``' shards (sorted by path;
+        a ``None`` message is a task that wrote none) plus ``fields``
+        to a temp file, then ``os.replace`` it to ``path/name``."""
         shards = sorted(
-            ({"path": m.shard_path, "n_rows": m.n_rows} for m in messages),
+            ({"path": m.shard_path, "n_rows": m.n_rows} for m in messages if m is not None),
             key=lambda s: s["path"],
         )
-        manifest = {
-            "shards": shards,
-            "n_rows": sum(m.n_rows for m in messages),
-        }
-        tmp = os.path.join(self.path, "_MANIFEST.json.tmp")
+        manifest = {**fields, "n_rows": sum(s["n_rows"] for s in shards), "shards": shards}
+        tmp = os.path.join(self.path, f".{name}.tmp")
         with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST.json"))
+            json.dump(manifest, fh, indent=1, sort_keys=True)
+        os.replace(tmp, os.path.join(self.path, name))
 
-    def abort(self, messages):
+    def abort(self, messages, batchId=None):
         for m in messages:
-            try:
-                os.remove(m.shard_path)
-            except OSError:
-                pass
+            if m is not None:
+                try:
+                    os.remove(m.shard_path)
+                except OSError:
+                    pass
+
+
+class JsonlShardWriter(_ShardSink, DataSourceWriter):
+    def write(self, iterator):
+        pid = TaskContext.get().partitionId()
+        return self._write_shard(f"shard-{pid:05d}.jsonl", iterator)
+
+    def commit(self, messages):
+        self._publish("_MANIFEST.json", messages)
 
 
 class ShardPartition(InputPartition):
@@ -288,7 +300,7 @@ def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-class JsonlStreamShardWriter(DataSourceStreamWriter):
+class JsonlStreamShardWriter(_ShardSink, DataSourceStreamWriter):
     """Streaming half of the sink (Spark 4 ``DataSourceStreamWriter``):
     per micro-batch, each partition task writes one uniquely-named
     shard and returns its commit message; the driver's
@@ -298,57 +310,20 @@ class JsonlStreamShardWriter(DataSourceStreamWriter):
     shards) are never visible.  Exactly-once composes from this
     manifest protocol + the file source's checkpointed offsets."""
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_shards stream sink requires 'path'")
-        self.columns = json.loads(options.get("columns_json", "[]"))
-
     def write(self, iterator):
         import uuid
 
-        from pyspark import TaskContext
-
         pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        shard = os.path.join(
-            self.path, f"epoch-shard-{pid:05d}-{uuid.uuid4().hex[:8]}.jsonl"
-        )
-        n = 0
-        with open(shard, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                d = row.asDict(recursive=True)
-                if self.columns:
-                    d = {c: d[c] for c in self.columns}
-                fh.write(json.dumps(d, ensure_ascii=False, sort_keys=True))
-                fh.write("\n")
-                n += 1
-        return ShardCommit(shard, n)
+        name = f"epoch-shard-{pid:05d}-{uuid.uuid4().hex[:8]}.jsonl"
+        return self._write_shard(name, iterator)
 
     def commit(self, messages, batchId):
-        shards = sorted(
-            (
-                {"path": m.shard_path, "n_rows": m.n_rows}
-                for m in messages
-                if m is not None
-            ),
-            key=lambda s: s["path"],
+        self._publish(
+            f"_BATCH-{batchId}.json",
+            messages,
+            batch_id=batchId,
+            n_shards=sum(m is not None for m in messages),
         )
-        manifest = {
-            "batch_id": batchId,
-            "n_shards": len(shards),
-            "n_rows": sum(s["n_rows"] for s in shards),
-            "shards": shards,
-        }
-        tmp = os.path.join(self.path, f"._BATCH-{batchId}.json.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, f"_BATCH-{batchId}.json"))
-
-    def abort(self, messages, batchId):
-        for m in messages:
-            if m is not None and os.path.exists(m.shard_path):
-                os.remove(m.shard_path)
 
 
 def committed_stream_shards(out_dir: str) -> list[str]:

@@ -9,29 +9,23 @@ into an offset-tracked micro-batch stream.
 
     spark.dataSource.register(RssFeedDataSource)
     spark.read.format("fxblue_rss")
-         .option("accounts_json", json.dumps([{"account_id": ..,
-                                               "rss_url": ..}, ...]))
+         .option("registry_path", "<registry>.parquet")
          .load()
     spark.readStream.format("fxblue_rss").option(...).load()
 
 Options:
 
 * ``registry_path`` — parquet file/directory with columns
-  ``account_id`` (+ optional ``rss_url``). This is the scale path:
-  the planner reads only parquet FOOTERS on the driver and emits one
-  input partition per row group, so driver memory is O(row groups)
-  while each task reads its own slice of the registry executor-side.
-  A billion-account registry plans in milliseconds.
-* ``accounts_json`` — JSON list of ``{account_id, rss_url}`` inline;
-  convenience for tiny registries and tests only.
+  ``account_id`` (+ optional ``rss_url``). The planner reads only
+  parquet FOOTERS on the driver and emits one input partition per
+  row group, so driver memory is O(row groups) while each task reads
+  its own slice of the registry executor-side. A billion-account
+  registry plans in milliseconds.
 * ``mode`` — ``"fake"`` (default): deterministic synthetic feed, a
   pure function of (account_id, entry_idx) so a SQL oracle can
-  reproduce it bit-for-bit; ``"network"``: fetch via ``feedparser``
-  (absent in this container → NotImplementedError naming it).
-* ``chunk_size`` — accounts per input partition for the inline
-  registry (default 64): one task per *chunk of feeds*, not per
-  feed, so task-launch overhead doesn't dominate at small registries
-  while a large registry still fans out across the cluster.
+  reproduce it bit-for-bit; ``"network"``: fetch each account's
+  ``rss_url`` via ``feedparser`` (absent in this container →
+  NotImplementedError naming it).
 
 Streaming: each micro-batch is one poll round; the offset is the poll
 index, and poll *p* yields every account's entry ``p`` (accounts with
@@ -40,8 +34,6 @@ feed consumption with exactly-once offsets, no external state.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -107,13 +99,6 @@ def _network_entries(rss_url: str) -> list[dict]:
     return [dict(e) for e in feedparser.parse(rss_url).entries]
 
 
-class AccountChunk(InputPartition):
-    """Inline registry slice: the account dicts travel in the task."""
-
-    def __init__(self, accounts: list[dict]):
-        self.accounts = accounts
-
-
 class RegistrySlice(InputPartition):
     """Path-backed registry slice: only (file, row_group) travels in
     the task; the account rows are read executor-side."""
@@ -133,6 +118,13 @@ def _registry_files(path: str) -> list[str]:
             if f.endswith(".parquet")
         )
     return [path]
+
+
+def _registry_path(options: dict) -> str:
+    path = options.get("registry_path")
+    if not path:
+        raise ValueError("fxblue_rss requires a 'registry_path' option")
+    return path
 
 
 def _registry_slices(path: str) -> list[RegistrySlice]:
@@ -157,23 +149,6 @@ def _slice_accounts(part: RegistrySlice):
     return [{"account_id": i, "rss_url": u} for i, u in zip(ids, urls)]
 
 
-def _partitions(options: dict) -> list[InputPartition]:
-    path = options.get("registry_path")
-    if path:
-        return _registry_slices(path) or [AccountChunk([])]
-    accounts = json.loads(options.get("accounts_json", "[]"))
-    size = int(options.get("chunk_size", "64"))
-    return [
-        AccountChunk(accounts[i : i + size]) for i in range(0, len(accounts), size)
-    ] or [AccountChunk([])]
-
-
-def _part_accounts(part: InputPartition) -> list[dict]:
-    if isinstance(part, RegistrySlice):
-        return _slice_accounts(part)
-    return part.accounts
-
-
 def _read_accounts(accounts: list[dict], mode: str):
     for acct in accounts:
         aid = str(acct["account_id"])
@@ -193,12 +168,14 @@ class RssFeedReader(DataSourceReader):
         self.options = options
 
     def partitions(self) -> list[InputPartition]:
-        return _partitions(self.options)
+        return _registry_slices(_registry_path(self.options))
 
-    def read(self, partition: InputPartition):
-        yield from _read_accounts(
-            _part_accounts(partition), self.options.get("mode", "fake")
-        )
+    def read(self, partition: RegistrySlice | None):
+        # a registry with no row groups plans as Spark's one None partition
+        if partition is not None:
+            yield from _read_accounts(
+                _slice_accounts(partition), self.options.get("mode", "fake")
+            )
 
 
 #: ``fake_entry_count`` is 3 + aid%5 — never more than this many polls.
@@ -211,51 +188,30 @@ class RssFeedStreamReader(DataSourceStreamReader):
     single int — replayable, so the source is exactly-once under
     checkpointing.
 
-    With a path-backed registry the latest offset is the static upper
-    bound of the fake feed length: the driver never reads account
-    rows, and polls past a feed's end yield nothing. Each micro-batch
-    fans out as polls × registry row groups."""
+    The latest offset is the static upper bound of the fake feed
+    length: the driver never reads account rows, and polls past a
+    feed's end yield nothing. Each micro-batch fans out as polls ×
+    registry row groups."""
 
     def __init__(self, options: dict):
-        self.options = options
-        self.path = options.get("registry_path")
-        if self.path:
-            self.accounts = None
-            self.max_polls = MAX_FAKE_POLLS
-        else:
-            self.accounts = json.loads(options.get("accounts_json", "[]"))
-            self.max_polls = max(
-                (fake_entry_count(int(a["account_id"])) for a in self.accounts),
-                default=0,
-            )
+        self.path = _registry_path(options)
 
     def initialOffset(self) -> dict:
         return {"poll": 0}
 
     def latestOffset(self) -> dict:
-        return {"poll": self.max_polls}
+        return {"poll": MAX_FAKE_POLLS}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        polls = list(range(start["poll"], end["poll"]))
-        if self.path:
-            parts = [
-                PollPartition(p, None, s)
-                for p in polls
-                for s in _registry_slices(self.path)
-            ]
-        else:
-            parts = [PollPartition(p, self.accounts, None) for p in polls]
-        return parts or [PollPartition(-1, [], None)]
+        slices = _registry_slices(self.path)
+        return [
+            PollPartition(p, s)
+            for p in range(start["poll"], end["poll"])
+            for s in slices
+        ]
 
     def read(self, partition: "PollPartition"):
-        if partition.poll < 0:
-            return
-        accounts = (
-            _slice_accounts(partition.slice_)
-            if partition.slice_ is not None
-            else partition.accounts
-        )
-        for acct in accounts:
+        for acct in _slice_accounts(partition.slice_):
             aid = str(acct["account_id"])
             if partition.poll < fake_entry_count(int(aid)):
                 yield fake_entry(aid, partition.poll)
@@ -265,9 +221,8 @@ class RssFeedStreamReader(DataSourceStreamReader):
 
 
 class PollPartition(InputPartition):
-    def __init__(self, poll: int, accounts, slice_: RegistrySlice | None):
+    def __init__(self, poll: int, slice_: RegistrySlice):
         self.poll = poll
-        self.accounts = accounts
         self.slice_ = slice_
 
 
@@ -289,25 +244,20 @@ class RssFeedDataSource(DataSource):
 # ── oracle-checked demonstration query ───────────────────────────────────
 
 def _registry_parquet(spark, sf_dir: str) -> str:
-    """Materialize the demo registry (distinct event users) as parquet
-    via a Spark write — executor-side end to end, no driver collect.
-    At scale the registry already lives in storage and this step
-    disappears; only the parquet path crosses the driver.  Staged once
-    per fixture (``io.stage_fixture``)."""
-    from pyspark.sql import functions as F
-
-    from ..io import stage_fixture, table
+    """Materialize the demo registry (``rss_feed._synthetic_accounts``,
+    the rows the xlsx fixture holds) as parquet via a Spark write —
+    executor-side end to end, no driver collect. At scale the registry
+    already lives in storage and this step disappears; only the
+    parquet path crosses the driver.  Staged once per fixture
+    (``io.stage_fixture``)."""
+    from ..io import stage_fixture
+    from .rss_feed import _synthetic_accounts
 
     return stage_fixture(
         sf_dir,
         "registry_parquet",
-        lambda tmp: table(spark, sf_dir, "events")
-        .select(F.col("user_id").cast("string").alias("account_id"))
-        .distinct()
-        .select(
-            "account_id",
-            F.concat(F.lit("https://fxblue/feed/u"), "account_id").alias("rss_url"),
-        )
+        lambda tmp: _synthetic_accounts(spark, sf_dir)
+        .select("account_id", "rss_url")
         .write.mode("overwrite")
         .parquet(tmp),
     )

@@ -9,9 +9,10 @@ registry metadata (J1).
 
 Spark restatement, one lazy plan:
 
-    accounts → [fetch: mapInPandas, one HTTP fetch per account,
-                parallel across executors — vs the reference's
-                sequential loop at gcp_rss.py:49]
+    accounts → [fetch: the ``fxblue_rss`` DataSource
+                (``sources/rss_datasource.py``), one task per registry
+                row group — vs the reference's sequential loop at
+                gcp_rss.py:49]
              → entries (account_id, entry_idx, snapshot_*/position_*)
              → cast snapshot fields, LOCF over (account, entry_idx)
              → filter position rows (F2)
@@ -19,17 +20,13 @@ Spark restatement, one lazy plan:
              → broadcast-join registry (J1)
              → 31-column rss_trades batch  →  merge_upsert K2
 
-The fetch is I/O code behind an injectable interface: tests and the
-oracle query inject a deterministic entries DataFrame instead of HTTP
-(FIXTURES.md A3). The network fetcher requires `feedparser`, absent
-in this environment — it raises NotImplementedError with the exact
-dependency, while everything downstream of the interface is real and
-tested.
+``rss_trades`` takes any entries DataFrame of :data:`ENTRY_COLS`:
+the DataSource's scan, or a deterministic entries frame derived from
+the fixture tables (FIXTURES.md A3), which the oracle queries below
+use.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,46 +71,6 @@ ENTRY_COLS = (
 )
 #: ENTRY_COLS' field names, in schema order
 ENTRY_FIELDS = [s.strip().split(" ")[0] for s in ENTRY_COLS.split(",")]
-
-
-def fetch_feed_entries(
-    accounts: DataFrame,
-    fetcher: Callable[[str], list[dict]] | None = None,
-) -> DataFrame:
-    """S5: one feed fetch per account row, parallel via mapInPandas.
-
-    ``fetcher(rss_url) -> list[entry-dict]`` is injectable; the
-    default needs the `feedparser` package (network path).
-    """
-    if fetcher is None:
-        try:
-            import feedparser  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "network RSS fetch requires the 'feedparser' package; "
-                "inject a fetcher or supply an entries DataFrame"
-            ) from e
-
-        def fetcher(url: str) -> list[dict]:
-            import feedparser
-
-            feed = feedparser.parse(url)
-            return [dict(e) for e in feed.entries]
-
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                for idx, entry in enumerate(fetcher(row["rss_url"])):
-                    rec = {k: entry.get(k) for k in ENTRY_FIELDS}
-                    rec["account_id"] = row["account_id"]
-                    rec["entry_idx"] = idx
-                    out.append(rec)
-            yield pd.DataFrame(out, columns=ENTRY_FIELDS)
-
-    return accounts.mapInPandas(run, ENTRY_COLS)
 
 
 def clean_registry(accounts_raw: DataFrame) -> DataFrame:

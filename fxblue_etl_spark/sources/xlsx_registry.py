@@ -1,14 +1,14 @@
 """S4: the account-registry *Excel* read path.
 
-The reference pulls a registry workbook and loads it with
-``pd.read_excel`` (``RSS PARSER/gcp_rss.py:24-28``). Round 1 stood in
-a fixture table for this; here the xlsx parse is real:
+The reference pulls a registry workbook and loads it with pandas'
+Excel reader (``RSS PARSER/gcp_rss.py:24-28``), which needs an
+engine package (openpyxl). Round 1 stood in a fixture table for this;
+here the xlsx parse is real:
 
-- ``read_xlsx`` prefers ``pandas.read_excel`` when an engine
-  (openpyxl) is importable, and otherwise parses the workbook with
-  the stdlib only — xlsx is a zip of XML, so ``zipfile`` +
-  ``xml.etree`` cover the registry shape (inline/shared strings,
-  numbers, gaps) without any dependency.
+- ``read_xlsx`` parses the workbook with the stdlib only — xlsx is a
+  zip of XML, so ``zipfile`` + ``xml.etree`` cover the registry shape
+  (inline/shared strings, booleans, numbers, gaps) without any
+  dependency.
 - ``write_xlsx`` is the matching minimal writer, used to build the
   test fixture so the round-trip is oracle-checked end to end.
 
@@ -28,9 +28,9 @@ from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..io import stage_fixture, table
+from ..io import stage_fixture
+from .rss_feed import S4_ORACLE, _synthetic_accounts, account_metadata
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -108,10 +108,12 @@ def _cell_col(ref: str) -> int:
     return n - 1
 
 
-def _read_xlsx_stdlib(path: str) -> tuple[list[str], list[list]]:
-    """Parse sheet1 of an xlsx with zipfile + ElementTree: handles
-    shared strings (t="s"), inline strings (t="inlineStr"), booleans
-    (t="b"), numbers, and sparse rows (missing cells → None)."""
+def read_xlsx(path: str) -> tuple[list[str], list[list]]:
+    """Registry workbook → (header, rows): parse sheet1 with zipfile +
+    ElementTree. Handles shared strings (t="s"), inline strings
+    (t="inlineStr"), booleans (t="b"), numbers, and sparse rows
+    (missing cells → None); rows are cut or padded to the header's
+    width."""
     with zipfile.ZipFile(path) as z:
         shared: list[str] = []
         if "xl/sharedStrings.xml" in z.namelist():
@@ -159,21 +161,6 @@ def _read_xlsx_stdlib(path: str) -> tuple[list[str], list[list]]:
     return header, body
 
 
-def read_xlsx(path: str) -> tuple[list[str], list[list]]:
-    """Registry workbook → (header, rows). Uses pandas.read_excel when
-    an xlsx engine is installed (reference parity: gcp_rss.py:28),
-    else the stdlib parser — identical output either way."""
-    try:
-        import pandas as pd
-
-        df = pd.read_excel(path)  # needs openpyxl
-        return [str(c) for c in df.columns], [
-            [None if pd.isna(v) else v for v in row] for row in df.itertuples(index=False)
-        ]
-    except ImportError:
-        return _read_xlsx_stdlib(path)
-
-
 def xlsx_registry_df(spark: SparkSession, path: str) -> DataFrame:
     """Workbook → all-string registry DataFrame (raw registry values
     are strings pre-cleaning, matching the CSV/RSS raw layers). Small
@@ -190,8 +177,6 @@ def _fixture_xlsx(spark: SparkSession, sf_dir: str) -> str:
     (same rows as rss_feed._synthetic_accounts). Driver-side fixture
     *generation* — stands in for the workbook that already exists in
     the reference's bucket; the certified operator is the read-back."""
-    from .rss_feed import _synthetic_accounts
-
     cols = ["account_id", "account_url", "rss_url", "trade_win", "total_return", "trades_per_day"]
 
     def build(tmp: str) -> None:
@@ -213,34 +198,8 @@ def s4_xlsx_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     T4 cleaning → account_metadata rows (gcp_rss.py:24-28,50-80). The
     oracle recomputes the same rows straight from events, so any
     mangling in the write→read round-trip breaks the hash."""
-    from .rss_feed import account_metadata
-
     path = _fixture_xlsx(spark, sf_dir)
     return account_metadata(xlsx_registry_df(spark, path))
-
-
-S4_XLSX_ORACLE = """
-WITH syn_accounts AS (
-  SELECT CAST(user_id AS VARCHAR) AS account_id,
-         'https://fxblue/u' || CAST(user_id AS VARCHAR) AS account_url,
-         'https://fxblue/feed/u' || CAST(user_id AS VARCHAR) AS rss_url,
-         CASE WHEN user_id % 3 = 0 THEN '55%'
-              WHEN user_id % 3 = 1 THEN '-'
-              ELSE '0.5' END AS trade_win,
-         '12.5%' AS total_return,
-         CAST(user_id % 10 AS VARCHAR) AS trades_per_day
-  FROM (SELECT DISTINCT user_id FROM events))
-SELECT account_id, account_url, rss_url,
-       CASE WHEN trade_win IS NULL OR trade_win = '-' THEN NULL
-            WHEN trade_win LIKE '%\\%%' ESCAPE '\\'
-              THEN TRY_CAST(replace(trade_win, '%', '') AS DOUBLE) / 100.0
-            ELSE TRY_CAST(trade_win AS DOUBLE) END AS trade_win,
-       TRY_CAST(replace(total_return, '%', '') AS DOUBLE) / 100.0 AS total_return,
-       TRY_CAST(trades_per_day AS DOUBLE) AS trades_per_day,
-       CAST(NULL AS VARCHAR) AS strategy_inferred,
-       CAST(NULL AS VARCHAR) AS gpt_comments
-FROM syn_accounts
-"""
 
 
 QUERIES = {
@@ -248,5 +207,5 @@ QUERIES = {
 }
 
 ORACLES = {
-    "s4_xlsx_registry": S4_XLSX_ORACLE,
+    "s4_xlsx_registry": S4_ORACLE,
 }

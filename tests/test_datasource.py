@@ -1,12 +1,9 @@
 """Custom PySpark DataSource tests (SURVEY §2.1 S5): batch reader,
-streaming reader, partition chunking, network-mode gating."""
+streaming reader, row-group partitioning, network-mode gating."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
-from pyspark.sql import functions as F
 
 from fxblue_etl_spark.sources.rss_datasource import (
     RssFeedDataSource,
@@ -16,15 +13,36 @@ from fxblue_etl_spark.sources.rss_datasource import (
 
 
 @pytest.fixture(scope="module")
-def registry():
-    return json.dumps(
-        [{"account_id": str(i), "rss_url": f"https://x/feed/u{i}"} for i in range(20)]
+def registry(tmp_path_factory):
+    """A 20-account registry parquet in 4 row groups (6 + 6 + 6 + 2)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path_factory.mktemp("registry") / "registry.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "account_id": [str(i) for i in range(20)],
+                "rss_url": [f"https://x/feed/u{i}" for i in range(20)],
+            }
+        ),
+        path,
+        row_group_size=6,
+    )
+    return path
+
+
+def _fake_feed(n_accounts: int = 20) -> list[tuple]:
+    return sorted(
+        fake_entry(str(a), i)
+        for a in range(n_accounts)
+        for i in range(fake_entry_count(a))
     )
 
 
 def _batch(spark, registry, **opts):
     spark.dataSource.register(RssFeedDataSource)
-    r = spark.read.format("fxblue_rss").option("accounts_json", registry)
+    r = spark.read.format("fxblue_rss").option("registry_path", registry)
     for k, v in opts.items():
         r = r.option(k, v)
     return r.load()
@@ -40,18 +58,13 @@ def test_batch_scan_matches_fake_feed(spark, registry):
     assert all(r.position_ticket is None and r.account_balance is not None for r in snap)
 
 
-def test_chunk_size_controls_partitioning(spark, registry):
-    df = _batch(spark, registry, chunk_size="5")
-    assert df.rdd.getNumPartitions() == 4  # 20 accounts / 5 per chunk
-
-
 def test_stream_equals_batch(spark, registry):
     from fxblue_etl_spark.streaming.pipelines import run_to_table
 
     spark.dataSource.register(RssFeedDataSource)
     s = (
         spark.readStream.format("fxblue_rss")
-        .option("accounts_json", registry)
+        .option("registry_path", registry)
         .load()
     )
     out = run_to_table(s, "append")
@@ -59,34 +72,41 @@ def test_stream_equals_batch(spark, registry):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
 
 
-def test_registry_path_matches_inline_and_plans_per_row_group(spark, registry, tmp_path):
-    """Path-backed registry: same rows as the inline registry, with one
-    input partition per parquet row group and no driver-side account
-    materialization."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    accounts = json.loads(registry)
-    path = str(tmp_path / "registry.parquet")
-    tbl = pa.table(
-        {
-            "account_id": [a["account_id"] for a in accounts],
-            "rss_url": [a["rss_url"] for a in accounts],
-        }
-    )
-    pq.write_table(tbl, path, row_group_size=6)  # 20 accounts → 4 row groups
-
-    spark.dataSource.register(RssFeedDataSource)
-    df = spark.read.format("fxblue_rss").option("registry_path", path).load()
-    assert df.rdd.getNumPartitions() == 4
-    inline = _batch(spark, registry)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, inline.collect()))
-
-    s = spark.readStream.format("fxblue_rss").option("registry_path", path).load()
+def test_registry_path_matches_fake_feed_and_plans_per_row_group(spark, registry):
+    """Path-backed registry: every account's fake feed, with one input
+    partition per parquet row group and no driver-side account
+    materialization, in the batch and the streaming reader."""
     from fxblue_etl_spark.streaming.pipelines import run_to_table
 
+    df = _batch(spark, registry)
+    assert df.rdd.getNumPartitions() == 4
+    assert sorted(map(tuple, df.collect())) == _fake_feed()
+
+    s = spark.readStream.format("fxblue_rss").option("registry_path", registry).load()
     out = run_to_table(s, "append")
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, inline.collect()))
+    assert sorted(map(tuple, out.collect())) == _fake_feed()
+
+
+def test_empty_registry_reads_no_rows(spark, tmp_path):
+    """A registry Spark wrote from no rows has no row groups: the batch
+    reader gets Spark's one ``None`` partition, the stream reader none."""
+    import pyarrow.parquet as pq
+
+    from fxblue_etl_spark.streaming.pipelines import run_to_table
+
+    path = str(tmp_path / "empty")
+    spark.createDataFrame([], "account_id string, rss_url string").write.parquet(path)
+    files = [f for f in (tmp_path / "empty").iterdir() if f.suffix == ".parquet"]
+    assert sum(pq.ParquetFile(f).metadata.num_row_groups for f in files) == 0
+    assert _batch(spark, path).count() == 0
+    s = spark.readStream.format("fxblue_rss").option("registry_path", path).load()
+    assert run_to_table(s, "append").count() == 0
+
+
+def test_registry_path_is_required(spark):
+    spark.dataSource.register(RssFeedDataSource)
+    with pytest.raises(Exception, match="requires a 'registry_path' option"):
+        spark.read.format("fxblue_rss").load().collect()
 
 
 def test_network_mode_requires_feedparser(spark, registry):

@@ -131,12 +131,8 @@ def test_kernel_input_spreads_by_bytes(spark, tmp_path):
     dp = spark.sparkContext.defaultParallelism
     parts = math.ceil(size / part)
 
-    def n_parts(min_parts=None):
-        df = fan_out(docs, min_parts, part_bytes=part)
-        return df.rdd.getNumPartitions()
-
-    assert n_parts() == min(dp, parts)
-    assert n_parts(2 * dp) == min(2 * dp, parts)
+    n_parts = fan_out(docs, part_bytes=part).rdd.getNumPartitions()
+    assert n_parts == min(dp, parts)
 
 
 def test_jvm_caller_keeps_core_count_rule(spark, sf_dir):

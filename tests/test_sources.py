@@ -210,18 +210,11 @@ def test_fx_batch_runs_no_python_worker(spark, csv_dir, tmp_path):
     assert _python_nodes(new.mapInPandas(lambda it: it, new.schema)) >= {"MapInPandas"}
 
 
-def test_rss_fetch_requires_feedparser_or_injection(spark):
-    accounts = spark.createDataFrame(
-        [("a1", "https://feed/a1")], "account_id string, rss_url string"
-    )
-    with pytest.raises(NotImplementedError):
-        rss_feed.fetch_feed_entries(accounts)  # no feedparser in env
-
-
-def test_rss_fetch_with_injected_fetcher(spark):
-    accounts = spark.createDataFrame(
-        [("a1", "u1"), ("a2", "u2")], "account_id string, rss_url string"
-    )
+def test_rss_fetch_with_injected_fetcher(monkeypatch):
+    """mode=network maps each account's feed entries, in order, to
+    ENTRY_COLS rows: account_id from the registry, entry_idx the
+    entry's position, every other field by name (missing → None)."""
+    from fxblue_etl_spark.sources import rss_datasource
 
     def canned(url):
         if url == "u1":
@@ -241,11 +234,52 @@ def test_rss_fetch_with_injected_fetcher(spark):
             ]
         return []
 
-    entries = rss_feed.fetch_feed_entries(accounts, fetcher=canned)
-    rows = entries.collect()
+    monkeypatch.setattr(rss_datasource, "_network_entries", canned)
+    accounts = [{"account_id": "a1", "rss_url": "u1"}, {"account_id": "a2", "rss_url": "u2"}]
+    rows = [
+        dict(zip(rss_feed.ENTRY_FIELDS, r))
+        for r in rss_datasource._read_accounts(accounts, "network")
+    ]
     assert len(rows) == 2
-    assert rows[0].entry_idx == 0 and rows[0].account_balance == "100"
-    assert rows[1].position_ticket == "11"
+    assert rows[0]["account_id"] == "a1" and rows[0]["entry_idx"] == 0
+    assert rows[0]["account_balance"] == "100" and rows[0]["position_ticket"] is None
+    assert rows[1]["entry_idx"] == 1 and rows[1]["position_ticket"] == "11"
+    assert rows[1]["position_closeprice"] == "" and rows[1]["account_balance"] is None
+
+
+def test_one_path_per_ingest_source():
+    """The ``fxblue_rss`` DataSource is the one RSS fetch path and its
+    parquet ``registry_path`` the one registry input; the stdlib
+    ``read_xlsx`` is the one workbook parser: ``feedparser`` is
+    imported in exactly one package function, and no package file
+    names pandas' Excel reader or the retired inline-registry options."""
+    import ast
+    from pathlib import Path
+
+    import fxblue_etl_spark
+
+    pkg = Path(fxblue_etl_spark.__file__).parent
+    importers, named = [], []
+    for p in sorted(pkg.rglob("*.py")):
+        text = p.read_text()
+        named += [(p.name, w) for w in ("read_excel", "accounts_json", "chunk_size") if w in text]
+
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name)
+                    continue
+                mods = (
+                    [a.name for a in child.names] if isinstance(child, ast.Import)
+                    else [child.module] if isinstance(child, ast.ImportFrom) else []
+                )
+                if "feedparser" in {m.split(".")[0] for m in mods if m}:
+                    importers.append(f"{p.stem}.{fn}")
+                visit(child, fn)
+
+        visit(ast.parse(text), "<module>")
+    assert importers == ["rss_datasource._network_entries"]
+    assert named == []
 
 
 def test_rss_trades_locf_and_sentinels(spark):

@@ -8,7 +8,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fxblue_etl_spark.sources.xlsx_registry import (
-    _read_xlsx_stdlib,
     read_xlsx,
     s4_xlsx_registry,
     write_xlsx,
@@ -58,7 +57,7 @@ def test_shared_strings_and_booleans(tmp_path):
             '<row r="2"><c r="B2"><v>42</v></c><c r="D2" t="b"><v>0</v></c></row>'
             "</sheetData></worksheet>",
         )
-    h, rows = _read_xlsx_stdlib(p)
+    h, rows = read_xlsx(p)
     assert h == ["hello", "world", "formula", "True"]
     assert rows == [[None, 42, None, False]]
 
@@ -76,7 +75,7 @@ def test_cells_without_refs(tmp_path):
             "<row><c><v>1</v></c><c><v>2.5</v></c></row>"
             "</sheetData></worksheet>",
         )
-    h, rows = _read_xlsx_stdlib(p)
+    h, rows = read_xlsx(p)
     assert h == ["h1", "h2"]
     assert rows == [[1, 2.5]]
 
