@@ -10,6 +10,7 @@ scale the same call fans out one task per row-group/split.
 from __future__ import annotations
 
 import atexit
+import functools
 import hashlib
 import os
 import shutil
@@ -64,17 +65,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``fixture_key(sf_dir)``, the table name and the values of
     :data:`_SCHEMA_CONFS`, and later scans pass it to the reader, so
     they start no job.  A fixture rewritten in place changes its key
-    and is inferred afresh.
-
-    ``events.ts`` has shipped in two physical parquet forms across
-    driver rounds — TIMESTAMP(NANOS) (surfacing as epoch-nanos long
-    under ``spark.sql.legacy.parquet.nanosAsLong``) and untagged
-    TIMESTAMP(MICROS) (surfacing as TIMESTAMP_NTZ). Both normalize
-    here to session-TZ ``TimestampType`` at microsecond precision:
-    with the session pinned to UTC the NTZ→LTZ cast
-    preserves the wall clock, which is exactly how the DuckDB oracle
-    reads the same file (naive TIMESTAMP). Every downstream operator
-    sees one ts type regardless of fixture vintage.
+    and is inferred afresh.  ``events.ts`` passes through
+    :func:`normalize_events_ts`.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -90,14 +82,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(path)
     dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     if name == "events":
-        from pyspark.sql import functions as F
-
-        t = dtypes.get("ts")
-        if t == "bigint":
-            # integer div — float division would lose precision at 1e18 nanos
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif t == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df, dtypes.get("ts"))
     elif name in ("orders", "lineitem"):
         # The same TIMESTAMP(NANOS) vintage rescue for the other two
         # timestamp columns, should the driver ever regenerate these
@@ -110,6 +95,30 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for c in ("o_orderdate", "l_shipdate"):
             if dtypes.get(c) == "bigint":
                 df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+    return df
+
+
+def normalize_events_ts(df: DataFrame, ts_type: str | None) -> DataFrame:
+    """``events.ts`` as session-TZ ``TimestampType``, given the
+    ``simpleString`` of the type it was read with — the one rescue
+    behind :func:`table` and the events file stream.
+
+    ``events.ts`` has shipped in two physical parquet forms across
+    driver rounds — TIMESTAMP(NANOS) (surfacing as epoch-nanos long
+    under ``spark.sql.legacy.parquet.nanosAsLong``) and untagged
+    TIMESTAMP(MICROS) (surfacing as TIMESTAMP_NTZ). Both normalize
+    here at microsecond precision: with the session pinned to UTC the
+    NTZ→LTZ cast preserves the wall clock, which is exactly how the
+    DuckDB oracle reads the same file (naive TIMESTAMP). Every
+    downstream operator sees one ts type regardless of fixture
+    vintage."""
+    from pyspark.sql import functions as F
+
+    if ts_type == "bigint":
+        # integer div — float division would lose precision at 1e18 nanos
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -371,14 +380,36 @@ def stage_once(path: str, build) -> str:
     return path
 
 
+@functools.cache
+def code_key() -> str:
+    """A short digest of every ``.py`` source of this package (relative
+    path and bytes), computed once per process.  Builders call across
+    modules (a registry builder reads another module's account
+    list), so only the whole package's digest catches every change
+    to what a builder stages."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.md5()
+    for d, _, files in sorted(os.walk(pkg)):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                h.update(os.path.relpath(path, pkg).encode())
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()[:12]
+
+
 def stage_fixture(sf_dir: str, name: str, build) -> str:
     """The one place fixture-derived files live: ``build(tmp_dir)``
     writes artifact ``name`` of fixture ``sf_dir`` once, through
     :func:`stage_once`, under a directory named by
-    :func:`fixture_key`; every later call returns the published
-    path without building.  ``tmp_dir`` does not exist yet — a
+    :func:`fixture_key` and :func:`code_key`; every later call returns
+    the published path without building, and a changed fixture or a
+    changed package stages afresh.  ``tmp_dir`` does not exist yet — a
     Spark writer creates it, a Python writer makes it first."""
-    root = os.path.join(tempfile.gettempdir(), f"fxblue_stage_{fixture_key(sf_dir)}")
+    root = os.path.join(
+        tempfile.gettempdir(), f"fxblue_stage_{fixture_key(sf_dir)}_{code_key()}"
+    )
     return stage_once(os.path.join(root, name), build)
 
 

@@ -1320,6 +1320,18 @@ def gram_cells(emb: DataFrame) -> DataFrame:
     )
 
 
+def gram_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """SUM-merge of two Gram cell tables: the Gram is a sum of
+    per-row outer products on the e3 integer grid, so
+    ``gram_merge(gram_cells(A), gram_cells(B)) == gram_cells(A ∪ B)``
+    exactly."""
+    return (
+        a.unionByName(b)
+        .groupBy("i", "j")
+        .agg(F.sum("cross_sum").cast("long").alias("cross_sum"))
+    )
+
+
 GRAM_ORACLE = """
 WITH q AS (
   SELECT list_transform(embedding,
@@ -1822,11 +1834,7 @@ def gram_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(table(spark, sf_dir, "embeddings"))
     even = gram_cells(emb.filter(F.col("vec_id") % 2 == 0))
     odd = gram_cells(emb.filter(F.col("vec_id") % 2 == 1))
-    inc = (
-        even.unionByName(odd)
-        .groupBy("i", "j")
-        .agg(F.sum("cross_sum").cast("long").alias("cross_sum"))
-    )
+    inc = gram_merge(even, odd)
     full = gram_cells(emb)
     keys = ["i", "j", "cross_sum"]
     a = inc.select(*keys).withColumn("in_i", F.lit(1))

@@ -36,7 +36,7 @@ re-expressed as compositions of built-in DataFrame ops (SURVEY §2.13
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -305,8 +305,8 @@ _CMS_WIDTH = 8192
 def _cms_md5_buckets(key):
     """The ENGINE-NEUTRAL (md5-derived) Count-Min bucket array: one
     (row, bucket) struct per hash row, row i hashing ``cms{i}|key`` —
-    shared by ``portable_countmin_topk`` and the upsert contract so
-    both use the hash family byte-for-byte."""
+    shared by :func:`cms_counters` and the top-k probe so both use the
+    hash family byte-for-byte."""
     return F.array(
         *[
             F.struct(
@@ -333,6 +333,26 @@ def _cms_md5_buckets(key):
     )
 
 
+def cms_counters(df: DataFrame, *by: str) -> DataFrame:
+    """The portable Count-Min counter table ``(*by, d, b, cnt)`` of
+    ``df``'s ``l_partkey``: one row per touched (row, bucket) cell —
+    the one partial behind the top-k probe, the upsert contract and
+    the streaming maintenance fold.  ``by`` adds group keys (the
+    contract's parity pass builds both partials in one pass)."""
+    return (
+        df.select(*by, F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db"))
+        .groupBy(*by, F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+
+
+def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """SUM-merge of two counter tables: counters are per-cell sums, so
+    ``cms_merge(cms_counters(A), cms_counters(B)) == cms_counters(A ∪ B)``
+    cell for cell."""
+    return a.unionByName(b).groupBy("d", "b").agg(F.sum("cnt").cast("long").alias("cnt"))
+
+
 def portable_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min with an ENGINE-NEUTRAL hash family (md5-derived, like
     ``portable_bloom_contract`` / ``portable_hll_registers``): the
@@ -349,16 +369,11 @@ def portable_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU work; a single-split fixture scan serializes it on one core
     # (no-op at real scale — guide §2.5 input skew)
     l = fan_out(table(spark, sf_dir, "lineitem").select("l_partkey"))
-    md5_buckets = _cms_md5_buckets
-    counters = (
-        l.select(F.explode(md5_buckets(F.col("l_partkey"))).alias("db"))
-        .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-        .agg(F.count("*").alias("cnt"))
-    )
+    counters = cms_counters(l)
     candidates = (
         heavy_hitters_exact(spark, sf_dir)
         .select(F.col("l_partkey"), F.col("n_items").alias("exact_count"))
-        .withColumn("db", F.explode(md5_buckets(F.col("l_partkey"))))
+        .withColumn("db", F.explode(_cms_md5_buckets(F.col("l_partkey"))))
         .select(
             "l_partkey", "exact_count", F.col("db.d").alias("d"), F.col("db.b").alias("b")
         )
@@ -427,15 +442,6 @@ def countmin_upsert_equivalence(
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     )
 
-    def cms(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db")
-            )
-            .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-
     # ONE parity-tagged build pass yields BOTH partial counter tables
     # (base = even-l_orderkey rows, delta = odd): grouping by
     # (parity, d, b) over all rows produces, per parity value, exactly
@@ -448,21 +454,12 @@ def countmin_upsert_equivalence(
     # (guide §2.4; r14 scan sweep had already cut 5 → 3).
     parts = swap_cache(
         "temporal.cms_upsert_parts",
-        l.select(
-            (F.col("l_orderkey") % 2).alias("par"),
-            F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db"),
-        )
-        .groupBy("par", F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-        .agg(F.count("*").cast("long").alias("cnt")),
+        cms_counters(l.withColumn("par", F.col("l_orderkey") % 2), "par"),
     )
     base = parts.filter(F.col("par") == 0).drop("par")
     delta = parts.filter(F.col("par") == 1).drop("par")
-    merged = (
-        base.unionByName(delta)
-        .groupBy("d", "b")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    full = cms(l)
+    merged = cms_merge(base, delta)
+    full = cms_counters(l)
     cmp = (
         merged.select("d", "b", F.col("cnt").alias("cm"))
         .join(
@@ -1322,6 +1319,41 @@ CP_SHIFT = 1 << 16
 CUSUM_H_PCT = 2
 
 
+def _spend_cents() -> Column:
+    """Exact integer spend: the sum of floor(o_totalprice·100)."""
+    return F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents")
+
+
+def daily_spend(orders: DataFrame) -> DataFrame:
+    """The daily spend series ``(d, cents)`` of an orders frame, ``d``
+    the order date as a string — the one definition behind the CUSUM
+    and change-point series and the streaming CUSUM monitor's
+    per-batch partial (merged by :func:`spend_merge`)."""
+    return orders.groupBy(F.col("o_orderdate").cast("string").alias("d")).agg(
+        _spend_cents()
+    )
+
+
+def weekly_spend(orders: DataFrame) -> DataFrame:
+    """The weekly spend series ``(o_orderpriority, wk, cents)`` of an
+    orders frame, ``wk`` the epoch-day // 7 week (engine-neutral, no
+    ISO-week semantics) — the one definition behind the EWMA,
+    Mann-Kendall, Holt and isotonic series and the streaming EWMA
+    monitor's per-batch partial (merged by :func:`spend_merge`)."""
+    wk = F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7").cast("long")
+    return orders.groupBy("o_orderpriority", wk.alias("wk")).agg(_spend_cents())
+
+
+def spend_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Keyed SUM of two spend partials of one grain: the series is
+    additive, so merging the partials of any split of the orders
+    yields the series of the whole exactly."""
+    keys = [c for c in a.columns if c != "cents"]
+    return (
+        a.unionByName(b).groupBy(*keys).agg(F.sum("cents").cast("long").alias("cents"))
+    )
+
+
 def cusum_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's CUSUM drift monitor over the daily spend series — the
     SEQUENTIAL companion to `changepoint_detection` (that one finds
@@ -1343,13 +1375,7 @@ def cusum_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data-scaled work — same allowlisted bounded global window as
     `changepoint_detection`/`seasonal_naive_backtest`).  Headroom:
     |P| ≤ n·S ~ 2^60 at sf100."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("string").alias("d")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100))
-        .cast("long")
-        .alias("cents")
-    )
-    return cusum_from_daily(daily)
+    return cusum_from_daily(daily_spend(table(spark, sf_dir, "orders")))
 
 
 def cusum_from_daily(daily: DataFrame) -> DataFrame:
@@ -1516,18 +1542,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a 5-row fold over calendar-bounded arrays (`F.aggregate`,
     row-local — no window, no shuffle beyond the group-by).  At
     100 TB the fold input is still |calendar| × |segments| rows."""
-    o = table(spark, sf_dir, "orders")
-    weekly = o.groupBy(
-        "o_orderpriority",
-        F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
-        .cast("long")
-        .alias("wk"),
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100))
-        .cast("long")
-        .alias("cents")
-    )
-    return ewma_from_weekly(weekly)
+    return ewma_from_weekly(weekly_spend(table(spark, sf_dir, "orders")))
 
 
 def ewma_from_weekly(weekly: DataFrame) -> DataFrame:
@@ -1630,15 +1645,8 @@ def changepoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     `seasonal_naive_backtest` carries.  Output: the chosen split
     date, segment sizes and exact mean cents, the split objective,
     the no-split baseline floor(S²/n), and the gain."""
-    o = table(spark, sf_dir, "orders")
-    daily = (
-        o.groupBy(F.col("o_orderdate").cast("string").alias("d"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100))
-            .cast("long")
-            .alias("cents")
-        )
-        .withColumn("y", F.expr(f"cents DIV {CP_UNIT}"))
+    daily = daily_spend(table(spark, sf_dir, "orders")).withColumn(
+        "y", F.expr(f"cents DIV {CP_UNIT}")
     )
     from ..io import swap_cache
 
@@ -2009,22 +2017,11 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow."""
     from ..io import swap_cache
 
-    o = table(spark, sf_dir, "orders")
     # one data-scaled scan; the weekly frame (calendar × priorities)
     # feeds three aggregates (S, n, ties) — cache it so the corpus
     # is read once
     weekly = swap_cache(
-        "temporal.mk_weekly",
-        o.groupBy(
-            "o_orderpriority",
-            F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
-            .cast("long")
-            .alias("wk"),
-        ).agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100))
-            .cast("long")
-            .alias("cents")
-        ),
+        "temporal.mk_weekly", weekly_spend(table(spark, sf_dir, "orders"))
     )
     a = weekly.select(
         F.col("o_orderpriority").alias("pr"),
@@ -2250,17 +2247,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE data-scaled partial aggregate (week ×
     priority), then a |segments|-row fold over calendar-bounded
     arrays — the ``ewma_control_chart`` shape exactly."""
-    o = table(spark, sf_dir, "orders")
-    weekly = o.groupBy(
-        "o_orderpriority",
-        F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
-        .cast("long")
-        .alias("wk"),
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100))
-        .cast("long")
-        .alias("cents")
-    )
+    weekly = weekly_spend(table(spark, sf_dir, "orders"))
     arr = weekly.groupBy("o_orderpriority").agg(
         F.sort_array(F.collect_list(F.struct("wk", "cents"))).alias("xs")
     )
@@ -2390,17 +2377,7 @@ def isotonic_weekly_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per (priority, week) with the observed and
     fitted cents; the fit is non-decreasing in week within each
     priority (property-pinned)."""
-    o = table(spark, sf_dir, "orders")
-    weekly = o.groupBy(
-        "o_orderpriority",
-        F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
-        .cast("long")
-        .alias("wk"),
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100))
-        .cast("long")
-        .alias("cents")
-    )
+    weekly = weekly_spend(table(spark, sf_dir, "orders"))
     w = Window.partitionBy("o_orderpriority").orderBy("wk")
     idx = weekly.select(
         "o_orderpriority",

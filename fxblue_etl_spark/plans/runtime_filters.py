@@ -131,6 +131,31 @@ def _bloom_words(members: DataFrame) -> DataFrame:
     )
 
 
+def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """OR-merge of two word tables: a Bloom filter is the bitwise OR
+    of its members' bit patterns, so ``bloom_merge(_bloom_words(A),
+    _bloom_words(B)) == _bloom_words(A ∪ B)`` word for word, and a
+    replayed member cannot change it."""
+    return (
+        a.unionByName(b).groupBy("word_idx").agg(F.expr("bit_or(word)").alias("word"))
+    )
+
+
+def _bloom_pos_legs(src: str) -> str:
+    """DuckDB mirror of :func:`_bloom_positions` over relation ``src``
+    (column ``o_orderkey``): one ``(o_orderkey, bit)`` leg per hash."""
+    from ..operators.dedup import _hex8_sql
+
+    legs = []
+    for i in range(BLOOM_K):
+        md5_sql = f"md5('bloom{i}|' || CAST(o_orderkey AS VARCHAR))"
+        legs.append(
+            f"SELECT o_orderkey, ({_hex8_sql(md5_sql, 1)}) % {BLOOM_M} AS bit"
+            f" FROM {src}"
+        )
+    return " UNION ALL ".join(legs)
+
+
 def portable_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A Bloom filter built, serialized, and probed ENTIRELY in
     relational operators — the engine-portable sketch (md5-derived
@@ -183,16 +208,7 @@ def portable_bloom_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_oracle() -> str:
-    from ..operators.dedup import _hex8_sql
-
-    legs = []
-    for i in range(BLOOM_K):
-        md5_sql = f"md5('bloom{i}|' || CAST(o_orderkey AS VARCHAR))"
-        legs.append(
-            f"SELECT o_orderkey, ({_hex8_sql(md5_sql, 1)}) % {BLOOM_M} AS bit"
-            " FROM keys"
-        )
-    pos_legs = " UNION ALL ".join(legs)
+    pos_legs = _bloom_pos_legs("keys")
     return f"""
 WITH keys AS (SELECT DISTINCT o_orderkey FROM orders),
 pos AS ({pos_legs}),
@@ -258,22 +274,7 @@ def bloom_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bloom_words(members.filter(F.col("o_orderkey") % 4 == 0)),
         _bloom_words(members.filter(F.col("o_orderkey") % 4 == 2)),
     )
-    merged = (
-        base.select("word_idx", F.col("word").alias("wa"))
-        .join(
-            delta.select("word_idx", F.col("word").alias("wb")),
-            "word_idx",
-            "full",
-        )
-        .select(
-            "word_idx",
-            (
-                F.coalesce(F.col("wa"), F.lit(0)).bitwiseOR(
-                    F.coalesce(F.col("wb"), F.lit(0))
-                )
-            ).alias("word"),
-        )
-    )
+    merged = bloom_merge(base, delta)
     full = _bloom_words(members)
     cmp = (
         merged.select("word_idx", F.col("word").alias("wm"))
@@ -316,16 +317,7 @@ def bloom_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_upsert_oracle() -> str:
-    from ..operators.dedup import _hex8_sql
-
-    legs = []
-    for i in range(BLOOM_K):
-        md5_sql = f"md5('bloom{i}|' || CAST(o_orderkey AS VARCHAR))"
-        legs.append(
-            f"SELECT o_orderkey, ({_hex8_sql(md5_sql, 1)}) % {BLOOM_M} AS bit"
-            " FROM keys"
-        )
-    pos_legs = " UNION ALL ".join(legs)
+    pos_legs = _bloom_pos_legs("keys")
     return f"""
 WITH keys AS (SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 2 = 0),
 pos AS ({pos_legs}),
@@ -445,16 +437,7 @@ def counting_bloom_delete_equivalence(
 
 
 def _cbf_delete_oracle() -> str:
-    from ..operators.dedup import _hex8_sql
-
-    legs = []
-    for i in range(BLOOM_K):
-        md5_sql = f"md5('bloom{i}|' || CAST(o_orderkey AS VARCHAR))"
-        legs.append(
-            f"SELECT o_orderkey, ({_hex8_sql(md5_sql, 1)}) % {BLOOM_M} AS bit"
-            " FROM quads"
-        )
-    pos_legs = " UNION ALL ".join(legs)
+    pos_legs = _bloom_pos_legs("quads")
     return f"""
 WITH quads AS (
   SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 4 = 0),
@@ -469,6 +452,24 @@ SELECT CAST(count(*) AS BIGINT) AS n_positions,
        1 AS equal
 FROM direct
 """
+
+
+def _bloom_words_oracle() -> str:
+    """The word table of the even-key member set — what the streaming
+    maintenance (``streaming.pipelines.streaming_bloom_maintenance``)
+    must equal exactly: the same member set and hash family as the
+    batch contracts above."""
+    pos_legs = _bloom_pos_legs("keys")
+    return f"""
+WITH keys AS (SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 2 = 0),
+pos AS ({pos_legs})
+SELECT bit // {BLOOM_WORD} AS word_idx,
+       bit_or(CAST(1 AS BIGINT) << CAST(bit % {BLOOM_WORD} AS INT)) AS word
+FROM pos GROUP BY 1
+"""
+
+
+BLOOM_WORDS_ORACLE = _bloom_words_oracle()
 
 
 QUERIES = {

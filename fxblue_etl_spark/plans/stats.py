@@ -566,6 +566,13 @@ def hll_register_table(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
+def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """MAX-merge of two register tables: registers are per-bucket
+    maxima, so ``hll_merge(regs(A), regs(B)) == regs(A ∪ B)`` register
+    for register, and a replayed key cannot change it."""
+    return a.unionByName(b).groupBy("bucket").agg(F.max("rho").alias("rho"))
+
+
 def portable_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A HyperLogLog built ENTIRELY from relational operators with a
     bit-identical layout in both engines — the mergeable-sketch
@@ -678,11 +685,7 @@ def hll_upsert_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.filter(F.col("event_id") % 2 == 1), "event_id"
         ),
     )
-    merged = (
-        base.unionByName(delta)
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+    merged = hll_merge(base, delta)
     full = hll_register_table(e, "event_id")
     cmp = (
         merged.select("bucket", F.col("rho").alias("rm"))
@@ -1150,6 +1153,21 @@ def kmv_sketch_table(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
         .filter(F.col("r2") <= KMV_K)
         .groupBy("grp")
         .agg(F.sort_array(F.collect_list("h")).alias("ks"))
+    )
+
+
+def kmv_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two sketch tables: per group, the ``KMV_K`` smallest of
+    the union of their hashes.  Truncation is confluent (each of the
+    global k smallest distinct hashes is among its own side's k
+    smallest), so ``kmv_merge(sk(A), sk(B)) == sk(A ∪ B)`` exactly;
+    the union holds ≤ 2k hashes per group, so the re-truncate is
+    sketch-local work."""
+    return (
+        a.unionByName(b)
+        .select("grp", F.explode("ks").alias("h"))
+        .groupBy("grp")
+        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("ks"))
     )
 
 

@@ -157,38 +157,35 @@ class JsonlShardDataSource(DataSource):
         return JsonlStreamShardWriter(self.options)
 
 
-def pyds_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write documents through the custom sink, read the shards back,
-    and emit exact lossless-ness evidence: row count, distinct docs,
-    total chars, and an order-insensitive md5-based content sum."""
+def _sink_documents(spark: SparkSession, sf_dir: str, query: str) -> str:
+    """Write ``documents(doc_id, lang, text)`` through the sink as
+    ``N_SHARDS`` shards into ``query``'s emptied sink directory and
+    return that directory."""
     import shutil
 
     from ..io import sink_dir, table
-    from ..operators.dedup import _hex8_sql  # noqa: F401  (oracle twin below)
 
     spark.dataSource.register(JsonlShardDataSource)
-
-    out_dir = sink_dir(sf_dir, "pyds_jsonl_sink_roundtrip")
+    out_dir = sink_dir(sf_dir, query)
     shutil.rmtree(out_dir, ignore_errors=True)
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     (
-        d.repartition(N_SHARDS)
+        table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "text")
+        .repartition(N_SHARDS)
         .write.format("jsonl_shards")
         .option("path", out_dir)
         .option("columns_json", json.dumps(["doc_id", "lang", "text"]))
         .mode("append")
         .save()
     )
-    assert os.path.exists(os.path.join(out_dir, "_MANIFEST.json"))
+    return out_dir
 
-    # pathGlobFilter (not a glob in the path) keeps the FileStreamSink
-    # metadata probe off the raw glob string — no spurious WARN
-    back = (
-        spark.read.schema("doc_id long, lang string, text string")
-        .option("pathGlobFilter", "shard-*.jsonl")
-        .json(out_dir)
-    )
+
+def _content_checksum(back: DataFrame) -> DataFrame:
+    """Lossless-ness evidence over a ``(doc_id, lang, text)`` frame read
+    back from the sink: row count, distinct docs, total chars and an
+    order-insensitive md5-based content sum, which
+    :func:`_content_checksum_oracle` re-derives from the source table."""
     return back.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("doc_id").alias("n_docs"),
@@ -221,24 +218,44 @@ def pyds_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_oracle() -> str:
+def _content_checksum_oracle(tbl: str, doc_id: str, lang: str, text: str) -> str:
+    """The DuckDB twin of :func:`_content_checksum` over source table
+    ``tbl``, whose columns ``doc_id``/``lang``/``text`` the sink wrote
+    under those names."""
     from ..operators.dedup import _hex8_sql
 
     h = _hex8_sql(
-        "md5(coalesce(CAST(doc_id AS VARCHAR), '<null>') || '|' "
-        "|| coalesce(lang, '<null>') || '|' || coalesce(text, '<null>'))",
+        f"md5(coalesce(CAST({doc_id} AS VARCHAR), '<null>') || '|' "
+        f"|| coalesce({lang}, '<null>') || '|' || coalesce({text}, '<null>'))",
         1,
     )
     return f"""
 SELECT count(*) AS n_rows,
-       count(DISTINCT doc_id) AS n_docs,
-       CAST(sum(len(text)) AS BIGINT) AS n_chars_total,
+       count(DISTINCT {doc_id}) AS n_docs,
+       CAST(sum(len({text})) AS BIGINT) AS n_chars_total,
        CAST(sum({h}) AS BIGINT) AS content_sum
-FROM documents
+FROM {tbl}
 """
 
 
-PYDS_ROUNDTRIP_ORACLE = _roundtrip_oracle()
+def pyds_jsonl_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write documents through the custom sink, read the shards back,
+    and emit exact lossless-ness evidence: row count, distinct docs,
+    total chars, and an order-insensitive md5-based content sum."""
+    out_dir = _sink_documents(spark, sf_dir, "pyds_jsonl_sink_roundtrip")
+    assert os.path.exists(os.path.join(out_dir, "_MANIFEST.json"))
+
+    # pathGlobFilter (not a glob in the path) keeps the FileStreamSink
+    # metadata probe off the raw glob string — no spurious WARN
+    back = (
+        spark.read.schema("doc_id long, lang string, text string")
+        .option("pathGlobFilter", "shard-*.jsonl")
+        .json(out_dir)
+    )
+    return _content_checksum(back)
+
+
+PYDS_ROUNDTRIP_ORACLE = _content_checksum_oracle("documents", "doc_id", "lang", "text")
 
 
 def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,24 +264,7 @@ def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     custom manifest reader.  The checksum equals the source table's
     only if the reader honors the commit protocol — a glob read
     would ingest the orphan and fail the hash."""
-    import shutil
-
-    from ..io import sink_dir, table
-
-    spark.dataSource.register(JsonlShardDataSource)
-
-    out_dir = sink_dir(sf_dir, "pyds_manifest_reader_roundtrip")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    (
-        d.repartition(N_SHARDS)
-        .write.format("jsonl_shards")
-        .option("path", out_dir)
-        .option("columns_json", json.dumps(["doc_id", "lang", "text"]))
-        .mode("append")
-        .save()
-    )
+    out_dir = _sink_documents(spark, sf_dir, "pyds_manifest_reader_roundtrip")
     # the orphan: a well-formed shard a crashed/uncommitted task left
     # behind — present on disk, absent from the manifest
     with open(os.path.join(out_dir, "shard-99999.jsonl"), "w", encoding="utf-8") as fh:
@@ -273,31 +273,7 @@ def pyds_manifest_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     back = (
         spark.read.format("jsonl_shards").option("path", out_dir).load()
     )
-    return back.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum(F.length("text")).cast("long").alias("n_chars_total"),
-        F.sum(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.coalesce(F.col("doc_id").cast("string"), F.lit("<null>")),
-                            F.coalesce("lang", F.lit("<null>")),
-                            F.coalesce("text", F.lit("<null>")),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("content_sum"),
-    )
+    return _content_checksum(back)
 
 
 class JsonlStreamShardWriter(_ShardSink, DataSourceStreamWriter):
@@ -381,51 +357,12 @@ def pyds_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema("doc_id long, lang string, text string").json(
         shards
     )
-    return back.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum(F.length("text")).cast("long").alias("n_chars_total"),
-        F.sum(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.coalesce(F.col("doc_id").cast("string"), F.lit("<null>")),
-                            F.coalesce("lang", F.lit("<null>")),
-                            F.coalesce("text", F.lit("<null>")),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("content_sum"),
-    )
+    return _content_checksum(back)
 
 
-def _stream_roundtrip_oracle() -> str:
-    from ..operators.dedup import _hex8_sql
-
-    h = _hex8_sql(
-        "md5(coalesce(CAST(event_id AS VARCHAR), '<null>') || '|' "
-        "|| coalesce(event_type, '<null>') || '|' || coalesce(props, '<null>'))",
-        1,
-    )
-    return f"""
-SELECT count(*) AS n_rows,
-       count(DISTINCT event_id) AS n_docs,
-       CAST(sum(len(props)) AS BIGINT) AS n_chars_total,
-       CAST(sum({h}) AS BIGINT) AS content_sum
-FROM events
-"""
-
-
-PYDS_STREAM_ROUNDTRIP_ORACLE = _stream_roundtrip_oracle()
+PYDS_STREAM_ROUNDTRIP_ORACLE = _content_checksum_oracle(
+    "events", "event_id", "event_type", "props"
+)
 
 
 QUERIES = {

@@ -21,6 +21,19 @@ path: watermark-evicted bounded state, oracle restricted to
 watermark-passed windows via Spark's emission rule
 ``window_end <= max(event_time) - delay``).
 
+Every stream here is one file source, ``_file_stream``, over a
+staged copy of a fixture table (one file, or ordered splits one per
+micro-batch).  The sketch and series monitors (KMV, Gram, Bloom, HLL,
+Count-Min, EWMA, CUSUM) run one keyed fold, ``_fold_partials``, with
+the partial and the merge their batch contracts use, each defined once
+beside its sketch: ``plans.stats`` (``kmv_sketch_table``/``kmv_merge``,
+``hll_register_table``/``hll_merge``), ``operators.ml``
+(``gram_cells``/``gram_merge``), ``plans.runtime_filters``
+(``_bloom_words``/``bloom_merge``) and ``operators.temporal``
+(``cms_counters``/``cms_merge``, ``weekly_spend``/``daily_spend`` with
+``spend_merge``).  So incremental ≡ rebuild compares one definition
+with itself over two splits of the data, never two copies.
+
 Scale notes: the file source scales by split like any scan; windowed
 state is bounded by watermark eviction; LOCF state is one row per
 key. ``foreachBatch`` + ``merge_upsert`` gives the exactly-once keyed
@@ -40,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..io import stage_fixture
+from ..io import normalize_events_ts, stage_fixture
 
 
 def _stage_table_dir(sf_dir: str, table: str) -> str:
@@ -60,6 +73,31 @@ def _stage_table_dir(sf_dir: str, table: str) -> str:
     return stage_fixture(sf_dir, f"stream_{table}", build)
 
 
+def _file_stream(
+    spark: SparkSession,
+    d: str,
+    max_files_per_trigger: int | None = None,
+    *,
+    spread: bool = False,
+) -> DataFrame:
+    """The module's one file-source stream: the parquet files of the
+    staged directory ``d`` under the schema probed from them (Spark
+    skips the ``_``-prefixed staging marker), at most
+    ``max_files_per_trigger`` files per micro-batch when given.  With
+    ``spread``, each micro-batch is repartitioned across the session's
+    parallelism: a staged file arrives as ONE input partition, so the
+    row-local heavy work after it (banding, scoring, per-batch
+    aggregates) would otherwise run on one core — the role ``fan_out``
+    plays on the batch path."""
+    reader = spark.readStream.schema(spark.read.parquet(d).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(d)
+    if spread:
+        stream = stream.repartition(spark.sparkContext.defaultParallelism)
+    return stream
+
+
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -69,28 +107,17 @@ def events_stream(
 ) -> DataFrame:
     """File-source stream over the events fixture.
 
-    ``ts`` has shipped in two physical parquet forms across driver
-    rounds (TIMESTAMP(NANOS) → nanos-as-long under the legacy conf,
-    and untagged TIMESTAMP(MICROS) → TIMESTAMP_NTZ); the stream
-    schema is probed from the staged file itself so both normalize to
-    session-TZ TimestampType, mirroring ``io.table``.
+    ``ts`` goes through ``io.normalize_events_ts``, the rescue
+    ``io.table`` applies, with its type probed from the staged file
+    itself.
 
     ``stage_dir``/``max_files_per_trigger`` let the state-bound tests
     feed a pre-split multi-file directory one file per micro-batch;
     the default single-staged-file path (what the driver certifies)
     is unchanged."""
     d = stage_dir if stage_dir is not None else _stage_table_dir(sf_dir, "events")
-    schema = spark.read.parquet(d).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(d)
-    t = {f.name: f.dataType.simpleString() for f in schema}.get("ts")
-    if t == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif t == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    raw = _file_stream(spark, d, max_files_per_trigger)
+    return normalize_events_ts(raw, raw.schema["ts"].dataType.simpleString())
 
 
 def run_to_table(
@@ -165,6 +192,27 @@ def _fold_stream(stream: DataFrame, fold, progress_out: list | None = None):
     if progress_out is not None:
         progress_out.extend(q.recentProgress)
     return state
+
+
+def _fold_partials(
+    stream: DataFrame, slot: str, partial, merge, progress_out: list | None
+) -> DataFrame:
+    """The keyed fold of the sketch and series monitors: each
+    micro-batch collapses to ``partial(batch)``, which merges into the
+    carried state as ``merge(state, partial)`` — the same partial and
+    merge the batch contracts use, so the final state must equal the
+    one-shot build of the whole stream.  The state is compacted to one
+    partition and pinned in ``slot`` (released when the next batch's
+    state supersedes it); it stays as small as one partial.  Returns
+    the final state."""
+
+    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        part = partial(batch)
+        if prev is not None:
+            part = merge(prev, part)
+        return pin(slot, part.coalesce(1))
+
+    return _fold_stream(stream, fold, progress_out)
 
 
 def _value_sum_e4() -> F.Column:
@@ -1181,17 +1229,8 @@ def streaming_lsh_dedup(
     )
 
     d = stage_dir if stage_dir is not None else _stage_table_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # a micro-batch of one staged file arrives as ONE input partition;
-    # the minhash/banding work is the expensive row-local part, so
-    # spread the batch across the session's parallelism first (same
-    # role fan_out plays on the batch path — streams repartition
-    # per micro-batch)
-    n_par = spark.sparkContext.defaultParallelism
-    stream_docs = reader.parquet(d).repartition(n_par)
+    # the minhash/banding work is the expensive row-local part
+    stream_docs = _file_stream(spark, d, max_files_per_trigger, spread=True)
     sbands = minhash_band_rows(stream_docs).select("doc_id", "band_idx", "band_sig")
 
     hits = sbands.join(corpus_bands, ["band_idx", "band_sig"], "left_outer")
@@ -1278,14 +1317,8 @@ def _dedup_gate(
     10 batches at sf0.1).  coalesce is shuffle-free; at cluster scale
     this is the bucketed index table's MERGE compaction."""
     d = _stage_table_splits(sf_dir, table, id_col, n_splits)
-    schema = spark.read.parquet(d).schema
+    stream = _file_stream(spark, d, 1, spread=True)
     n_par = spark.sparkContext.defaultParallelism
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(n_par)
-    )
     hit = F.when((F.col("prior_id") < F.col(id_col)) & verify, 1).otherwise(0)
 
     def fold(pin, state: dict | None, batch: DataFrame) -> dict:
@@ -1528,13 +1561,7 @@ def streaming_quality_gate(
     to content-quality scoring."""
     from ..operators.textops import quality_signal_cols
 
-    d = _stage_table_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
-    stream_docs = (
-        spark.readStream.schema(schema)
-        .parquet(d)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    stream_docs = _file_stream(spark, _stage_table_dir(sf_dir, "documents"), spread=True)
     n_tok, n_stop, score = quality_signal_cols()
     gated = stream_docs.select(
         "doc_id",
@@ -1560,7 +1587,7 @@ def streaming_kmv_distinct(
     event type, the KMV bottom-k sketch (``plans.stats.
     kmv_sketch_table``) maintained incrementally across micro-batches
     — each batch's sketch merges into the carried state by hash-set
-    union + re-truncate.  KMV truncation is CONFLUENT (each of the
+    union + re-truncate (``plans.stats.kmv_merge``).  KMV truncation is CONFLUENT (each of the
     global k smallest distinct hashes is among its own batch's k
     smallest), so the incremental result equals the all-at-once batch
     sketch EXACTLY and the oracle is the batch sketch SQL on the full
@@ -1578,32 +1605,16 @@ def streaming_kmv_distinct(
     Reference parity: the streaming analogue of the reference's
     per-run row-count logging (`CSV PARSER/gcp_csv.py:159-164`),
     upgraded to mergeable distinct cardinality."""
-    from ..plans.stats import KMV_DOM, KMV_K, kmv_sketch_table
+    from ..plans.stats import KMV_DOM, KMV_K, kmv_merge, kmv_sketch_table
 
     d = _stage_table_splits(sf_dir, "events", "event_id", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(spark.sparkContext.defaultParallelism)
+    final = _fold_partials(
+        _file_stream(spark, d, 1, spread=True),
+        "streaming_kmv_distinct",
+        lambda batch: kmv_sketch_table(batch, "event_type", "user_id"),
+        kmv_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        sk = kmv_sketch_table(batch, "event_type", "user_id")
-        if prev is not None:
-            # union of two ≤k sketches per group → ≤2k hashes: bounded
-            # by construction, so the explode/collect_set re-truncate
-            # is sketch-local work
-            sk = (
-                prev.unionByName(sk)
-                .select("grp", F.explode("ks").alias("h"))
-                .groupBy("grp")
-                .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("ks"))
-            )
-        return pin("streaming_kmv_distinct", sk.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return final.select(
         F.col("grp").alias("event_type"),
         F.size("ks").cast("long").alias("n_sketch"),
@@ -1658,7 +1669,8 @@ def streaming_gram_maintenance(
     of the batch `gram_upsert_equivalence` contract: each micro-batch
     of embeddings collapses to its d×d integer partial
     (``ml.gram_cells`` — one Arrow pass, ≤ d(d+1)/2 rows leave the
-    batch) and ADDS into the carried state.  Because the Gram is a
+    batch) and ADDS into the carried state (``ml.gram_merge``, the
+    batch contract's merge).  Because the Gram is a
     sum of outer products on the e3 integer grid, the final state
     must equal the batch rebuild EXACTLY — the oracle is the very
     same GRAM_ORACLE the batch query certifies against, which is the
@@ -1673,27 +1685,16 @@ def streaming_gram_maintenance(
     PCA/whitening statistics at ingest cost, and
     `pca_power_iteration` reads the standing state instead of
     re-scanning the corpus."""
-    from ..operators.ml import gram_cells
+    from ..operators.ml import gram_cells, gram_merge
 
     d = _stage_table_splits(sf_dir, "embeddings", "vec_id", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream_vecs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    final = _fold_partials(
+        _file_stream(spark, d, 1),
+        "streaming_gram_maintenance",
+        gram_cells,
+        gram_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        cells = gram_cells(batch)
-        if prev is not None:
-            cells = (
-                prev.unionByName(cells)
-                .groupBy("i", "j")
-                .agg(F.sum("cross_sum").cast("long").alias("cross_sum"))
-            )
-        return pin("streaming_gram_maintenance", cells.coalesce(1))
-
-    final = _fold_stream(stream_vecs, fold, progress_out)
     return final.select("i", "j", "cross_sum")
 
 
@@ -1717,8 +1718,9 @@ def streaming_bloom_maintenance(
     live counterpart of the batch ``bloom_upsert_equivalence``
     contract: each micro-batch of orders collapses to its partial
     word table (`runtime_filters._bloom_words` over the batch's even
-    keys — ≤ BLOOM_M/32 = 512 rows leave the batch) and bit_or-merges
-    into the carried state.  A Bloom filter is a bitwise OR, so the
+    keys — ≤ BLOOM_M/32 = 512 rows leave the batch) and OR-merges
+    into the carried state (``runtime_filters.bloom_merge``, the batch
+    contract's merge).  A Bloom filter is a bitwise OR, so the
     final state must equal the batch build WORD-FOR-WORD — the
     oracle is the batch words build itself, the strongest
     incremental == rebuild statement (same schema, same hashes, zero
@@ -1731,31 +1733,18 @@ def streaming_bloom_maintenance(
     the previous (released eagerly).  At 100 TB this plan maintains
     the serving-side membership filter at ingest cost; the join
     pruning in `bloom_filter_join` reads the standing state."""
-    from ..plans.runtime_filters import _bloom_words
+    from ..plans.runtime_filters import _bloom_words, bloom_merge
 
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    final = _fold_partials(
+        _file_stream(spark, d, 1),
+        "streaming_bloom_maintenance",
+        lambda batch: _bloom_words(
+            batch.select("o_orderkey").distinct().filter(F.col("o_orderkey") % 2 == 0)
+        ),
+        bloom_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        words = _bloom_words(
-            batch.select("o_orderkey")
-            .distinct()
-            .filter(F.col("o_orderkey") % 2 == 0)
-        )
-        if prev is not None:
-            words = (
-                prev.unionByName(words)
-                .groupBy("word_idx")
-                .agg(F.expr("bit_or(word)").alias("word"))
-            )
-        return pin("streaming_bloom_maintenance", words.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return final.select("word_idx", "word")
 
 
@@ -1777,7 +1766,8 @@ def streaming_hll_maintenance(
     Each micro-batch of events collapses to its partial register
     table (``plans.stats.hll_register_table`` over the batch's
     event_ids — ≤ HLL_M = 256 rows leave the batch) and MAX-merges
-    into the carried state.  Register tables are per-bucket maxima,
+    into the carried state (``plans.stats.hll_merge``, the batch
+    contract's merge).  Register tables are per-bucket maxima,
     so the final state must equal the batch build REGISTER-FOR-
     REGISTER — the oracle IS the batch register build (same hash
     family, zero tolerance), and MAX's idempotence means replayed
@@ -1786,24 +1776,23 @@ def streaming_hll_maintenance(
     State is BOUNDED at 256 rows regardless of stream length —
     foreachBatch, no state store; per batch one coalesce(1)
     checkpoint supersedes the previous (released eagerly)."""
-    from ..plans.stats import hll_register_table
+    from ..plans.stats import hll_merge, hll_register_table
 
     d = _stage_table_splits(sf_dir, "events", "event_id", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    final = _fold_partials(
+        _file_stream(spark, d, 1),
+        "streaming_hll_maintenance",
+        lambda batch: hll_register_table(batch.select("event_id"), "event_id"),
+        hll_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        regs = hll_register_table(batch.select("event_id"), "event_id")
-        if prev is not None:
-            regs = prev.unionByName(regs).groupBy("bucket").agg(F.max("rho").alias("rho"))
-        return pin("streaming_hll_maintenance", regs.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return final.select("bucket", F.col("rho").cast("long").alias("rho"))
+
+
+def _bloom_words_oracle() -> str:
+    from ..plans.runtime_filters import BLOOM_WORDS_ORACLE
+
+    return BLOOM_WORDS_ORACLE
 
 
 def _hll_regs_oracle() -> str:
@@ -1842,9 +1831,11 @@ def streaming_cms_maintenance(
     their batch rebuilds, not just as batch contracts.
 
     Each micro-batch of lineitem collapses to its partial counter
-    table (the engine-neutral ``_cms_md5_buckets`` hash family over
-    the batch's l_partkeys — ≤ d·w = 32,768 cells leave the batch)
-    and SUM-merges into the carried state.  Counter tables are
+    table (``temporal.cms_counters``: the engine-neutral md5 hash
+    family over the batch's l_partkeys — ≤ d·w = 32,768 cells leave
+    the batch) and SUM-merges into the carried state
+    (``temporal.cms_merge``) — the batch contract's partial and
+    merge.  Counter tables are
     per-cell sums, so the final state must equal the batch build
     CELL-FOR-CELL — the oracle IS the batch counter table.  One
     semantic difference from the OR/MAX siblings, stated rather than
@@ -1856,31 +1847,16 @@ def streaming_cms_maintenance(
     State is BOUNDED at d·w cells regardless of stream length —
     foreachBatch, no state store; per batch one coalesce(1)
     checkpoint supersedes the previous (released eagerly)."""
-    from ..operators.temporal import _cms_md5_buckets
+    from ..operators.temporal import cms_counters, cms_merge
 
     d = _stage_table_splits(sf_dir, "lineitem", "l_orderkey", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    final = _fold_partials(
+        _file_stream(spark, d, 1),
+        "streaming_cms_maintenance",
+        cms_counters,
+        cms_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        cells = (
-            batch.select(F.explode(_cms_md5_buckets(F.col("l_partkey"))).alias("db"))
-            .groupBy(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-        if prev is not None:
-            cells = (
-                prev.unionByName(cells)
-                .groupBy("d", "b")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        return pin("streaming_cms_maintenance", cells.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return final.select(
         F.col("d").cast("long").alias("d"),
         F.col("b").cast("long").alias("b"),
@@ -1945,12 +1921,7 @@ def streaming_jitter_dedup(
     from ..operators.windows import JITTER_T_S
 
     d = _stage_table_splits(sf_dir, "events", "ts", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = _file_stream(spark, d, 1)
     # the duckdb-staged splits carry ts as TIMESTAMP_NTZ (no direct
     # long cast); route through timestamp like events_stream does —
     # NTZ epoch is UTC in both engines
@@ -2031,12 +2002,7 @@ def streaming_drawdown_monitor(
     )
 
     d = _stage_table_splits(sf_dir, "events", "ts", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = _file_stream(spark, d, 1)
     s = stream.select(
         "user_id",
         F.col("ts").cast("timestamp").cast("long").alias("t"),
@@ -2093,30 +2059,6 @@ def streaming_drawdown_monitor(
         F.col("b.max_drawdown_e4").cast("long").alias("max_drawdown_e4"),
         F.col("b.trough_event_id").cast("long").alias("trough_event_id"),
     ).orderBy("user_id")
-
-
-def _bloom_words_oracle() -> str:
-    """The streaming maintenance must equal the BATCH word table
-    exactly — the same member set and hash family as the batch
-    contracts in plans/runtime_filters.py."""
-    from ..operators.dedup import _hex8_sql
-    from ..plans.runtime_filters import BLOOM_K, BLOOM_M, BLOOM_WORD
-
-    legs = []
-    for i in range(BLOOM_K):
-        md5_sql = f"md5('bloom{i}|' || CAST(o_orderkey AS VARCHAR))"
-        legs.append(
-            f"SELECT o_orderkey, ({_hex8_sql(md5_sql, 1)}) % {BLOOM_M} AS bit"
-            " FROM keys"
-        )
-    pos_legs = " UNION ALL ".join(legs)
-    return f"""
-WITH keys AS (SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 2 = 0),
-pos AS ({pos_legs})
-SELECT bit // {BLOOM_WORD} AS word_idx,
-       bit_or(CAST(1 AS BIGINT) << CAST(bit % {BLOOM_WORD} AS INT)) AS word
-FROM pos GROUP BY 1
-"""
 
 
 #: streaming_observed_metrics geometry: micro-batch count, watermark
@@ -2272,10 +2214,11 @@ def streaming_ewma_monitor(
     level-shift monitor joining CUSUM in the live drift family
     (`streaming_cusum_monitor` watches accumulation; EWMA watches
     the exponentially-forgotten baseline): each micro-batch's
-    partial weekly spend merges into a carried
+    partial weekly spend (``temporal.weekly_spend``, the batch
+    chart's series) merges into a carried
     ``(o_orderpriority, wk, cents)`` state frame by keyed SUM
-    (confluent — week totals straddling micro-batch boundaries
-    re-assemble exactly), and the certified EWMA fold
+    (``temporal.spend_merge``; confluent — week totals straddling
+    micro-batch boundaries re-assemble exactly), and the certified EWMA fold
     (`temporal.ewma_from_weekly`) runs over the final state.  The
     oracle is the batch EWMA_ORACLE on the full table — incremental
     ≡ rebuild in its strongest form.
@@ -2284,33 +2227,16 @@ def streaming_ewma_monitor(
     length — no state store, no watermark; per batch the
     corpus-sized work is the batch's own map-side-combined weekly
     aggregate."""
-    from ..operators.temporal import ewma_from_weekly
+    from ..operators.temporal import ewma_from_weekly, spend_merge, weekly_spend
 
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(spark.sparkContext.defaultParallelism)
+    final = _fold_partials(
+        _file_stream(spark, d, 1, spread=True),
+        "streaming_ewma_monitor",
+        weekly_spend,
+        spend_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        weekly = batch.groupBy(
-            "o_orderpriority",
-            F.expr("datediff(o_orderdate, DATE'1970-01-01') DIV 7")
-            .cast("long")
-            .alias("wk"),
-        ).agg(F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents"))
-        if prev is not None:
-            weekly = (
-                prev.unionByName(weekly)
-                .groupBy("o_orderpriority", "wk")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-        return pin("streaming_ewma_monitor", weekly.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return ewma_from_weekly(final)
 
 
@@ -2323,10 +2249,11 @@ def streaming_cusum_monitor(
 ) -> DataFrame:
     """Streaming maintenance of the CUSUM control chart — the
     drift-monitor member of the incremental ≡ rebuild family: each
-    micro-batch's partial daily spend merges into a carried
-    ``(day, cents)`` state frame by keyed SUM (addition is confluent,
-    so day totals straddling micro-batch boundaries re-assemble
-    exactly), and the certified CUSUM tail runs over the final state.
+    micro-batch's partial daily spend (``temporal.daily_spend``, the
+    batch monitor's series) merges into a carried ``(d, cents)``
+    state frame by keyed SUM (``temporal.spend_merge``; addition is
+    confluent, so day totals straddling micro-batch boundaries
+    re-assemble exactly), and the certified CUSUM tail runs over the final state.
     The oracle is the batch CUSUM_ORACLE on the full table — the same
     strongest-form incremental ≡ rebuild statement the Gram and KMV
     gates make.
@@ -2338,30 +2265,16 @@ def streaming_cusum_monitor(
     daily aggregate.  This is the control chart a 100 TB ingest
     front-door keeps per table to answer "did today's arrivals shift
     the distribution" without re-scanning history."""
-    from ..operators.temporal import cusum_from_daily
+    from ..operators.temporal import cusum_from_daily, daily_spend, spend_merge
 
     d = _stage_table_splits(sf_dir, "orders", "o_orderkey", n_splits)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .repartition(spark.sparkContext.defaultParallelism)
+    final = _fold_partials(
+        _file_stream(spark, d, 1, spread=True),
+        "streaming_cusum_monitor",
+        daily_spend,
+        spend_merge,
+        progress_out,
     )
-
-    def fold(pin, prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        daily = batch.groupBy(F.col("o_orderdate").cast("string").alias("d")).agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents")
-        )
-        if prev is not None:
-            daily = (
-                prev.unionByName(daily)
-                .groupBy("d")
-                .agg(F.sum("cents").cast("long").alias("cents"))
-            )
-        return pin("streaming_cusum_monitor", daily.coalesce(1))
-
-    final = _fold_stream(stream, fold, progress_out)
     return cusum_from_daily(final)
 
 

@@ -1,7 +1,8 @@
 """Fixture staging: every fixture-derived file is staged once under
 ``io.fixture_key``, which covers the fixture's real path and its
-tables' stats, so no staged file is served to another fixture or to a
-fixture regenerated in place; and the streaming queries that read the
+tables' stats, and ``io.code_key``, the package's source digest, so no
+staged file is served to another fixture, to a fixture regenerated in
+place or to changed code; and the streaming queries that read the
 staged files leave no memory-sink view or checkpoint directory behind.
 """
 
@@ -104,22 +105,46 @@ def test_stage_fixture_builds_once_per_key(sf_dir, tmp_path, private_tmp):
     assert os.path.exists(os.path.join(p1, "_fxblue_done"))
 
 
+def test_stage_fixture_rebuilds_when_the_code_changes(
+    sf_dir, tmp_path, private_tmp, monkeypatch
+):
+    """The staging root carries the package's source digest: a changed
+    builder stages afresh instead of serving an older builder's files,
+    and an unchanged package keeps serving what it staged."""
+    from fxblue_etl_spark import io
+
+    d = str(tmp_path / "fx")
+    _write_orders(sf_dir, d, limit=10)
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        os.makedirs(tmp)
+
+    monkeypatch.setattr(io, "code_key", lambda: "code_a")
+    p_a = stage_fixture(d, "probe", build)
+    assert stage_fixture(d, "probe", build) == p_a and len(calls) == 1
+    monkeypatch.setattr(io, "code_key", lambda: "code_b")
+    p_b = stage_fixture(d, "probe", build)
+    assert p_b != p_a and len(calls) == 2
+    assert "code_a" in p_a and "code_b" in p_b
+    assert os.path.exists(os.path.join(p_a, "_fxblue_done"))
+
+
 def test_split_stream_ignores_stage_marker(spark, sf_dir, private_tmp):
     """The staged split directory holds the staging marker next to the
     splits; the file stream must read only the splits, one per
     micro-batch."""
     from fxblue_etl_spark.io import table
     from fxblue_etl_spark.streaming.pipelines import (
+        _file_stream,
         _stage_table_splits,
         run_to_table,
     )
 
     d = _stage_table_splits(sf_dir, "events", "event_id", 3)
     assert os.path.exists(os.path.join(d, "_fxblue_done"))
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
+    stream = _file_stream(spark, d, 1)
     prog: list = []
     out = run_to_table(stream, "append", progress_out=prog)
     assert out.count() == table(spark, sf_dir, "events").count()

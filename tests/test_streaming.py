@@ -349,3 +349,41 @@ def test_streaming_lsh_dedup_agrees_with_batch_candidates(spark, sf_dir):
         .count()
     )
     assert len(flags) == n_bandable
+
+
+def test_one_definition_per_incremental_partial():
+    """Each partial and merge of the incremental ≡ rebuild family is
+    written once, beside its sketch or series, and the streaming side
+    calls it: ``pipelines.py`` opens one file-source stream, pins one
+    compacted fold state, and spells no sketch or spend partial or
+    merge of its own; ``temporal.py`` spells the weekly and the daily
+    spend series once each."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(pipelines.__file__).parent.parent
+    src = (pkg / "streaming" / "pipelines.py").read_text()
+    tree = ast.parse(src)
+    reads = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "readStream"]
+    compactions = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "coalesce"
+        and [getattr(a, "value", None) for a in n.args] == [1]
+    ]
+    assert len(reads) == 1
+    assert len(compactions) == 1
+    for spelling in (
+        'F.max("rho")',
+        "bit_or(",
+        'sum("cross_sum")',
+        'sum("cnt")',
+        "DIV 7",
+        'o_orderdate").cast("string")',
+    ):
+        assert spelling not in src, spelling
+    temporal = (pkg / "operators" / "temporal.py").read_text()
+    assert temporal.count("DIV 7") == 1
+    assert temporal.count('groupBy(F.col("o_orderdate").cast("string")') == 1
