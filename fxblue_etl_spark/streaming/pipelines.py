@@ -1561,7 +1561,8 @@ def streaming_quality_gate(
     to content-quality scoring."""
     from ..operators.textops import quality_signal_cols
 
-    stream_docs = _file_stream(spark, _stage_table_dir(sf_dir, "documents"), spread=True)
+    d = _stage_table_dir(sf_dir, "documents")
+    stream_docs = _file_stream(spark, d, spread=True)
     n_tok, n_stop, score = quality_signal_cols()
     gated = stream_docs.select(
         "doc_id",
@@ -1587,12 +1588,13 @@ def streaming_kmv_distinct(
     event type, the KMV bottom-k sketch (``plans.stats.
     kmv_sketch_table``) maintained incrementally across micro-batches
     — each batch's sketch merges into the carried state by hash-set
-    union + re-truncate (``plans.stats.kmv_merge``).  KMV truncation is CONFLUENT (each of the
-    global k smallest distinct hashes is among its own batch's k
-    smallest), so the incremental result equals the all-at-once batch
-    sketch EXACTLY and the oracle is the batch sketch SQL on the full
-    table — the same incremental ≡ rebuild contract as the index-
-    upsert family, here for a cardinality monitor.
+    union + re-truncate (``plans.stats.kmv_merge``).  KMV truncation
+    is CONFLUENT (each of the global k smallest distinct hashes is
+    among its own batch's k smallest), so the incremental result
+    equals the all-at-once batch sketch EXACTLY and the oracle is the
+    batch sketch SQL on the full table — the same incremental ≡
+    rebuild contract as the index-upsert family, here for a
+    cardinality monitor.
 
     State posture: the carried frame is ≤ #groups × k narrow rows
     (5×64 here) REGARDLESS of stream length — no streaming state
@@ -1670,12 +1672,12 @@ def streaming_gram_maintenance(
     of embeddings collapses to its d×d integer partial
     (``ml.gram_cells`` — one Arrow pass, ≤ d(d+1)/2 rows leave the
     batch) and ADDS into the carried state (``ml.gram_merge``, the
-    batch contract's merge).  Because the Gram is a
-    sum of outer products on the e3 integer grid, the final state
-    must equal the batch rebuild EXACTLY — the oracle is the very
-    same GRAM_ORACLE the batch query certifies against, which is the
-    strongest statement of incremental == rebuild the gate family
-    makes (same output schema, same hashes, zero tolerance).
+    batch contract's merge).  Because the Gram is a sum of outer
+    products on the e3 integer grid, the final state must equal the
+    batch rebuild EXACTLY — the oracle is the very same GRAM_ORACLE
+    the batch query certifies against, which is the strongest
+    statement of incremental == rebuild the gate family makes (same
+    output schema, same hashes, zero tolerance).
 
     State is BOUNDED at d(d+1)/2 = 2 080 rows regardless of corpus
     size (contrast the band/sign indexes, which grow with the data):
@@ -1790,6 +1792,8 @@ def streaming_hll_maintenance(
 
 
 def _bloom_words_oracle() -> str:
+    """The streaming maintenance must equal the BATCH word table
+    exactly — reuse the batch-side oracle verbatim."""
     from ..plans.runtime_filters import BLOOM_WORDS_ORACLE
 
     return BLOOM_WORDS_ORACLE
@@ -1835,9 +1839,9 @@ def streaming_cms_maintenance(
     family over the batch's l_partkeys — ≤ d·w = 32,768 cells leave
     the batch) and SUM-merges into the carried state
     (``temporal.cms_merge``) — the batch contract's partial and
-    merge.  Counter tables are
-    per-cell sums, so the final state must equal the batch build
-    CELL-FOR-CELL — the oracle IS the batch counter table.  One
+    merge.  Counter tables are per-cell sums, so the final state
+    must equal the batch build CELL-FOR-CELL — the oracle IS the
+    batch counter table.  One
     semantic difference from the OR/MAX siblings, stated rather than
     hidden: SUM is NOT idempotent, so this gate additionally
     certifies the harness's exactly-once batch delivery (a replayed
@@ -2215,10 +2219,10 @@ def streaming_ewma_monitor(
     (`streaming_cusum_monitor` watches accumulation; EWMA watches
     the exponentially-forgotten baseline): each micro-batch's
     partial weekly spend (``temporal.weekly_spend``, the batch
-    chart's series) merges into a carried
-    ``(o_orderpriority, wk, cents)`` state frame by keyed SUM
-    (``temporal.spend_merge``; confluent — week totals straddling
-    micro-batch boundaries re-assemble exactly), and the certified EWMA fold
+    chart's series) merges into a carried ``(o_orderpriority, wk,
+    cents)`` state frame by keyed SUM (``temporal.spend_merge``;
+    confluent — week totals straddling micro-batch boundaries
+    re-assemble exactly), and the certified EWMA fold
     (`temporal.ewma_from_weekly`) runs over the final state.  The
     oracle is the batch EWMA_ORACLE on the full table — incremental
     ≡ rebuild in its strongest form.
@@ -2253,10 +2257,10 @@ def streaming_cusum_monitor(
     batch monitor's series) merges into a carried ``(d, cents)``
     state frame by keyed SUM (``temporal.spend_merge``; addition is
     confluent, so day totals straddling micro-batch boundaries
-    re-assemble exactly), and the certified CUSUM tail runs over the final state.
-    The oracle is the batch CUSUM_ORACLE on the full table — the same
-    strongest-form incremental ≡ rebuild statement the Gram and KMV
-    gates make.
+    re-assemble exactly), and the certified CUSUM tail runs over the
+    final state.  The oracle is the batch CUSUM_ORACLE on the full
+    table — the same strongest-form incremental ≡ rebuild statement
+    the Gram and KMV gates make.
 
     State posture: the carried frame is calendar-bounded (one row per
     day with spend, ~2.4k rows for the seven-year domain) REGARDLESS

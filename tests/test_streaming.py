@@ -364,7 +364,9 @@ def test_one_definition_per_incremental_partial():
     pkg = Path(pipelines.__file__).parent.parent
     src = (pkg / "streaming" / "pipelines.py").read_text()
     tree = ast.parse(src)
-    reads = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "readStream"]
+    reads = [
+        n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "readStream"
+    ]
     compactions = [
         n
         for n in ast.walk(tree)
